@@ -135,7 +135,7 @@ object Bench {
     // frame computes — is recorded instead of invisible. The BUILD
     // share of it is additionally accounted precisely by BuildLedger
     // (every index build / sharedLeafFrame compute records its wall
-    // seconds) and stamped as its own stdout metric line below.
+    // seconds) and reported in the total line's `build` field below.
     BuildLedger.reset()
     val settleTimes = scala.collection.mutable.LinkedHashMap[String, Double]()
     SparkEntry.queries.keys.filter(n => only.forall(_.contains(n)))

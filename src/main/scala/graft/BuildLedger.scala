@@ -4,11 +4,11 @@ package graft
   * r21 item 2): persisted-index builds (IVF/PQ/gram/funnel/knn-graph),
   * sharedLeafFrame computes and other build-once-read-many steps
   * record their wall seconds here, keyed by what was built. Bench
-  * drains the ledger into its detail artifact and stamps a separate
-  * `{"metric":"build",...}` stdout line BEFORE the total line — so the
-  * per-query steady-state numbers are verifiably READS: everything
-  * one-time is accounted for on its own line instead of hiding in the
-  * untimed settling sweep.
+  * drains the ledger into the `build` field of its single
+  * `{"metric":"total",...}` stdout line (per-key seconds go to the
+  * detail artifact's `builds`) — so the per-query steady-state numbers
+  * are verifiably READS: everything one-time is accounted for in its
+  * own field instead of hiding in the untimed settling sweep.
   *
   * Accounting only — never on a result path, never persisted.
   */

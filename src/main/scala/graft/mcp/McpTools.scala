@@ -30,7 +30,11 @@ import org.apache.spark.sql.functions._
   * SentenceTransformer). Scale shape: the single query vector rides a
   * broadcast literal onto one corpus scan (q16's plan); cluster
   * joins broadcast the k-bounded hit set (q18's plan); nothing here
-  * shuffles the corpus.
+  * shuffles the corpus. The cluster key itself is not recomputed per
+  * call: `Vectors.semanticGroups` serves one leaf-materialized frame
+  * per corpus (O(documents) narrow rows, rebuilt when the documents
+  * or embeddings source token changes), so every tool reads it as a
+  * scan of a cached leaf.
   */
 object McpTools {
 

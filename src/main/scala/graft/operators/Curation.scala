@@ -132,6 +132,7 @@ object Curation {
                                      deps: Seq[DataFrame], token: String = "")
                                     (compute: => DataFrame): DataFrame = {
     sharedLeafFrames.keySet.removeIf(_._1.isStopped)
+    sharedLeafLocks.keySet.removeIf(_._1.isStopped)
     val depPlans = deps.map(_.queryExecution.analyzed)
     val ck = (spark.sparkContext, key + ":" + depPlans.map(_.semanticHash()).mkString(","))
     def live: Option[DataFrame] = Option(sharedLeafFrames.get(ck)) collect {
@@ -165,8 +166,9 @@ object Curation {
     }
   }
 
-  /** Per-key compute locks for sharedLeafFrame (never removed — the
-    * key space is a handful of operator-family strings per corpus).
+  /** Per-key compute locks for sharedLeafFrame: kept for the life of
+    * their SparkContext (a handful of operator-family strings per
+    * corpus) and pruned with the frames once the context stops.
     */
   private val sharedLeafLocks =
     new java.util.concurrent.ConcurrentHashMap[

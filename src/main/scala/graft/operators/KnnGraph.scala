@@ -879,10 +879,11 @@ object KnnGraph {
         "\nrblk|" + nb)
   }
 
-  /** Present + watermark-fresh + the edges component landed (the
+  /** Present + watermark-fresh + every component landed (the
     * watermark is written last, so a crashed build always reads
-    * stale; the extra edges _SUCCESS check guards a hand-deleted
-    * component).
+    * stale; the centroids/cells/edges _SUCCESS checks guard a
+    * hand-deleted component, which must rebuild rather than fail
+    * with a missing-file read).
     */
   def graphFresh(spark: SparkSession, dir: String, path: String,
                  k: Int = 10, lists: Int = 0, maxIters: Int = 2,
@@ -895,6 +896,7 @@ object KnnGraph {
     VectorIndex.readWatermark(spark, path).map(_.split("\nrblk\\|")(0)).contains(
         VectorIndex.sourceSnapshot(spark, dir) + "\nparams|" +
           graphParams(k, lists, maxIters, ringJ, modularRing, nBuckets)) &&
+      VectorIndex.exists(spark, path) &&
       VectorIndex.fsFor(spark, path)
         .exists(new org.apache.hadoop.fs.Path(s"$path/edges/_SUCCESS"))
 

@@ -579,26 +579,42 @@ object Vectors {
   /** q14: group merge — a new group starts when EITHER the semantic
     * segment breaks OR the coarse length-bucket changes
     * (calculate_groups' OR-of-boundaries at TextPreprocessor.py:452).
+    *
+    * This (source, group_id) pair is the MCP cluster key, read by
+    * q14, q81c and every McpTools cluster/search call (some twice per
+    * call), so it is served from ONE leaf-materialized copy per corpus
+    * ([[Curation.sharedLeafFrame]]) instead of re-running the join,
+    * two window passes and the sort on every call. The registry key
+    * is the threshold plus the two projected source plans
+    * (documents, embeddings); the token is both tables'
+    * `Tables.sourceToken`, so files regenerated under the same path or
+    * a `registerOverride` recompute and never serve stale groups.
+    * Memory: O(documents) rows of 4 narrow columns, one copy per live
+    * (corpus, threshold).
     */
   def semanticGroups(spark: SparkSession, dir: String, threshold: Double = 1.0): DataFrame = {
     GraftFunctions.register(spark)
     val docs = Tables.documents(spark, dir).select("doc_id", "source", "n_chars")
     val e = Tables.embeddings(spark, dir).select(col("vec_id"), col("embedding"))
-    val w = Window.partitionBy("source").orderBy("doc_id")
-    docs.join(e, col("doc_id") === col("vec_id"))
-      .withColumn("bucket", expr("n_chars DIV 100"))
-      .withColumn("prev_emb", lag("embedding", 1).over(w))
-      .withColumn("prev_bucket", lag("bucket", 1).over(w))
-      .withColumn("dist",
-        when(col("prev_emb").isNull, 0.0)
-          .otherwise(round(lit(1.0) - round(expr("cosine_sim(embedding, prev_emb)"), 6), 6)))
-      .withColumn("brk",
-        when(col("prev_emb").isNull, 1)
-          .when(col("dist") > threshold || col("bucket") =!= col("prev_bucket"), 1)
-          .otherwise(0))
-      .withColumn("group_id",
-        sum("brk").over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow)) - 1)
-      .select("doc_id", "source", "bucket", "group_id")
-      .orderBy("source", "doc_id")
+    val token = Tables.sourceToken(spark, dir, "documents") + "\n" +
+      Tables.sourceToken(spark, dir, "embeddings")
+    Curation.sharedLeafFrame(spark, s"semantic_groups:t=$threshold", Seq(docs, e), token) {
+      val w = Window.partitionBy("source").orderBy("doc_id")
+      docs.join(e, col("doc_id") === col("vec_id"))
+        .withColumn("bucket", expr("n_chars DIV 100"))
+        .withColumn("prev_emb", lag("embedding", 1).over(w))
+        .withColumn("prev_bucket", lag("bucket", 1).over(w))
+        .withColumn("dist",
+          when(col("prev_emb").isNull, 0.0)
+            .otherwise(round(lit(1.0) - round(expr("cosine_sim(embedding, prev_emb)"), 6), 6)))
+        .withColumn("brk",
+          when(col("prev_emb").isNull, 1)
+            .when(col("dist") > threshold || col("bucket") =!= col("prev_bucket"), 1)
+            .otherwise(0))
+        .withColumn("group_id",
+          sum("brk").over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow)) - 1)
+        .select("doc_id", "source", "bucket", "group_id")
+        .orderBy("source", "doc_id")
+    }
   }
 }

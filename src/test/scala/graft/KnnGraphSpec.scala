@@ -243,6 +243,32 @@ class KnnGraphSpec extends AnyFunSuite {
       s"both queries must appear (0 via the fallback entry): $got")
   }
 
+  test("graphFresh fails closed: a deleted centroids/cells component rebuilds on the next walk") {
+    val fake = "/fake/knn_fail_closed"
+    Tables.registerOverride(spark, fake, "embeddings",
+      Tables.embeddings(spark, dir).select("vec_id", "embedding").filter(col("vec_id") < 200))
+    val path = operators.KnnGraph.graphPath(spark, fake)
+    operators.KnnGraph.buildGraph(spark, fake, path, k = k)
+    val fs = new org.apache.hadoop.fs.Path(path)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def p(rel: String) = new org.apache.hadoop.fs.Path(s"$path/$rel")
+    def walk() = operators.KnnGraph.graphWalkGate(spark, fake, k = k)
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+    val want = walk()
+    assert(want.nonEmpty)
+    // a lone marker, then a whole component: the watermark and the
+    // edges stay intact, so only the component checks can see the hole
+    Seq("cells/_SUCCESS", "centroids").foreach { gone =>
+      fs.delete(p(gone), true)
+      assert(operators.VectorIndex.readWatermark(spark, path).isDefined &&
+        fs.exists(p("edges/_SUCCESS")), "the fault leaves watermark and edges intact")
+      assert(!operators.KnnGraph.graphFresh(spark, fake, path),
+        s"missing $gone must read stale")
+      assert(walk() == want, s"the walk after deleting $gone must rebuild, not fail")
+      assert(operators.KnnGraph.graphFresh(spark, fake, path), s"$gone rebuilt")
+    }
+  }
+
   test("q92c: clusters have >=2 members, exactly one rep per cluster, rep = min id") {
     val c = operators.KnnGraph.semanticClusters(spark, dir).cache()
     assert(c.filter(col("cluster_size") < 2).count() == 0, "singletons are omitted")

@@ -1,12 +1,13 @@
 package graft
 
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Pins the r21 shared-leaf registry (Curation.sharedLeafFrame) and
-  * the walk's extra-hop no-op law — the two operator internals the
-  * optimization round changed. Value-level correctness of the gate
-  * entries themselves stays with the DuckDB oracle.
+/** Pins the r21 shared-leaf registry (Curation.sharedLeafFrame), its
+  * semanticGroups memo (the MCP cluster key), and the walk's extra-hop
+  * no-op law. Value-level correctness of the gate entries themselves
+  * stays with the DuckDB oracle.
   */
 class SharedLeafFrameSpec extends AnyFunSuite {
   import TestSpark._
@@ -55,6 +56,90 @@ class SharedLeafFrameSpec extends AnyFunSuite {
     assert(computes == 2, "token change must recompute")
     get("wm2")
     assert(computes == 2, "same token reuses again")
+  }
+
+  /** Vectors.semanticGroups' chain run inline, outside the registry —
+    * the unmemoized spelling the served leaf must equal row for row.
+    */
+  private def inlineGroups(d: String, threshold: Double) = {
+    graft.functions.GraftFunctions.register(spark)
+    val w = Window.partitionBy("source").orderBy("doc_id")
+    Tables.documents(spark, d).select("doc_id", "source", "n_chars")
+      .join(Tables.embeddings(spark, d).select(col("vec_id"), col("embedding")),
+        col("doc_id") === col("vec_id"))
+      .withColumn("bucket", expr("n_chars DIV 100"))
+      .withColumn("prev_emb", lag("embedding", 1).over(w))
+      .withColumn("prev_bucket", lag("bucket", 1).over(w))
+      .withColumn("dist",
+        when(col("prev_emb").isNull, 0.0)
+          .otherwise(round(lit(1.0) - round(expr("cosine_sim(embedding, prev_emb)"), 6), 6)))
+      .withColumn("brk",
+        when(col("prev_emb").isNull, 1)
+          .when(col("dist") > threshold || col("bucket") =!= col("prev_bucket"), 1)
+          .otherwise(0))
+      .withColumn("group_id",
+        sum("brk").over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow)) - 1)
+      .select("doc_id", "source", "bucket", "group_id")
+      .orderBy("source", "doc_id")
+  }
+
+  private def rows(df: org.apache.spark.sql.DataFrame) = df.collect().toSeq
+
+  private def buildSeconds(key: String): Double =
+    BuildLedger.snapshot().toMap.getOrElse(s"sharedLeaf:$key", 0.0)
+
+  test("semanticGroups: one leaf per corpus, equal to the unmemoized chain") {
+    val g1 = operators.Vectors.semanticGroups(spark, dir)
+    val built = buildSeconds("semantic_groups:t=1.0")
+    assert(built > 0.0, "the groups must be computed through the shared-leaf registry")
+    val g2 = operators.Vectors.semanticGroups(spark, dir)
+    assert(g1 eq g2, "a second call on the same corpus must serve the SAME leaf")
+    assert(buildSeconds("semantic_groups:t=1.0") == built, "the second call must not recompute")
+    assert(g1.queryExecution.analyzed.isInstanceOf[
+      org.apache.spark.sql.execution.LogicalRDD], "served as a leaf, not the window chain")
+    assert(rows(g1) == rows(inlineGroups(dir, 1.0)),
+      "the leaf must hold exactly the rows of the inline chain, in its order")
+  }
+
+  test("semanticGroups: a different threshold computes its own leaf") {
+    val base = operators.Vectors.semanticGroups(spark, dir)
+    val t = 0.9
+    val other = operators.Vectors.semanticGroups(spark, dir, threshold = t)
+    assert(buildSeconds(s"semantic_groups:t=$t") > 0.0, "a new threshold must compute")
+    assert(!(other eq base))
+    assert(operators.Vectors.semanticGroups(spark, dir, threshold = t) eq other)
+    assert(operators.Vectors.semanticGroups(spark, dir) eq base,
+      "the default-threshold leaf must still serve alongside it")
+    val want = rows(inlineGroups(dir, t))
+    assert(rows(other) == want)
+    assert(want != rows(base), "the fixture must make the threshold matter")
+  }
+
+  test("semanticGroups: documents rewritten under the same path recompute, never serve stale") {
+    val tmp = java.nio.file.Files.createTempDirectory("graft_slf_groups_")
+    Seq("documents", "embeddings").foreach { t =>
+      java.nio.file.Files.copy(java.nio.file.Path.of(s"$dir/$t.parquet"),
+        tmp.resolve(s"$t.parquet"))
+    }
+    val d = tmp.toAbsolutePath.toString
+    val before = operators.Vectors.semanticGroups(spark, d)
+    val beforeRows = rows(before)
+    assert(beforeRows == rows(inlineGroups(d, 1.0)))
+    val tok0 = Tables.sourceToken(spark, d, "documents")
+    // regenerate documents.parquet in place: every odd doc moves up
+    // one length bucket, which breaks groups at every parity flip
+    val staged = tmp.resolve("staged").toString
+    spark.read.parquet(s"$d/documents.parquet")
+      .withColumn("n_chars", col("n_chars") + (col("doc_id") % 2) * 100)
+      .write.parquet(staged)
+    java.nio.file.Files.delete(tmp.resolve("documents.parquet"))
+    java.nio.file.Files.move(java.nio.file.Path.of(staged), tmp.resolve("documents.parquet"))
+    assert(Tables.sourceToken(spark, d, "documents") != tok0, "the rewrite must change the token")
+    val after = operators.Vectors.semanticGroups(spark, d)
+    assert(!(after eq before), "a changed token must recompute")
+    val afterRows = rows(after)
+    assert(afterRows == rows(inlineGroups(d, 1.0)), "the new leaf reflects the new bytes")
+    assert(afterRows != beforeRows, "the rewrite must change the groups")
   }
 
   test("walk: extra hops beyond convergence are a no-op (the dropped early-stop law)") {
