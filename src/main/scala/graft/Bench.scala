@@ -134,7 +134,7 @@ object Bench {
     // first-touch parquet footers, persisted-index builds, shared-
     // frame computes — is recorded instead of invisible. The BUILD
     // share of it is additionally accounted precisely by BuildLedger
-    // (every index build / sharedLeafFrame compute records its wall
+    // (every index build / Shared.leafFrame compute records its wall
     // seconds) and reported in the total line's `build` field below.
     BuildLedger.reset()
     val settleTimes = scala.collection.mutable.LinkedHashMap[String, Double]()

@@ -2,7 +2,7 @@ package graft
 
 /** Process-wide ledger of ONE-TIME BUILD work (VERDICT r20 item 4 /
   * r21 item 2): persisted-index builds (IVF/PQ/gram/funnel/knn-graph),
-  * sharedLeafFrame computes and other build-once-read-many steps
+  * Shared.leafFrame computes and other build-once-read-many steps
   * record their wall seconds here, keyed by what was built. Bench
   * drains the ledger into the `build` field of its single
   * `{"metric":"total",...}` stdout line (per-key seconds go to the

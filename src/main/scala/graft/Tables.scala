@@ -10,51 +10,21 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * directories, which changes nothing in the call sites.
   */
 object Tables {
-  /** Resolved-relation cache keyed by (session, dir, table): a fresh
-    * spark.read.parquet re-lists the directory and re-reads footers
-    * on EVERY query — across a 46-query run that's pure per-query
-    * floor. A real deployment holds table handles in a catalog; this
-    * is the single-JVM equivalent. (DataFrames are immutable plans —
-    * sharing one across queries is safe.)
+  /** Resolved relations in [[Shared]] (family `tables`), keyed by
+    * (session, dir, table) and validated by [[sourceToken]]: a fresh
+    * spark.read.parquet re-lists the directory and re-reads footers,
+    * a per-query floor a real deployment avoids by holding table
+    * handles in a catalog. The token check matters beyond this cache:
+    * the derived families that check sourceToken (ReplyChains' thread
+    * frames) would otherwise "rebuild" through an old InMemoryFileIndex
+    * and still resolve against deleted part files. A source
+    * regeneration also invalidates a registered override (it was
+    * built from the old bytes).
     */
-  private val cache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, String), (String, DataFrame)]()
-
-  /** Both registries key by SparkSession with strong references, so a
-    * long-lived JVM cycling many sessions would pin every stopped
-    * session (and its plans) forever (ADVICE r08, the eventThreadCache
-    * leak-bounding rule). Evict stopped sessions' entries whenever a
-    * registry is touched — O(live entries), and the touch rate is one
-    * per table load.
-    */
-  private def evictStopped(): Unit = {
-    cache.keySet.removeIf(k => k._1.sparkContext.isStopped)
-    overrideVersions.keySet.removeIf(k => k._1.sparkContext.isStopped)
-  }
-
-  /** TOKEN-AWARE read cache: each entry remembers the sourceToken it
-    * was built under, and a mismatch (files regenerated, or a newer
-    * registerOverride) re-reads instead of serving the stale relation
-    * — without this, the derived caches that check sourceToken for
-    * freshness (ReplyChains' thread frames) would "rebuild" through
-    * this cache's old InMemoryFileIndex and still resolve against
-    * deleted part files. The token costs one FS listing per read()
-    * call — driver-side, at query-construction rate, not per row.
-    * Note the override edge: a source regeneration also invalidates a
-    * registered override (it was built from the old bytes).
-    */
-  private def read(spark: SparkSession, dir: String, name: String): DataFrame = {
-    evictStopped()
-    val key = (spark, dir, name)
-    val token = sourceToken(spark, dir, name)
-    val cached = cache.get(key)
-    if (cached != null && cached._1 == token) cached._2
-    else {
-      val df = spark.read.parquet(s"$dir/$name.parquet")
-      cache.put(key, (token, df))
-      df
+  private def read(spark: SparkSession, dir: String, name: String): DataFrame =
+    Shared.get[DataFrame](spark, "tables", (spark, dir, name), sourceToken(spark, dir, name)) {
+      spark.read.parquet(s"$dir/$name.parquet")
     }
-  }
 
   /** Substitute a pre-materialized twin (e.g. a bucketed copy) for a
     * table — the bench's shared-table mechanism, the single-JVM
@@ -62,11 +32,11 @@ object Tables {
     * the SAME data. Every operator picks it up transparently.
     */
   def registerOverride(spark: SparkSession, dir: String, name: String, df: DataFrame): Unit = {
-    evictStopped()
-    // bump the version FIRST so the cached entry's token matches what
-    // read() recomputes (the token embeds the version)
+    overrideVersions.keySet.removeIf(k => k._1.sparkContext.isStopped)
+    // bump the version FIRST so the installed entry's token matches
+    // what read() recomputes (the token embeds the version)
     overrideVersions.merge((spark, dir, name), 1, (a, b) => a + b)
-    cache.put((spark, dir, name), (sourceToken(spark, dir, name), df))
+    Shared.put(spark, "tables", (spark, dir, name), df, sourceToken(spark, dir, name))
   }
 
   private val overrideVersions =
@@ -75,31 +45,39 @@ object Tables {
   /** Freshness token for a table as this session currently sees it:
     * changes whenever the table is re-registered (registerOverride)
     * OR its backing files are regenerated — the two ways derived
-    * caches (ReplyChains' converged thread frames) go silently stale
-    * (ADVICE r07). Same (name, length, mtime) recursive-listing
-    * contract as VectorIndex.sourceSnapshot: snapshot EQUALITY decides
+    * values go silently stale (ADVICE r07). Snapshot EQUALITY decides
     * freshness, no clock agreement needed.
     */
   def sourceToken(spark: SparkSession, dir: String, name: String): String = {
     val v = Option(overrideVersions.get((spark, dir, name))).map(_.intValue).getOrElse(0)
-    val p = new org.apache.hadoop.fs.Path(s"$dir/$name.parquet")
+    s"v$v|${fileListing(spark, s"$dir/$name.parquet", ",")}"
+  }
+
+  /** `(path, length, mtime)` of every file under `path`, sorted and
+    * joined by `sep`; "" when absent. The listing is RECURSIVE and
+    * keyed by path relative to the table root: a rewrite deep inside
+    * nested partition dirs must change it even when every top-level
+    * child looks unchanged (r04 ADVICE). A single file lists as its
+    * own name. Shared by [[sourceToken]] and the index watermarks
+    * (`VectorIndex.sourceSnapshot`).
+    */
+  private[graft] def fileListing(spark: SparkSession, path: String, sep: String): String = {
+    val p = new org.apache.hadoop.fs.Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val files =
-      if (!fs.exists(p)) ""
-      else if (!fs.getFileStatus(p).isDirectory) {
-        val s = fs.getFileStatus(p)
-        s"${s.getPath.getName}:${s.getLen}:${s.getModificationTime}"
-      } else {
-        val root = p.toUri.getPath.stripSuffix("/") + "/"
-        val it = fs.listFiles(p, true)
-        val parts = scala.collection.mutable.ArrayBuffer[String]()
-        while (it.hasNext) {
-          val s = it.next()
-          parts += s"${s.getPath.toUri.getPath.stripPrefix(root)}:${s.getLen}:${s.getModificationTime}"
-        }
-        parts.sorted.mkString(",")
+    if (!fs.exists(p)) ""
+    else if (!fs.getFileStatus(p).isDirectory) {
+      val s = fs.getFileStatus(p)
+      s"${s.getPath.getName}:${s.getLen}:${s.getModificationTime}"
+    } else {
+      val root = p.toUri.getPath.stripSuffix("/") + "/"
+      val it = fs.listFiles(p, true)
+      val parts = scala.collection.mutable.ArrayBuffer[String]()
+      while (it.hasNext) {
+        val s = it.next()
+        parts += s"${s.getPath.toUri.getPath.stripPrefix(root)}:${s.getLen}:${s.getModificationTime}"
       }
-    s"v$v|$files"
+      parts.sorted.mkString(sep)
+    }
   }
 
   def region(spark: SparkSession, dir: String): DataFrame     = read(spark, dir, "region")
@@ -134,8 +112,8 @@ object Tables {
     // session-wide behavior change into unrelated parquet reads
     // (ADVICE r11). So: try the plain read first; only on the
     // distinctive "Illegal Parquet type … NANOS" failure set the conf
-    // and retry (computeIfAbsent caches nothing on a throw, so the
-    // retry re-runs the footer read under the conf).
+    // and retry (a throwing compute installs nothing in Shared, so
+    // the retry re-runs the footer read under the conf).
     val df =
       try read(spark, dir, "events")
       catch {

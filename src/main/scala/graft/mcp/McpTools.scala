@@ -38,31 +38,18 @@ import org.apache.spark.sql.functions._
   */
 object McpTools {
 
-  /** Embedding dimensionality, memoized per (session, dir, source
-    * token): deriving it is a head-of-scan Spark job, and a serving
-    * adapter must not pay that on EVERY vectorSearch/clusterSearch
-    * call (ADVICE r11). The source token in the key tracks what the
-    * Tables cache itself tracks — a registerOverride or a source
-    * regeneration changes the token, so a stale dim can never be
-    * served against a re-registered embeddings frame (the dim IS a
-    * property of the corpus bytes, not of the (session, dir) pair).
-    * The Spark job runs OUTSIDE the map's bin lock (get-then-
-    * putIfAbsent), so concurrent serving calls on other corpora are
-    * never blocked behind a scan; stopped sessions are evicted on
-    * touch (Tables' leak-bound rule).
+  /** Embedding dimensionality, memoized per (session, dir) in
+    * [[graft.Shared]] under the embeddings source token: deriving it is
+    * a head-of-scan Spark job, and a serving adapter must not pay that
+    * on EVERY vectorSearch/clusterSearch call (ADVICE r11). The dim IS
+    * a property of the corpus bytes, so a registerOverride or a source
+    * regeneration recomputes it.
     */
-  private val dimCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, String), java.lang.Integer]()
-
-  private def embeddingDim(spark: SparkSession, dir: String): Int = {
-    dimCache.keySet.removeIf(_._1.sparkContext.isStopped)
-    val key = (spark, dir, Tables.sourceToken(spark, dir, "embeddings"))
-    Option(dimCache.get(key)).map(_.intValue).getOrElse {
-      val dim = Tables.embeddings(spark, dir).select(size(col("embedding"))).head.getInt(0)
-      dimCache.putIfAbsent(key, dim)
-      dim
-    }
-  }
+  private def embeddingDim(spark: SparkSession, dir: String): Int =
+    graft.Shared.get[java.lang.Integer](spark, "mcp.dim", (spark, dir),
+      Tables.sourceToken(spark, dir, "embeddings")) {
+      Tables.embeddings(spark, dir).select(size(col("embedding"))).head.getInt(0)
+    }.intValue
 
   /** vector_search (server.py:119-189): semantic top-k with text +
     * optional source (chat) filter, similarity threshold, and the

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.Tables
+import graft.{Shared, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -23,183 +23,6 @@ import org.apache.spark.sql.functions._
   */
 object Curation {
 
-  /** Distinct 3-gram set per (doc_id, text) row — the shared kernel
-    * of q54, q54b and the streaming gate (one definition, no
-    * paste-drift: the PQ LUT triplication lesson). The split is
-    * materialized by its own projection (interpreted-HOF re-eval
-    * trap, SURVEY §4); sequence(1, n) with n < 1 would DESCEND in
-    * Spark ([1,0]), so short docs get an explicit empty gram set.
-    */
-  /** One-live-copy persist registry (Vectors.slidingCache's pattern,
-    * generalized): operators that persist an intermediate for
-    * multiple readers register it under a stable key, and
-    * re-registering unpersists the PREVIOUS copy — bench loops and
-    * notebook re-runs then hold at most one cached copy per operator
-    * instead of stacking them until memory eviction. Stopped
-    * sessions evicted on touch (Tables' leak-bounding rule).
-    */
-  // Keyed by SparkContext, not SparkSession: CacheManager (the thing
-  // the registry fronts) lives in the session's sharedState, which
-  // Structured Streaming's per-query session CLONES share with their
-  // parent. Keying by session object let a foreachBatch clone
-  // register a same-plan entry under its own key, which then kept a
-  // stale CacheManager entry "still served" across an index fold's
-  // invalidation (r15: the q80b lifecycle spec caught exactly this).
-  private val persistRegistry =
-    new java.util.concurrent.ConcurrentHashMap[(org.apache.spark.SparkContext, String), DataFrame]()
-
-  private[graft] def registerPersist(spark: SparkSession, key: String, df: DataFrame): DataFrame = {
-    persistRegistry.keySet.removeIf(_._1.isStopped)
-    // Cache identity is PLAN-based (CacheManager keys on canonicalized
-    // plans, not DataFrame objects), which made the original
-    // persist-then-unpersist-previous sequence self-defeating: a
-    // repeated call with the identical plan persisted "a new copy"
-    // (a no-op — the plan is already cached), then unpersisted the
-    // previous handle — evicting the shared entry and leaving the
-    // SECOND call uncached. Every bench pass ≥2 of a persist-backed
-    // operator ran without its cache (found r13 via the q77
-    // shared-frame plan spec). Same-plan re-registration now reuses
-    // the live copy; on a genuine plan change, the old entry is
-    // unpersisted only if no OTHER key still serves that plan.
-    // Freshness: a reused copy serves the data it cached — safe
-    // because every in-session source change this repo makes goes
-    // through Tables.registerOverride, which swaps the underlying
-    // DataFrame (different plan → sameResult false → re-persist);
-    // files mutating under an unchanged path mid-session are already
-    // stale territory for Spark's own FileIndex snapshot.
-    val prev = Option(persistRegistry.get((spark.sparkContext, key)))
-    prev match {
-      // the CacheManager probe guards against EXTERNAL eviction
-      // (clearCache in a test, memory-pressure unpersist by an
-      // operator outside the registry): without it a reused handle
-      // whose entry was dropped behind the registry's back would
-      // serve every later caller uncached while claiming otherwise
-      case Some(p) if p.queryExecution.analyzed.sameResult(df.queryExecution.analyzed)
-          && spark.sharedState.cacheManager.lookupCachedData(
-               p.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]).isDefined => p
-      case _ =>
-        val p = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        Option(persistRegistry.put((spark.sparkContext, key), p)).foreach { old =>
-          val oldPlan = old.queryExecution.analyzed
-          val stillServed = persistRegistry.values.stream()
-            .anyMatch(v => v.queryExecution.analyzed.sameResult(oldPlan))
-          if (!stillServed) old.unpersist(false)
-        }
-        p
-    }
-  }
-
-  /** One live, LEAF-MATERIALIZED copy of an expensive shared frame per
-    * (context, key, dependency-plan hash) — registerPersist's
-    * discipline extended to computations that are EAGER (descent
-    * loops, Lloyd rounds, bucket collects) and whose consumers should
-    * see an O(1)-size plan (r21): a CacheManager copy carries the
-    * producer's full physical plan inside its InMemoryRelation, which
-    * every consumer re-traverses and re-serializes per AQE stage — the
-    * measured driver-gap pathology on q93/q92g (tools/JobProbe).
-    * DupGraph.cutLineage + an eager materialize make the copy a
-    * LogicalRDD leaf. The leaf keeps its RDD lineage, but
-    * recompute-on-loss is NOT a general guarantee (ADVICE r21):
-    * producers whose lineage reads handoff-owned scratch (the
-    * leaf-mode descent's round parquet, deleted by the NEXT descent
-    * on the session) cannot replay after the scratch is gone — a
-    * cache-block loss there surfaces as a missing-file error, not a
-    * silent recompute. MEMORY_AND_DISK makes loss an executor-death
-    * event only, which the single-JVM bench/serve processes this
-    * registry targets do not survive anyway; a cluster deployment
-    * must either write shared frames to durable storage or accept
-    * fail-and-recompute-at-caller semantics. The storage-level probe
-    * below detects full external unpersist, not partial block loss.
-    *
-    * Freshness is validated on EVERY reuse, never assumed:
-    *   - the map key carries each dependency plan's semanticHash, and
-    *     reuse additionally requires plan-for-plan sameResult — a
-    *     different sf dir, a registerOverride source swap, or changed
-    *     params fall through to a fresh compute (and distinct corpora
-    *     under one logical key coexist instead of evicting each other);
-    *   - `token` must match (callers pass persisted-index watermarks,
-    *     so an index rebuild invalidates the copy);
-    *   - the leaf RDD must still be persisted (external unpersist
-    *     falls through — the registerPersist probe rule).
-    */
-  private val sharedLeafFrames =
-    new java.util.concurrent.ConcurrentHashMap[
-      (org.apache.spark.SparkContext, String),
-      (Seq[org.apache.spark.sql.catalyst.plans.logical.LogicalPlan], String,
-       DataFrame, org.apache.spark.rdd.RDD[org.apache.spark.sql.Row])]()
-
-  private[graft] def sharedLeafFrame(spark: SparkSession, key: String,
-                                     deps: Seq[DataFrame], token: String = "")
-                                    (compute: => DataFrame): DataFrame = {
-    sharedLeafFrames.keySet.removeIf(_._1.isStopped)
-    sharedLeafLocks.keySet.removeIf(_._1.isStopped)
-    val depPlans = deps.map(_.queryExecution.analyzed)
-    val ck = (spark.sparkContext, key + ":" + depPlans.map(_.semanticHash()).mkString(","))
-    def live: Option[DataFrame] = Option(sharedLeafFrames.get(ck)) collect {
-      case (plans, tok, f, rdd) if tok == token &&
-          plans.length == depPlans.length &&
-          plans.zip(depPlans).forall { case (a, b) => a.sameResult(b) } &&
-          rdd.getStorageLevel != org.apache.spark.storage.StorageLevel.NONE => f
-    }
-    live.getOrElse {
-      // ONE compute wins per key (ADVICE r21): without the per-key
-      // lock two concurrent callers (e.g. streaming per-query session
-      // clones, which share the SparkContext key) both computed, and
-      // the second put unpersisted the first caller's RDD out from
-      // under it — forcing an eager recompute at its action, or a
-      // missing-file failure for scratch-backed producers (above).
-      val lock = sharedLeafLocks.computeIfAbsent(ck, _ => new Object)
-      lock.synchronized {
-        live.getOrElse {
-          val (f, rdd) = graft.BuildLedger.timed(s"sharedLeaf:$key") {
-            val pair = DupGraph.cutLineage(compute,
-              org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-            pair._2.count() // materialize before any backing handoff can invalidate
-            pair
-          }
-          Option(sharedLeafFrames.put(ck, (depPlans, token, f, rdd))).foreach {
-            case (_, _, _, old) => if (old ne rdd) old.unpersist(false)
-          }
-          f
-        }
-      }
-    }
-  }
-
-  /** Per-key compute locks for sharedLeafFrame: kept for the life of
-    * their SparkContext (a handful of operator-family strings per
-    * corpus) and pruned with the frames once the context stops.
-    */
-  private val sharedLeafLocks =
-    new java.util.concurrent.ConcurrentHashMap[
-      (org.apache.spark.SparkContext, String), Object]()
-
-  /** Registry lookup WITHOUT constructing a candidate plan: returns
-    * the live cached frame for `key`, or None if absent or externally
-    * evicted. The cheap path for per-micro-batch consumers — a map
-    * probe instead of a fresh `spark.read` (whose file listing is the
-    * cost the cache exists to avoid).
-    */
-  private[graft] def persistLookup(spark: SparkSession, key: String): Option[DataFrame] =
-    Option(persistRegistry.get((spark.sparkContext, key))).filter(p =>
-      spark.sharedState.cacheManager.lookupCachedData(
-        p.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]).isDefined)
-
-  /** Drop a registry entry and unpersist its data unless another key
-    * still serves the same plan. Needed by index lifecycles that
-    * REWRITE files under an unchanged path (FunnelIndex build/fold):
-    * a cached read-plan would otherwise serve the pre-rewrite rows —
-    * CacheManager keys on the canonicalized plan, which does not see
-    * the new file listing.
-    */
-  private[graft] def invalidatePersist(spark: SparkSession, key: String): Unit =
-    Option(persistRegistry.remove((spark.sparkContext, key))).foreach { old =>
-      val oldPlan = old.queryExecution.analyzed
-      val stillServed = persistRegistry.values.stream()
-        .anyMatch(v => v.queryExecution.analyzed.sameResult(oldPlan))
-      if (!stillServed) old.unpersist(false)
-    }
-
   /** The q54 3-gram set over an already-materialized token array —
     * ONE definition shared by grams3 and the q77b one-scan signal
     * frame. `toks` must be a materialized column (its own projection
@@ -214,6 +37,13 @@ object Curation {
         i => concat_ws(" ", element_at(toks, i), element_at(toks, i + 1), element_at(toks, i + 2)))))
       .otherwise(array().cast("array<string>"))
 
+  /** Distinct 3-gram set per (doc_id, text) row — the shared kernel
+    * of q54, q54b and the streaming gate (one definition, no
+    * paste-drift: the PQ LUT triplication lesson). The split is
+    * materialized by its own projection (interpreted-HOF re-eval
+    * trap, SURVEY §4); sequence(1, n) with n < 1 would DESCEND in
+    * Spark ([1,0]), so short docs get an explicit empty gram set.
+    */
   private[graft] def grams3(docs: DataFrame): DataFrame =
     docs.select(col("doc_id"), split(col("text"), " ").as("toks"))
       .select(col("doc_id"), gram3Of(col("toks")).as("g3"))
@@ -276,7 +106,7 @@ object Curation {
     val withG = docGrams3(spark, dir)
     // persisted: THREE readers re-derive this corpus scan otherwise —
     // bloomBytesFor's count, its bloom aggregate, and the verify join
-    val bench = registerPersist(spark, "decontaminateBloom.bench",
+    val bench = Shared.persist(spark, "decontaminateBloom.bench",
       withG.filter(col("doc_id") % benchMod === 0)
         .select(explode(col("g3")).as("g")).distinct())
     val bf = lit(bloomBytesFor(bench, fpp))
@@ -440,7 +270,7 @@ object Curation {
     // copy to both gates' *On spellings — the funnel now scores the
     // corpus once where it used to pay the scan per gate (VERDICT r12
     // item 5; each gate's standalone entry still derives its own)
-    val scoredShared = registerPersist(spark, "curationFunnel.scored",
+    val scoredShared = Shared.persist(spark, "curationFunnel.scored",
       budgetScoredFrame(spark, dir,
         TextAnalysis.Gopher.MinWords, TextAnalysis.Gopher.MaxWords,
         TextAnalysis.Gopher.MeanLenMin10, TextAnalysis.Gopher.MeanLenMax10,
@@ -543,7 +373,7 @@ object Curation {
         split(col("text"), " ").as("toks"))
       .withColumn("g3", array_sort(gram3Of(col("toks"))))
       .drop("toks")
-    val signals = registerPersist(spark, s"funnelOneScan.$benchMod",
+    val signals = Shared.persist(spark, s"funnelOneScan.$benchMod",
       TextAnalysis.gopherScored(base, Seq("doc_id", "source", "h", "sh", "g3"))
         .select(col("doc_id"), col("source"), col("n_words").as("wc"),
           col("n_pass"),
@@ -798,8 +628,8 @@ object Curation {
       // leg. 8 partitions keeps the scan parallel without the
       // per-task overhead dominating index-sized (not corpus-sized)
       // frames.
-      (registerPersist(spark, hk, spark.read.parquet(s"$p/hashes").coalesce(8)),
-       registerPersist(spark, sk, spark.read.parquet(s"$p/shingles")
+      (Shared.persist(spark, hk, spark.read.parquet(s"$p/hashes").coalesce(8)),
+       Shared.persist(spark, sk, spark.read.parquet(s"$p/shingles")
          .select("doc_id", "sh", "blk", "pblk").coalesce(8)))
     }
 
@@ -813,14 +643,14 @@ object Curation {
       */
     def cached(spark: SparkSession, dir: String): (DataFrame, DataFrame) = {
       val Seq(hk, sk) = cacheKeys(path(spark, dir))
-      (persistLookup(spark, hk), persistLookup(spark, sk)) match {
+      (Shared.persisted(spark, hk), Shared.persisted(spark, sk)) match {
         case (Some(h), Some(s)) => (h, s)
         case _ => loadCached(spark, dir)
       }
     }
 
     private def invalidateCached(spark: SparkSession, dir: String): Unit =
-      cacheKeys(path(spark, dir)).foreach(invalidatePersist(spark, _))
+      cacheKeys(path(spark, dir)).foreach(Shared.unpersist(spark, _))
 
     private def watermark(spark: SparkSession, dir: String,
                           deltaMod: Int, benchMod: Int, nBuckets: Int): String =
@@ -1506,7 +1336,7 @@ object Curation {
     val stats = ex
       .withColumn("ct", sum(when(col("tgt") && col("g").isNotNull, 1L).otherwise(0L)).over(wG))
       .withColumn("cr", sum(when(!col("tgt") && col("g").isNotNull, 1L).otherwise(0L)).over(wG))
-    val perdoc = registerPersist(spark, "importanceSelect",
+    val perdoc = Shared.persist(spark, "importanceSelect",
       stats.groupBy("doc_id", "tgt")
         .agg(sum(when(col("g").isNotNull, 1L).otherwise(0L)).as("n_grams"),
           sum(when(col("g").isNotNull, col("ct")).otherwise(0L)).as("sum_t"),
@@ -1550,7 +1380,7 @@ object Curation {
     */
   def sourceOverlap(spark: SparkSession, dir: String): DataFrame = {
     graft.functions.GraftFunctions.register(spark)
-    val ex = registerPersist(spark, "sourceOverlap",
+    val ex = Shared.persist(spark, "sourceOverlap",
       Tables.documents(spark, dir)
         .select(col("source"), explode(expr("array_distinct(kgram_hashes(text, 2))")).as("g"))
         .distinct())
@@ -1611,7 +1441,7 @@ object Curation {
       minDocs: Int = 5): DataFrame = {
     graft.functions.GraftFunctions.register(spark)
     val docs = Tables.documents(spark, dir).select("doc_id", "source", "text")
-    val grams = registerPersist(spark, "boilerplateSpans",
+    val grams = Shared.persist(spark, "boilerplateSpans",
       docs.select(col("doc_id"),
         posexplode(expr(s"kgram_hashes(text, $k)")).as(Seq("pos", "g"))))
     val boiler = grams.groupBy("g")
@@ -1680,7 +1510,7 @@ object Curation {
     // integers per doc, text already dropped) so the corpus text is
     // scanned and scored exactly once (q73's persist-for-two-readers
     // discipline; measured 1.46s → ~0.6s at sf0.1)
-    val scored = registerPersist(spark, "tokenBudget",
+    val scored = Shared.persist(spark, "tokenBudget",
       budgetScoredFrame(spark, dir, minWords, maxWords,
         meanLenMin10, meanLenMax10, stopwords, minStopwords))
     tokenBudgetOn(scored, budgetPct)

@@ -52,8 +52,7 @@ object Dedup {
     * dedupNgramPairs call (last call wins); read it AFTER an action
     * on the returned frame, like any accumulator.
     */
-  private val lastOversized =
-    new java.util.concurrent.ConcurrentHashMap[SparkSession, org.apache.spark.util.LongAccumulator]()
+  private val OversizedFamily = "dedup.oversized"
 
   /** Blocks that exceeded maxBlock in the last executed
     * dedupNgramPairs action on this session (0 when the belt never
@@ -69,7 +68,8 @@ object Dedup {
     * least once.
     */
   def oversizedBlockCount(spark: SparkSession): Long =
-    Option(lastOversized.get(spark)).map(a => a.value: Long).getOrElse(0L)
+    graft.Shared.peek[org.apache.spark.util.LongAccumulator](spark, OversizedFamily, spark)
+      .map(a => a.value: Long).getOrElse(0L)
 
   private[graft] def docShingles(spark: SparkSession, dir: String): DataFrame =
     docShinglesOn(spark, Tables.documents(spark, dir))
@@ -166,8 +166,7 @@ object Dedup {
     require(maxBlock >= 2, s"maxBlock must be >= 2: $maxBlock")
     import spark.implicits._
     val oversized = spark.sparkContext.longAccumulator("graft.dedup.oversizedBlocks")
-    lastOversized.keySet.removeIf(_.sparkContext.isStopped)
-    lastOversized.put(spark, oversized)
+    graft.Shared.put(spark, OversizedFamily, spark, oversized)
     // Each doc's shingle array shuffles ONCE to its block and all
     // candidate pairs form in-memory per block — a self-join instead
     // duplicates every array into every candidate pair row (observed
@@ -340,7 +339,7 @@ object Dedup {
     // Registered (one-live-copy), not bare-persisted: repeated calls
     // in a long-lived session would otherwise stack a cached copy
     // per invocation (ADVICE r12)
-    val docsP = Curation.registerPersist(spark, "dedupMinHashOn", docs)
+    val docsP = graft.Shared.persist(spark, "dedupMinHashOn", docs)
     val banded = docsP
       .withColumn("sig", expr(s"minhash(sh, $k)"))
       .select(col("doc_id"), posexplode(bandCols(k, bands)).as(Seq("band", "bucket")))
@@ -517,7 +516,7 @@ object Dedup {
     // first-computed partitions serve the other two subtrees from
     // cache, and the ContextCleaner reclaims the blocks when the
     // frame goes unreachable)
-    val docs = Curation.registerPersist(spark, "dedupSimHashPlanted",
+    val docs = graft.Shared.persist(spark, "dedupSimHashPlanted",
       docShinglesOn(spark, plantedDocs(spark, dir, every, idOffset)))
     dedupSimHashOn(spark, docs, maxDist = 0)
       .join(docs.select(col("doc_id").as("doc_a"), col("sh").as("sh_a")), "doc_a")
@@ -575,7 +574,7 @@ object Dedup {
     // exact amplification the batch operator measured and designed
     // away): old-old pairs die at the candidate stage before any
     // array moves, and a surviving pair is verified exactly once
-    val docsP = Curation.registerPersist(spark, "dedupMinHashIncremental",
+    val docsP = graft.Shared.persist(spark, "dedupMinHashIncremental",
       docShingles(spark, dir))
     val banded = docsP
       .withColumn("sig", expr(s"minhash(sh, $k)"))

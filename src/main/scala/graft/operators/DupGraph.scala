@@ -37,12 +37,6 @@ import org.apache.spark.storage.StorageLevel
   */
 object DupGraph {
 
-  /** Last converged state's cached RDD per session (leak-bounding
-    * registry, same pattern as ReplyChains.lastState).
-    */
-  private val lastState =
-    new java.util.concurrent.ConcurrentHashMap[SparkSession, org.apache.spark.rdd.RDD[org.apache.spark.sql.Row]]()
-
   /** Rebuild `df` as a leaf LogicalRDD over its persisted row RDD.
     *
     * persist() alone does NOT stop the LOGICAL plan from doubling per
@@ -55,7 +49,7 @@ object DupGraph {
     * on Vectors.slidingSegments). The tiny (id, rep) state never
     * needs codegen, so leaving the columnar path costs nothing.
     */
-  private[operators] def cutLineage(df: DataFrame, lvl: StorageLevel): (DataFrame, org.apache.spark.rdd.RDD[org.apache.spark.sql.Row]) = {
+  private[graft] def cutLineage(df: DataFrame, lvl: StorageLevel): (DataFrame, org.apache.spark.rdd.RDD[org.apache.spark.sql.Row]) = {
     val rdd = df.rdd.persist(lvl)
     (df.sparkSession.createDataFrame(rdd, df.schema), rdd)
   }
@@ -138,8 +132,10 @@ object DupGraph {
       round += 1
     }
     e0.unpersist(false)
-    lastState.keySet.removeIf(_.sparkContext.isStopped) // leak-bounding (Tables' rule)
-    Option(lastState.put(edges.sparkSession, stateRdd)).foreach(_.unpersist(false))
+    // the converged state's cached RDD hands off: the next call on
+    // the session releases it
+    graft.Shared.put(edges.sparkSession, "dupGraph.state", edges.sparkSession, stateRdd,
+      release = graft.Shared.unpersistRdd)
     state
   }
 

@@ -84,26 +84,14 @@ import org.apache.spark.storage.StorageLevel
   */
 object KnnGraph {
 
-  /** Last converged edge RDD per session (leak-bounding registry,
-    * DupGraph.lastState's pattern).
+  /** Hand-off families in [[graft.Shared]], one value per session:
+    * the last descent's converged edge RDD (`knn.edges`) or leaf-round
+    * scratch root (`knn.scratch`), and the last walk's hop caches
+    * (`knn.walk`). The next call on the session releases them.
     */
-  private val lastEdges =
-    new java.util.concurrent.ConcurrentHashMap[SparkSession, org.apache.spark.rdd.RDD[Row]]()
-
-  /** One live, leaf-materialized copy of an expensive gate frame —
-    * VERDICT r20 item 3: q92b/q92e ran the IDENTICAL
-    * `nnDescent(corpus, k=10, maxIters=2)` twice per bench pass, and
-    * q92f/q92g the identical `knnGraphIncrementOn` — ~6-8s/pass of
-    * duplicated work for bit-identical frames. The registry semantics
-    * (dependency-plan sameResult, watermark token, leaf-RDD probe,
-    * eager materialization before the lastEdges/lastScratch handoff
-    * can invalidate the backing — ADVICE r20) live in
-    * [[Curation.sharedLeafFrame]], which the PQ family shares.
-    */
-  private def sharedGateFrame(spark: SparkSession, key: String,
-                              deps: Seq[DataFrame], token: String = "")
-                             (compute: => DataFrame): DataFrame =
-    Curation.sharedLeafFrame(spark, key, deps, token)(compute)
+  private val EdgesFamily = "knn.edges"
+  private val ScratchFamily = "knn.scratch"
+  private val WalkFamily = "knn.walk"
 
   /** Exact per-node top-k over an (vec_id, embedding) frame:
     * (vec_id, nb_id, sim, rk), rank by (6dp cosine DESC, nb_id ASC) —
@@ -167,7 +155,7 @@ object KnnGraph {
     // (~1.3s at sf0.1, r21's candidate 3) — one live leaf copy per
     // corpus under the q92b/q67 sharing discipline (VERDICT r21
     // item 6); a different dir / source swap / params recomputes
-    val enc = sharedGateFrame(spark,
+    val enc = graft.Shared.leafFrame(spark,
         s"q92d_enc:every=$every,off=$idOffset", Seq(planted))(
       TextEncoder.encodeHashed(spark,
           planted.select("doc_id", "text").as[TextEncoder.TextRow])
@@ -347,13 +335,13 @@ object KnnGraph {
     * by a strictly better one (the monotonicity KnnGraphSpec pins).
     *
     * LIFECYCLE (ADVICE r20): the returned frame is backed by the
-    * lastEdges/lastScratch handoff registries, which the NEXT descent
+    * `knn.edges`/`knn.scratch` hand-offs, which the NEXT descent
     * on the same session invalidates — in leaf mode by DELETING the
     * backing parquet (a later read then fails, it does not recompute
     * like the RDD path). Callers that hold the result across a
     * subsequent descent must materialize it first (persist + count, or
     * write it out) — the gate entries do exactly that through
-    * sharedGateFrame.
+    * Shared.leafFrame.
     * Convergence = an empty new-edge set after the prune — with
     * merged ⊇ edges, a list can only change by admitting a new edge,
     * so zero new edges ⇔ the (src, dst) set (and, sim being a pure
@@ -518,10 +506,10 @@ object KnnGraph {
         edges = leaf(initEdges); edgesLeafId = leafSeq
         (1 until edgesLeafId).foreach(dropLeaf) // init's slice partials are dead
         idx.unpersist(false)
-        // ADVICE r20: with edgesRdd null the end-of-loop handoff skips
-        // lastEdges — a previous NON-leaf descent's cached RDD would
-        // otherwise stay persisted across this (large) leaf-mode build
-        Option(lastEdges.remove(spark)).foreach(_.unpersist(false))
+        // ADVICE r20: with edgesRdd null the end-of-loop hand-off skips
+        // the edges family — a previous NON-leaf descent's cached RDD
+        // would otherwise stay persisted across this (large) leaf-mode build
+        graft.Shared.drop(spark, EdgesFamily, spark)
         freshF = edges.select("src", "dst") // init: a projection of the same leaf
       } else {
         val (e0, er0) = DupGraph.cutLineage(initEdges, lvl)
@@ -622,51 +610,29 @@ object KnnGraph {
       if (freshRdd != null) freshRdd.unpersist(false)
       if (freshLeafId != 0) dropLeaf(freshLeafId) // the edges leaf alone backs the result
       e.unpersist(false)
-      lastEdges.keySet.removeIf(_.sparkContext.isStopped)
-      // ADVICE r20: evicting a stopped session's entry must also
-      // delete its on-disk root, or abandoned scratch compounds disk
-      // pressure at exactly the scale where leaf mode engages
-      val scIt = lastScratch.entrySet().iterator()
-      while (scIt.hasNext) {
-        val en = scIt.next()
-        if (en.getKey.sparkContext.isStopped) {
-          deleteRootQuietly(spark, en.getValue)
-          scIt.remove()
-        }
-      }
       if (edgesRdd != null)
-        Option(lastEdges.put(spark, edgesRdd)).foreach { prev =>
-          if (prev ne edgesRdd) prev.unpersist(false)
-        }
-      // leaf-round scratch hands off like the RDD registry: the NEXT
+        graft.Shared.put(spark, EdgesFamily, spark, edgesRdd, release = graft.Shared.unpersistRdd)
+      // leaf-round scratch hands off like the edge RDD: the NEXT
       // descent on this session deletes the previous call's root (which
       // by now holds only the final edges leaf the returned frame reads)
-      val prevRoot =
-        if (scratchRoot != null) lastScratch.put(spark, scratchRoot)
-        else lastScratch.remove(spark)
-      if (prevRoot != null && prevRoot != scratchRoot) {
-        val p = new org.apache.hadoop.fs.Path(prevRoot)
-        val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        if (fs.exists(p)) { fs.delete(p, true); () }
-      }
+      if (scratchRoot != null)
+        graft.Shared.put(spark, ScratchFamily, spark, scratchRoot,
+          release = (root: String) => deleteRootQuietly(spark, root))
+      else graft.Shared.drop(spark, ScratchFamily, spark)
       edges
     } catch {
       case t: Throwable =>
         // ADVICE r20: a failure mid-build must not leak the scratch
         // root — leaf rounds exist to BOUND disk, and an abandoned
         // root compounds pressure at exactly the scale they engage.
-        // (The success path hands the root to lastScratch instead.)
+        // (The success path hands the root off instead.)
         if (scratchRoot != null) deleteRootQuietly(spark, scratchRoot)
         throw t
     }
   }
 
-  /** Leaf-round scratch roots per session (lastEdges' pattern). */
-  private val lastScratch =
-    new java.util.concurrent.ConcurrentHashMap[SparkSession, String]()
-
   /** Best-effort recursive delete of a scratch root (failure cleanup +
-    * stopped-session eviction — never fatal to the caller).
+    * hand-off release — never fatal to the caller).
     */
   private def deleteRootQuietly(spark: SparkSession, root: String): Unit =
     try {
@@ -703,7 +669,7 @@ object KnnGraph {
     // one live descent per (corpus, params) — q92e runs the IDENTICAL
     // call on the identical corpus (VERDICT r20 item 3); the shared
     // frame is bit-identical, so both entries' results are unchanged
-    sharedGateFrame(spark, s"knn_descent:k=$k,it=$maxIters,sr=$sampleR", Seq(corpus))(
+    graft.Shared.leafFrame(spark, s"knn_descent:k=$k,it=$maxIters,sr=$sampleR", Seq(corpus))(
         nnDescent(spark, corpus, k = k, maxIters = maxIters, sampleR = sampleR))
       .filter(col("src") >= idOffset)
       .withColumn("rk", row_number().over(w))
@@ -740,8 +706,8 @@ object KnnGraph {
         .select((col("vec_id") + idOffset).as("vec_id"), col("embedding")))
     // shares q92b's descent frame — identical call, identical corpus,
     // identical key (sampleR defaults to 0 there too); see
-    // sharedGateFrame for the freshness rules
-    val edges = sharedGateFrame(spark, s"knn_descent:k=$k,it=$maxIters,sr=0", Seq(corpus))(
+    // Shared.leafFrame for the freshness rules
+    val edges = graft.Shared.leafFrame(spark, s"knn_descent:k=$k,it=$maxIters,sr=0", Seq(corpus))(
       nnDescent(spark, corpus, k = k, maxIters = maxIters))
     val mutual = edges.as("x").join(edges.as("y"),
         col("x.src") === col("y.dst") && col("x.dst") === col("y.src"))
@@ -771,7 +737,7 @@ object KnnGraph {
     GraftFunctions.register(spark)
     val e = Tables.embeddings(spark, dir).select("vec_id", "embedding")
     // one live copy feeds BOTH sides of the mutuality self-join
-    val g = Curation.registerPersist(spark, "q92c_knn", knnOn(e, k))
+    val g = graft.Shared.persist(spark, "q92c_knn", knnOn(e, k))
     val mutual = g.as("x").join(g.as("y"),
         col("x.vec_id") === col("y.nb_id") && col("x.nb_id") === col("y.vec_id"))
       .where(col("x.vec_id") < col("x.nb_id") && col("x.sim") >= minSim)
@@ -1057,12 +1023,11 @@ object KnnGraph {
     // them (back-to-back walks never accumulate)
     wholeEdges.foreach(_.unpersist(false))
     q.unpersist(false)
-    lastWalk.keySet.removeIf(_.sparkContext.isStopped)
-    Option(lastWalk.put(spark, (hops.toSeq, walkRdds.toSeq))).foreach {
-      case (prevHops, prevRdds) =>
-        prevHops.foreach(p => if (!hops.exists(_ eq p)) p.unpersist(false))
-        prevRdds.foreach(r => if (!walkRdds.exists(_ eq r)) r.unpersist(false))
-    }
+    graft.Shared.put(spark, WalkFamily, spark, (hops.toSeq, walkRdds.toSeq),
+      release = (prev: (Seq[DataFrame], Seq[org.apache.spark.rdd.RDD[Row]])) => {
+        prev._1.foreach(_.unpersist(false))
+        prev._2.foreach(graft.Shared.unpersistRdd)
+      })
     val w = Window.partitionBy("q_id").orderBy(col("sim").desc, col("node"))
     visited.withColumn("rk", row_number().over(w)).filter(col("rk") <= k)
   }
@@ -1071,14 +1036,6 @@ object KnnGraph {
     * store instead of prune-reading buckets per hop (see graphWalkOn).
     */
   private val wholeEdgeThreshold = 100000L
-
-  /** Last walk's hop caches per session (lastEdges' pattern): the
-    * pruned path's persisted frames and/or the wholeEdges path's leaf
-    * RDDs, both released when the next walk on the session lands.
-    */
-  private val lastWalk =
-    new java.util.concurrent.ConcurrentHashMap[SparkSession,
-      (Seq[DataFrame], Seq[org.apache.spark.rdd.RDD[Row]])]()
 
   /** q93: graph-walk search under the planted gate — queries are
     * verbatim copies of vec_id < nPlanted; each walks the PERSISTED
@@ -1153,7 +1110,7 @@ object KnnGraph {
     // deltaLists, affBase, affSrcs AND the merge read's bucket collect
     // — without the registry persist the in-group kernel re-ran once
     // per consumer (measured 2× on the 10× increment probe)
-    val scored = Curation.registerPersist(spark, "knn_incr_scored",
+    val scored = graft.Shared.persist(spark, "knn_incr_scored",
       scoreWithinGroups(spark,
         members.join(all, "vec_id")
           .select(col("cell").cast("long").as("g"), col("vec_id").as("u"),
@@ -1196,7 +1153,7 @@ object KnnGraph {
     // stored graphs with the same k and corpus plans must coexist as
     // separate entries instead of evicting each other on alternation
     // (the watermark stays in the token — a rebuild still invalidates)
-    sharedGateFrame(spark, s"knn_increment:$path:k=$k", Seq(e, delta),
+    graft.Shared.leafFrame(spark, s"knn_increment:$path:k=$k", Seq(e, delta),
         token = path + "@" + VectorIndex.readWatermark(spark, path).getOrElse(""))(
       knnGraphIncrementOn(spark, path, e, delta, k))
 

@@ -103,7 +103,7 @@ object Messages {
     // scan, JSON k-extraction, distinct, bucket-size aggregation +
     // join — planned TWICE per invocation (two `Scan parquet` legs in
     // the formatted plan; the dominant 1.1s job in JobProbe's q12
-    // profile). The q77/q83c registerPersist discipline: plan-keyed,
+    // profile). The q77/q83c Shared.persist discipline: plan-keyed,
     // CacheManager-revalidated, a registerOverride source swap
     // recomputes. The frame is slim — distinct (user, day, k) rows
     // plus a long — bounded by active users × days × keys.
@@ -116,7 +116,7 @@ object Messages {
         get_json_object(col("props"), "$.k").cast("int").as("k"))
       .filter(col("k").isNotNull && col("user_id").isNotNull)
       .distinct()
-    val sized = Curation.registerPersist(spark, s"q12_sized:cap=$maxBucket",
+    val sized = graft.Shared.persist(spark, s"q12_sized:cap=$maxBucket",
       participants
         .join(participants.groupBy("day", "k").agg(count(lit(1)).as("bsz")),
           Seq("day", "k")))

@@ -171,10 +171,10 @@ object PQ {
     require(dims % m == 0, s"dims ($dims) must be divisible by m ($m)")
     // books/codes are pure functions of (corpus, params) and identical
     // across q67 and q67b's builds — one live leaf copy per corpus
-    // (r21, Curation.sharedLeafFrame; the q92b/q92e discipline)
-    val books = Curation.sharedLeafFrame(spark, s"pq_books:m=$m,k=$kCodes,it=$iters", Seq(e))(
+    // (r21, Shared.leafFrame; the q92b/q92e discipline)
+    val books = graft.Shared.leafFrame(spark, s"pq_books:m=$m,k=$kCodes,it=$iters", Seq(e))(
       codebooks(spark, e, m, kCodes, dims, iters))
-    val codes = Curation.sharedLeafFrame(spark, s"pq_codes:m=$m,k=$kCodes,it=$iters", Seq(e))(
+    val codes = graft.Shared.leafFrame(spark, s"pq_codes:m=$m,k=$kCodes,it=$iters", Seq(e))(
       encode(spark, e, books, m, dims))
     val q = e.filter(col("vec_id") < nQueries)
     val luts = lutsFor(q, books, m, dims)
@@ -284,12 +284,12 @@ object PQ {
     // cells/books/codes are pure functions of (corpus, params): one
     // live leaf copy per corpus — q67 shares books/codes (same keys),
     // q67g's planted corpus hashes to its own entries (r21)
-    val cells = Curation.sharedLeafFrame(spark, s"ivfpq_cells:l=$lists", Seq(e))(
+    val cells = graft.Shared.leafFrame(spark, s"ivfpq_cells:l=$lists", Seq(e))(
       Vectors.assignCells(e, cents, nProbe = 1, nCoarse = Vectors.autoCoarse(lists))
         .select("vec_id", "cell"))
-    val books = Curation.sharedLeafFrame(spark, s"pq_books:m=$m,k=$kCodes,it=$iters", Seq(e))(
+    val books = graft.Shared.leafFrame(spark, s"pq_books:m=$m,k=$kCodes,it=$iters", Seq(e))(
       codebooks(spark, e, m, kCodes, dims, iters))
-    val coded = Curation.sharedLeafFrame(spark, s"pq_codes:m=$m,k=$kCodes,it=$iters", Seq(e))(
+    val coded = graft.Shared.leafFrame(spark, s"pq_codes:m=$m,k=$kCodes,it=$iters", Seq(e))(
       encode(spark, e, books, m, dims)).join(cells, "vec_id")
     val q = e.filter(col("vec_id") < nQueries)
     val probes = Vectors.assignCells(q, cents, nProbe = nProbe,

@@ -31,16 +31,13 @@ object ReplyChains {
     */
   private type RowRdd = org.apache.spark.rdd.RDD[org.apache.spark.sql.Row]
 
-  /** Last round's persisted state RDD per session (same leak-bounding
-    * registry pattern as Vectors.slidingCache).
+  /** The last round's persisted state RDD hands off per session: the
+    * next `threads` call on the session releases it.
     */
-  private val lastState =
-    new java.util.concurrent.ConcurrentHashMap[org.apache.spark.sql.SparkSession, RowRdd]()
-
   def threads(messages: DataFrame, maxDepth: Int = 16): DataFrame = {
     val (state, rdd) = resolveIter(messages, maxDepth)
-    lastState.keySet.removeIf(_.sparkContext.isStopped) // leak-bounding (Tables' rule)
-    Option(lastState.put(messages.sparkSession, rdd)).foreach(_.unpersist(false))
+    graft.Shared.put(messages.sparkSession, "replyChains.state", messages.sparkSession, rdd,
+      release = graft.Shared.unpersistRdd)
     state
   }
 
@@ -139,61 +136,38 @@ object ReplyChains {
         when(col("x_id").isNotNull, col("pid")).as("reply_to_message_id"))
   }
 
-  /** Converged event-thread frame per (session, sf dir). q56 and q56b
+  /** Converged event-thread frame, ONE per session (family
+    * `replyChains.eventThreads` in [[graft.Shared]]). q56 and q56b
     * both need the same ⌈log₂ 64⌉ = 6-round resolution; computing it
     * twice doubled the most expensive join chain in the engine
-    * (VERDICT r06: q56 6.1s + q56b 8.9s were mostly the same work).
-    * The converged slim (chat, id, root, depth) frame stays persisted
-    * keyed by (session, dir) — deliberately OUTSIDE the `lastState`
-    * registry so an unrelated `threads()` call cannot evict the
-    * shared frame mid-run. Bounded and freshness-checked (VERDICT/
-    * ADVICE r07: the unbounded computeIfAbsent both leaked persisted
-    * frames across many dirs and served stale resolutions after the
-    * source was regenerated or re-registered):
-    *   - ONE live frame per session — resolving a new dir unpersists
-    *     and drops the previous dir's frame;
-    *   - the entry carries `Tables.sourceToken(events)` (override
-    *     version + recursive file snapshot, VectorIndex's watermark
-    *     contract); a token mismatch unpersists and rebuilds.
+    * (VERDICT r06). The slim (chat, id, root, depth) frame stays
+    * persisted outside the `threads()` hand-off, so an unrelated
+    * `threads()` call cannot evict it mid-run. The token is the dir
+    * plus `Tables.sourceToken(events)`: resolving another dir, or the
+    * source regenerated or re-registered, replaces the frame and
+    * unpersists the old one (VERDICT/ADVICE r07).
     */
-  private case class CachedThreads(token: String, frame: DataFrame, rdd: RowRdd)
-  private val eventThreadCache =
-    new java.util.concurrent.ConcurrentHashMap[(org.apache.spark.sql.SparkSession, String), CachedThreads]()
+  private case class CachedThreads(dir: String, frame: DataFrame, rdd: RowRdd)
+  private val EventThreads = "replyChains.eventThreads"
 
-  private def resolvedEventThreads(spark: org.apache.spark.sql.SparkSession, dir: String): DataFrame = {
-    val it = eventThreadCache.entrySet().iterator()
-    while (it.hasNext) {
-      val e = it.next()
-      if (e.getKey._1.sparkContext.isStopped) it.remove() // leak-bounding (Tables' rule)
-      else if ((e.getKey._1 eq spark) && e.getKey._2 != dir) {
-        e.getValue.rdd.unpersist(false); it.remove()
-      }
-    }
-    val token = graft.Tables.sourceToken(spark, dir, "events")
-    eventThreadCache.compute((spark, dir), (_, old) =>
-      if (old != null && old.token == token) old
-      else {
-        if (old != null) old.rdd.unpersist(false)
-        val (frame, rdd) = resolveIter(eventReplyFrame(spark, dir), maxDepth = 64)
-        CachedThreads(token, frame, rdd)
-      }).frame
-  }
+  private def resolvedEventThreads(spark: org.apache.spark.sql.SparkSession, dir: String): DataFrame =
+    graft.Shared.get[CachedThreads](spark, EventThreads, spark,
+      dir + "|" + graft.Tables.sourceToken(spark, dir, "events"),
+      release = c => graft.Shared.unpersistRdd(c.rdd)) {
+      val (frame, rdd) = resolveIter(eventReplyFrame(spark, dir), maxDepth = 64)
+      CachedThreads(dir, frame, rdd)
+    }.frame
 
-  /** Explicit evict hook: unpersist and drop every cached converged
-    * frame this session holds (mirror of Vectors' unpersist registry).
+  /** Explicit evict hook: unpersist and drop this session's converged
+    * frame.
     */
-  def clearEventThreadCache(spark: org.apache.spark.sql.SparkSession): Unit = {
-    val it = eventThreadCache.entrySet().iterator()
-    while (it.hasNext) {
-      val e = it.next()
-      if (e.getKey._1 eq spark) { e.getValue.rdd.unpersist(false); it.remove() }
-    }
-  }
+  def clearEventThreadCache(spark: org.apache.spark.sql.SparkSession): Unit =
+    graft.Shared.drop(spark, EventThreads, spark)
 
   /** Spec access: the live cached state RDD for (session, dir). */
   private[graft] def cachedEventRdd(
       spark: org.apache.spark.sql.SparkSession, dir: String): Option[RowRdd] =
-    Option(eventThreadCache.get((spark, dir))).map(_.rdd)
+    graft.Shared.peek[CachedThreads](spark, EventThreads, spark).filter(_.dir == dir).map(_.rdd)
 
   /** q56: per-event thread resolution — (event_id, root_id, depth). */
   def eventThreads(spark: org.apache.spark.sql.SparkSession, dir: String): DataFrame =

@@ -5,6 +5,7 @@ import graft.functions.GraftFunctions
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Persisted IVF index lifecycle — the build/read split of the
   * reference's vector index surface (vector_store.py:105-214
@@ -62,31 +63,8 @@ object VectorIndex {
     * (name, length) listing, and the check needs no clock agreement
     * between the index store and the source store.
     */
-  private[graft] def sourceSnapshot(spark: SparkSession, dir: String): String = {
-    val p = new org.apache.hadoop.fs.Path(s"$dir/embeddings.parquet")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) ""
-    else if (!fs.getFileStatus(p).isDirectory) {
-      val s = fs.getFileStatus(p)
-      s"${s.getPath.getName}:${s.getLen}:${s.getModificationTime}"
-    } else {
-      // RECURSIVE leaf-file listing keyed by path relative to the
-      // table root: for a multi-level-partitioned source, a rewrite
-      // deep inside nested partition dirs must change the snapshot
-      // even when every top-level child status looks unchanged
-      // (r04 ADVICE: non-recursive listing read such an index as
-      // wrongly fresh).
-      val root = p.toUri.getPath.stripSuffix("/") + "/"
-      val it = fs.listFiles(p, true)
-      val entries = scala.collection.mutable.ArrayBuffer[String]()
-      while (it.hasNext) {
-        val s = it.next()
-        val rel = s.getPath.toUri.getPath.stripPrefix(root)
-        entries += s"$rel:${s.getLen}:${s.getModificationTime}"
-      }
-      entries.sorted.mkString("\n")
-    }
-  }
+  private[graft] def sourceSnapshot(spark: SparkSession, dir: String): String =
+    Tables.fileListing(spark, s"$dir/embeddings.parquet", "\n")
 
   /** Staged in-place rewrite of one index component dir: materialize
     * the replacement NEXT TO the live dir (the write may read the
@@ -375,26 +353,37 @@ object VectorIndex {
 
   /** Probe the persisted index — value-identical to q19b (same seeds,
     * same ranking), but candidates come from a partition-pruned read
-    * of the probed cells only. The probed cell ids are collected to
-    * the driver (bounded by nLists — knowing which inverted lists to
-    * open IS the index-probe contract) so the pruning filter is
-    * static and visible to the scan.
+    * of the probed cells only. The probe rows (≤ nQueries·nProbe,
+    * each a query vector and a cell id) are collected ONCE and join
+    * back as a local relation — knowing which inverted lists to open
+    * IS the index-probe contract, so the pruning filter is static and
+    * visible to the scan, and the probe ranking never re-runs inside
+    * the candidate query (PQ.probeAdcTopK's tail). Both components are
+    * read with the schema `build` wrote, derived from the embeddings
+    * fields, so no call pays a schema-inference job.
     */
   def probe(spark: SparkSession, dir: String, path: String, k: Int = 10,
             nProbe: Int = 3, nQueries: Int = 5): DataFrame = {
     GraftFunctions.register(spark)
-    val seeds = centroids(spark, path)
-    val q = Tables.embeddings(spark, dir).filter(col("vec_id") < nQueries)
+    val e = Tables.embeddings(spark, dir)
+    val label = e.schema("label")
+    val emb = e.schema("embedding")
+    val seeds = spark.read.schema(StructType(Seq(label, emb.copy(name = "svec"))))
+      .parquet(s"$path/centroids")
+    val q = e.filter(col("vec_id") < nQueries)
       .select(col("vec_id").as("query_id"), col("embedding").as("qvec"))
     val probeW = Window.partitionBy("query_id").orderBy(col("csim").desc, col("label"))
-    val probes = q.crossJoin(broadcast(seeds))
+    val probeRows = q.crossJoin(broadcast(seeds))
       .withColumn("csim", round(expr("cosine_sim(qvec, svec)"), 6))
       .withColumn("crk", row_number().over(probeW))
       .filter(col("crk") <= nProbe)
       .select("query_id", "qvec", "label")
-    val probedCells = probes.select("label").distinct().collect().map(_.get(0)).toSeq
+    val collected = probeRows.collect()
+    val probes = spark.createDataFrame(java.util.Arrays.asList(collected: _*), probeRows.schema)
+    val probedCells = collected.map(_.get(2)).distinct.toSeq
     val w = Window.partitionBy("query_id").orderBy(col("sim").desc, col("vec_id"))
-    cells(spark, path)
+    spark.read.schema(StructType(Seq(e.schema("vec_id"), label, emb, label.copy(name = "cell"))))
+      .parquet(s"$path/cells")
       .filter(col("cell").isin(probedCells: _*))
       .join(broadcast(probes), Seq("label"))
       .filter(col("vec_id") =!= col("query_id"))

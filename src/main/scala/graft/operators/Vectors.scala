@@ -556,12 +556,12 @@ object Vectors {
         // lazy, so construction stays action-free. Registry-managed
         // (one live copy, same-plan reuse): the former local
         // put-then-unpersist-previous cache had the plan-keyed
-        // self-eviction bug registerPersist fixed in r13 — a repeat
+        // self-eviction bug the persist registry fixed in r13 — a repeat
         // call "re-persisted" the identical canonicalized plan (a
         // no-op) then unpersisted the previous handle, evicting the
         // entry it had just reused, so every call after the first ran
         // the multi-lag pass twice again.
-        val dc = graft.operators.Curation.registerPersist(spark,
+        val dc = graft.Shared.persist(spark,
           "vectors.slidingDistances", d)
         val m = dc.agg((sum(col("dist").cast(org.apache.spark.sql.types.DecimalType(18, 6)))
           .cast("double") / count(lit(1))).as("mean_dist"))
@@ -583,7 +583,7 @@ object Vectors {
     * This (source, group_id) pair is the MCP cluster key, read by
     * q14, q81c and every McpTools cluster/search call (some twice per
     * call), so it is served from ONE leaf-materialized copy per corpus
-    * ([[Curation.sharedLeafFrame]]) instead of re-running the join,
+    * ([[graft.Shared.leafFrame]]) instead of re-running the join,
     * two window passes and the sort on every call. The registry key
     * is the threshold plus the two projected source plans
     * (documents, embeddings); the token is both tables'
@@ -598,7 +598,7 @@ object Vectors {
     val e = Tables.embeddings(spark, dir).select(col("vec_id"), col("embedding"))
     val token = Tables.sourceToken(spark, dir, "documents") + "\n" +
       Tables.sourceToken(spark, dir, "embeddings")
-    Curation.sharedLeafFrame(spark, s"semantic_groups:t=$threshold", Seq(docs, e), token) {
+    graft.Shared.leafFrame(spark, s"semantic_groups:t=$threshold", Seq(docs, e), token) {
       val w = Window.partitionBy("source").orderBy("doc_id")
       docs.join(e, col("doc_id") === col("vec_id"))
         .withColumn("bucket", expr("n_chars DIV 100"))

@@ -84,45 +84,28 @@ object SourceHarness {
         expr("ts DIV 1000000000").as("sec"), col("props"))
       .collect()
 
-  /** One serialized export per (session, dir, variant) — the
-    * annGateDirs pattern (r21): the export writer is the HARNESS (see
-    * the object scaladoc), and re-collecting `events` + re-writing an
-    * identical temp file on every call charged harness serialization
-    * to the measured parse. Token-guarded like Tables' read cache: a
-    * regenerated events table (or a registerOverride) changes the
-    * sourceToken and the export is re-serialized; the parse itself —
-    * the operator under test — still runs on every invocation. q86c
-    * and q86d deliberately share one file (identical rows, identical
-    * authorOf).
+  /** One serialized export per (session, dir, variant) in
+    * [[graft.Shared]] (family `source.export`): the export writer is
+    * the HARNESS (see the object scaladoc), and re-collecting `events`
+    * + re-writing an identical temp file on every call charged harness
+    * serialization to the measured parse. A regenerated events table
+    * (or a registerOverride) changes the sourceToken and re-serializes,
+    * deleting the superseded file (ADVICE r21: deleteOnExit only fires
+    * at JVM exit); a file deleted behind the store is rewritten. The
+    * parse itself — the operator under test — still runs on every
+    * invocation. q86c and q86d deliberately share one file (identical
+    * rows, identical authorOf).
     */
-  private val exportMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, String), (String, String)]()
+  private def memoExport(spark: SparkSession, dir: String, variant: String)
+                        (write: => String): String =
+    graft.Shared.get[String](spark, "source.export", (spark, dir, variant),
+      Tables.sourceToken(spark, dir, "events"),
+      live = f => new java.io.File(f).exists(),
+      release = f => org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(f)))(write)
 
   private def exportFile(spark: SparkSession, dir: String, variant: String,
-                         prefix: String, authorOf: (Long, Long) => (String, Long)): String = {
-    exportMemo.keySet.removeIf(_._1.sparkContext.isStopped)
-    val token = Tables.sourceToken(spark, dir, "events")
-    val key = (spark, dir, variant)
-    val cur = exportMemo.get(key)
-    if (cur != null && cur._1 == token && new java.io.File(cur._2).exists()) cur._2
-    else {
-      val f = writeExport(eventRows(spark, dir), prefix, authorOf)
-      replaceMemo(key, token, f)
-      f
-    }
-  }
-
-  /** Install a new export artifact under `key`, DELETING the
-    * superseded file/shard-dir immediately (ADVICE r21: deleteOnExit
-    * only fires at JVM exit, so a long-lived session regenerating
-    * sources accumulated one temp artifact per token change).
-    */
-  private def replaceMemo(key: (SparkSession, String, String),
-                          token: String, path: String): Unit =
-    Option(exportMemo.put(key, (token, path))).foreach { case (_, old) =>
-      if (old != path)
-        org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(old))
-    }
+                         prefix: String, authorOf: (Long, Long) => (String, Long)): String =
+    memoExport(spark, dir, variant)(writeExport(eventRows(spark, dir), prefix, authorOf))
 
   /** q86: serialize events → Telegram JSON export → readExport →
     * project (chat identity, message id, stripped from_id, text,
@@ -157,11 +140,11 @@ object SourceHarness {
     val f = exportFile(spark, dir, "json-alt", "q86c_export",
       (uid, eid) => if (eid % 2 == 0) (s"u$uid", uid) else (s"v$uid", uid + 1000000000L))
     // one live parse of the shared export feeds q86c AND q86d (r21 —
-    // the q77 registerPersist discipline): both entries normalize the
+    // the q77 Shared.persist discipline): both entries normalize the
     // identical file; the parse is in-session computed, never stored
     // across runs, and a re-serialized export (new temp path => new
     // plan) re-parses
-    val norm = graft.operators.Curation.registerPersist(spark,
+    val norm = graft.Shared.persist(spark,
       "tg_normalized_alt", TelegramJson.normalized(spark, f))
     TelegramPipeline.concatAuthorRuns(TelegramPipeline.sessionized(norm))
       .select(col("chat_id"), col("run_id"), col("session_id"),
@@ -183,7 +166,7 @@ object SourceHarness {
     val f = exportFile(spark, dir, "json-alt", "q86d_export",
       (uid, eid) => if (eid % 2 == 0) (s"u$uid", uid) else (s"v$uid", uid + 1000000000L))
     // shares q86c's parsed frame (same export file, same key)
-    val norm = graft.operators.Curation.registerPersist(spark,
+    val norm = graft.Shared.persist(spark,
       "tg_normalized_alt", TelegramJson.normalized(spark, f))
     TelegramJson.chatSummary(norm)
       .select(col("chat_id"), col("chat_name"), col("n_messages"), col("n_authors"),
@@ -207,14 +190,8 @@ object SourceHarness {
     */
   def htmlRoundTrip(spark: SparkSession, dir: String,
                     shardSize: Int = 1000): DataFrame = {
-    // same token-guarded harness memo as the JSON exports (exportFile)
-    exportMemo.keySet.removeIf(_._1.sparkContext.isStopped)
-    val token = Tables.sourceToken(spark, dir, "events")
-    val key = (spark, dir, s"html-$shardSize")
-    val cur = exportMemo.get(key)
-    val shardDir = if (cur != null && cur._1 == token &&
-        new java.io.File(cur._2).exists()) cur._2
-    else {
+    // same token-guarded harness memo as the JSON exports
+    val shardDir = memoExport(spark, dir, s"html-$shardSize") {
       val rows = eventRows(spark, dir)
       val d = java.nio.file.Files.createTempDirectory("q86b_html")
       d.toFile.deleteOnExit()
@@ -247,7 +224,6 @@ object SourceHarness {
           f.toFile.deleteOnExit()
           java.nio.file.Files.writeString(f, sb.toString)
         }
-      replaceMemo(key, token, d.toString)
       d.toString
     }
     TelegramHtml.readExport(spark, shardDir)

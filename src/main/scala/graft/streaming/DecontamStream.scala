@@ -58,7 +58,7 @@ object DecontamStream {
     // reloads reuse it) — the bare per-call persist stacked a cached
     // bench-gram copy per loadBench/FunnelStream.load in long-lived
     // sessions, the exact leak class ADVICE r12 flagged in Dedup
-    Curation.registerPersist(spark, s"decontamStream.bench|$dir|$benchMod",
+    graft.Shared.persist(spark, s"decontamStream.bench|$dir|$benchMod",
       Curation.docGrams3(spark, dir)
         .filter(col("doc_id") % benchMod === 0)
         .select(explode(col("g3")).as("g")).distinct())
@@ -93,32 +93,20 @@ object DecontamStream {
   private[streaming] def bandCols(k: Int, bands: Int) =
     graft.operators.Dedup.bandCols(k, bands)
 
-  /** One live FuzzyBenchIndex per (context, source-state, params):
-    * the index is a pure function of the documents source, and the
-    * build's driver collect was re-paid on every FunnelStream.load /
-    * bench pass. Keyed by SparkCONTEXT, not session — foreachBatch
-    * hands each batch a clone session sharing the context, and a
-    * session-keyed entry would rebuild the collected index per clone
-    * and only evict when the whole context stops. Keyed by
-    * Tables.sourceToken so a source override or file rewrite rebuilds
-    * instead of serving stale bench shingles; stopped contexts
-    * evicted on touch (the persist registry's rule).
+  /** One live FuzzyBenchIndex per (context, params) in
+    * [[graft.Shared]], under the documents source token: the index is
+    * a pure function of the documents source, and the build's driver
+    * collect was re-paid on every FunnelStream.load / bench pass.
+    * Keyed by SparkCONTEXT, not session — foreachBatch hands each
+    * batch a clone session sharing the context, and a session-keyed
+    * entry would rebuild the collected index per clone.
     */
-  private val fuzzyCache =
-    new java.util.concurrent.ConcurrentHashMap[(org.apache.spark.SparkContext, String), (String, FuzzyBenchIndex)]()
-
   def loadBenchFuzzy(spark: SparkSession, dir: String, benchMod: Int = 97,
-                     k: Int = 32, bands: Int = 8): FuzzyBenchIndex = {
-    val token = graft.Tables.sourceToken(spark, dir, "documents")
-    fuzzyCache.keySet.removeIf(_._1.isStopped)
-    // one live entry per params key; a token change REPLACES it (the
-    // one-live-copy rule — stale entries must not accumulate)
-    fuzzyCache.compute((spark.sparkContext, s"$dir|$benchMod|$k|$bands"), (_, prev) =>
-      prev match {
-        case (t, _) if t == token => prev
-        case _ => (token, buildBenchFuzzy(spark, dir, benchMod, k, bands))
-      })._2
-  }
+                     k: Int = 32, bands: Int = 8): FuzzyBenchIndex =
+    graft.Shared.get[FuzzyBenchIndex](spark, "decontam.fuzzy", s"$dir|$benchMod|$k|$bands",
+      graft.Tables.sourceToken(spark, dir, "documents")) {
+      buildBenchFuzzy(spark, dir, benchMod, k, bands)
+    }
 
   private def buildBenchFuzzy(spark: SparkSession, dir: String, benchMod: Int,
                               k: Int, bands: Int): FuzzyBenchIndex = {

@@ -179,7 +179,7 @@ class PlanShapeSpec extends AnyFunSuite {
       // broadcast is the centroid catalog + the probed-assignment join
       ("q29b_dedup_emb_ivf",   0, 1,  5, 2),
       // r21: cells/books/codes come from shared leaf frames
-      // (Curation.sharedLeafFrame) — the build's broadcasts live in
+      // (Shared.leafFrame) — the build's broadcasts live in
       // the one-time leaf computation, so the benched probe plan
       // keeps 3 (probe assignment + LUT + books)
       ("q67b_ivfpq_topk",      2, 2, 10, 3),

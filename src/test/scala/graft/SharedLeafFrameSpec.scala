@@ -4,7 +4,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Pins the r21 shared-leaf registry (Curation.sharedLeafFrame), its
+/** Pins the r21 shared-leaf family (Shared.leafFrame), its
   * semanticGroups memo (the MCP cluster key), and the walk's extra-hop
   * no-op law. Value-level correctness of the gate entries themselves
   * stays with the DuckDB oracle.
@@ -18,7 +18,7 @@ class SharedLeafFrameSpec extends AnyFunSuite {
 
   test("sharedLeafFrame computes once per (key, deps) and serves the same leaf") {
     var computes = 0
-    def get() = operators.Curation.sharedLeafFrame(spark, "spec_slf_a", Seq(corpus(50))) {
+    def get() = Shared.leafFrame(spark, "spec_slf_a", Seq(corpus(50))) {
       computes += 1
       corpus(50).select(col("vec_id"), size(col("embedding")).as("d"))
     }
@@ -31,7 +31,7 @@ class SharedLeafFrameSpec extends AnyFunSuite {
 
   test("sharedLeafFrame: a different dependency plan recomputes, and both entries coexist") {
     var computes = 0
-    def get(n: Int) = operators.Curation.sharedLeafFrame(spark, "spec_slf_b", Seq(corpus(n))) {
+    def get(n: Int) = Shared.leafFrame(spark, "spec_slf_b", Seq(corpus(n))) {
       computes += 1
       corpus(n).select("vec_id")
     }
@@ -46,7 +46,7 @@ class SharedLeafFrameSpec extends AnyFunSuite {
   test("sharedLeafFrame: a token change invalidates the copy") {
     var computes = 0
     def get(tok: String) =
-      operators.Curation.sharedLeafFrame(spark, "spec_slf_c", Seq(corpus(20)), tok) {
+      Shared.leafFrame(spark, "spec_slf_c", Seq(corpus(20)), tok) {
         computes += 1
         corpus(20).select("vec_id")
       }

@@ -46,4 +46,32 @@ class TablesSpec extends AnyFunSuite {
     assert(e.getMessage.contains("unsupported type"),
       s"the guard must name the drift: ${e.getMessage}")
   }
+
+  /** `rel:len:mtime` per file under `root` as a recursive Hadoop
+    * listing reports it (checksum sidecars hidden), sorted.
+    */
+  private def listing(root: java.io.File): Seq[String] = {
+    import scala.jdk.CollectionConverters._
+    val base = root.toPath
+    java.nio.file.Files.walk(base).iterator.asScala
+      .filter(java.nio.file.Files.isRegularFile(_))
+      .filterNot { p => val n = p.getFileName.toString; n.startsWith(".") && n.endsWith(".crc") }
+      .map(p => s"${base.relativize(p)}:${p.toFile.length}:${p.toFile.lastModified}")
+      .toSeq.sorted
+  }
+
+  test("sourceToken format is pinned: v<override version>|rel:len:mtime, sorted, comma-joined") {
+    val d = java.nio.file.Files.createTempDirectory("tables_token").toString
+    Seq((1L, "a"), (2L, "b")).toDF("id", "p").write.partitionBy("p").parquet(s"$d/t.parquet")
+    val files = listing(new java.io.File(s"$d/t.parquet"))
+    assert(files.exists(_.startsWith("p=a/")), "the listing must recurse into partition dirs")
+    assert(Tables.sourceToken(spark, d, "t") == "v0|" + files.mkString(","))
+    val single = new java.io.File(s"$d/s.parquet")
+    java.nio.file.Files.copy(java.nio.file.Path.of(s"$dir/region.parquet"), single.toPath)
+    assert(Tables.sourceToken(spark, d, "s") ==
+      s"v0|s.parquet:${single.length}:${single.lastModified}")
+    assert(Tables.sourceToken(spark, d, "absent") == "v0|")
+    Tables.registerOverride(spark, d, "t", spark.read.parquet(s"$d/t.parquet"))
+    assert(Tables.sourceToken(spark, d, "t") == "v1|" + files.mkString(","))
+  }
 }

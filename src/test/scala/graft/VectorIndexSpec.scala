@@ -78,4 +78,24 @@ class VectorIndexSpec extends AnyFunSuite {
       .selectExpr("size(embedding)").head.getInt(0)
     assert(stats.forall(_.getInt(2) == dim))
   }
+
+  test("sourceSnapshot format is pinned: rel:len:mtime, sorted, newline-joined (built watermarks stay fresh)") {
+    val d = java.nio.file.Files.createTempDirectory("ivf_snapshot").toString
+    assert(VectorIndex.sourceSnapshot(spark, d) == "", "an absent source snapshots as empty")
+    val single = new java.io.File(s"$d/embeddings.parquet")
+    java.nio.file.Files.copy(java.nio.file.Path.of(s"$dir/embeddings.parquet"), single.toPath)
+    assert(VectorIndex.sourceSnapshot(spark, d) ==
+      s"embeddings.parquet:${single.length}:${single.lastModified}")
+    single.delete()
+    Tables.embeddings(spark, dir).write.partitionBy("label").parquet(single.getPath)
+    import scala.jdk.CollectionConverters._
+    val base = single.toPath
+    val files = java.nio.file.Files.walk(base).iterator.asScala
+      .filter(java.nio.file.Files.isRegularFile(_))
+      .filterNot { p => val n = p.getFileName.toString; n.startsWith(".") && n.endsWith(".crc") }
+      .map(p => s"${base.relativize(p)}:${p.toFile.length}:${p.toFile.lastModified}")
+      .toSeq.sorted
+    assert(files.exists(_.startsWith("label=")), "the listing must recurse into partition dirs")
+    assert(VectorIndex.sourceSnapshot(spark, d) == files.mkString("\n"))
+  }
 }
