@@ -2,7 +2,8 @@ package graft
 
 import org.apache.spark.SparkContext
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.storage.StorageLevel
 
@@ -187,7 +188,31 @@ object Shared {
 
   // ------------------------------------------------------- leaf frames
 
-  private final case class Leaf(plans: Seq[LogicalPlan], frame: DataFrame, rdd: RDD[Row])
+  /** `df` cut to a LEAF: a frame over a `LogicalRDD` of `df`'s own
+    * internal rows, persisted MEMORY_AND_DISK, plus that RDD for the
+    * caller to release. It counts nothing: the rows are computed and
+    * cached by the first action that reads them (under AQE the cut
+    * still runs `df`'s shuffle stages, whose statistics plan the
+    * final one).
+    *
+    * Every iterative step (connected components, reply-thread pointer
+    * jumping, NN-descent rounds, the graph walk) and every shared
+    * serving frame cuts here. persist() alone does not stop the
+    * LOGICAL plan from doubling per round (each round's self-join
+    * embeds two copies of the previous round's plan, so ~30 rounds
+    * OOM just building the tree, and every action re-analyzes it);
+    * a leaf keeps each consumer's plan O(1) per round. The RDD
+    * lineage underneath stays intact, so a lost block is recomputed
+    * through it, which is the fault-tolerance `localCheckpoint` gives
+    * up. The rows stay InternalRow end to end: no Row encoder pass
+    * out and back in.
+    */
+  def leaf(df: DataFrame): (DataFrame, RDD[InternalRow]) = {
+    val rows = df.queryExecution.toRdd.map(_.copy()).persist(StorageLevel.MEMORY_AND_DISK)
+    (org.apache.spark.sql.classic.LeafFrame.of(df, rows), rows)
+  }
+
+  private final case class Leaf(plans: Seq[LogicalPlan], frame: DataFrame, rdd: RDD[InternalRow])
 
   /** One live LEAF-MATERIALIZED copy of an expensive shared frame per
     * (context, key, dependency plans): the eager computations (descent
@@ -195,9 +220,8 @@ object Shared {
     * an O(1)-size plan. A CacheManager copy carries the producer's
     * full physical plan inside its InMemoryRelation, which every
     * consumer re-traverses and re-serializes per AQE stage (the
-    * driver-gap pathology on q93/q92g); `DupGraph.cutLineage` plus an
-    * eager count makes the copy a LogicalRDD leaf, materialized before
-    * any hand-off can invalidate its backing.
+    * driver-gap pathology on q93/q92g); a [[leaf]] plus an eager count
+    * is materialized before any hand-off can invalidate its backing.
     *
     * A hit needs the token, plan-for-plan `sameResult` with `deps`,
     * and the leaf RDD still persisted. The leaf keeps its RDD lineage,
@@ -219,7 +243,7 @@ object Shared {
         l.rdd.getStorageLevel != StorageLevel.NONE,
       release = l => unpersistRdd(l.rdd)) {
       BuildLedger.timed(s"sharedLeaf:$key") {
-        val (f, rdd) = operators.DupGraph.cutLineage(compute, StorageLevel.MEMORY_AND_DISK)
+        val (f, rdd) = leaf(compute)
         rdd.count()
         Leaf(depPlans, f, rdd)
       }

@@ -28,31 +28,14 @@ import org.apache.spark.storage.StorageLevel
   *
   * Scale: state is one slim (id, rep) row per node that appears in a
   * pair — NOT per corpus document. Each round shuffles only that
-  * frame plus the edge list on hash-derived keys. Iterative-persist
-  * (materialize + drop previous level) keeps lineage flat — the same
-  * 2^rounds self-join-recompute trap ReplyChains documents.
+  * frame plus the edge list on hash-derived keys. Each round's state
+  * is a [[graft.Shared.leaf]] (why: see there) and the previous
+  * round's RDD is dropped once the next one is materialized.
   * Convergence is detected by the per-round sum of labels: labels
   * only ever decrease, so an unchanged sum IS the fixpoint (one
   * cheap agg on the slim state, no extra join).
   */
 object DupGraph {
-
-  /** Rebuild `df` as a leaf LogicalRDD over its persisted row RDD.
-    *
-    * persist() alone does NOT stop the LOGICAL plan from doubling per
-    * round (each round's plan embeds two copies of the previous
-    * round's), so 30 rounds OOM just BUILDING the plan tree. Cutting
-    * to an RDD leaf keeps the plan O(1) per round while the RDD
-    * lineage chain stays INTACT — on executor loss Spark can recompute
-    * back through the chain (slow but correct), which is exactly the
-    * fault-tolerance property localCheckpoint() gives up (r04 VERDICT
-    * on Vectors.slidingSegments). The tiny (id, rep) state never
-    * needs codegen, so leaving the columnar path costs nothing.
-    */
-  private[graft] def cutLineage(df: DataFrame, lvl: StorageLevel): (DataFrame, org.apache.spark.rdd.RDD[org.apache.spark.sql.Row]) = {
-    val rdd = df.rdd.persist(lvl)
-    (df.sparkSession.createDataFrame(rdd, df.schema), rdd)
-  }
 
   /** Connected components over an undirected edge list with columns
     * (a, b). Returns (id, rep) where rep = min node id reachable.
@@ -72,7 +55,6 @@ object DupGraph {
   def connectedComponents(edges: DataFrame, maxRounds: Int = 30,
                           smallGraphThreshold: Long = 100000L): DataFrame = {
     require(maxRounds >= 1, s"maxRounds must be >= 1: $maxRounds")
-    val lvl = StorageLevel.MEMORY_AND_DISK
     // persist the INPUT edge frame before anything touches it twice:
     // the symmetrizing union reads it once per branch and the small-
     // graph route collects it — for q53 the edge list is the output
@@ -83,7 +65,7 @@ object DupGraph {
     // the input column type — the output schema flipped across the
     // smallGraphThreshold boundary depending on DATA VOLUME
     val e0 = edges.select(col("a").cast("long").as("a"),
-      col("b").cast("long").as("b")).persist(lvl)
+      col("b").cast("long").as("b")).persist(StorageLevel.MEMORY_AND_DISK)
     val nEdges = e0.count() // materializes the persist for all readers
     val sym = e0.union(e0.select(col("b").as("a"), col("a").as("b")))
     if (nEdges <= smallGraphThreshold) {
@@ -106,9 +88,9 @@ object DupGraph {
       val out = parent.keys.toSeq.map(id => (id, find(id)))
       return edges.sparkSession.createDataset(out).toDF("id", "rep")
     }
-    var (state, stateRdd) = cutLineage(
+    var (state, stateRdd) = graft.Shared.leaf(
       sym.select(col("a").as("id")).distinct()
-        .select(col("id"), col("id").as("rep")), lvl)
+        .select(col("id"), col("id").as("rep")))
     var prevSum = state.agg(sum("rep")).first().get(0)
     var round = 0
     var converged = false
@@ -120,9 +102,9 @@ object DupGraph {
         .select(state("id"), least(col("rep"), coalesce(col("nmin"), col("rep"))).as("r1"))
       // (b) pointer jump: follow the label to ITS label (path halving)
       val p = relaxed.select(col("id").as("p_id"), col("r1").as("p_r"))
-      val (next, nextRdd) = cutLineage(
+      val (next, nextRdd) = graft.Shared.leaf(
         relaxed.join(p, relaxed("r1") === p("p_id"), "left")
-          .select(relaxed("id"), least(col("r1"), coalesce(col("p_r"), col("r1"))).as("rep")), lvl)
+          .select(relaxed("id"), least(col("r1"), coalesce(col("p_r"), col("r1"))).as("rep")))
       val s = next.agg(sum("rep")).first().get(0)
       stateRdd.unpersist(false)
       state = next

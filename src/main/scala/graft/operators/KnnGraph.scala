@@ -2,10 +2,11 @@ package graft.operators
 
 import graft.Tables
 import graft.functions.GraftFunctions
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StructField, StructType}
 import org.apache.spark.storage.StorageLevel
 
 /** k-NN GRAPH construction + graph-based semantic clustering — the
@@ -386,7 +387,7 @@ object KnnGraph {
     // unsliced); auto-sizing keeps every certified SF at 1 slice
     // (identical plan) and engages only on 100×-scale corpora.
     val ns = if (slices > 0) slices else math.max(1, (n / 600000L).toInt)
-    // LEAF-MATERIALIZED rounds (r20, coupled to slicing): cutLineage
+    // LEAF-MATERIALIZED rounds (r20, coupled to slicing): Shared.leaf
     // keeps the RDD lineage intact BY DESIGN (recompute-on-loss), but
     // intact lineage also keeps every prior round's ShuffleDependency
     // reachable — their shuffle files can never be GC'd, so a multi-
@@ -430,13 +431,8 @@ object KnnGraph {
       def cellCandJoin = cells.as("ca").join(cells.as("cb"), "cell")
         .where(col("ca.vec_id") =!= col("cb.vec_id"))
         .select(col("ca.vec_id").as("src"), col("cb.vec_id").as("dst"))
-      // deterministic global index by id order (sort + zip — no
-      // single-partition window; survives any partitioning)
-      val idxSchema = StructType(Seq(
-        StructField("vec_id", LongType), StructField("idx", LongType)))
-      val idx = spark.createDataFrame(
-        e.select("vec_id").orderBy("vec_id").rdd.zipWithIndex()
-          .map { case (r, i) => Row(r.getLong(0), i) }, idxSchema)
+      // deterministic global index by id order (vec_id is unique)
+      val idx = graft.plans.Ordinals.withOrdinal(e.select("vec_id"), Seq(col("vec_id")), "idx")
       // sliced init re-reads the ring per slice — keep the global index
       // (slim: two longs per node) cached instead of re-sorting per slice
       if (ns > 1) { idx.persist(lvl); () }
@@ -497,9 +493,9 @@ object KnnGraph {
       // edge is new; after each prune, new = (src, dst) pairs absent
       // from the previous round's lists)
       var edges: DataFrame = null
-      var edgesRdd: org.apache.spark.rdd.RDD[Row] = null
+      var edgesRdd: RDD[InternalRow] = null
       var freshF: DataFrame = null
-      var freshRdd: org.apache.spark.rdd.RDD[Row] = null
+      var freshRdd: RDD[InternalRow] = null
       var edgesLeafId = 0
       var freshLeafId = 0
       if (leafRounds) {
@@ -512,9 +508,9 @@ object KnnGraph {
         graft.Shared.drop(spark, EdgesFamily, spark)
         freshF = edges.select("src", "dst") // init: a projection of the same leaf
       } else {
-        val (e0, er0) = DupGraph.cutLineage(initEdges, lvl)
+        val (e0, er0) = graft.Shared.leaf(initEdges)
         edges = e0; edgesRdd = er0
-        val (f0, fr0) = DupGraph.cutLineage(edges.select("src", "dst"), lvl)
+        val (f0, fr0) = graft.Shared.leaf(edges.select("src", "dst"))
         freshF = f0; freshRdd = fr0
       }
       var iter = 0
@@ -594,10 +590,10 @@ object KnnGraph {
           freshF = nf; freshLeafId = nfId
           converged = freshCnt == 0
         } else {
-          val (next, nextRdd) = DupGraph.cutLineage(prune(merged, k), lvl)
-          val (nf, nfRdd) = DupGraph.cutLineage(
+          val (next, nextRdd) = graft.Shared.leaf(prune(merged, k))
+          val (nf, nfRdd) = graft.Shared.leaf(
             next.select("src", "dst")
-              .join(edges.select("src", "dst"), Seq("src", "dst"), "left_anti"), lvl)
+              .join(edges.select("src", "dst"), Seq("src", "dst"), "left_anti"))
           val freshCnt = nf.count()
           edgesRdd.unpersist(false)
           freshRdd.unpersist(false)
@@ -970,10 +966,10 @@ object KnnGraph {
     //     earlier limit(1) probe shape serialized two jobs per hop,
     //     measured 24s for a 20-query walk). Hop frames persist.
     //   - wholeEdges path (below wholeEdgeThreshold): NO per-hop
-    //     action at all — each hop frame is cut to a lazily-persisted
-    //     RDD leaf (DupGraph.cutLineage, the CC discipline) and the
-    //     caller's single action materializes the whole walk. The leaf
-    //     cut matters as much as the action count: left as a lazy
+    //     action at all — each hop frame is a graft.Shared.leaf
+    //     (no count) and the caller's single action
+    //     materializes the whole walk. The leaf cut matters as much
+    //     as the action count: left as a lazy
     //     cached DataFrame chain, every AQE stage of the final action
     //     re-traversed and re-serialized the whole walk's plan/lineage
     //     (SparkPlanInfo + task closures dominated the driver profile
@@ -982,10 +978,10 @@ object KnnGraph {
     //     bound, a converged walk's extra hop is an empty frontier
     //     joining empty expansions (zero rows, zero cost), and the
     //     final top-k over visited is IDENTICAL.
-    val walkRdds = scala.collection.mutable.ArrayBuffer[org.apache.spark.rdd.RDD[Row]]()
+    val walkRdds = scala.collection.mutable.ArrayBuffer[RDD[InternalRow]]()
     def stage(df: DataFrame): DataFrame =
       if (wholeEdges.isDefined) {
-        val (leafDf, rdd) = DupGraph.cutLineage(df, lvl)
+        val (leafDf, rdd) = graft.Shared.leaf(df)
         walkRdds += rdd
         leafDf
       } else df.persist(lvl)
@@ -1024,7 +1020,7 @@ object KnnGraph {
     wholeEdges.foreach(_.unpersist(false))
     q.unpersist(false)
     graft.Shared.put(spark, WalkFamily, spark, (hops.toSeq, walkRdds.toSeq),
-      release = (prev: (Seq[DataFrame], Seq[org.apache.spark.rdd.RDD[Row]])) => {
+      release = (prev: (Seq[DataFrame], Seq[RDD[InternalRow]])) => {
         prev._1.foreach(_.unpersist(false))
         prev._2.foreach(graft.Shared.unpersistRdd)
       })

@@ -1,6 +1,8 @@
 package graft.operators
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
 
 /** Reply/forward-chain analytics — consumers for the two ingested
@@ -28,10 +30,7 @@ object ReplyChains {
   /** Per-message thread resolution over a normalized export frame
     * (TelegramJson.readExport shape): (chat_id, message_id) →
     * (root_id, depth). Roots have root_id = message_id, depth 0.
-    */
-  private type RowRdd = org.apache.spark.rdd.RDD[org.apache.spark.sql.Row]
-
-  /** The last round's persisted state RDD hands off per session: the
+    * The last round's persisted state RDD hands off per session: the
     * next `threads` call on the session releases it.
     */
   def threads(messages: DataFrame, maxDepth: Int = 16): DataFrame = {
@@ -41,35 +40,20 @@ object ReplyChains {
     state
   }
 
-  private def resolveIter(messages: DataFrame, maxDepth: Int): (DataFrame, RowRdd) = {
+  private def resolveIter(messages: DataFrame, maxDepth: Int): (DataFrame, RDD[InternalRow]) = {
     require(maxDepth >= 1, s"maxDepth must be >= 1: $maxDepth")
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val spark = messages.sparkSession
-    // iterative-persist + RDD-LEAF LINEAGE CUT each round (the
-    // DupGraph.cutLineage pattern). Persist alone stops the 2^rounds
-    // RECOMPUTE trap but not the 2^rounds PLAN trap: each round's
-    // self-join embeds two copies of the previous round's logical
-    // plan, so by round 6 the converged frame's analyzed tree carried
-    // ~2^14 scan leaves and every later action on it — q56's orderBy,
-    // q56b's rollup, every bench repeat — paid ~2.5s of pure
-    // driver-side analysis while execution itself hit the cache
-    // (measured, tools.ThreadCacheProbe r08: q56 re-run 2.9s → 0.3s
-    // after the cut). The LogicalRDD leaf keeps every consumer's plan
-    // O(1); the RDD lineage chain underneath stays intact for
-    // fault-tolerant recompute (the property localCheckpoint gives
-    // up). The slim 4-long rows never need codegen, so leaving the
-    // columnar path costs nothing — and the join stops planning as a
+    // each round's state is a graft.Shared.leaf (why: see there).
+    // Here the plan trap was measured: by round 6 the converged
+    // frame's analyzed tree carried ~2^14 scan leaves, and every later
+    // action on it — q56's orderBy, q56b's rollup, every bench repeat
+    // — paid ~2.5s of driver-side analysis while execution hit the
+    // cache (tools.ThreadCacheProbe r08: q56 re-run 2.9s → 0.3s after
+    // the cut). The leaf also stops the self-join planning as a
     // 100k-row broadcast (state ∝ corpus: SMJ is the right shape).
-    def cut(df: DataFrame, prev: Option[RowRdd]): (DataFrame, RowRdd) = {
-      val rdd = df.rdd.persist(lvl)
-      rdd.count() // materialize from the cached previous level
-      prev.foreach(_.unpersist(false))
-      (spark.createDataFrame(rdd, df.schema), rdd)
-    }
-    var (state, stateRdd) = cut(messages
+    var (state, stateRdd) = graft.Shared.leaf(messages
       .select(col("chat_id"), col("message_id"),
         coalesce(col("reply_to_message_id"), col("message_id")).as("root_id"),
-        when(col("reply_to_message_id").isNull, 0L).otherwise(1L).as("depth")), None)
+        when(col("reply_to_message_id").isNull, 0L).otherwise(1L).as("depth")))
     val rounds = 32 - Integer.numberOfLeadingZeros(math.max(1, maxDepth - 1)) // ceil(log2)
     for (_ <- 1 to rounds) {
       // s.root_id -> that ancestor's own (root_id, depth); a missing
@@ -83,7 +67,9 @@ object ReplyChains {
         .select(col("chat_id"), col("message_id"),
           coalesce(col("p_root"), col("root_id")).as("root_id"),
           (col("depth") + coalesce(col("p_depth"), lit(0L))).as("depth"))
-      val (s2, r2) = cut(next, Some(stateRdd))
+      val (s2, r2) = graft.Shared.leaf(next)
+      r2.count() // materialize from the cached previous level, then drop it
+      stateRdd.unpersist(false)
       state = s2
       stateRdd = r2
     }
@@ -147,7 +133,7 @@ object ReplyChains {
     * source regenerated or re-registered, replaces the frame and
     * unpersists the old one (VERDICT/ADVICE r07).
     */
-  private case class CachedThreads(dir: String, frame: DataFrame, rdd: RowRdd)
+  private case class CachedThreads(dir: String, frame: DataFrame, rdd: RDD[InternalRow])
   private val EventThreads = "replyChains.eventThreads"
 
   private def resolvedEventThreads(spark: org.apache.spark.sql.SparkSession, dir: String): DataFrame =
@@ -166,7 +152,7 @@ object ReplyChains {
 
   /** Spec access: the live cached state RDD for (session, dir). */
   private[graft] def cachedEventRdd(
-      spark: org.apache.spark.sql.SparkSession, dir: String): Option[RowRdd] =
+      spark: org.apache.spark.sql.SparkSession, dir: String): Option[RDD[InternalRow]] =
     graft.Shared.peek[CachedThreads](spark, EventThreads, spark).filter(_.dir == dir).map(_.rdd)
 
   /** q56: per-event thread resolution — (event_id, root_id, depth). */

@@ -4,10 +4,10 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Pins the r21 shared-leaf family (Shared.leafFrame), its
-  * semanticGroups memo (the MCP cluster key), and the walk's extra-hop
-  * no-op law. Value-level correctness of the gate entries themselves
-  * stays with the DuckDB oracle.
+/** Pins the leaf cut (Shared.leaf), the r21 shared-leaf family
+  * (Shared.leafFrame), its semanticGroups memo (the MCP cluster key),
+  * and the walk's extra-hop no-op law. Value-level correctness of the
+  * gate entries themselves stays with the DuckDB oracle.
   */
 class SharedLeafFrameSpec extends AnyFunSuite {
   import TestSpark._
@@ -56,6 +56,43 @@ class SharedLeafFrameSpec extends AnyFunSuite {
     assert(computes == 2, "token change must recompute")
     get("wm2")
     assert(computes == 2, "same token reuses again")
+  }
+
+  test("leaf: a LogicalRDD with the source schema over exactly the inline rows") {
+    val src = corpus(40).select(col("vec_id"), col("embedding"), (col("vec_id") % 3).as("m"))
+    val (leaf, rdd) = Shared.leaf(src)
+    try {
+      assert(leaf.queryExecution.analyzed.isInstanceOf[
+        org.apache.spark.sql.execution.LogicalRDD], "the frame must be a leaf")
+      assert(leaf.schema == src.schema)
+      assert(rows(leaf.orderBy("vec_id")) == rows(src.orderBy("vec_id")))
+    } finally Shared.unpersistRdd(rdd)
+  }
+
+  test("leaf: with its cached blocks dropped it serves the EXACT rows through lineage") {
+    val src = corpus(40).select(col("vec_id"), size(col("embedding")).as("d"))
+    val want = rows(src.orderBy("vec_id"))
+    val (leaf, rdd) = Shared.leaf(src)
+    assert(rdd.count() == 40)
+    assert(spark.sparkContext.getPersistentRDDs.contains(rdd.id), "the leaf's rows must be persisted")
+    rdd.unpersist(blocking = true)
+    assert(!spark.sparkContext.getPersistentRDDs.contains(rdd.id))
+    assert(rows(leaf.orderBy("vec_id")) == want, "a dropped leaf must recompute, not lose rows")
+  }
+
+  test("leaf: a self-join over it (the DupGraph pointer-jump shape) resolves like the inline frame") {
+    // (id, rep): rep = id - 3, down to the chain head id % 3
+    val state = corpus(30).select(col("vec_id").as("id"),
+      greatest(col("vec_id") - 3, col("vec_id") % 3).as("rep"))
+    def jump(s: org.apache.spark.sql.DataFrame) = {
+      val p = s.select(col("id").as("p_id"), col("rep").as("p_r"))
+      s.join(p, s("rep") === p("p_id"), "left")
+        .select(s("id"), least(s("rep"), coalesce(col("p_r"), s("rep"))).as("rep"))
+        .orderBy("id")
+    }
+    val (leaf, rdd) = Shared.leaf(state)
+    try assert(rows(jump(leaf)) == rows(jump(state)))
+    finally Shared.unpersistRdd(rdd)
   }
 
   /** Vectors.semanticGroups' chain run inline, outside the registry —

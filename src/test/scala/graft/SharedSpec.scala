@@ -8,8 +8,9 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Pins the rules `Shared` owns for every family: one compute per key
   * under concurrency, the live-stream restart that bounds its memory
-  * sink, release of superseded values, and the guard that keeps new
-  * process-global registries out of the codebase.
+  * sink, release of superseded values, and the guards that keep new
+  * process-global registries and second leaf spellings out of the
+  * codebase.
   */
 class SharedSpec extends AnyFunSuite {
   import TestSpark._
@@ -115,18 +116,34 @@ class SharedSpec extends AnyFunSuite {
     assert(!new java.io.File(f1).exists(), "the superseded export must be deleted")
   }
 
-  test("no hand-rolled registry: ConcurrentHashMaps in src/main live in Shared or the three kept maps") {
+  /** Match counts of `pattern` per src/main/scala/graft source outside
+    * `tools/`, keyed by path relative to that root.
+    */
+  private def mainMatches(pattern: scala.util.matching.Regex): Seq[(String, Int)] = {
     val root = new java.io.File("src/main/scala/graft")
     assert(root.isDirectory, s"run from the repository root: ${root.getAbsolutePath}")
+    import scala.jdk.CollectionConverters._
+    Files.walk(root.toPath).iterator.asScala
+      .filter(p => p.toString.endsWith(".scala"))
+      .map(p => root.toPath.relativize(p).toString -> pattern.findAllIn(Files.readString(p)).size)
+      .filter { case (rel, _) => !rel.startsWith("tools/") }
+      .toSeq
+  }
+
+  test("no hand-rolled registry: ConcurrentHashMaps in src/main live in Shared or the three kept maps") {
     val kept = Map("Shared.scala" -> Int.MaxValue, "Tables.scala" -> 1, "BuildLedger.scala" -> 1,
       "functions/HashExpressions.scala" -> 1)
     val pattern = "new\\s+(java\\.util\\.concurrent\\.)?ConcurrentHashMap".r
-    import scala.jdk.CollectionConverters._
-    val offenders = Files.walk(root.toPath).iterator.asScala
-      .filter(p => p.toString.endsWith(".scala"))
-      .map(p => root.toPath.relativize(p).toString -> pattern.findAllIn(Files.readString(p)).size)
-      .filter { case (rel, n) => !rel.startsWith("tools/") && n > kept.getOrElse(rel, 0) }
-      .toSeq
+    val offenders = mainMatches(pattern).filter { case (rel, n) => n > kept.getOrElse(rel, 0) }
     assert(offenders.isEmpty, s"registries outside graft.Shared: $offenders")
+  }
+
+  test("one leaf spelling: no Dataset-to-Row-RDD round-trip in src/main outside Shared.leaf and Ordinals") {
+    // a Dataset's Row RDD transformed, or fed straight back to createDataFrame
+    val pattern = ("""\.rdd\s*\.\s*(persist|map|zipWithIndex|mapPartitions)\b""" +
+      """|createDataFrame\(\s*[\w.]+\.rdd\b""").r
+    val offenders = mainMatches(pattern)
+      .filter { case (rel, n) => rel != "plans/Ordinals.scala" && n > 0 }
+    assert(offenders.isEmpty, s"frame-to-leaf cuts outside graft.Shared.leaf: $offenders")
   }
 }
