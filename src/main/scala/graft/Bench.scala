@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main: times every SparkEntry query on
   * SPARK_GRAFT_SF_DIR, one JSON line to stdout.
   *
@@ -31,41 +29,8 @@ object Bench {
         try { import scala.reflect.io.Directory; new Directory(whFile).deleteRecursively(); () }
         catch { case _: Throwable => () }))
     }
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
+    val spark = GraftSession.builder(s"local[$cpus]", cpus.toInt)
       .config("spark.sql.warehouse.dir", warehouse)
-      // Post-shuffle partition count follows DATA SIZE, not core count
-      // (r21, guide §2.2): parallelismFirst=true (the default) tells
-      // AQE to keep ≥ defaultParallelism partitions even when the
-      // shuffle is a few KB, so every tiny exchange at local[32] ran
-      // 32 near-empty tasks — measured 6.9s → 0.5s on q93's hop
-      // expansion (tools/WalkPhaseProbe). false is also the
-      // scale-correct production setting: partitions target
-      // advisoryPartitionSizeInBytes (64 MB default), which a 100 TB
-      // shuffle would exceed anyway — this is not a local-only tune.
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      // The advisory size is the SCALE-DEPENDENT knob that pairs with
-      // parallelismFirst=false (env-parameterised; local default 1m).
-      // At sf0.1 shuffles are KBs-to-tens-of-MB while per-row CPU is
-      // real (q40's PPJoin verify, q12's bucket arrays): 64m coalesced
-      // those CPU-bound stages to 1-3 tasks (q40 2.0->3.8s, q12
-      // 2.1->3.9s measured), while 1m keeps them at ~full parallelism
-      // AND still collapses the sub-MB exchanges to one task. On a
-      // cluster at 100 TB the guide's 64-256m applies (shuffles are
-      // byte-heavy there, so the advisory yields thousands of
-      // partitions and the merge-small-partitions behavior is what
-      // you want): set SPARK_GRAFT_ADVISORY / the conf accordingly.
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes",
-        sys.env.getOrElse("SPARK_GRAFT_ADVISORY", "1m"))
-      // interleaved passes revisit each query's generated classes
-      // minutes apart; the default 100-entry codegen cache evicts
-      // them in between (58 queries x several stages), so every pass
-      // would re-pay Janino compilation instead of measuring the
-      // steady state. Static conf - must be set before the session.
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 

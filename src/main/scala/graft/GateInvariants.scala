@@ -91,7 +91,6 @@ object GateInvariants {
   def hashedTwinImpostors(spark: SparkSession, dir: String,
                           every: Int = 20): DataFrame = {
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
     val enc = operators.TextEncoder.encodeHashed(spark,
         Tables.documents(spark, dir).select("doc_id", "text")
           .as[operators.TextEncoder.TextRow])
@@ -274,7 +273,6 @@ object GateInvariants {
         val sm =
           if (all.isEmpty) Nil
           else {
-            graft.functions.GraftFunctions.register(spark)
             val ids = all.flatMap(p => Seq(p._1, p._2)).distinct
             val sigs = Tables.documents(spark, dir)
               .filter(col("doc_id").isin(ids: _*))

@@ -1,58 +1,15 @@
 package graft
 
-import graft.functions._
 import org.apache.spark.sql.SparkSessionExtensions
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
-/** Session-extension entry point: injects graft's native expressions
-  * at session build time, so a cluster can enable the whole library
-  * surface with
+/** Session-extension entry point: injects every entry of
+  * `functions.GraftFunctions.table` at session build time, so a
+  * cluster enables the whole library surface with
   * `--conf spark.sql.extensions=graft.GraftExtensions`
-  * (no runtime register() call needed; SQL, views, and thrift-server
-  * users see the functions too).
+  * (SQL, views and thrift-server users see the functions too).
+  * `GraftSession.builder` sets this conf.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-
-  private def info(name: String, usage: String) =
-    new ExpressionInfo("graft", null, name, usage, "")
-
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((FunctionIdentifier("cosine_sim"),
-      info("cosine_sim", "cosine_sim(a, b) - cosine similarity of two float arrays"),
-      (e: Seq[Expression]) => CosineSimilarity(e(0), e(1))))
-    ext.injectFunction((FunctionIdentifier("minhash"),
-      info("minhash", "minhash(shingles, k) - k-permutation MinHash signature"),
-      (e: Seq[Expression]) => MinHashSignature(e(0), e(1).eval(null).asInstanceOf[Int])))
-    ext.injectFunction((FunctionIdentifier("simhash"),
-      info("simhash", "simhash(shingles) - 64-bit SimHash sketch"),
-      (e: Seq[Expression]) => SimHash64(e(0))))
-    ext.injectFunction((FunctionIdentifier("fingerprint64"),
-      info("fingerprint64", "fingerprint64(text) - 64-bit rolling-hash fingerprint"),
-      (e: Seq[Expression]) => Fingerprint64(e(0))))
-    ext.injectFunction((FunctionIdentifier("intersect_count_sorted"),
-      info("intersect_count_sorted", "intersect_count_sorted(a, b) - common-element count of sorted string arrays"),
-      (e: Seq[Expression]) => IntersectCountSorted(e(0), e(1))))
-    ext.injectFunction((FunctionIdentifier("shingles"),
-      info("shingles", "shingles(text) - distinct sorted bigram shingles"),
-      (e: Seq[Expression]) => BigramShingles(e(0))))
-    ext.injectFunction((FunctionIdentifier("sign_bits"),
-      info("sign_bits", "sign_bits(vec, nBits) - random-hyperplane sign-LSH bits packed in a long"),
-      (e: Seq[Expression]) => SignBits(e(0), e(1).eval(null).asInstanceOf[Int])))
-    ext.injectFunction((FunctionIdentifier("repetition_stats"),
-      info("repetition_stats", "repetition_stats(text) - one-pass word/bigram repetition counters"),
-      (e: Seq[Expression]) => RepetitionStats(e(0))))
-    ext.injectFunction((FunctionIdentifier("kgrams"),
-      info("kgrams", "kgrams(text, k) - ordered k-token grams"),
-      (e: Seq[Expression]) => KGrams(e(0), e(1).eval(null).asInstanceOf[Int])))
-    ext.injectFunction((FunctionIdentifier("kgram_hashes"),
-      info("kgram_hashes", "kgram_hashes(text, k) - fnv1a64 of each ordered k-token gram"),
-      (e: Seq[Expression]) => KGramHashes(e(0), e(1).eval(null).asInstanceOf[Int])))
-    ext.injectFunction((FunctionIdentifier("l2_sq"),
-      info("l2_sq", "l2_sq(a, b) - squared L2 distance of two float/double arrays"),
-      (e: Seq[Expression]) => L2Squared(e(0), e(1))))
-    ext.injectFunction((FunctionIdentifier("pq_adc"),
-      info("pq_adc", "pq_adc(codes, lut, k) - PQ asymmetric-distance lookup sum"),
-      (e: Seq[Expression]) => PqAdcScore(e(0), e(1), e(2).eval(null).asInstanceOf[Int])))
-  }
+  override def apply(ext: SparkSessionExtensions): Unit =
+    functions.GraftFunctions.table.foreach(f => ext.injectFunction((f.id, f.info, f.build)))
 }

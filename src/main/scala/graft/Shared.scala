@@ -191,9 +191,9 @@ object Shared {
   /** `df` cut to a LEAF: a frame over a `LogicalRDD` of `df`'s own
     * internal rows, persisted MEMORY_AND_DISK, plus that RDD for the
     * caller to release. It counts nothing: the rows are computed and
-    * cached by the first action that reads them (under AQE the cut
-    * still runs `df`'s shuffle stages, whose statistics plan the
-    * final one).
+    * cached by the first action that reads them. Under AQE the cut
+    * itself runs `df`'s shuffle stages, one job each, whose statistics
+    * plan the final one (SharedLeafFrameSpec pins it).
     *
     * Every iterative step (connected components, reply-thread pointer
     * jumping, NN-descent rounds, the graph walk) and every shared

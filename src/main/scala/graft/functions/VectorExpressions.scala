@@ -1,8 +1,10 @@
 package graft.functions
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, BloomFilterMightContain, Expression, ExpressionInfo, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
@@ -191,69 +193,66 @@ case class SignBits(child: Expression, nBits: Int) extends UnaryExpression {
     copy(child = newChild)
 }
 
-/** Registration of graft's native expressions on a session's function
-  * registry, so plans can use them via `expr("cosine_sim(a, b)")`.
-  * Idempotent.
+/** The one table of graft's SQL functions: (name, usage, builder).
+  * `graft.GraftExtensions` injects every entry at session build, so a
+  * session from `graft.GraftSession.builder` (or one built with
+  * `spark.sql.extensions=graft.GraftExtensions`) resolves them all,
+  * e.g. `expr("cosine_sim(a, b)")`.
+  *
+  * `register` installs the table on a session built without the
+  * extension. It registers only names the session lacks, so on an
+  * extension-built session it does nothing, and repeating it never
+  * replaces a registered function.
   */
 object GraftFunctions {
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction(
-      "cosine_sim", (exprs: Seq[Expression]) => CosineSimilarity(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction(
-      "minhash", (exprs: Seq[Expression]) => {
-        val k = exprs(1).eval(null).asInstanceOf[Int]
-        MinHashSignature(exprs(0), k)
-      }, "built-in")
-    reg.createOrReplaceTempFunction(
-      "simhash", (exprs: Seq[Expression]) => SimHash64(exprs(0)), "built-in")
-    reg.createOrReplaceTempFunction(
-      "fingerprint64", (exprs: Seq[Expression]) => Fingerprint64(exprs(0)), "built-in")
-    reg.createOrReplaceTempFunction(
-      "intersect_count_sorted",
-      (exprs: Seq[Expression]) => IntersectCountSorted(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction(
-      "shingles", (exprs: Seq[Expression]) => BigramShingles(exprs(0)), "built-in")
-    reg.createOrReplaceTempFunction(
-      "sign_bits", (exprs: Seq[Expression]) => {
-        val k = exprs(1).eval(null).asInstanceOf[Int]
-        SignBits(exprs(0), k)
-      }, "built-in")
-    reg.createOrReplaceTempFunction(
-      "repetition_stats", (exprs: Seq[Expression]) => RepetitionStats(exprs(0)), "built-in")
-    reg.createOrReplaceTempFunction(
-      "kgrams", (exprs: Seq[Expression]) => {
-        val k = exprs(1).eval(null).asInstanceOf[Int]
-        KGrams(exprs(0), k)
-      }, "built-in")
-    reg.createOrReplaceTempFunction(
-      "kgram_hashes", (exprs: Seq[Expression]) => {
-        val k = exprs(1).eval(null).asInstanceOf[Int]
-        KGramHashes(exprs(0), k)
-      }, "built-in")
-    reg.createOrReplaceTempFunction(
-      "l2_sq", (exprs: Seq[Expression]) => L2Squared(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction(
-      "pq_adc", (exprs: Seq[Expression]) => {
-        val k = exprs(2).eval(null).asInstanceOf[Int]
-        PqAdcScore(exprs(0), exprs(1), k)
-      }, "built-in")
+  final case class Fn(name: String, usage: String, build: Seq[Expression] => Expression) {
+    val id: FunctionIdentifier = FunctionIdentifier(name)
+    val info: ExpressionInfo = new ExpressionInfo("graft", null, name, usage, "")
+  }
+
+  private def int(e: Expression): Int = e.eval(null).asInstanceOf[Int]
+
+  val table: Seq[Fn] = Seq(
+    Fn("cosine_sim", "cosine_sim(a, b) - cosine similarity of two float arrays",
+      e => CosineSimilarity(e(0), e(1))),
+    Fn("minhash", "minhash(shingles, k) - k-permutation MinHash signature",
+      e => MinHashSignature(e(0), int(e(1)))),
+    Fn("simhash", "simhash(shingles) - 64-bit SimHash sketch",
+      e => SimHash64(e(0))),
+    Fn("fingerprint64", "fingerprint64(text) - 64-bit rolling-hash fingerprint",
+      e => Fingerprint64(e(0))),
+    Fn("intersect_count_sorted",
+      "intersect_count_sorted(a, b) - common-element count of sorted string arrays",
+      e => IntersectCountSorted(e(0), e(1))),
+    Fn("shingles", "shingles(text) - distinct sorted bigram shingles",
+      e => BigramShingles(e(0))),
+    Fn("sign_bits", "sign_bits(vec, nBits) - random-hyperplane sign-LSH bits packed in a long",
+      e => SignBits(e(0), int(e(1)))),
+    Fn("repetition_stats", "repetition_stats(text) - one-pass word/bigram repetition counters",
+      e => RepetitionStats(e(0))),
+    Fn("kgrams", "kgrams(text, k) - ordered k-token grams",
+      e => KGrams(e(0), int(e(1)))),
+    Fn("kgram_hashes", "kgram_hashes(text, k) - fnv1a64 of each ordered k-token gram",
+      e => KGramHashes(e(0), int(e(1)))),
+    Fn("l2_sq", "l2_sq(a, b) - squared L2 distance of two float/double arrays",
+      e => L2Squared(e(0), e(1))),
+    Fn("pq_adc", "pq_adc(codes, lut, k) - PQ asymmetric-distance lookup sum",
+      e => PqAdcScore(e(0), e(1), int(e(2)))),
     // Spark's own runtime-filter kernels (the sketch aggregate that
     // builds a bloom binary over xxhash64 values, and the codegen
     // Predicate that tests one) are public classes but not
-    // SQL-registered in 4.1 — expose both for the decontamination
-    // Bloom screen (q54b), same registration path as our own
-    // expressions.
-    reg.createOrReplaceTempFunction(
-      "bloom_filter_agg",
-      (exprs: Seq[Expression]) =>
-        new org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate(
-          exprs(0), exprs(1), exprs(2)),
-      "built-in")
-    reg.createOrReplaceTempFunction(
-      "bloom_might_contain",
-      (exprs: Seq[Expression]) =>
-        org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain(exprs(0), exprs(1)),
-      "built-in")
+    // SQL-registered in 4.1; the decontamination Bloom screen (q54b)
+    // uses both.
+    Fn("bloom_filter_agg",
+      "bloom_filter_agg(xxhash64, expectedItems, numBits) - bloom filter binary",
+      e => new BloomFilterAggregate(e(0), e(1), e(2))),
+    Fn("bloom_might_contain",
+      "bloom_might_contain(bloom, xxhash64) - bloom filter membership test",
+      e => BloomFilterMightContain(e(0), e(1))))
+
+  def register(spark: SparkSession): Unit = {
+    val reg = spark.sessionState.functionRegistry
+    table.filterNot(f => reg.functionExists(f.id))
+      .foreach(f => reg.registerFunction(f.id, f.info, f.build))
   }
 }

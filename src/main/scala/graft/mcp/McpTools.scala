@@ -1,7 +1,6 @@
 package graft.mcp
 
 import graft.Tables
-import graft.functions.GraftFunctions
 import graft.operators.{TextEncoder, Vectors}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -76,7 +75,6 @@ object McpTools {
                        topK: Int = 10, source: Option[String] = None,
                        similarityThreshold: Double = 0.0,
                        includeClusterContext: Boolean = true): DataFrame = {
-    GraftFunctions.register(spark)
     val e = Tables.embeddings(spark, dir).select(col("vec_id"), col("embedding"))
     val q = e.filter(col("vec_id") === vecId).select(col("embedding").as("qvec"))
     val scored = e.crossJoin(broadcast(q))
@@ -143,7 +141,6 @@ object McpTools {
     */
   private def queryScoredImpl(spark: SparkSession, dir: String, query: String): DataFrame = {
     require(query.trim.nonEmpty, "query must be a non-empty string")
-    GraftFunctions.register(spark)
     val qvec = TextEncoder.encodeBatch(Seq(query), embeddingDim(spark, dir)).head
     val qlit = array(qvec.map(lit(_)): _*).cast("array<float>")
     Tables.embeddings(spark, dir)

@@ -57,7 +57,6 @@ object Curation {
     * `bloom_might_contain`.
     */
   private[graft] def bloomBytesFor(bench: DataFrame, fpp: Double): Array[Byte] = {
-    graft.functions.GraftFunctions.register(bench.sparkSession)
     val nBench = math.max(1L, bench.count())
     val nBits = math.max(64L,
       math.ceil(-nBench * math.log(fpp) / (math.log(2) * math.log(2))).toLong)
@@ -102,7 +101,6 @@ object Curation {
   def decontaminateBloom(spark: SparkSession, dir: String,
                          benchMod: Int = 97, threshold: Double = 0.3,
                          fpp: Double = 0.01): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val withG = docGrams3(spark, dir)
     // persisted: THREE readers re-derive this corpus scan otherwise —
     // bloomBytesFor's count, its bloom aggregate, and the verify join
@@ -203,7 +201,6 @@ object Curation {
     require(bands > 0 && k % bands == 0, s"k ($k) must be a positive multiple of bands ($bands)")
     require(idOffset % benchMod != 0,
       s"idOffset ($idOffset) must not be ≡ 0 mod benchMod ($benchMod): plants must land in the corpus side")
-    graft.functions.GraftFunctions.register(spark)
     val rows = k / bands
     val planted = Tables.documents(spark, dir)
       .select(explode(when(col("doc_id") % (benchMod.toLong * every) === 0,
@@ -358,7 +355,6 @@ object Curation {
                             benchMod: Int = 97,
                             maxBlock: Int = Dedup.ComposedMaxBlock,
                             maxDriverGrams: Int = 65536): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     // THE one corpus scan: text enters, signals leave. Token arrays
     // materialize in their own projection stage (gram3Of's contract);
     // gopherFlags stages its ws/ls splits the same way internally.
@@ -516,7 +512,6 @@ object Curation {
   def funnelDelta(spark: SparkSession, dir: String, deltaMod: Int = 16,
                   benchMod: Int = 97, minPass: Int = 6,
                   threshold: Double = 0.5): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val isDeltaId = (c: org.apache.spark.sql.Column) => c % deltaMod === 0
     // quality: the delta docs' spine — every delta doc gets a verdict
     val scored = TextAnalysis.gopherScored(
@@ -671,7 +666,6 @@ object Curation {
 
     def build(spark: SparkSession, dir: String, path: String,
               deltaMod: Int, benchMod: Int, nBuckets: Int): Unit = graft.BuildLedger.timed(s"funnel:$path") {
-      graft.functions.GraftFunctions.register(spark)
       invalidateCached(spark, dir)
       // snapshot BEFORE reading (VectorIndex.build's ordering: a
       // source rewrite DURING the build leaves the index stale-marked)
@@ -808,7 +802,6 @@ object Curation {
                                 minPass: Int, threshold: Double,
                                 nBuckets: Int,
                                 pruneBuckets: Boolean = true): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val scored = TextAnalysis.gopherScored(
         delta.select("doc_id", "source", "text"), Seq("doc_id", "source"))
       .select("doc_id", "source", "n_pass")
@@ -1325,7 +1318,6 @@ object Curation {
     */
   def importanceSelect(spark: SparkSession, dir: String,
                        targetMod: Int = 7, thr: Double = 1.0): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val ex = Tables.documents(spark, dir)
       .select(col("doc_id"), (col("doc_id") % targetMod === 0).as("tgt"),
         expr("kgram_hashes(text, 2)").as("gs"))
@@ -1379,7 +1371,6 @@ object Curation {
     * try_divide guards the empty-vocabulary degenerate pair.
     */
   def sourceOverlap(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val ex = Shared.persist(spark, "sourceOverlap",
       Tables.documents(spark, dir)
         .select(col("source"), explode(expr("array_distinct(kgram_hashes(text, 2))")).as("g"))
@@ -1439,7 +1430,6 @@ object Curation {
     */
   def boilerplateSpans(spark: SparkSession, dir: String, k: Int = 3,
       minDocs: Int = 5): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val docs = Tables.documents(spark, dir).select("doc_id", "source", "text")
     val grams = Shared.persist(spark, "boilerplateSpans",
       docs.select(col("doc_id"),

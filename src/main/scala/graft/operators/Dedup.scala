@@ -1,7 +1,6 @@
 package graft.operators
 
 import graft.Tables
-import graft.functions.GraftFunctions
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -75,7 +74,6 @@ object Dedup {
     docShinglesOn(spark, Tables.documents(spark, dir))
 
   private[graft] def docShinglesOn(spark: SparkSession, docs: DataFrame): DataFrame = {
-    GraftFunctions.register(spark)
     docs
       .filter(size(split(col("text"), " ")) >= 2)
       .select(col("doc_id"), expr("shingles(text)").as("sh"))
@@ -325,7 +323,6 @@ object Dedup {
     require(threshold > 0 && threshold <= 1, s"threshold must be in (0, 1]: $threshold")
     require(maxBucket >= 2, s"maxBucket must be >= 2: $maxBucket")
     import spark.implicits._
-    GraftFunctions.register(spark)
     // Candidates WITHOUT arrays, then join-verify: band rows carry
     // only (doc_id, band, bucket) — carrying the shingle arrays into
     // the banding shuffle amplifies them ×bands (measured 2M strings
@@ -529,7 +526,6 @@ object Dedup {
   private[graft] def dedupSimHashOn(spark: SparkSession, docs: DataFrame,
                                     maxDist: Int): DataFrame = {
     import spark.implicits._
-    GraftFunctions.register(spark)
     // same per-group shape as dedupNgram/dedupMinHash: one shuffled
     // row per (doc, band); pairs verify in-memory per bucket
     val banded = docs
@@ -567,7 +563,6 @@ object Dedup {
                               threshold: Double = 0.5, k: Int = 32, bands: Int = 8): DataFrame = {
     require(bands > 0 && k % bands == 0, s"k ($k) must be a positive multiple of bands ($bands)")
     import spark.implicits._
-    GraftFunctions.register(spark)
     // id-only candidates + join-verify — dedupMinHashOn's own shape
     // (this used to carry full shingle arrays through the banding
     // shuffle ×bands and re-verify a pair once per shared band, the
@@ -648,7 +643,6 @@ object Dedup {
     require(bands > 0 && nBits % bands == 0, s"nBits ($nBits) must be a positive multiple of bands ($bands)")
     require(nBits / bands <= 63, s"band width must fit a long: $nBits/$bands")
     import spark.implicits._
-    GraftFunctions.register(spark)
     // the native codegen'd sign_bits packs all hyperplane signs into
     // one long per row, so banding is a shift-and-mask (the SimHash64
     // shape); the declarative twin — transform/aggregate/zip_with
@@ -715,7 +709,6 @@ object Dedup {
                                          nLists: Int = 0, nProbe: Int = 2,
                                          corpusSize: Long = -1L, nCoarse: Int = 0): DataFrame = {
     import spark.implicits._
-    GraftFunctions.register(spark)
     val e = embeddings.select("vec_id", "embedding")
     // the scaling law, in code: nLists tracks the corpus so cell size
     // (and the in-cell candidate loop) stays ~125 vectors no matter
@@ -780,7 +773,6 @@ object Dedup {
     */
   def dedupEmbeddingIvfIndexed(spark: SparkSession, dir: String,
                                threshold: Double = 0.3): DataFrame = {
-    GraftFunctions.register(spark)
     val path = VectorIndex.defaultPath(spark, dir) + "-dedup"
     if (!VectorIndex.fresh(spark, dir, path, VectorIndex.dedupParams(nLists = 0, nProbe = 2)))
       VectorIndex.buildDedup(spark, dir, path)
@@ -863,7 +855,6 @@ object Dedup {
     * q44's sign-LSH at true near-dup thresholds.
     */
   def dedupEmbedding(spark: SparkSession, dir: String, threshold: Double = 0.3): DataFrame = {
-    GraftFunctions.register(spark)
     val e = Tables.embeddings(spark, dir).select("vec_id", "label", "embedding")
     e.as("a")
       .join(e.as("b"), col("a.label") === col("b.label") && col("a.vec_id") < col("b.vec_id"))
@@ -909,7 +900,6 @@ object Dedup {
     */
   def substringDup(spark: SparkSession, dir: String, k: Int = 8,
       hashedBlocking: Boolean = true): DataFrame = {
-    GraftFunctions.register(spark)
     val gramExpr = if (hashedBlocking) s"kgram_hashes(text, $k)" else s"kgrams(text, $k)"
     val docs = Tables.documents(spark, dir)
       .select(col("doc_id"), col("text"))
@@ -962,7 +952,6 @@ object Dedup {
     }
 
     def build(spark: SparkSession, dir: String, path: String, k: Int, deltaMod: Int): Unit = graft.BuildLedger.timed(s"gram:$path") {
-      GraftFunctions.register(spark)
       val token = watermark(spark, dir, k, deltaMod) // BEFORE reading, like VectorIndex.build
       Tables.documents(spark, dir)
         .filter(col("doc_id") % deltaMod =!= 0)
@@ -1045,7 +1034,6 @@ object Dedup {
       */
     def absorb(spark: SparkSession, path: String, docs: DataFrame,
                k: Int, gen: Long): Unit = {
-      GraftFunctions.register(spark)
       docs.select(col("doc_id"), explode(array_distinct(expr(s"kgram_hashes(text, $k)"))).as("g"))
         .groupBy("g").agg(count(lit(1)).as("nd_old"))
         .write.mode("overwrite").parquet(s"$path/grams_delta/gen=$gen")
@@ -1124,7 +1112,6 @@ object Dedup {
     */
   def substringDupIncremental(spark: SparkSession, dir: String, k: Int = 8,
                               deltaMod: Int = 16): DataFrame = {
-    GraftFunctions.register(spark)
     val path = GramIndex.path(spark, dir)
     if (!GramIndex.fresh(spark, dir, path, k, deltaMod))
       GramIndex.build(spark, dir, path, k, deltaMod)

@@ -1,7 +1,6 @@
 package graft.operators
 
 import graft.Tables
-import graft.functions.GraftFunctions
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -49,7 +48,6 @@ object EmbeddingQuality {
     * tested sizes).
     */
   def embeddingOutliers(spark: SparkSession, dir: String, bottomK: Int = 5): DataFrame = {
-    GraftFunctions.register(spark)
     val e = Tables.embeddings(spark, dir)
     val w = Window.partitionBy("label").orderBy(col("csim").asc, col("vec_id"))
     e.join(broadcast(labelCentroids(spark, dir)), "label")
@@ -71,7 +69,6 @@ object EmbeddingQuality {
     */
   def hardNegatives(spark: SparkSession, dir: String,
                     k: Int = 5, anchorMod: Int = 101): DataFrame = {
-    GraftFunctions.register(spark)
     val e = Tables.embeddings(spark, dir)
     val anchors = e.filter(col("vec_id") % anchorMod === 0)
       .select(col("vec_id").as("anchor_id"), col("label").as("anchor_label"),
@@ -116,7 +113,6 @@ object EmbeddingQuality {
                        k: Int = 5, anchorMod: Int = 101,
                        nProbe: Int = 3, nLists: Int = 0,
                        useStored: Boolean = true): DataFrame = {
-    GraftFunctions.register(spark)
     val path = VectorIndex.miningPath(spark, dir)
     val params = VectorIndex.miningParams(nLists, refineIters = 0)
     if (!VectorIndex.fresh(spark, dir, path, params))
@@ -175,7 +171,6 @@ object EmbeddingQuality {
   private[graft] def hardNegativesIvfOn(spark: SparkSession, embs: DataFrame,
                                         k: Int, anchorMod: Int,
                                         nProbe: Int, nLists: Int): DataFrame = {
-    GraftFunctions.register(spark)
     val e = embs.select("vec_id", "label", "embedding")
     val n = e.count()
     val lists = if (nLists > 0) nLists else math.max(16, (n / 125L).toInt)

@@ -1,7 +1,6 @@
 package graft.operators
 
 import graft.Tables
-import graft.functions.GraftFunctions
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
@@ -113,7 +112,6 @@ object KnnGraph {
     * scale path is [[nnDescent]].
     */
   def knnGraphExact(spark: SparkSession, dir: String, k: Int = 10): DataFrame = {
-    GraftFunctions.register(spark)
     knnOn(Tables.embeddings(spark, dir).select("vec_id", "embedding"), k)
       .orderBy("vec_id", "rk")
   }
@@ -144,7 +142,6 @@ object KnnGraph {
     */
   def knnTextTwins(spark: SparkSession, dir: String, every: Int = 20,
                    idOffset: Long = 1000000L): DataFrame = {
-    GraftFunctions.register(spark)
     import spark.implicits._
     val planted = Tables.documents(spark, dir)
       .select(explode(when(col("doc_id") % every === 0,
@@ -361,7 +358,6 @@ object KnnGraph {
     // the near-random gate corpus (tools/RecallProbe: 0.81 → 0.84 at
     // sf0.001) for a ~2× per-iteration candidate budget
     val sr = if (sampleR > 0) sampleR else 2 * k
-    GraftFunctions.register(spark)
     val lvl = StorageLevel.MEMORY_AND_DISK
     val e = emb.select(col("vec_id"), col("embedding")).persist(lvl)
     val n = e.count()
@@ -730,7 +726,6 @@ object KnnGraph {
     */
   def semanticClusters(spark: SparkSession, dir: String, k: Int = 10,
                        minSim: Double = 0.4): DataFrame = {
-    GraftFunctions.register(spark)
     val e = Tables.embeddings(spark, dir).select("vec_id", "embedding")
     // one live copy feeds BOTH sides of the mutuality self-join
     val g = graft.Shared.persist(spark, "q92c_knn", knnOn(e, k))
@@ -806,7 +801,6 @@ object KnnGraph {
   def buildGraph(spark: SparkSession, dir: String, path: String, k: Int = 10,
                  lists: Int = 0, maxIters: Int = 2, ringJ: Int = 10,
                  modularRing: Boolean = false, nBuckets: Int = 0): Unit = graft.BuildLedger.timed(s"knngraph:$path") {
-    GraftFunctions.register(spark)
     // snapshot BEFORE reading (VectorIndex.build's rule): a source
     // overwritten mid-build leaves a stale watermark, never a fresh lie
     val snapshot = VectorIndex.sourceSnapshot(spark, dir)
@@ -923,7 +917,6 @@ object KnnGraph {
   private[graft] def graphWalkOn(spark: SparkSession, path: String, e: DataFrame,
                                  queries: DataFrame, k: Int = 10, beam: Int = 8,
                                  maxHops: Int = 3): DataFrame = {
-    GraftFunctions.register(spark)
     val lvl = StorageLevel.MEMORY_AND_DISK
     val cents = spark.read.parquet(s"$path/centroids")
     val lists = cents.count().toInt
@@ -965,11 +958,13 @@ object KnnGraph {
     //     needs the frontier materialized anyway (r19 tuning: the
     //     earlier limit(1) probe shape serialized two jobs per hop,
     //     measured 24s for a 20-query walk). Hop frames persist.
-    //   - wholeEdges path (below wholeEdgeThreshold): NO per-hop
-    //     action at all — each hop frame is a graft.Shared.leaf
-    //     (no count) and the caller's single action
-    //     materializes the whole walk. The leaf cut matters as much
-    //     as the action count: left as a lazy
+    //   - wholeEdges path (below wholeEdgeThreshold): no per-hop
+    //     count — each hop frame is a graft.Shared.leaf and the
+    //     caller's single action materializes the rest of the walk.
+    //     The cut is not job-free: under AQE it runs the hop's shuffle
+    //     stages, one job per staged hop (one driver round-trip each;
+    //     SharedLeafFrameSpec pins it). The leaf cut matters as much
+    //     as the job count: left as a lazy
     //     cached DataFrame chain, every AQE stage of the final action
     //     re-traversed and re-serialized the whole walk's plan/lineage
     //     (SparkPlanInfo + task closures dominated the driver profile
@@ -1052,7 +1047,6 @@ object KnnGraph {
                     maxHops: Int = 3,
                     nPlanted: Int = graft.GateInvariants.plantedGateN,
                     idOffset: Long = 1000000L): DataFrame = {
-    GraftFunctions.register(spark)
     val path = graphPath(spark, dir)
     // forward k (ADVICE r19): a non-default k must rebuild the graph
     // at that degree (the params watermark makes the mismatch stale),
@@ -1090,7 +1084,6 @@ object KnnGraph {
   private[graft] def knnGraphIncrementOn(spark: SparkSession, path: String,
                                          e: DataFrame, delta: DataFrame,
                                          k: Int = 10): DataFrame = {
-    GraftFunctions.register(spark)
     val cents = spark.read.parquet(s"$path/centroids")
     val lists = cents.count().toInt
     val cellsDf = spark.read.parquet(s"$path/cells")
@@ -1165,7 +1158,6 @@ object KnnGraph {
   def knnIncrementGate(spark: SparkSession, dir: String, k: Int = 10,
                        nPlanted: Int = graft.GateInvariants.plantedGateN,
                        idOffset: Long = 1000000L): DataFrame = {
-    GraftFunctions.register(spark)
     val path = graphPath(spark, dir)
     // forward k (ADVICE r19): the increment-equals-rebuild law only
     // holds against a graph built at the SAME degree
@@ -1204,7 +1196,6 @@ object KnnGraph {
                                   minSim: Double = 0.4,
                                   nPlanted: Int = graft.GateInvariants.plantedGateN,
                                   idOffset: Long = 1000000L): DataFrame = {
-    GraftFunctions.register(spark)
     val path = graphPath(spark, dir)
     ensureGraph(spark, dir, path, k = k)
     val e = Tables.embeddings(spark, dir).select("vec_id", "embedding")
@@ -1267,7 +1258,6 @@ object KnnGraph {
   def graphWalkRecall(spark: SparkSession, dir: String, k: Int = 10,
                       beam: Int = 8, maxHops: Int = 3,
                       nQueries: Int = 5): DataFrame = {
-    GraftFunctions.register(spark)
     val path = replayGraphPath(spark, dir)
     if (!graphFresh(spark, dir, path, k = k, maxIters = 0, modularRing = true))
       buildGraph(spark, dir, path, k = k, maxIters = 0, modularRing = true)

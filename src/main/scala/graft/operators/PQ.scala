@@ -1,7 +1,6 @@
 package graft.operators
 
 import graft.Tables
-import graft.functions.GraftFunctions
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -62,7 +61,6 @@ object PQ {
     */
   private[graft] def codebooks(spark: SparkSession, e: DataFrame, m: Int, kCodes: Int,
                                dims: Int, iters: Int): DataFrame = {
-    GraftFunctions.register(spark)
     val dsub = dims / m
     val subs = subvectors(e, m, dims)
     val grid = spark.range(m).select(col("id").cast("int").as("s"))
@@ -165,7 +163,6 @@ object PQ {
     */
   def pqTopK(spark: SparkSession, dir: String, k: Int = 10, nQueries: Int = 5,
              m: Int = 8, kCodes: Int = 16, iters: Int = 1): DataFrame = {
-    GraftFunctions.register(spark)
     val e = Tables.embeddings(spark, dir).select("vec_id", "embedding")
     val dims = e.select(size(col("embedding"))).head.getInt(0)
     require(dims % m == 0, s"dims ($dims) must be divisible by m ($m)")
@@ -209,7 +206,6 @@ object PQ {
 
   def buildIndex(spark: SparkSession, dir: String, path: String,
                  m: Int = 8, kCodes: Int = 16, iters: Int = 1): Unit = graft.BuildLedger.timed(s"pq:$path") {
-    GraftFunctions.register(spark)
     val token = indexToken(spark, dir, m, kCodes, iters) // BEFORE reading
     val e = Tables.embeddings(spark, dir).select("vec_id", "embedding")
     val dims = e.select(size(col("embedding"))).head.getInt(0)
@@ -230,7 +226,6 @@ object PQ {
     */
   def pqTopKIndexed(spark: SparkSession, dir: String, k: Int = 10, nQueries: Int = 5,
                     m: Int = 8, kCodes: Int = 16, iters: Int = 1): DataFrame = {
-    GraftFunctions.register(spark)
     val path = indexPath(spark, dir)
     if (!indexFresh(spark, dir, path, m, kCodes, iters))
       buildIndex(spark, dir, path, m, kCodes, iters)
@@ -275,7 +270,6 @@ object PQ {
   private[graft] def ivfPqTopKOn(spark: SparkSession, e: DataFrame, k: Int, nQueries: Int,
                                  m: Int, kCodes: Int, iters: Int,
                                  nLists: Int, nProbe: Int): DataFrame = {
-    GraftFunctions.register(spark)
     val dims = e.select(size(col("embedding"))).head.getInt(0)
     require(dims % m == 0, s"dims ($dims) must be divisible by m ($m)")
     val n = e.count()
@@ -406,7 +400,6 @@ object PQ {
   def buildIvfPqIndex(spark: SparkSession, dir: String, path: String,
                       m: Int = 8, kCodes: Int = 16, iters: Int = 1,
                       nLists: Int = 0): Unit = graft.BuildLedger.timed(s"ivfpq:$path") {
-    GraftFunctions.register(spark)
     val token = ivfPqToken(spark, dir, m, kCodes, iters, nLists)
     val e = Tables.embeddings(spark, dir).select("vec_id", "embedding")
     val dims = e.select(size(col("embedding"))).head.getInt(0)
@@ -474,7 +467,6 @@ object PQ {
   def ivfPqTopKIndexed(spark: SparkSession, dir: String, k: Int = 10, nQueries: Int = 5,
                        m: Int = 8, kCodes: Int = 16, iters: Int = 1,
                        nLists: Int = 0, nProbe: Int = 3): DataFrame = {
-    GraftFunctions.register(spark)
     val path = ivfPqIndexPath(spark, dir)
     if (!ivfPqIndexFresh(spark, dir, path, m, kCodes, iters, nLists))
       buildIvfPqIndex(spark, dir, path, m, kCodes, iters, nLists)
@@ -552,7 +544,6 @@ object PQ {
   def buildIncrBase(spark: SparkSession, dir: String, path: String,
                     m: Int = 8, kCodes: Int = 16, iters: Int = 1,
                     deltaMod: Int = 16): Unit = graft.BuildLedger.timed(s"pq_incr_base:$path") {
-    GraftFunctions.register(spark)
     val token = incrToken(spark, dir, m, kCodes, iters, deltaMod)
     val eOld = Tables.embeddings(spark, dir).select("vec_id", "embedding")
       .filter(col("vec_id") % deltaMod =!= 0)
@@ -580,7 +571,6 @@ object PQ {
     */
   def pqEncodeIncremental(spark: SparkSession, dir: String, deltaMod: Int = 16,
                           m: Int = 8, kCodes: Int = 16, iters: Int = 1): DataFrame = {
-    GraftFunctions.register(spark)
     val path = incrIndexPath(spark, dir, deltaMod)
     if (!incrIndexFresh(spark, dir, path, m, kCodes, iters, deltaMod))
       buildIncrBase(spark, dir, path, m, kCodes, iters, deltaMod)
@@ -723,7 +713,6 @@ object PQ {
   def buildIvfPqIncrBase(spark: SparkSession, dir: String, path: String,
                          m: Int = 8, kCodes: Int = 16, iters: Int = 1,
                          nLists: Int = 0, deltaMod: Int = 16): Unit = graft.BuildLedger.timed(s"ivfpq_incr_base:$path") {
-    GraftFunctions.register(spark)
     val token = ivfPqIncrToken(spark, dir, m, kCodes, iters, nLists, deltaMod)
     val e = Tables.embeddings(spark, dir).select("vec_id", "embedding")
       .filter(col("vec_id") % deltaMod =!= 0)
@@ -761,7 +750,6 @@ object PQ {
   def appendDeltaIvfPq(spark: SparkSession, dir: String, deltaMod: Int = 16,
                        m: Int = 8, kCodes: Int = 16, iters: Int = 1,
                        nLists: Int = 0): Unit = {
-    GraftFunctions.register(spark)
     val path = ivfPqIncrPath(spark, dir, deltaMod)
     if (!ivfPqIncrFresh(spark, dir, path, m, kCodes, iters, nLists, deltaMod))
       buildIvfPqIncrBase(spark, dir, path, m, kCodes, iters, nLists, deltaMod)
@@ -841,7 +829,6 @@ object PQ {
   def ivfPqIncrTopK(spark: SparkSession, dir: String, k: Int = 10, nQueries: Int = 5,
                     m: Int = 8, kCodes: Int = 16, iters: Int = 1,
                     nLists: Int = 0, nProbe: Int = 3, deltaMod: Int = 16): DataFrame = {
-    GraftFunctions.register(spark)
     val path = ivfPqIncrPath(spark, dir, deltaMod)
     val fs = VectorIndex.fsFor(spark, path)
     // a compacted index is complete WITHOUT a delta dir — only append

@@ -1,7 +1,6 @@
 package graft.operators
 
 import graft.Tables
-import graft.functions.GraftFunctions
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -258,7 +257,6 @@ object TextAnalysis {
     */
   def repetition(spark: SparkSession, dir: String,
                  topFracThr: Double = 0.125, dupWordThr: Double = 0.55): DataFrame = {
-    GraftFunctions.register(spark)
     Tables.documents(spark, dir)
       .select(col("doc_id"), expr("repetition_stats(text)").as("r"))
       .select(col("doc_id"),
@@ -380,7 +378,6 @@ object TextAnalysis {
     * division on both engines).
     */
   def rarityScore(spark: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.register(spark)
     val sh = Tables.documents(spark, dir)
       .filter(size(split(col("text"), " ")) >= 2)
       .select(col("doc_id"), array_distinct(expr("kgram_hashes(text, 2)")).as("gs"))
@@ -407,7 +404,6 @@ object TextAnalysis {
     * (which q33b already anchored).
     */
   def fingerprint(spark: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.register(spark)
     val fp = Tables.documents(spark, dir)
       .select(col("doc_id"), expr("fingerprint64(text)").as("fp"))
     val groups = fp.groupBy("fp").agg(min("doc_id").as("group_min"), count(lit(1)).as("group_n"))
@@ -430,7 +426,6 @@ object TextAnalysis {
     */
   def fingerprintGroups(spark: SparkSession, dir: String,
                         every: Int = 20, idOffset: Long = 1000000L): DataFrame = {
-    GraftFunctions.register(spark)
     val fp = Tables.documents(spark, dir)
       .select(explode(when(col("doc_id") % every === 0,
           array(col("doc_id"), col("doc_id") + idOffset))

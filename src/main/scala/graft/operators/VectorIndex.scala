@@ -1,7 +1,6 @@
 package graft.operators
 
 import graft.Tables
-import graft.functions.GraftFunctions
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -216,7 +215,6 @@ object VectorIndex {
     */
   def buildDedup(spark: SparkSession, dir: String, path: String,
                  nLists: Int = 0, nProbe: Int = 2): Unit = graft.BuildLedger.timed(s"ivf_dedup:$path") {
-    graft.functions.GraftFunctions.register(spark)
     val snapshot = sourceSnapshot(spark, dir) + paramSuffix(dedupParams(nLists, nProbe))
     val e = Tables.embeddings(spark, dir).select("vec_id", "embedding")
     val n = e.count()
@@ -250,7 +248,6 @@ object VectorIndex {
     */
   def buildMining(spark: SparkSession, dir: String, path: String, nLists: Int = 0,
                   refineIters: Int = 0): Unit = graft.BuildLedger.timed(s"ivf_mining:$path") {
-    graft.functions.GraftFunctions.register(spark)
     val snapshot = sourceSnapshot(spark, dir) + paramSuffix(miningParams(nLists, refineIters))
     val e = Tables.embeddings(spark, dir).select("vec_id", "label", "embedding")
     val n = e.count()
@@ -364,7 +361,6 @@ object VectorIndex {
     */
   def probe(spark: SparkSession, dir: String, path: String, k: Int = 10,
             nProbe: Int = 3, nQueries: Int = 5): DataFrame = {
-    GraftFunctions.register(spark)
     val e = Tables.embeddings(spark, dir)
     val label = e.schema("label")
     val emb = e.schema("embedding")

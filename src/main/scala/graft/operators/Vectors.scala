@@ -1,7 +1,6 @@
 package graft.operators
 
 import graft.Tables
-import graft.functions.GraftFunctions
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -31,7 +30,6 @@ import org.apache.spark.sql.functions._
 object Vectors {
 
   private def scored(spark: SparkSession, dir: String, nQueries: Int): DataFrame = {
-    GraftFunctions.register(spark)
     val e = Tables.embeddings(spark, dir)
     val q = e.filter(col("vec_id") < nQueries)
       .select(col("vec_id").as("query_id"), col("embedding").as("qvec"))
@@ -79,7 +77,6 @@ object Vectors {
     * becomes a partition-pruned scan of nProbe/nLists of the data.
     */
   def annIvf(spark: SparkSession, dir: String, k: Int = 10, nProbe: Int = 3, nQueries: Int = 5): DataFrame = {
-    GraftFunctions.register(spark)
     val e = Tables.embeddings(spark, dir)
     val centroids = e
       .select(col("label"), posexplode(col("embedding")).as(Seq("pos", "v")))
@@ -126,7 +123,6 @@ object Vectors {
     */
   def annIvfSeeded(spark: SparkSession, dir: String, k: Int = 10, nProbe: Int = 3,
                    nQueries: Int = 5): DataFrame = {
-    GraftFunctions.register(spark)
     val e = Tables.embeddings(spark, dir)
     val seedW = Window.partitionBy("label").orderBy("vec_id")
     val seeds = e.withColumn("rn", row_number().over(seedW)).filter(col("rn") === 1)
@@ -202,7 +198,6 @@ object Vectors {
     */
   private[graft] def kmeansAssignOn(spark: SparkSession, e: DataFrame, iters: Int,
                                     nCoarse: Int = 1): DataFrame = {
-    GraftFunctions.register(spark)
     var assign = e.select(col("vec_id"), col("embedding"), col("label").as("cell"),
       lit(null).cast("double").as("csim"))
     for (_ <- 1 to iters) {
@@ -480,7 +475,6 @@ object Vectors {
     * the reference pipeline at TextPreprocessor.py:489).
     */
   def semanticSegments(spark: SparkSession, dir: String, threshold: Double = 1.0): DataFrame = {
-    GraftFunctions.register(spark)
     val docs = Tables.documents(spark, dir).select("doc_id", "source", "n_chars")
     val e = Tables.embeddings(spark, dir).select(col("vec_id"), col("embedding"))
     val w = Window.partitionBy("source").orderBy("doc_id")
@@ -511,7 +505,6 @@ object Vectors {
     */
   def slidingDistances(spark: SparkSession, dir: String, windowSize: Int = 5): DataFrame = {
     require(windowSize >= 1, s"windowSize must be >= 1: $windowSize")
-    GraftFunctions.register(spark)
     val docs = Tables.documents(spark, dir).select("doc_id", "source")
     val e = Tables.embeddings(spark, dir).select(col("vec_id"), col("embedding"))
     val w = Window.partitionBy("source").orderBy("doc_id")
@@ -593,7 +586,6 @@ object Vectors {
     * (corpus, threshold).
     */
   def semanticGroups(spark: SparkSession, dir: String, threshold: Double = 1.0): DataFrame = {
-    GraftFunctions.register(spark)
     val docs = Tables.documents(spark, dir).select("doc_id", "source", "n_chars")
     val e = Tables.embeddings(spark, dir).select(col("vec_id"), col("embedding"))
     val token = Tables.sourceToken(spark, dir, "documents") + "\n" +

@@ -1,6 +1,5 @@
 package graft.streaming
 
-import graft.functions.GraftFunctions
 import graft.operators.Curation
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
@@ -53,7 +52,6 @@ object DecontamStream {
     */
   private[graft] def benchFrame(spark: SparkSession, dir: String,
                                 benchMod: Int): DataFrame = {
-    GraftFunctions.register(spark)
     // registry-managed (one live copy per (dir, mod); same-plan
     // reloads reuse it) — the bare per-call persist stacked a cached
     // bench-gram copy per loadBench/FunnelStream.load in long-lived
@@ -111,7 +109,6 @@ object DecontamStream {
   private def buildBenchFuzzy(spark: SparkSession, dir: String, benchMod: Int,
                               k: Int, bands: Int): FuzzyBenchIndex = {
     require(bands > 0 && k % bands == 0, s"k ($k) must be a positive multiple of bands ($bands)")
-    GraftFunctions.register(spark)
     val bench = graft.Tables.documents(spark, dir)
       .filter(col("doc_id") % benchMod === 0 && size(split(col("text"), " ")) >= 2)
       .select(col("doc_id"), expr("shingles(text)").as("sh"))
@@ -140,7 +137,6 @@ object DecontamStream {
                 threshold: Double = 0.5): Dataset[FuzzyOut] = {
     val spark = docs.sparkSession
     import spark.implicits._
-    GraftFunctions.register(spark)
     val empty = array().cast("array<string>")
     val projected = docs
       .select(col("doc_id"),
@@ -181,7 +177,6 @@ object DecontamStream {
            threshold: Double = 0.3): Dataset[DecontamOut] = {
     val spark = docs.sparkSession
     import spark.implicits._
-    GraftFunctions.register(spark)
     val withG = Curation.grams3(docs)
     // every doc carries one NULL-gram sentinel row that passes the
     // screen unconditionally, so an all-clean doc still reaches the

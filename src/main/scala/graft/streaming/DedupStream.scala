@@ -1,6 +1,5 @@
 package graft.streaming
 
-import graft.functions.GraftFunctions
 import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
@@ -49,7 +48,6 @@ object DedupStream {
   def banded(spark: SparkSession, docs: Dataset[DocIn],
              k: Int = 32, bands: Int = 8): Dataset[Banded] = {
     import spark.implicits._
-    GraftFunctions.register(spark)
     require(bands > 0 && k % bands == 0,
       s"bands ($bands) must divide the signature length k ($k): a non-dividing " +
         "bands silently drops the tail signature positions from banding")
@@ -120,7 +118,6 @@ object DedupStream {
   def pairsBySignature(spark: SparkSession, docs: Dataset[DocIn], threshold: Double = 0.5,
                        k: Int = graft.GateInvariants.screenK, bands: Int = 8): Dataset[EstPair] = {
     import spark.implicits._
-    GraftFunctions.register(spark)
     require(bands > 0 && k % bands == 0,
       s"bands ($bands) must divide the signature length k ($k): a non-dividing " +
         "bands silently drops the tail signature positions, and bands > k " +

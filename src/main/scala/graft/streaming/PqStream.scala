@@ -1,6 +1,5 @@
 package graft.streaming
 
-import graft.functions.GraftFunctions
 import graft.Tables
 import graft.operators.{PQ, VectorIndex, Vectors}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -72,7 +71,6 @@ object PqStream {
   def loadIndex(spark: SparkSession, dir: String,
                 m: Int = 8, kCodes: Int = 16, iters: Int = 1,
                 nLists: Int = 0): GateIndex = {
-    GraftFunctions.register(spark)
     val path = PQ.ivfPqIndexPath(spark, dir)
     if (!PQ.ivfPqIndexFresh(spark, dir, path, m, kCodes, iters, nLists))
       PQ.buildIvfPqIndex(spark, dir, path, m, kCodes, iters, nLists)

@@ -2,7 +2,7 @@ package graft.tools
 
 import graft.Tables
 import graft.operators.Vectors
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Dev tool: measures IVF cell-ASSIGNMENT cost — the r04-flagged
@@ -21,12 +21,8 @@ import org.apache.spark.sql.functions._
 object AssignProbe {
   def main(args: Array[String]): Unit = {
     val maxCopies = args.headOption.map(_.toInt).getOrElse(16)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.GraftSession.builder("local[32]", 32).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    graft.functions.GraftFunctions.register(spark)
     val base = Tables.embeddings(spark, "/root/testdata/sf0.1").select("vec_id", "embedding")
 
     def corpus(copies: Int): DataFrame =

@@ -1,7 +1,6 @@
 package graft.tools
 
 import graft.operators.Messages
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev tool: demonstrate q12's hot-bucket behavior. One conversation
@@ -16,10 +15,7 @@ import org.apache.spark.sql.functions._
 object BucketProbe {
   def main(args: Array[String]): Unit = {
     val hot = args.headOption.map(_.toInt).getOrElse(10000)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.GraftSession.builder("local[32]", 32).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val dir = "/tmp/graft_bucket"
     // hot bucket: `hot` users all posting in (day 0, k 0)

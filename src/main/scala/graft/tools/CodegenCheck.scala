@@ -1,6 +1,5 @@
 package graft.tools
 import graft.SparkEntry
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.debug._
 
 /** Dev tool: verify whole-stage codegen coverage (AQE hides the
@@ -10,10 +9,9 @@ import org.apache.spark.sql.execution.debug._
   */
 object CodegenCheck {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
+    val spark = graft.GraftSession.builder("local[4]", 4)
       .config("spark.sql.adaptive.enabled", "false")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false").getOrCreate()
+      .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     args.foreach { q =>
       val df = SparkEntry.queries(q)(spark, "/root/testdata/sf0.001")

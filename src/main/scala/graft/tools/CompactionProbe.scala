@@ -3,7 +3,7 @@ package graft.tools
 import graft.Tables
 import graft.operators.{Curation, Dedup, PQ}
 import graft.streaming.FunnelStream
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Dev tool (SURVEY §4 evidence): cost and steady-state effect of the
@@ -25,10 +25,7 @@ import org.apache.spark.sql.functions._
   */
 object CompactionProbe {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.GraftSession.builder("local[32]", 32).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext

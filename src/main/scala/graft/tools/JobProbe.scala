@@ -1,7 +1,6 @@
 package graft.tools
 
 import graft.SparkEntry
-import org.apache.spark.sql.SparkSession
 
 /** Dev probe (r21): run one query warm, then once more under a job
   * listener — prints per-job durations, job count, summed job time vs
@@ -12,13 +11,7 @@ import org.apache.spark.sql.SparkSession
 object JobProbe {
   def main(args: Array[String]): Unit = {
     val dir = args(0)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "1m")
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.GraftSession.builder("local[32]", 32).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     def force(q: String): Unit =
       SparkEntry.queries(q)(spark, dir).write.format("noop").mode("overwrite").save()

@@ -8,9 +8,7 @@ import org.apache.spark.sql.functions._
   * rounds vs the gate surface. */
 object KnnPhaseProbe {
   def main(args: Array[String]): Unit = {
-    val spark = org.apache.spark.sql.SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.GraftSession.builder("local[32]", 32).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val base = Tables.embeddings(spark, dir).select("vec_id", "embedding")

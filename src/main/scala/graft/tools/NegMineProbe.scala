@@ -21,12 +21,8 @@ object NegMineProbe {
   def main(args: Array[String]): Unit = {
     if (args.headOption.contains("nprobe")) { nProbeSweep(args.drop(1)); return }
     val maxCopies = args.headOption.map(_.toInt).getOrElse(8)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.GraftSession.builder("local[32]", 32).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    graft.functions.GraftFunctions.register(spark)
     val base = Tables.embeddings(spark, "/root/testdata/sf0.1")
       .select("vec_id", "label", "embedding")
 
@@ -60,12 +56,8 @@ object NegMineProbe {
     */
   private def nProbeSweep(args: Array[String]): Unit = {
     val copies = args.headOption.map(_.toInt).getOrElse(8)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.GraftSession.builder("local[32]", 32).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    graft.functions.GraftFunctions.register(spark)
     val base = Tables.embeddings(spark, "/root/testdata/sf0.1")
       .select("vec_id", "label", "embedding")
     val e = base.crossJoin(spark.range(copies).select(col("id").cast("int").as("copy")))

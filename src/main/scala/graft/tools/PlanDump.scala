@@ -1,7 +1,6 @@
 package graft.tools
 
 import graft.SparkEntry
-import org.apache.spark.sql.SparkSession
 
 /** Dev tool: one summary line per query of the plan features the
   * shape-regression pins care about (cartesian products, nested-loop
@@ -11,10 +10,7 @@ import org.apache.spark.sql.SparkSession
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.GraftSession.builder("local[8]", 8).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val dir = args.headOption.getOrElse("/root/testdata/sf0.001")
     def count(s: String, needle: String): Int = s.sliding(needle.length).count(_ == needle)

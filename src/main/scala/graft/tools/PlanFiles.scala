@@ -1,7 +1,6 @@
 package graft.tools
 
 import graft.SparkEntry
-import org.apache.spark.sql.SparkSession
 
 /** Dev tool (r21): write each named query's `.explain("formatted")`
   * output to `<outDir>/<query>.txt` — the committed plan evidence the
@@ -13,11 +12,7 @@ object PlanFiles {
   def main(args: Array[String]): Unit = {
     val dir = args(0)
     val outDir = args(1)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.GraftSession.builder("local[32]", 32).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     new java.io.File(outDir).mkdirs()
     args.drop(2).foreach { q =>

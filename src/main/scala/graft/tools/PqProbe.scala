@@ -2,7 +2,6 @@ package graft.tools
 
 import graft.Tables
 import graft.operators.PQ
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -15,12 +14,8 @@ import org.apache.spark.sql.functions._
 object PqProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.GraftSession.builder("local[32]", 32).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    graft.functions.GraftFunctions.register(spark)
     val e = Tables.embeddings(spark, sfDir).select("vec_id", "embedding").cache()
     val n = e.count()
     val dims = e.select(size(col("embedding"))).head.getInt(0)

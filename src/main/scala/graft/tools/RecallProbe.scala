@@ -17,9 +17,7 @@ import graft.operators.KnnGraph
   */
 object RecallProbe {
   def main(args: Array[String]): Unit = {
-    val spark = org.apache.spark.sql.SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.GraftSession.builder("local[8]", 8).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     // `walk` mode (r22, VERDICT r21 item 8 / r20 item 7): recall@10
     // of the persisted-graph BEAM WALK vs brute-force top-10 on REAL
@@ -30,8 +28,6 @@ object RecallProbe {
     //   runMain graft.tools.RecallProbe walk <dir> [dir2 ...]
     if (args.headOption.contains("walk")) {
       import org.apache.spark.sql.functions._
-      import graft.functions.GraftFunctions
-      GraftFunctions.register(spark)
       val nQ = 50
       val off = 1000000000L
       val k = 10

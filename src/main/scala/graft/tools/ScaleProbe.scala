@@ -1,7 +1,6 @@
 package graft.tools
 
 import graft.operators.{Curation, Dedup, Messages, Multimodal, PQ, Sessions, VectorIndex, Vectors}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev tool: measure scaling slope 1x -> 10x for representative
@@ -12,10 +11,7 @@ import org.apache.spark.sql.functions._
   */
 object ScaleProbe {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+    val spark = graft.GraftSession.builder("local[32]", 32)
       // aggressive periodic driver GC so the ContextCleaner retires
       // finished rounds' shuffle files promptly: the iterative 100×
       // probes (descent rounds, CC rounds) each shuffle tens of GB,
@@ -24,7 +20,7 @@ object ScaleProbe {
       // filled (r19). Probe-host hygiene only — on a cluster the
       // external shuffle service owns this lifecycle.
       .config("spark.cleaner.periodicGC.interval", "1min")
-      .config("spark.ui.enabled", "false").getOrCreate()
+      .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val src = "/root/testdata/sf0.1"
     val dst = "/tmp/graft_scale10"

@@ -1,7 +1,6 @@
 package graft.tools
 
 import graft.operators.Sessions
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev tool: demonstrate the chunked sessionizer's skew behavior.
@@ -11,10 +10,7 @@ import org.apache.spark.sql.functions._
   */
 object SkewProbe {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.GraftSession.builder("local[32]", 32).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
     val dir = "/tmp/graft_skew"

@@ -1,7 +1,6 @@
 package graft.tools
 
 import graft.SparkEntry
-import org.apache.spark.sql.SparkSession
 
 /** Dev tool: three-SF slope sweep over any `SparkEntry.queries` subset
   * (VERDICT r14 item 4 — the repeatable home for what StreamProf did
@@ -11,13 +10,7 @@ import org.apache.spark.sql.SparkSession
   */
 object SlopeProbe {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession.builder("local[8]", 8).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val names: Seq[String] =
       if (args.nonEmpty) args.toSeq.map { n =>

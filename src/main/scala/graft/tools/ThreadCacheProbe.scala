@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: is the q56/q56b converged-frame cache actually reused
   * across calls? Times three consecutive eventThreads + two
   * eventThreadStats actions in one JVM; run 2+ should cost only the
@@ -13,10 +11,7 @@ import org.apache.spark.sql.SparkSession
 object ThreadCacheProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.GraftSession.builder("local[32]", 32).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     def time(tag: String)(f: => Unit): Unit = {
       val t0 = System.nanoTime(); f

@@ -1,7 +1,6 @@
 package graft.tools
 
 import graft.SparkEntry
-import org.apache.spark.sql.SparkSession
 
 /** Dev tool: run ONE SparkEntry query in an otherwise-idle session —
   * the isolation harness for bench-drift triage (SURVEY §4: interleaved
@@ -15,6 +14,9 @@ import org.apache.spark.sql.SparkSession
   *   - with outDir: also writes the result parquet to outDir/<name>
   *     (same layout Verify uses, so selfcheck-style DuckDB compares
   *     work on a single query).
+  *   - the session is `GraftSession.builder`'s, the conf Bench runs
+  *     (ADVICE r21: a private conf copy here once A/B'd a different
+  *     advisory size than the bench under test).
   */
 object TimeQuery {
   def main(args: Array[String]): Unit = {
@@ -22,22 +24,7 @@ object TimeQuery {
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val iters = if (args.length > 2) args(2).toInt else 5
     val outDir = if (args.length > 3) Some(args(3)) else None
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("GRAFT_SHUFFLE", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      // mirrors Bench VERBATIM (ADVICE r21: the old 64m default here
-      // silently A/B'd a different conf than the bench under test —
-      // same env var, same 1m default as Bench/Verify now; GRAFT_*
-      // overrides remain for deliberate cross-conf probes)
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        sys.env.getOrElse("GRAFT_PFIRST", "false"))
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes",
-        sys.env.getOrElse("GRAFT_ADVISORY",
-          sys.env.getOrElse("SPARK_GRAFT_ADVISORY", "1m")))
-      .config("spark.sql.adaptive.enabled", sys.env.getOrElse("GRAFT_AQE", "true"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession.builder("local[32]", 32).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val fn = SparkEntry.queries.getOrElse(name,
       sys.error(s"unknown query '$name'; keys: ${SparkEntry.queries.keys.toSeq.sorted.mkString(", ")}"))

@@ -11,16 +11,8 @@ import org.apache.spark.sql.functions._
   */
 object WalkPhaseProbe {
   def main(args: Array[String]): Unit = {
-    val spark = org.apache.spark.sql.SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        sys.env.getOrElse("PROBE_PFIRST", "false"))
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes",
-        sys.env.getOrElse("PROBE_ADVISORY", "1m"))
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.GraftSession.builder("local[32]", 32).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    graft.functions.GraftFunctions.register(spark)
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
     def t[A](tag: String)(f: => A): A = {
       val t0 = System.nanoTime; val r = f

@@ -15,8 +15,6 @@ class ExpressionPropertiesSpec extends AnyFunSuite {
   import TestSpark._
   import spark.implicits._
 
-  functions.GraftFunctions.register(spark)
-
   /** Deterministic sample stream from a Gen (no forAll bridge in the
     * offline dep cache; all pairs evaluate in ONE Spark job so the
     * property check stays fast).

@@ -4,16 +4,13 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local session for specs (small core count: specs run at
-  * sf0.001 and fork once per suite run).
+  * sf0.001 and fork once per suite run), built like every graft main:
+  * graft's functions come with the session.
   */
 object TestSpark {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
+    val s = GraftSession.builder("local[4]", 4)
       .config("spark.sql.warehouse.dir", "/tmp/graft_test_warehouse")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
     s
@@ -417,8 +414,30 @@ class OperatorsSpec extends AnyFunSuite {
       s"injected: $names")
   }
 
-  test("cosine_sim: self-similarity is 1, orthogonal is 0, zero-vector guarded") {
+  test("one function table: GraftExtensions injects every GraftFunctions entry; each resolves on TestSpark unregistered") {
+    val names = Seq("cosine_sim", "minhash", "simhash", "fingerprint64", "intersect_count_sorted",
+      "shingles", "sign_bits", "repetition_stats", "kgrams", "kgram_hashes", "l2_sq", "pq_adc",
+      "bloom_filter_agg", "bloom_might_contain")
+    assert(functions.GraftFunctions.table.map(_.name) == names)
+    assert(org.apache.spark.sql.GraftExtensionsProbe.injected(names) == names)
+    val reg = spark.sessionState.functionRegistry
+    val missing = names.filterNot(n => reg.functionExists(org.apache.spark.sql.catalyst.FunctionIdentifier(n)))
+    assert(missing.isEmpty, s"not installed by the session build: $missing")
+    // the bloom pair end to end, through the session's own registry
+    val bloom = spark.range(100).selectExpr("bloom_filter_agg(xxhash64(id), 100L, 4096L)")
+      .head.getAs[Array[Byte]](0)
+    val hits = spark.range(200)
+      .filter(call_function("bloom_might_contain", lit(bloom), xxhash64(col("id"))))
+      .select("id").collect().map(_.getLong(0)).toSet
+    assert((0L until 100L).forall(hits), "a bloom filter has no false negatives")
+    // on an extension-built session register is a no-op: nothing replaced
+    val before = functions.GraftFunctions.table.map(f => reg.lookupFunction(f.id).get)
     functions.GraftFunctions.register(spark)
+    val after = functions.GraftFunctions.table.map(f => reg.lookupFunction(f.id).get)
+    assert(before.zip(after).forall { case (a, b) => a eq b })
+  }
+
+  test("cosine_sim: self-similarity is 1, orthogonal is 0, zero-vector guarded") {
     import spark.implicits._
     val df = Seq(
       (Array(1.0f, 2.0f, 3.0f), Array(1.0f, 2.0f, 3.0f)),

@@ -20,8 +20,6 @@ import org.scalatest.funsuite.AnyFunSuite
 class KGramHashParitySpec extends AnyFunSuite {
   import TestSpark._
 
-  functions.GraftFunctions.register(spark)
-
   test("element law: kgram_hashes == fnv1a64 of each kgram string") {
     import spark.implicits._
     val texts = Seq(

@@ -13,8 +13,6 @@ import org.scalatest.funsuite.AnyFunSuite
 class PqSpec extends AnyFunSuite {
   import TestSpark._
 
-  functions.GraftFunctions.register(spark)
-
   test("identical vectors encode to identical codes; codes have length m") {
     import spark.implicits._
     val tdir = "/fake/pq_dup"

@@ -46,7 +46,6 @@ class QualitySignalsSpec extends AnyFunSuite {
   }
 
   test("repetition_stats matches the declarative split/HOF spelling bit-for-bit") {
-    graft.functions.GraftFunctions.register(spark)
     // edge cases: empty string (split -> [""]), multi-space runs
     // (empty tokens), single token, unicode, heavy repetition
     val docs = Seq("", " ", "a", "a  b", "x y x y x y", "héllo wörld héllo wörld",

@@ -95,11 +95,27 @@ class SharedLeafFrameSpec extends AnyFunSuite {
     finally Shared.unpersistRdd(rdd)
   }
 
+  test("leaf: cutting a shuffle-free frame runs no job") {
+    val (_, jobs) = org.apache.spark.JobCounter.jobsDuring(spark.sparkContext) {
+      val (_, rdd) = Shared.leaf(corpus(40).select(col("vec_id"), size(col("embedding")).as("d")))
+      Shared.unpersistRdd(rdd)
+    }
+    assert(jobs == 0, s"$jobs jobs")
+  }
+
+  test("leaf: under AQE the cut runs the frame's shuffle stage before any action") {
+    val src = Tables.embeddings(spark, dir).groupBy((col("vec_id") % 7).as("m")).count()
+    val ((leaf, rdd), jobs) = org.apache.spark.JobCounter.jobsDuring(spark.sparkContext)(Shared.leaf(src))
+    try {
+      assert(jobs == 1, s"the cut must run the one shuffle stage, ran $jobs jobs")
+      assert(rows(leaf.orderBy("m")) == rows(src.orderBy("m")))
+    } finally Shared.unpersistRdd(rdd)
+  }
+
   /** Vectors.semanticGroups' chain run inline, outside the registry —
     * the unmemoized spelling the served leaf must equal row for row.
     */
   private def inlineGroups(d: String, threshold: Double) = {
-    graft.functions.GraftFunctions.register(spark)
     val w = Window.partitionBy("source").orderBy("doc_id")
     Tables.documents(spark, d).select("doc_id", "source", "n_chars")
       .join(Tables.embeddings(spark, d).select(col("vec_id"), col("embedding")),

@@ -9,8 +9,8 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Pins the rules `Shared` owns for every family: one compute per key
   * under concurrency, the live-stream restart that bounds its memory
   * sink, release of superseded values, and the guards that keep new
-  * process-global registries and second leaf spellings out of the
-  * codebase.
+  * process-global registries, second leaf spellings and session builds
+  * outside `GraftSession` out of the codebase.
   */
 class SharedSpec extends AnyFunSuite {
   import TestSpark._
@@ -117,16 +117,18 @@ class SharedSpec extends AnyFunSuite {
   }
 
   /** Match counts of `pattern` per src/main/scala/graft source outside
-    * `tools/`, keyed by path relative to that root.
+    * `tools/` (or including it, `withTools`), keyed by path relative to
+    * that root.
     */
-  private def mainMatches(pattern: scala.util.matching.Regex): Seq[(String, Int)] = {
+  private def mainMatches(pattern: scala.util.matching.Regex,
+                          withTools: Boolean = false): Seq[(String, Int)] = {
     val root = new java.io.File("src/main/scala/graft")
     assert(root.isDirectory, s"run from the repository root: ${root.getAbsolutePath}")
     import scala.jdk.CollectionConverters._
     Files.walk(root.toPath).iterator.asScala
       .filter(p => p.toString.endsWith(".scala"))
       .map(p => root.toPath.relativize(p).toString -> pattern.findAllIn(Files.readString(p)).size)
-      .filter { case (rel, _) => !rel.startsWith("tools/") }
+      .filter { case (rel, _) => withTools || !rel.startsWith("tools/") }
       .toSeq
   }
 
@@ -145,5 +147,14 @@ class SharedSpec extends AnyFunSuite {
     val offenders = mainMatches(pattern)
       .filter { case (rel, n) => rel != "plans/Ordinals.scala" && n > 0 }
     assert(offenders.isEmpty, s"frame-to-leaf cuts outside graft.Shared.leaf: $offenders")
+  }
+
+  test("one session mechanism: sessions are built, and functions registered, only in GraftSession") {
+    def outsideSession(pattern: String) = mainMatches(pattern.r, withTools = true)
+      .filter { case (rel, n) => n > 0 && rel != "GraftSession.scala" }
+    val builds = outsideSession("""SparkSession\s*\.\s*builder\s*\(""")
+    assert(builds.isEmpty, s"sessions built outside GraftSession.builder: $builds")
+    val registers = outsideSession("""GraftFunctions\s*\.\s*register\s*\(""")
+    assert(registers.isEmpty, s"GraftFunctions.register calls outside GraftSession: $registers")
   }
 }

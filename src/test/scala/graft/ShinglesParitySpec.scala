@@ -16,8 +16,6 @@ import org.scalatest.funsuite.AnyFunSuite
 class ShinglesParitySpec extends AnyFunSuite {
   import TestSpark._
 
-  functions.GraftFunctions.register(spark)
-
   private val declarative = {
     val toks = split(col("text"), " ")
     when(size(toks) >= 2,

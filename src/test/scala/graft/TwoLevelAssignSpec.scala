@@ -31,7 +31,6 @@ class TwoLevelAssignSpec extends AnyFunSuite {
   }
 
   private def seededCells(nLists: Int) = {
-    functions.GraftFunctions.register(spark)
     val e = Tables.embeddings(spark, dir).select("vec_id", "embedding")
     val seeded = e.withColumn("cell", (col("vec_id") % nLists).cast("int"))
     (e, operators.Vectors.centroidsOf(seeded))
@@ -76,7 +75,6 @@ class TwoLevelAssignSpec extends AnyFunSuite {
   }
 
   test("q29b under forced two-level recovers every planted duplicate") {
-    functions.GraftFunctions.register(spark)
     val e = Tables.embeddings(spark, dir).select("vec_id", "embedding")
     val planted = e.select(explode(when(col("vec_id") % 5 === 0,
         array(col("vec_id"), col("vec_id") + 100000))

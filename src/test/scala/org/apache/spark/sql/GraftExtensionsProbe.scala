@@ -10,12 +10,15 @@ import org.apache.spark.sql.catalyst.analysis.FunctionRegistry
   * the same call `SparkSession.applyExtensions` makes at build time.
   */
 object GraftExtensionsProbe {
-  def injectedNames(): Seq[String] = {
+  def injectedNames(): Seq[String] =
+    injected(Seq("cosine_sim", "minhash", "simhash", "fingerprint64", "intersect_count_sorted", "shingles"))
+
+  /** The subset of `names` the extension injects into a builtin registry. */
+  def injected(names: Seq[String]): Seq[String] = {
     val ext = new SparkSessionExtensions
     new graft.GraftExtensions().apply(ext)
     val registry = FunctionRegistry.builtin.clone()
     ext.registerFunctions(registry)
-    Seq("cosine_sim", "minhash", "simhash", "fingerprint64", "intersect_count_sorted", "shingles")
-      .filter(n => registry.functionExists(FunctionIdentifier(n)))
+    names.filter(n => registry.functionExists(FunctionIdentifier(n)))
   }
 }
