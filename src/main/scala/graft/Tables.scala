@@ -46,22 +46,22 @@ object Tables {
     * changes whenever the table is re-registered (registerOverride)
     * OR its backing files are regenerated — the two ways derived
     * values go silently stale (ADVICE r07). Snapshot EQUALITY decides
-    * freshness, no clock agreement needed.
+    * freshness, no clock agreement needed. Also the source half of
+    * every index identity ([[IndexStore]]).
     */
   def sourceToken(spark: SparkSession, dir: String, name: String): String = {
     val v = Option(overrideVersions.get((spark, dir, name))).map(_.intValue).getOrElse(0)
-    s"v$v|${fileListing(spark, s"$dir/$name.parquet", ",")}"
+    s"v$v|${fileListing(spark, s"$dir/$name.parquet")}"
   }
 
   /** `(path, length, mtime)` of every file under `path`, sorted and
-    * joined by `sep`; "" when absent. The listing is RECURSIVE and
-    * keyed by path relative to the table root: a rewrite deep inside
-    * nested partition dirs must change it even when every top-level
-    * child looks unchanged (r04 ADVICE). A single file lists as its
-    * own name. Shared by [[sourceToken]] and the index watermarks
-    * (`VectorIndex.sourceSnapshot`).
+    * comma-joined; "" when absent. The listing is RECURSIVE and keyed
+    * by path relative to the table root: a rewrite deep inside nested
+    * partition dirs must change it even when every top-level child
+    * looks unchanged (r04 ADVICE). A single file lists as its own
+    * name.
     */
-  private[graft] def fileListing(spark: SparkSession, path: String, sep: String): String = {
+  private def fileListing(spark: SparkSession, path: String): String = {
     val p = new org.apache.hadoop.fs.Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(p)) ""
@@ -76,7 +76,7 @@ object Tables {
         val s = it.next()
         parts += s"${s.getPath.toUri.getPath.stripPrefix(root)}:${s.getLen}:${s.getModificationTime}"
       }
-      parts.sorted.mkString(sep)
+      parts.sorted.mkString(",")
     }
   }
 

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{Shared, Tables}
+import graft.{IndexStore, Shared, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -583,17 +583,13 @@ object Curation {
     *   <path>/benchgrams/       — distinct 3-grams of old BENCH docs
     *                              (contamination gate; the batch's own
     *                              bench grams union in at probe time)
-    * Watermark contract = GramIndex's: documents sourceToken + params.
-    * deltaMod/benchMod are part of the index identity — they decide
-    * which docs are "old" and which of those are bench, so they change
-    * the index CONTENT, not just the probe.
+    * Lifecycle: [[graft.IndexStore]]. deltaMod/benchMod are identity
+    * — they decide which docs are "old" and which of those are bench,
+    * so they change the index CONTENT, not just the probe.
     */
   object FunnelIndex {
     def path(spark: SparkSession, dir: String): String =
       VectorIndex.defaultPath(spark, dir) + "_funnel"
-
-    def params(deltaMod: Int, benchMod: Int, nBuckets: Int): String =
-      s"funnel:deltaMod=$deltaMod,benchMod=$benchMod,nBuckets=$nBuckets"
 
     // Keyed on the RESOLVED index path, not the corpus dir: the path
     // routes through session conf spark.graft.index.root, so two
@@ -647,48 +643,30 @@ object Curation {
     private def invalidateCached(spark: SparkSession, dir: String): Unit =
       cacheKeys(path(spark, dir)).foreach(Shared.unpersist(spark, _))
 
-    private def watermark(spark: SparkSession, dir: String,
-                          deltaMod: Int, benchMod: Int, nBuckets: Int): String =
-      Tables.sourceToken(spark, dir, "documents") + "\nparams|" +
-        params(deltaMod, benchMod, nBuckets)
-
-    def fresh(spark: SparkSession, dir: String, path: String,
-              deltaMod: Int, benchMod: Int, nBuckets: Int): Boolean = {
-      val fs = VectorIndex.fsFor(spark, path)
-      // heal a crashed fold first: a component parked as __old must
-      // read as live, not trigger a folded-history-dropping rebuild
-      Seq("hashes", "shingles").foreach(VectorIndex.restoreDir(spark, path, _))
-      Seq("hashes", "shingles", "benchgrams").forall(p =>
-        fs.exists(new org.apache.hadoop.fs.Path(s"$path/$p/_SUCCESS"))) &&
-        VectorIndex.readWatermark(spark, path)
-          .contains(watermark(spark, dir, deltaMod, benchMod, nBuckets))
-    }
-
-    def build(spark: SparkSession, dir: String, path: String,
-              deltaMod: Int, benchMod: Int, nBuckets: Int): Unit = graft.BuildLedger.timed(s"funnel:$path") {
-      invalidateCached(spark, dir)
-      // snapshot BEFORE reading (VectorIndex.build's ordering: a
-      // source rewrite DURING the build leaves the index stale-marked)
-      val token = watermark(spark, dir, deltaMod, benchMod, nBuckets)
-      val old = Tables.documents(spark, dir)
-        .filter(col("doc_id") % deltaMod =!= 0)
-      old.select(md5(col("text")).as("h")).distinct()
-        .write.mode("overwrite").parquet(s"$path/hashes")
-      Dedup.docShinglesOn(spark, old)
-        .withColumn("blk", element_at(col("sh"), 1))
-        .withColumn("pblk", pmod(xxhash64(col("blk")), lit(nBuckets)).cast("int"))
-        // align write tasks with the partition dirs: without this,
-        // every scan task sprays a file into each of the nBuckets
-        // dirs (T×nBuckets small files) and the nightly probe's
-        // pruned read degrades into listing cost — the measured
-        // failure mode VectorIndex.buildDedup documents
-        .repartition(col("pblk"))
-        .write.mode("overwrite").partitionBy("pblk").parquet(s"$path/shingles")
-      grams3(old.filter(col("doc_id") % benchMod === 0).select("doc_id", "text"))
-        .select(explode(col("g3")).as("g")).distinct()
-        .write.mode("overwrite").parquet(s"$path/benchgrams")
-      VectorIndex.writeWatermark(spark, path, token)
-    }
+    def index(deltaMod: Int, benchMod: Int, nBuckets: Int): IndexStore.Index =
+      IndexStore.Index("funnel", "documents",
+          s"funnel:deltaMod=$deltaMod,benchMod=$benchMod,nBuckets=$nBuckets",
+          Seq("hashes", "shingles", "benchgrams")) { (spark, dir, path) =>
+        invalidateCached(spark, dir)
+        val old = Tables.documents(spark, dir)
+          .filter(col("doc_id") % deltaMod =!= 0)
+        old.select(md5(col("text")).as("h")).distinct()
+          .write.mode("overwrite").parquet(s"$path/hashes")
+        Dedup.docShinglesOn(spark, old)
+          .withColumn("blk", element_at(col("sh"), 1))
+          .withColumn("pblk", pmod(xxhash64(col("blk")), lit(nBuckets)).cast("int"))
+          // align write tasks with the partition dirs: without this,
+          // every scan task sprays a file into each of the nBuckets
+          // dirs (T×nBuckets small files) and the nightly probe's
+          // pruned read degrades into listing cost — the measured
+          // failure mode VectorIndex.dedup documents
+          .repartition(col("pblk"))
+          .write.mode("overwrite").partitionBy("pblk").parquet(s"$path/shingles")
+        grams3(old.filter(col("doc_id") % benchMod === 0).select("doc_id", "text"))
+          .select(explode(col("g3")).as("g")).distinct()
+          .write.mode("overwrite").parquet(s"$path/benchgrams")
+        Nil
+      }
 
     /** COMPACTION of a streaming seen-store into the index: fold the
       * store's batchId-keyed hash/shingle dirs (one per micro-batch —
@@ -712,11 +690,11 @@ object Curation {
                   nBuckets: Int): Unit = {
       invalidateCached(spark, dir)
       val path = FunnelIndex.path(spark, dir)
-      val fs = VectorIndex.fsFor(spark, path)
+      val fs = IndexStore.fsFor(spark, path)
       val sHashes = new org.apache.hadoop.fs.Path(s"$statePath/hashes")
       val sShingles = new org.apache.hadoop.fs.Path(s"$statePath/shingles")
       if (fs.exists(sHashes)) {
-        VectorIndex.swapDir(spark, path, "hashes") { tmp =>
+        IndexStore.swapDir(spark, path, "hashes") { tmp =>
           spark.read.parquet(s"$path/hashes")
             .unionByName(spark.read.parquet(s"$statePath/hashes")
               .drop("batch").select("h"))
@@ -726,7 +704,7 @@ object Curation {
         fs.delete(sHashes, true)
       }
       if (fs.exists(sShingles)) {
-        VectorIndex.swapDir(spark, path, "shingles") { tmp =>
+        IndexStore.swapDir(spark, path, "shingles") { tmp =>
           spark.read.parquet(s"$path/shingles")
             .select("doc_id", "sh", "blk", "pblk")
             .unionByName(spark.read.parquet(s"$statePath/shingles")
@@ -774,8 +752,7 @@ object Curation {
                          benchMod: Int = 97, minPass: Int = 6,
                          threshold: Double = 0.5, nBuckets: Int = 64): DataFrame = {
     val path = FunnelIndex.path(spark, dir)
-    if (!FunnelIndex.fresh(spark, dir, path, deltaMod, benchMod, nBuckets))
-      FunnelIndex.build(spark, dir, path, deltaMod, benchMod, nBuckets)
+    FunnelIndex.index(deltaMod, benchMod, nBuckets).ensure(spark, dir, path)
     val delta = Tables.documents(spark, dir)
       .filter(col("doc_id") % deltaMod === 0)
       .select("doc_id", "source", "text")

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.Tables
+import graft.{IndexStore, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -763,7 +763,7 @@ object Dedup {
   }
 
   /** q29c: the STEADY-STATE spelling of q29b — cell assignments come
-    * from the persisted dedup index (VectorIndex.buildDedup: same
+    * from the persisted dedup index (VectorIndex.dedup: same
     * seeds, same two-level assignment, written cell-partitioned), so
     * a fresh-index run pays ZERO centroid/assignment cost: read the
     * inverted lists, pair in-cell, verify. Value-identical to q29b at
@@ -774,8 +774,7 @@ object Dedup {
   def dedupEmbeddingIvfIndexed(spark: SparkSession, dir: String,
                                threshold: Double = 0.3): DataFrame = {
     val path = VectorIndex.defaultPath(spark, dir) + "-dedup"
-    if (!VectorIndex.fresh(spark, dir, path, VectorIndex.dedupParams(nLists = 0, nProbe = 2)))
-      VectorIndex.buildDedup(spark, dir, path)
+    VectorIndex.dedup().ensure(spark, dir, path)
     val probed = VectorIndex.cells(spark, path)
       .select(col("vec_id"), col("cell").cast("int").as("cell"))
     val e = Tables.embeddings(spark, dir).select("vec_id", "embedding")
@@ -930,44 +929,32 @@ object Dedup {
     * VectorIndex build/read pattern applied to substring dedup): the
     * old corpus's (gram-hash → distinct-doc count) table lives on
     * storage, so a nightly batch of NEW documents checks span overlap
-    * WITHOUT re-reading a byte of old corpus text. Same watermark
-    * freshness contract as the vector indexes (source token + build
-    * params; k and deltaMod are part of the index identity — deltaMod
-    * decides which docs are "old", so it changes the index CONTENT).
+    * WITHOUT re-reading a byte of old corpus text. Lifecycle:
+    * [[graft.IndexStore]]; k and deltaMod are identity — deltaMod
+    * decides which docs are "old", so it changes the index CONTENT.
     */
   object GramIndex {
     def path(spark: SparkSession, dir: String): String =
       VectorIndex.defaultPath(spark, dir) + "_grams"
 
-    def params(k: Int, deltaMod: Int): String = s"grams:k=$k,deltaMod=$deltaMod"
-
-    private def watermark(spark: SparkSession, dir: String, k: Int, deltaMod: Int): String =
-      graft.Tables.sourceToken(spark, dir, "documents") + "\nparams|" + params(k, deltaMod)
-
-    def fresh(spark: SparkSession, dir: String, path: String, k: Int, deltaMod: Int): Boolean = {
-      val fs = VectorIndex.fsFor(spark, path)
-      VectorIndex.restoreDir(spark, path, "grams") // heal a crashed compact
-      fs.exists(new org.apache.hadoop.fs.Path(s"$path/grams/_SUCCESS")) &&
-        VectorIndex.readWatermark(spark, path).contains(watermark(spark, dir, k, deltaMod))
-    }
-
-    def build(spark: SparkSession, dir: String, path: String, k: Int, deltaMod: Int): Unit = graft.BuildLedger.timed(s"gram:$path") {
-      val token = watermark(spark, dir, k, deltaMod) // BEFORE reading, like VectorIndex.build
-      Tables.documents(spark, dir)
-        .filter(col("doc_id") % deltaMod =!= 0)
-        .select(col("doc_id"), explode(array_distinct(expr(s"kgram_hashes(text, $k)"))).as("g"))
-        .groupBy("g").agg(count(lit(1)).as("nd_old"))
-        .write.mode("overwrite").parquet(s"$path/grams")
-      // a rebuild OBSOLETES the delta state: absorbed generations
-      // belong to the previous corpus regime (by rebuild time ingest
-      // has landed them in the table — the fold contract), and the
-      // overwrite above just wiped the _folded_gens marker, so a
-      // leftover gen dir would re-sum into the fresh base as a
-      // double count
-      val fs = VectorIndex.fsFor(spark, path)
-      fs.delete(new org.apache.hadoop.fs.Path(s"$path/grams_delta"), true)
-      VectorIndex.writeWatermark(spark, path, token)
-    }
+    def index(k: Int, deltaMod: Int): IndexStore.Index =
+      IndexStore.Index("gram", "documents", s"grams:k=$k,deltaMod=$deltaMod", Seq("grams")) {
+        (spark, dir, path) =>
+          Tables.documents(spark, dir)
+            .filter(col("doc_id") % deltaMod =!= 0)
+            .select(col("doc_id"), explode(array_distinct(expr(s"kgram_hashes(text, $k)"))).as("g"))
+            .groupBy("g").agg(count(lit(1)).as("nd_old"))
+            .write.mode("overwrite").parquet(s"$path/grams")
+          // a rebuild OBSOLETES the delta state: absorbed generations
+          // belong to the previous corpus regime (by rebuild time ingest
+          // has landed them in the table — the fold contract), and the
+          // overwrite above just wiped the _folded_gens marker, so a
+          // leftover gen dir would re-sum into the fresh base as a
+          // double count
+          IndexStore.fsFor(spark, path)
+            .delete(new org.apache.hadoop.fs.Path(s"$path/grams_delta"), true)
+          Nil
+      }
 
     /** Generation ids the folded base already contains — the
       * `_folded_gens` sidecar the fold publishes ATOMICALLY with the
@@ -976,32 +963,23 @@ object Dedup {
       * from the summed view, so the fold's cleanup (gen-dir deletes)
       * can crash at any point without double-counting.
       */
-    private def foldedGens(spark: SparkSession, path: String): Set[String] = {
-      val fs = VectorIndex.fsFor(spark, path)
-      val p = new org.apache.hadoop.fs.Path(s"$path/grams/_folded_gens")
-      if (!fs.exists(p)) Set.empty
-      else {
-        val len = fs.getFileStatus(p).getLen.toInt
-        val buf = new Array[Byte](len)
-        val in = fs.open(p)
-        try in.readFully(buf) finally in.close()
-        new String(buf, "UTF-8").split(",").iterator.filter(_.nonEmpty).toSet
-      }
-    }
+    private def foldedGens(spark: SparkSession, path: String): Set[String] =
+      IndexStore.readSmall(spark, s"$path/grams/_folded_gens")
+        .fold(Set.empty[String])(_.split(",").iterator.filter(_.nonEmpty).toSet)
 
-    /** Generation dirs that count toward the live view: COMPLETE
-      * (_SUCCESS — a crashed absorb's partial gen dir must not be
-      * summed as real counts) and not already folded into the base.
+    /** Generation dirs that count toward the live view: COMPLETE (a
+      * crashed absorb's partial gen dir must not be summed as real
+      * counts) and not already folded into the base.
       */
     private def liveGens(spark: SparkSession, path: String): Seq[org.apache.hadoop.fs.Path] = {
-      val fs = VectorIndex.fsFor(spark, path)
+      val fs = IndexStore.fsFor(spark, path)
       val root = new org.apache.hadoop.fs.Path(s"$path/grams_delta")
       if (!fs.exists(root)) Seq.empty
       else {
         val folded = foldedGens(spark, path)
         fs.listStatus(root).toSeq.filter(_.isDirectory).map(_.getPath)
           .filter(_.getName.startsWith("gen="))
-          .filter(p => fs.exists(new org.apache.hadoop.fs.Path(p, "_SUCCESS")))
+          .filter(p => IndexStore.complete(spark, p.toString))
           .filterNot(p => folded.contains(p.getName.stripPrefix("gen=")))
       }
     }
@@ -1070,11 +1048,9 @@ object Dedup {
       val folded = grams(spark, path)
       val gens = (foldedGens(spark, path) ++
         toFold.map(_.getName.stripPrefix("gen="))).toSeq.sorted.mkString(",")
-      VectorIndex.swapDir(spark, path, "grams") { tmp =>
+      IndexStore.swapDir(spark, path, "grams") { tmp =>
         folded.write.parquet(tmp)
-        val fs = VectorIndex.fsFor(spark, path)
-        val out = fs.create(new org.apache.hadoop.fs.Path(s"$tmp/_folded_gens"), true)
-        try out.write(gens.getBytes("UTF-8")) finally out.close()
+        IndexStore.writeSmall(spark, s"$tmp/_folded_gens", gens)
       }
     }
 
@@ -1086,7 +1062,7 @@ object Dedup {
       * counter) is counted as the NEW generation it is.
       */
     private[graft] def cleanupPhase(spark: SparkSession, path: String): Unit = {
-      val fs = VectorIndex.fsFor(spark, path)
+      val fs = IndexStore.fsFor(spark, path)
       val folded = foldedGens(spark, path)
       folded.foreach(g =>
         fs.delete(new org.apache.hadoop.fs.Path(s"$path/grams_delta/gen=$g"), true))
@@ -1113,8 +1089,7 @@ object Dedup {
   def substringDupIncremental(spark: SparkSession, dir: String, k: Int = 8,
                               deltaMod: Int = 16): DataFrame = {
     val path = GramIndex.path(spark, dir)
-    if (!GramIndex.fresh(spark, dir, path, k, deltaMod))
-      GramIndex.build(spark, dir, path, k, deltaMod)
+    GramIndex.index(k, deltaMod).ensure(spark, dir, path)
     val delta = Tables.documents(spark, dir)
       .filter(col("doc_id") % deltaMod === 0)
       .select(col("doc_id"), col("text"))

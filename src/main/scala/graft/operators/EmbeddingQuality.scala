@@ -85,7 +85,7 @@ object EmbeddingQuality {
 
   /** q62b: IVF-pruned hard-negative mining — the 100 TB spelling of
     * q62. Candidates come from the persisted MINING index
-    * (VectorIndex.buildMining: fine cells ≈ N/125 vectors each,
+    * (VectorIndex.mining: fine cells ≈ N/125 vectors each,
     * inverted lists carrying vec_id+label+embedding):
     *
     *   1. anchors rank cells through the shared two-level
@@ -114,9 +114,7 @@ object EmbeddingQuality {
                        nProbe: Int = 3, nLists: Int = 0,
                        useStored: Boolean = true): DataFrame = {
     val path = VectorIndex.miningPath(spark, dir)
-    val params = VectorIndex.miningParams(nLists, refineIters = 0)
-    if (!VectorIndex.fresh(spark, dir, path, params))
-      VectorIndex.buildMining(spark, dir, path, nLists)
+    VectorIndex.mining(nLists).ensure(spark, dir, path)
     val anchors = Tables.embeddings(spark, dir)
       .filter(col("vec_id") % anchorMod === 0)
       .select(col("vec_id"), col("label").as("anchor_label"), col("embedding"))
@@ -124,9 +122,9 @@ object EmbeddingQuality {
     // ranking reads it back instead of re-running coarseStructure's
     // iterative grouping per call (VERDICT r12 item 7) — and probes
     // then rank with the build's exact groups BY CONSTRUCTION, not by
-    // re-derivation parity. Fallback (pre-record or flat index)
-    // re-derives from the stored centroids as before; `useStored =
-    // false` forces that path so the spec can pin both equal.
+    // re-derivation parity. A flat index re-derives from the stored
+    // centroids; `useStored = false` forces that path so the spec can
+    // pin both equal.
     val assigned = VectorIndex.storedCoarse(spark, path).filter(_ => useStored) match {
       case Some((gc, fine)) =>
         Vectors.assignCellsStructured(anchors.select("vec_id", "embedding"),
@@ -162,7 +160,7 @@ object EmbeddingQuality {
   }
 
   /** The IVF mining pipeline over an arbitrary (vec_id, label,
-    * embedding) frame with the index built in-memory — buildMining's
+    * embedding) frame with the index built in-memory — the mining build's
     * exact kernels (real-vector seeds via refinedCentroids, two-level
     * nProbe=1 list assignment, two-level anchor probing) minus the
     * persistence, so a derived corpus can exercise q62b's own

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.Tables
+import graft.{IndexStore, Tables}
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
@@ -361,7 +361,7 @@ object KnnGraph {
     val lvl = StorageLevel.MEMORY_AND_DISK
     val e = emb.select(col("vec_id"), col("embedding")).persist(lvl)
     val n = e.count()
-    // lists defaults ADAPTIVE (r19): the q29b/buildDedup sizing law,
+    // lists defaults ADAPTIVE (r19): the q29b/dedup-index sizing law,
     // nLists ≈ N/125, so init cells — and the in-cell pair loop —
     // stay ~125 vectors no matter how the corpus grows (a fixed 16
     // would make init pairing quadratic at 100×). Identical to the
@@ -765,22 +765,11 @@ object KnnGraph {
     *                       where it lands
     *   <path>/centroids/ — (c_cell, cvec) so that replay never touches
     *                       the corpus
-    * Same watermark freshness contract as the IVF indexes.
+    * Lifecycle: [[graft.IndexStore]]; the build records the RESOLVED
+    * bucket count as its `rblk|N` fact.
     */
   def graphPath(spark: SparkSession, dir: String): String =
     VectorIndex.defaultPath(spark, dir) + "_knn"
-
-  /** The graph's identity params, recorded in its watermark. The
-    * `arith=d2` token doubles as the SCORING-KERNEL version (ADVICE
-    * r19): stored sims must have been produced by the same fold
-    * order/rounding the increment path scores with — a kernel change
-    * bumps the token and invalidates old indexes instead of merging
-    * disagreeing sims.
-    */
-  def graphParams(k: Int, lists: Int, maxIters: Int, ringJ: Int = 10,
-                  modularRing: Boolean = false, nBuckets: Int = 0): String =
-    s"knngraph:k=$k,lists=$lists,iters=$maxIters," +
-      s"ring=${if (modularRing) "m" else "h"}$ringJ,blk=$nBuckets,arith=d2"
 
   /** Edge-store bucket-count LAW (r22, VERDICT r20 item 5 / r21
     * item 1): `nBuckets = 0` (now the default everywhere) means
@@ -798,84 +787,52 @@ object KnnGraph {
   private[graft] def autoBuckets(n: Long): Int =
     math.max(16L, n / bucketNodes).toInt
 
-  def buildGraph(spark: SparkSession, dir: String, path: String, k: Int = 10,
-                 lists: Int = 0, maxIters: Int = 2, ringJ: Int = 10,
-                 modularRing: Boolean = false, nBuckets: Int = 0): Unit = graft.BuildLedger.timed(s"knngraph:$path") {
-    // snapshot BEFORE reading (VectorIndex.build's rule): a source
-    // overwritten mid-build leaves a stale watermark, never a fresh lie
-    val snapshot = VectorIndex.sourceSnapshot(spark, dir)
-    val e = Tables.embeddings(spark, dir).select("vec_id", "embedding")
-    // the SAME derivations nnDescent's init runs — both are pure
-    // functions of (corpus, lists), so the persisted entry structure
-    // matches the graph's init cells exactly (incl. the adaptive
-    // lists sizing: lists = 0 means N/125, the family's scaling law;
-    // nBuckets = 0 means N/1250 — autoBuckets above)
-    val n = e.count()
-    val nl = if (lists > 0) lists else math.max(16, (n / 125L).toInt)
-    val nb = if (nBuckets > 0) nBuckets else autoBuckets(n)
-    val cents = Vectors.refinedCentroids(e, nl, iters = 0)
-    val cells = Vectors.assignCells(e, cents, nProbe = 1,
-      nCoarse = Vectors.autoCoarse(nl)).select("vec_id", "cell")
-    cents.write.mode("overwrite").parquet(s"$path/centroids")
-    cells.write.mode("overwrite").parquet(s"$path/cells")
-    nnDescent(spark, e, k = k, lists = lists, maxIters = maxIters,
-        ringJ = ringJ, modularRing = modularRing)
-      .withColumn("pblk", pmod(xxhash64(col("src")), lit(nb)).cast("int"))
-      // one task per bucket's file set, not nTasks files per dir
-      // (buildDedup's repartition rule)
-      .repartition(col("pblk"))
-      .write.mode("overwrite").partitionBy("pblk").parquet(s"$path/edges")
-    // the RESOLVED bucket count rides the watermark as its own line
-    // (the raw param in graphParams is the LAW's identity — lists=0's
-    // precedent); bucketsOf must read the resolved value, and a dir
-    // listing can undercount when a tiny test corpus leaves buckets
-    // empty, which would silently mis-map pblk on the read side
-    VectorIndex.writeWatermark(spark, path,
-      snapshot + "\nparams|" + graphParams(k, lists, maxIters, ringJ, modularRing, nBuckets) +
-        "\nrblk|" + nb)
-  }
-
-  /** Present + watermark-fresh + every component landed (the
-    * watermark is written last, so a crashed build always reads
-    * stale; the centroids/cells/edges _SUCCESS checks guard a
-    * hand-deleted component, which must rebuild rather than fail
-    * with a missing-file read).
+  /** The persisted graph at one parameter point. Every parameter is
+    * identity; `arith=d2` doubles as the SCORING-KERNEL version (ADVICE
+    * r19): stored sims must have been produced by the same fold
+    * order/rounding the increment path scores with — a kernel change
+    * bumps the token and invalidates old indexes instead of merging
+    * disagreeing sims.
     */
-  def graphFresh(spark: SparkSession, dir: String, path: String,
-                 k: Int = 10, lists: Int = 0, maxIters: Int = 2,
-                 ringJ: Int = 10, modularRing: Boolean = false,
-                 nBuckets: Int = 0): Boolean =
-    // the watermark's head (snapshot + params) must match EXACTLY;
-    // the trailing rblk| line is the build's resolved bucket count,
-    // not identity (VectorIndex.fresh's whole-string equality would
-    // reject it, so the split is spelled here)
-    VectorIndex.readWatermark(spark, path).map(_.split("\nrblk\\|")(0)).contains(
-        VectorIndex.sourceSnapshot(spark, dir) + "\nparams|" +
-          graphParams(k, lists, maxIters, ringJ, modularRing, nBuckets)) &&
-      VectorIndex.exists(spark, path) &&
-      VectorIndex.fsFor(spark, path)
-        .exists(new org.apache.hadoop.fs.Path(s"$path/edges/_SUCCESS"))
+  def graph(k: Int = 10, lists: Int = 0, maxIters: Int = 2, ringJ: Int = 10,
+            modularRing: Boolean = false, nBuckets: Int = 0): IndexStore.Index =
+    IndexStore.Index("knngraph", "embeddings",
+        s"knngraph:k=$k,lists=$lists,iters=$maxIters," +
+          s"ring=${if (modularRing) "m" else "h"}$ringJ,blk=$nBuckets,arith=d2",
+        Seq("centroids", "cells", "edges")) { (spark, dir, path) =>
+      val e = Tables.embeddings(spark, dir).select("vec_id", "embedding")
+      // the SAME derivations nnDescent's init runs — both are pure
+      // functions of (corpus, lists), so the persisted entry structure
+      // matches the graph's init cells exactly (incl. the adaptive
+      // lists sizing: lists = 0 means N/125, the family's scaling law;
+      // nBuckets = 0 means N/1250 — autoBuckets above)
+      val n = e.count()
+      val nl = if (lists > 0) lists else math.max(16, (n / 125L).toInt)
+      val nb = if (nBuckets > 0) nBuckets else autoBuckets(n)
+      val cents = Vectors.refinedCentroids(e, nl, iters = 0)
+      val cells = Vectors.assignCells(e, cents, nProbe = 1,
+        nCoarse = Vectors.autoCoarse(nl)).select("vec_id", "cell")
+      cents.write.mode("overwrite").parquet(s"$path/centroids")
+      cells.write.mode("overwrite").parquet(s"$path/cells")
+      nnDescent(spark, e, k = k, lists = lists, maxIters = maxIters,
+          ringJ = ringJ, modularRing = modularRing)
+        .withColumn("pblk", pmod(xxhash64(col("src")), lit(nb)).cast("int"))
+        // one task per bucket's file set, not nTasks files per dir
+        // (the dedup index's repartition rule)
+        .repartition(col("pblk"))
+        .write.mode("overwrite").partitionBy("pblk").parquet(s"$path/edges")
+      // the RESOLVED bucket count is a fact, not identity (the raw
+      // param is the LAW's identity — lists=0's precedent); bucketsOf
+      // must read the resolved value, and a dir listing can undercount
+      // when a tiny test corpus leaves buckets empty, which would
+      // silently mis-map pblk on the read side
+      Seq(s"rblk|$nb")
+    }
 
-  private def ensureGraph(spark: SparkSession, dir: String, path: String,
-                          k: Int = 10, lists: Int = 0, maxIters: Int = 2,
-                          ringJ: Int = 10, modularRing: Boolean = false,
-                          nBuckets: Int = 0): Unit =
-    if (!graphFresh(spark, dir, path, k, lists, maxIters, ringJ, modularRing, nBuckets))
-      buildGraph(spark, dir, path, k, lists, maxIters, ringJ, modularRing, nBuckets)
-
-  /** The bucket count the graph at `path` was written with: the
-    * watermark's `rblk|` line (the build's RESOLVED count under the
-    * autoBuckets law); the `blk=` param is read as a fallback for an
-    * explicit-count index written by a pre-r22 binary (those are
-    * stale via graphParams anyway, so the fallback never serves).
-    */
-  private def bucketsOf(spark: SparkSession, path: String): Int = {
-    val wm = VectorIndex.readWatermark(spark, path)
-    wm.flatMap("rblk\\|(\\d+)".r.findFirstMatchIn(_)).map(_.group(1).toInt)
-      .orElse(wm.flatMap("blk=(\\d+)".r.findFirstMatchIn(_)).map(_.group(1).toInt)
-        .filter(_ > 0))
-      .getOrElse(16)
-  }
+  /** The bucket count the graph at `path` was written with. */
+  private def bucketsOf(spark: SparkSession, path: String): Int =
+    IndexStore.fact(spark, path, "rblk").map(_.toInt).getOrElse(
+      throw new IllegalStateException(s"k-NN graph at $path records no rblk| fact"))
 
   /** Prune-read the stored edge lists of a bounded node set: collect
     * the nodes' pblk values (≤ nBuckets ints — knowing which buckets
@@ -1051,7 +1008,7 @@ object KnnGraph {
     // forward k (ADVICE r19): a non-default k must rebuild the graph
     // at that degree (the params watermark makes the mismatch stale),
     // not silently walk a k=10 index
-    ensureGraph(spark, dir, path, k = k)
+    graph(k = k).ensure(spark, dir, path)
     val e = Tables.embeddings(spark, dir).select("vec_id", "embedding")
     val queries = e.filter(col("vec_id") < nPlanted)
       .select((col("vec_id") + idOffset).as("q_id"), col("embedding").as("q_emb"))
@@ -1143,7 +1100,7 @@ object KnnGraph {
     // separate entries instead of evicting each other on alternation
     // (the watermark stays in the token — a rebuild still invalidates)
     graft.Shared.leafFrame(spark, s"knn_increment:$path:k=$k", Seq(e, delta),
-        token = path + "@" + VectorIndex.readWatermark(spark, path).getOrElse(""))(
+        token = path + "@" + IndexStore.readWatermark(spark, path).getOrElse(""))(
       knnGraphIncrementOn(spark, path, e, delta, k))
 
   /** q92f: incremental maintenance under the planted gate — the delta
@@ -1161,7 +1118,7 @@ object KnnGraph {
     val path = graphPath(spark, dir)
     // forward k (ADVICE r19): the increment-equals-rebuild law only
     // holds against a graph built at the SAME degree
-    ensureGraph(spark, dir, path, k = k)
+    graph(k = k).ensure(spark, dir, path)
     val e = Tables.embeddings(spark, dir).select("vec_id", "embedding")
     val delta = e.filter(col("vec_id") < nPlanted)
       .select((col("vec_id") + idOffset).as("vec_id"), col("embedding"))
@@ -1197,7 +1154,7 @@ object KnnGraph {
                                   nPlanted: Int = graft.GateInvariants.plantedGateN,
                                   idOffset: Long = 1000000L): DataFrame = {
     val path = graphPath(spark, dir)
-    ensureGraph(spark, dir, path, k = k)
+    graph(k = k).ensure(spark, dir, path)
     val e = Tables.embeddings(spark, dir).select("vec_id", "embedding")
     val delta = e.filter(col("vec_id") < nPlanted)
       .select((col("vec_id") + idOffset).as("vec_id"), col("embedding"))
@@ -1242,7 +1199,7 @@ object KnnGraph {
     * built at maxIters = 0 with the MODULAR ring: per-node top-k over
     * {IVF-cell co-members} ∪ {(idx+j) mod n ring neighbors, j ≤ 10} —
     * a pure SQL-expressible function of the corpus, built/persisted/
-    * walked through the exact same buildGraph/graphWalkOn machinery as
+    * walked through the exact same graph build/graphWalkOn machinery as
     * q93 (entry cells, bucket-pruned hop joins, beam, visited-set
     * anti-joins). Valid for the flat assignment path (lists ≤ 64 ⇔
     * corpus ≤ 8000 vectors — all gate SFs; q29b's boundary note).
@@ -1259,8 +1216,7 @@ object KnnGraph {
                       beam: Int = 8, maxHops: Int = 3,
                       nQueries: Int = 5): DataFrame = {
     val path = replayGraphPath(spark, dir)
-    if (!graphFresh(spark, dir, path, k = k, maxIters = 0, modularRing = true))
-      buildGraph(spark, dir, path, k = k, maxIters = 0, modularRing = true)
+    graph(k = k, maxIters = 0, modularRing = true).ensure(spark, dir, path)
     val e = Tables.embeddings(spark, dir).select("vec_id", "embedding")
     val queries = e.filter(col("vec_id") < nQueries)
       .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))

@@ -1,7 +1,7 @@
 package graft.operators
 
-import graft.Tables
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.{IndexStore, Tables}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -179,43 +179,94 @@ object PQ {
   }
 
   /** Persisted PQ index — the build/read split (the q48/q29c/q64b
-    * pattern): codebooks + encoded corpus live on storage under the
-    * VectorIndex watermark contract (source token + build params), so
-    * the steady state pays ZERO build cost: read m·kCodes codebook
-    * rows (broadcast) and the slim (vec_id, codes) table, scan.
+    * pattern): codebooks + encoded corpus live on storage, so the
+    * steady state pays ZERO build cost: read m·kCodes codebook rows
+    * (broadcast) and the slim (vec_id, codes) table, scan. Lifecycle:
+    * [[graft.IndexStore]]; m, kCodes and iters are identity.
     */
   def indexPath(spark: SparkSession, dir: String): String =
     VectorIndex.defaultPath(spark, dir) + "_pq"
 
-  def indexParams(m: Int, kCodes: Int, iters: Int): String =
-    s"pq:m=$m,k=$kCodes,iters=$iters,arith=d2"
-
-  def indexFresh(spark: SparkSession, dir: String, path: String,
-                 m: Int, kCodes: Int, iters: Int): Boolean = {
-    val fs = VectorIndex.fsFor(spark, path)
-    fs.exists(new org.apache.hadoop.fs.Path(s"$path/books/_SUCCESS")) &&
-      fs.exists(new org.apache.hadoop.fs.Path(s"$path/codes/_SUCCESS")) &&
-      VectorIndex.readWatermark(spark, path)
-        .contains(indexToken(spark, dir, m, kCodes, iters))
-  }
-
-  private def indexToken(spark: SparkSession, dir: String,
-                         m: Int, kCodes: Int, iters: Int): String =
-    graft.Tables.sourceToken(spark, dir, "embeddings") +
-      "\nparams|" + indexParams(m, kCodes, iters)
+  def index(m: Int = 8, kCodes: Int = 16, iters: Int = 1): IndexStore.Index =
+    IndexStore.Index("pq", "embeddings", s"pq:m=$m,k=$kCodes,iters=$iters,arith=d2",
+      Seq("books", "codes"))(flatBody(m, kCodes, iters, lit(true)))
 
   def buildIndex(spark: SparkSession, dir: String, path: String,
-                 m: Int = 8, kCodes: Int = 16, iters: Int = 1): Unit = graft.BuildLedger.timed(s"pq:$path") {
-    val token = indexToken(spark, dir, m, kCodes, iters) // BEFORE reading
-    val e = Tables.embeddings(spark, dir).select("vec_id", "embedding")
+                 m: Int = 8, kCodes: Int = 16, iters: Int = 1): Unit =
+    index(m, kCodes, iters).build(spark, dir, path)
+
+  /** The flat layout's build body, shared by the full index and the
+    * incremental base: books trained on, and codes covering, the
+    * embeddings `keep` admits.
+    */
+  private def flatBody(m: Int, kCodes: Int, iters: Int, keep: Column)
+                      (spark: SparkSession, dir: String, path: String): Seq[String] = {
+    val e = Tables.embeddings(spark, dir).select("vec_id", "embedding").filter(keep)
     val dims = e.select(size(col("embedding"))).head.getInt(0)
     require(dims % m == 0, s"dims ($dims) must be divisible by m ($m)")
-    val books = codebooks(spark, e, m, kCodes, dims, iters)
-    books.write.mode("overwrite").parquet(s"$path/books")
+    codebooks(spark, e, m, kCodes, dims, iters)
+      .write.mode("overwrite").parquet(s"$path/books")
     encode(spark, e, spark.read.parquet(s"$path/books"), m, dims)
       .write.mode("overwrite").parquet(s"$path/codes")
-    VectorIndex.writeWatermark(spark, path, token)
+    dropDelta(spark, path)
+    Nil
   }
+
+  /** The IVF-PQ layout's build body (full index and incremental base):
+    * exactly q67b's structure — same refinedCentroids seeds, same
+    * top-1 assignCells, same codebooks — over the embeddings `keep`
+    * admits, codes written cell-partitioned so each inverted list is
+    * its own directory. Records the RESOLVED list count as `lists|N`:
+    * the probe needs it for autoCoarse parity with q67b, and reading
+    * it beats re-counting the corpus per probe.
+    *
+    * The repartition(cell) before the write is load-bearing, not
+    * style: partitionBy splits each TASK's rows per cell, so without
+    * it an nTasks×nLists build sprays nTasks small files into every
+    * cell directory — ScaleProbe measured the 10× corpus (400 cells
+    * × 32 tasks ≈ 12.8k files) turning the supposedly-flat steady-
+    * state probe into 14s of file listing + footer reads. With the
+    * shuffle each cell's list is a handful of files and the probe is
+    * flat in corpus size, which is the entire point of the layout.
+    */
+  private def ivfPqBody(m: Int, kCodes: Int, iters: Int, nLists: Int, keep: Column)
+                       (spark: SparkSession, dir: String, path: String): Seq[String] = {
+    val e = Tables.embeddings(spark, dir).select("vec_id", "embedding").filter(keep)
+    val dims = e.select(size(col("embedding"))).head.getInt(0)
+    require(dims % m == 0, s"dims ($dims) must be divisible by m ($m)")
+    val n = e.count()
+    val lists = if (nLists > 0) nLists else math.max(16, (n / 125L).toInt)
+    val cents = Vectors.refinedCentroids(e, lists, iters = 0)
+    cents.select(col("c_cell").as("cell"), col("cvec"))
+      .write.mode("overwrite").parquet(s"$path/centroids")
+    codebooks(spark, e, m, kCodes, dims, iters)
+      .write.mode("overwrite").parquet(s"$path/books")
+    val cells = Vectors.assignCells(e, cents, nProbe = 1, nCoarse = Vectors.autoCoarse(lists))
+      .select("vec_id", "cell")
+    encode(spark, e, spark.read.parquet(s"$path/books"), m, dims)
+      .join(cells, "vec_id")
+      .repartition(col("cell"))
+      .write.mode("overwrite").partitionBy("cell").parquet(s"$path/cells")
+    dropDelta(spark, path)
+    Seq(s"lists|$lists")
+  }
+
+  /** A rebuild obsoletes any incremental delta: its codes were encoded
+    * under the OLD books/params (the incremental paths are keyed only
+    * by deltaMod), and the overwrites wiped the `_folded` marker — a
+    * stale codes_delta would union wrong-stride codes into every
+    * subsequent scan. A no-op for the full indexes, which have none.
+    */
+  private def dropDelta(spark: SparkSession, path: String): Unit =
+    IndexStore.fsFor(spark, path).delete(new org.apache.hadoop.fs.Path(s"$path/codes_delta"), true)
+
+  /** The resolved list count the IVF-PQ build recorded. */
+  private[graft] def storedLists(spark: SparkSession, path: String): Int =
+    IndexStore.fact(spark, path, "lists").map(_.toInt).getOrElse(
+      throw new IllegalStateException(s"IVF-PQ index at $path records no lists| fact"))
+
+  private def compacted(spark: SparkSession, path: String): Boolean =
+    IndexStore.fact(spark, path, "compacted").contains("true")
 
   /** q67c: the steady-state PQ scan — codes and codebooks come from
     * the persisted index (build-if-stale), the query builds its LUT
@@ -227,8 +278,7 @@ object PQ {
   def pqTopKIndexed(spark: SparkSession, dir: String, k: Int = 10, nQueries: Int = 5,
                     m: Int = 8, kCodes: Int = 16, iters: Int = 1): DataFrame = {
     val path = indexPath(spark, dir)
-    if (!indexFresh(spark, dir, path, m, kCodes, iters))
-      buildIndex(spark, dir, path, m, kCodes, iters)
+    index(m, kCodes, iters).ensure(spark, dir, path)
     val books = spark.read.parquet(s"$path/books")
     val codes = spark.read.parquet(s"$path/codes")
     val e = Tables.embeddings(spark, dir).select("vec_id", "embedding")
@@ -351,78 +401,16 @@ object PQ {
     * index-probe contract, the q48 pattern), and partition-pruning
     * skips every other cell's files: scan cost is
     * (nProbe/nLists)·m bytes per corpus vector with ZERO build work.
-    * Same watermark contract as the other indexes: source token +
-    * build params (m, kCodes, iters, nLists as-passed) are the
-    * index's identity; param change or source rewrite → stale.
+    * Lifecycle: [[graft.IndexStore]]; m, kCodes, iters and nLists (as
+    * passed) are identity.
     */
   def ivfPqIndexPath(spark: SparkSession, dir: String): String =
     VectorIndex.defaultPath(spark, dir) + "_ivfpq"
 
-  def ivfPqParams(m: Int, kCodes: Int, iters: Int, nLists: Int): String =
-    s"ivfpq:m=$m,k=$kCodes,iters=$iters,nLists=$nLists,arith=d2"
-
-  private def ivfPqToken(spark: SparkSession, dir: String,
-                         m: Int, kCodes: Int, iters: Int, nLists: Int): String =
-    graft.Tables.sourceToken(spark, dir, "embeddings") +
-      "\nparams|" + ivfPqParams(m, kCodes, iters, nLists)
-
-  def ivfPqIndexFresh(spark: SparkSession, dir: String, path: String,
-                      m: Int, kCodes: Int, iters: Int, nLists: Int): Boolean = {
-    val fs = VectorIndex.fsFor(spark, path)
-    val token = ivfPqToken(spark, dir, m, kCodes, iters, nLists)
-    Seq("books", "centroids", "cells").forall(d =>
-      fs.exists(new org.apache.hadoop.fs.Path(s"$path/$d/_SUCCESS"))) &&
-      // Option.contains is EQUALITY, and the stored watermark carries
-      // the resolved-lists line AFTER the identity token — accept the
-      // exact token or token-plus-extra-lines, never a mere substring
-      // (a params value that prefixes another must not match, hence
-      // the "\n" fence)
-      VectorIndex.readWatermark(spark, path)
-        .exists(w => w == token || w.startsWith(token + "\n"))
-  }
-
-  /** Build the composed index: exactly q67b's structure (same
-    * refinedCentroids seeds, same top-1 assignCells, same codebooks),
-    * persisted. The snapshot token is taken BEFORE reading (a source
-    * overwritten mid-build leaves the index stale, never wrongly
-    * fresh); codes are written cell-partitioned so each inverted list
-    * is its own directory.
-    *
-    * The repartition(cell) before the write is load-bearing, not
-    * style: partitionBy splits each TASK's rows per cell, so without
-    * it an nTasks×nLists build sprays nTasks small files into every
-    * cell directory — ScaleProbe measured the 10× corpus (400 cells
-    * × 32 tasks ≈ 12.8k files) turning the supposedly-flat steady-
-    * state probe into 14s of file listing + footer reads. With the
-    * shuffle each cell's list is a handful of files and the probe is
-    * flat in corpus size, which is the entire point of the layout.
-    */
-  def buildIvfPqIndex(spark: SparkSession, dir: String, path: String,
-                      m: Int = 8, kCodes: Int = 16, iters: Int = 1,
-                      nLists: Int = 0): Unit = graft.BuildLedger.timed(s"ivfpq:$path") {
-    val token = ivfPqToken(spark, dir, m, kCodes, iters, nLists)
-    val e = Tables.embeddings(spark, dir).select("vec_id", "embedding")
-    val dims = e.select(size(col("embedding"))).head.getInt(0)
-    require(dims % m == 0, s"dims ($dims) must be divisible by m ($m)")
-    val n = e.count()
-    val lists = if (nLists > 0) nLists else math.max(16, (n / 125L).toInt)
-    val cents = Vectors.refinedCentroids(e, lists, iters = 0)
-    cents.select(col("c_cell").as("cell"), col("cvec"))
-      .write.mode("overwrite").parquet(s"$path/centroids")
-    val books = codebooks(spark, e, m, kCodes, dims, iters)
-    books.write.mode("overwrite").parquet(s"$path/books")
-    val cells = Vectors.assignCells(e, cents, nProbe = 1, nCoarse = Vectors.autoCoarse(lists))
-      .select("vec_id", "cell")
-    encode(spark, e, spark.read.parquet(s"$path/books"), m, dims)
-      .join(cells, "vec_id")
-      .repartition(col("cell"))
-      .write.mode("overwrite").partitionBy("cell").parquet(s"$path/cells")
-    // the RESOLVED list count rides along after the identity token
-    // (freshness is a `contains(token)` check, so extra lines are
-    // free): the probe needs it for autoCoarse parity with q67b and
-    // reading it here beats re-counting the corpus per probe
-    VectorIndex.writeWatermark(spark, path, token + s"\nlists|$lists")
-  }
+  def ivfPqIndex(m: Int = 8, kCodes: Int = 16, iters: Int = 1, nLists: Int = 0): IndexStore.Index =
+    IndexStore.Index("ivfpq", "embeddings",
+      s"ivfpq:m=$m,k=$kCodes,iters=$iters,nLists=$nLists,arith=d2",
+      Seq("books", "centroids", "cells"))(ivfPqBody(m, kCodes, iters, nLists, lit(true)))
 
   /** The audited IVF-PQ probe tail, shared by ivfPqTopKIndexed (q67d)
     * and ivfPqIncrTopK (q67f) so the next probe variant cannot drift
@@ -468,8 +456,7 @@ object PQ {
                        m: Int = 8, kCodes: Int = 16, iters: Int = 1,
                        nLists: Int = 0, nProbe: Int = 3): DataFrame = {
     val path = ivfPqIndexPath(spark, dir)
-    if (!ivfPqIndexFresh(spark, dir, path, m, kCodes, iters, nLists))
-      buildIvfPqIndex(spark, dir, path, m, kCodes, iters, nLists)
+    ivfPqIndex(m, kCodes, iters, nLists).ensure(spark, dir, path)
     val books = spark.read.parquet(s"$path/books")
     val cents = spark.read.parquet(s"$path/centroids")
       .select(col("cell").as("c_cell"), col("cvec"))
@@ -478,17 +465,8 @@ object PQ {
     // the steady state must touch only the index + the query rows
     val dims = m * books.select(size(col("cvec"))).head.getInt(0)
     // lists must match the build's resolution exactly (autoCoarse is
-    // part of the probe RANKING and q67b-parity depends on it): an
-    // explicit nLists is its own answer, otherwise the build recorded
-    // the resolved value in the watermark; the count() fallback
-    // re-derives it identically for pre-record indexes.
-    val lists =
-      if (nLists > 0) nLists
-      else VectorIndex.readWatermark(spark, path)
-        .flatMap(_.linesIterator.collectFirst {
-          case l if l.startsWith("lists|") => l.stripPrefix("lists|").toInt
-        })
-        .getOrElse(math.max(16, (e.count() / 125L).toInt))
+    // part of the probe RANKING and q67b-parity depends on it)
+    val lists = storedLists(spark, path)
     val q = e.filter(col("vec_id") < nQueries)
     probeAdcTopK(spark, q, cents, books, lists, nProbe, m, dims, k, kCodes) { cells =>
       spark.read.parquet(s"$path/cells").filter(col("cell").isin(cells: _*))
@@ -518,49 +496,14 @@ object PQ {
   def incrIndexPath(spark: SparkSession, dir: String, deltaMod: Int): String =
     indexPath(spark, dir) + s"_incr$deltaMod"
 
-  def incrParams(m: Int, kCodes: Int, iters: Int, deltaMod: Int): String =
-    s"pqincr:m=$m,k=$kCodes,iters=$iters,deltaMod=$deltaMod,arith=d2"
-
-  private def incrToken(spark: SparkSession, dir: String,
-                        m: Int, kCodes: Int, iters: Int, deltaMod: Int): String =
-    graft.Tables.sourceToken(spark, dir, "embeddings") +
-      "\nparams|" + incrParams(m, kCodes, iters, deltaMod)
-
-  def incrIndexFresh(spark: SparkSession, dir: String, path: String,
-                     m: Int, kCodes: Int, iters: Int, deltaMod: Int): Boolean = {
-    val fs = VectorIndex.fsFor(spark, path)
-    VectorIndex.restoreDir(spark, path, "codes") // heal a crashed compactIncr
-    val token = incrToken(spark, dir, m, kCodes, iters, deltaMod)
-    Seq("books", "codes").forall(d =>
-      fs.exists(new org.apache.hadoop.fs.Path(s"$path/$d/_SUCCESS"))) &&
-      VectorIndex.readWatermark(spark, path)
-        .exists(w => w == token || w.startsWith(token + "\n"))
-  }
-
-  /** Base build: books trained on, and codes covering, ONLY the base
-    * corpus (vec_id % deltaMod != 0). deltaMod is part of the index
-    * identity — it decides what "base" means, so it changes content.
+  /** The incremental base: the flat layout over ONLY the base corpus
+    * (vec_id % deltaMod != 0). deltaMod is identity — it decides what
+    * "base" means, so it changes content.
     */
-  def buildIncrBase(spark: SparkSession, dir: String, path: String,
-                    m: Int = 8, kCodes: Int = 16, iters: Int = 1,
-                    deltaMod: Int = 16): Unit = graft.BuildLedger.timed(s"pq_incr_base:$path") {
-    val token = incrToken(spark, dir, m, kCodes, iters, deltaMod)
-    val eOld = Tables.embeddings(spark, dir).select("vec_id", "embedding")
-      .filter(col("vec_id") % deltaMod =!= 0)
-    val dims = eOld.select(size(col("embedding"))).head.getInt(0)
-    require(dims % m == 0, s"dims ($dims) must be divisible by m ($m)")
-    codebooks(spark, eOld, m, kCodes, dims, iters)
-      .write.mode("overwrite").parquet(s"$path/books")
-    encode(spark, eOld, spark.read.parquet(s"$path/books"), m, dims)
-      .write.mode("overwrite").parquet(s"$path/codes")
-    // a rebuild obsoletes any delta: its codes were encoded under the
-    // OLD books/params (the path is keyed only by deltaMod), and the
-    // overwrite above wiped the _folded marker — a stale codes_delta
-    // would union wrong-stride codes into every subsequent scan
-    VectorIndex.fsFor(spark, path)
-      .delete(new org.apache.hadoop.fs.Path(s"$path/codes_delta"), true)
-    VectorIndex.writeWatermark(spark, path, token)
-  }
+  def incrIndex(m: Int = 8, kCodes: Int = 16, iters: Int = 1, deltaMod: Int = 16): IndexStore.Index =
+    IndexStore.Index("pq_incr_base", "embeddings",
+      s"pqincr:m=$m,k=$kCodes,iters=$iters,deltaMod=$deltaMod,arith=d2",
+      Seq("books", "codes"))(flatBody(m, kCodes, iters, col("vec_id") % deltaMod =!= 0))
 
   /** q67e driver entry: the delta's codes under the FROZEN base
     * books. Builds the base index if stale; the steady state reads
@@ -572,8 +515,7 @@ object PQ {
   def pqEncodeIncremental(spark: SparkSession, dir: String, deltaMod: Int = 16,
                           m: Int = 8, kCodes: Int = 16, iters: Int = 1): DataFrame = {
     val path = incrIndexPath(spark, dir, deltaMod)
-    if (!incrIndexFresh(spark, dir, path, m, kCodes, iters, deltaMod))
-      buildIncrBase(spark, dir, path, m, kCodes, iters, deltaMod)
+    incrIndex(m, kCodes, iters, deltaMod).ensure(spark, dir, path)
     val books = spark.read.parquet(s"$path/books")
     val dims = m * books.select(size(col("cvec"))).head.getInt(0)
     val delta = Tables.embeddings(spark, dir).select("vec_id", "embedding")
@@ -590,26 +532,21 @@ object PQ {
   def appendDelta(spark: SparkSession, dir: String, deltaMod: Int = 16,
                   m: Int = 8, kCodes: Int = 16, iters: Int = 1): Unit = {
     val path = incrIndexPath(spark, dir, deltaMod)
+    incrIndex(m, kCodes, iters, deltaMod).ensure(spark, dir, path)
     // after a compaction the (residue-derived) delta is already IN the
     // base store — re-appending it would duplicate every delta vec_id
-    // in incrCodes. The compacted watermark line marks exactly this
-    // state; a source change invalidates the whole watermark and the
-    // rebuild path clears the marker.
-    if (incrIndexFresh(spark, dir, path, m, kCodes, iters, deltaMod) &&
-        (hasCompactedMark(spark, path) ||
-          VectorIndex.hasMarker(spark, s"$path/codes"))) return
+    // in incrCodes. The compacted fact (or the _folded marker, for a
+    // fold whose watermark write never ran) marks exactly this state;
+    // a rebuild clears both.
+    if (compacted(spark, path) || IndexStore.folded(spark, s"$path/codes")) return
     pqEncodeIncremental(spark, dir, deltaMod, m, kCodes, iters)
       .write.mode("overwrite").parquet(s"$path/codes_delta")
   }
 
-  private def hasCompactedMark(spark: SparkSession, path: String): Boolean =
-    VectorIndex.readWatermark(spark, path)
-      .exists(_.linesIterator.contains("compacted|true"))
-
   /** Nightly-steady-state COMPACTION of the flat incremental index:
     * fold `codes_delta` into the base `codes` store and rotate the
-    * watermark with a `compacted|true` line (the freshness checks
-    * accept suffix lines, so the index stays fresh; `appendDelta`
+    * watermark with a `compacted|true` fact (facts are not identity,
+    * so the index stays fresh; `appendDelta`
     * reads the line as "the delta is already folded in" and no-ops
     * instead of re-duplicating it). Bounded file counts: N appends
     * never proliferate directories here (the delta dir is a single
@@ -621,16 +558,16 @@ object PQ {
   def compactIncr(spark: SparkSession, dir: String, deltaMod: Int = 16,
                   m: Int = 8, kCodes: Int = 16, iters: Int = 1): Unit = {
     val path = incrIndexPath(spark, dir, deltaMod)
-    require(incrIndexFresh(spark, dir, path, m, kCodes, iters, deltaMod),
+    val index = incrIndex(m, kCodes, iters, deltaMod)
+    require(index.fresh(spark, dir, path),
       "compactIncr requires a fresh base index (build/append first)")
-    // token at ENTRY (the snapshot-before-read rule, like every build
-    // path): the fold must publish under the identity it verified —
+    // identity at ENTRY (the snapshot-before-read rule, like every
+    // build): the fold must publish under the identity it verified —
     // a source regenerated DURING the fold must leave the index
     // stale-marked, never stamp old codes with the new source token
-    val token = incrToken(spark, dir, m, kCodes, iters, deltaMod)
-    val fs = VectorIndex.fsFor(spark, path)
-    val hasDelta = fs.exists(new org.apache.hadoop.fs.Path(s"$path/codes_delta/_SUCCESS"))
-    val folded = VectorIndex.hasMarker(spark, s"$path/codes")
+    val id = index.identity(spark, dir)
+    val hasDelta = IndexStore.complete(spark, s"$path/codes_delta")
+    val folded = IndexStore.folded(spark, s"$path/codes")
     if (!hasDelta && !folded) return
     // fold only when the base does not already contain the delta —
     // the _folded marker publishes atomically with the folded data
@@ -638,15 +575,15 @@ object PQ {
     // (before the delta delete, between delete and watermark) leaves
     // a state this re-run converges from instead of double-counting
     if (hasDelta && !folded) {
-      VectorIndex.swapDir(spark, path, "codes") { tmp =>
+      IndexStore.swapDir(spark, path, "codes") { tmp =>
         spark.read.parquet(s"$path/codes")
           .unionAll(spark.read.parquet(s"$path/codes_delta"))
           .write.parquet(tmp)
-        VectorIndex.touchMarker(spark, tmp)
+        IndexStore.markFolded(spark, tmp)
       }
     }
-    fs.delete(new org.apache.hadoop.fs.Path(s"$path/codes_delta"), true)
-    VectorIndex.writeWatermark(spark, path, token + "\ncompacted|true")
+    dropDelta(spark, path)
+    IndexStore.writeWatermark(spark, path, id, Seq("compacted|true"))
   }
 
   /** All codes the incremental index currently holds (base ∪ any
@@ -654,13 +591,12 @@ object PQ {
     */
   def incrCodes(spark: SparkSession, dir: String, deltaMod: Int = 16): DataFrame = {
     val path = incrIndexPath(spark, dir, deltaMod)
-    val fs = VectorIndex.fsFor(spark, path)
     val base = spark.read.parquet(s"$path/codes")
     // the _folded marker means the base already CONTAINS the delta
     // (a fold published but its delta-dir cleanup may not have run) —
     // unioning it again would double every delta vec_id
-    if (!VectorIndex.hasMarker(spark, s"$path/codes") &&
-        fs.exists(new org.apache.hadoop.fs.Path(s"$path/codes_delta/_SUCCESS")))
+    if (!IndexStore.folded(spark, s"$path/codes") &&
+        IndexStore.complete(spark, s"$path/codes_delta"))
       base.unionAll(spark.read.parquet(s"$path/codes_delta"))
     else base
   }
@@ -687,56 +623,16 @@ object PQ {
   def ivfPqIncrPath(spark: SparkSession, dir: String, deltaMod: Int): String =
     ivfPqIndexPath(spark, dir) + s"_incr$deltaMod"
 
-  def ivfPqIncrParams(m: Int, kCodes: Int, iters: Int, nLists: Int, deltaMod: Int): String =
-    s"ivfpqincr:m=$m,k=$kCodes,iters=$iters,nLists=$nLists,deltaMod=$deltaMod,arith=d2"
-
-  private def ivfPqIncrToken(spark: SparkSession, dir: String, m: Int, kCodes: Int,
-                             iters: Int, nLists: Int, deltaMod: Int): String =
-    graft.Tables.sourceToken(spark, dir, "embeddings") +
-      "\nparams|" + ivfPqIncrParams(m, kCodes, iters, nLists, deltaMod)
-
-  def ivfPqIncrFresh(spark: SparkSession, dir: String, path: String, m: Int, kCodes: Int,
-                     iters: Int, nLists: Int, deltaMod: Int): Boolean = {
-    val fs = VectorIndex.fsFor(spark, path)
-    VectorIndex.restoreDir(spark, path, "cells") // heal a crashed compactIvfPqIncr
-    val token = ivfPqIncrToken(spark, dir, m, kCodes, iters, nLists, deltaMod)
-    Seq("books", "centroids", "cells").forall(d =>
-      fs.exists(new org.apache.hadoop.fs.Path(s"$path/$d/_SUCCESS"))) &&
-      VectorIndex.readWatermark(spark, path)
-        .exists(w => w == token || w.startsWith(token + "\n"))
-  }
-
-  /** Base build over the base corpus only (vec_id % deltaMod != 0):
-    * q67d's exact structure — centroids, books, cell-partitioned
-    * codes — trained on and covering the base.
+  /** The composed incremental base: q67d's exact structure —
+    * centroids, books, cell-partitioned codes — trained on and
+    * covering ONLY the base corpus (vec_id % deltaMod != 0).
     */
-  def buildIvfPqIncrBase(spark: SparkSession, dir: String, path: String,
-                         m: Int = 8, kCodes: Int = 16, iters: Int = 1,
-                         nLists: Int = 0, deltaMod: Int = 16): Unit = graft.BuildLedger.timed(s"ivfpq_incr_base:$path") {
-    val token = ivfPqIncrToken(spark, dir, m, kCodes, iters, nLists, deltaMod)
-    val e = Tables.embeddings(spark, dir).select("vec_id", "embedding")
-      .filter(col("vec_id") % deltaMod =!= 0)
-    val dims = e.select(size(col("embedding"))).head.getInt(0)
-    require(dims % m == 0, s"dims ($dims) must be divisible by m ($m)")
-    val n = e.count()
-    val lists = if (nLists > 0) nLists else math.max(16, (n / 125L).toInt)
-    val cents = Vectors.refinedCentroids(e, lists, iters = 0)
-    cents.select(col("c_cell").as("cell"), col("cvec"))
-      .write.mode("overwrite").parquet(s"$path/centroids")
-    codebooks(spark, e, m, kCodes, dims, iters)
-      .write.mode("overwrite").parquet(s"$path/books")
-    val cells = Vectors.assignCells(e, cents, nProbe = 1, nCoarse = Vectors.autoCoarse(lists))
-      .select("vec_id", "cell")
-    encode(spark, e, spark.read.parquet(s"$path/books"), m, dims)
-      .join(cells, "vec_id")
-      .repartition(col("cell"))
-      .write.mode("overwrite").partitionBy("cell").parquet(s"$path/cells")
-    // stale-delta rule, same as buildIncrBase: old-regime codes must
-    // not survive into the rebuilt index's scans
-    VectorIndex.fsFor(spark, path)
-      .delete(new org.apache.hadoop.fs.Path(s"$path/codes_delta"), true)
-    VectorIndex.writeWatermark(spark, path, token + s"\nlists|$lists")
-  }
+  def ivfPqIncrIndex(m: Int = 8, kCodes: Int = 16, iters: Int = 1, nLists: Int = 0,
+                     deltaMod: Int = 16): IndexStore.Index =
+    IndexStore.Index("ivfpq_incr_base", "embeddings",
+      s"ivfpqincr:m=$m,k=$kCodes,iters=$iters,nLists=$nLists,deltaMod=$deltaMod,arith=d2",
+      Seq("books", "centroids", "cells"))(
+      ivfPqBody(m, kCodes, iters, nLists, col("vec_id") % deltaMod =!= 0))
 
   /** The nightly append: delta vectors assigned to the FROZEN cells
     * and encoded with the FROZEN books, written cell-partitioned to
@@ -751,20 +647,16 @@ object PQ {
                        m: Int = 8, kCodes: Int = 16, iters: Int = 1,
                        nLists: Int = 0): Unit = {
     val path = ivfPqIncrPath(spark, dir, deltaMod)
-    if (!ivfPqIncrFresh(spark, dir, path, m, kCodes, iters, nLists, deltaMod))
-      buildIvfPqIncrBase(spark, dir, path, m, kCodes, iters, nLists, deltaMod)
+    ivfPqIncrIndex(m, kCodes, iters, nLists, deltaMod).ensure(spark, dir, path)
     // post-compaction the delta already lives in the base cell lists —
     // re-appending would duplicate every delta vec_id (same rule as
-    // the flat index's appendDelta; the _folded marker covers a fold
-    // whose watermark write never ran)
-    else if (hasCompactedMark(spark, path) ||
-        VectorIndex.hasMarker(spark, s"$path/cells")) return
+    // the flat index's appendDelta)
+    if (compacted(spark, path) || IndexStore.folded(spark, s"$path/cells")) return
     val books = spark.read.parquet(s"$path/books")
     val cents = spark.read.parquet(s"$path/centroids")
       .select(col("cell").as("c_cell"), col("cvec"))
     val dims = m * books.select(size(col("cvec"))).head.getInt(0)
-    val lists = storedLists(spark, path).getOrElse(
-      spark.read.parquet(s"$path/centroids").count().toInt)
+    val lists = storedLists(spark, path)
     val delta = Tables.embeddings(spark, dir).select("vec_id", "embedding")
       .filter(col("vec_id") % deltaMod === 0)
     val cells = Vectors.assignCells(delta, cents, nProbe = 1,
@@ -781,8 +673,8 @@ object PQ {
     * (repartition on cell — each folded inverted list is rewritten as
     * one partition directory, so file counts stay bounded at
     * O(nLists) no matter how many nightly cycles ran) and rotate the
-    * watermark with the `compacted|true` line, preserving the stored
-    * `lists|N` structural record. Probes before/after are
+    * watermark with the `compacted|true` fact, preserving the stored
+    * `lists|N` fact. Probes before/after are
     * value-identical (CompactionSpec): base ∪ delta and folded-base
     * hold the same (vec_id, codes, cell) rows, and partition pruning
     * applies to the folded store exactly as it did to both halves.
@@ -791,34 +683,28 @@ object PQ {
                        m: Int = 8, kCodes: Int = 16, iters: Int = 1,
                        nLists: Int = 0): Unit = {
     val path = ivfPqIncrPath(spark, dir, deltaMod)
-    require(ivfPqIncrFresh(spark, dir, path, m, kCodes, iters, nLists, deltaMod),
+    val index = ivfPqIncrIndex(m, kCodes, iters, nLists, deltaMod)
+    require(index.fresh(spark, dir, path),
       "compactIvfPqIncr requires a fresh base index (build/append first)")
-    // token at ENTRY — the snapshot-before-read rule (see compactIncr)
-    val token = ivfPqIncrToken(spark, dir, m, kCodes, iters, nLists, deltaMod)
-    val fs = VectorIndex.fsFor(spark, path)
-    val hasDelta = fs.exists(new org.apache.hadoop.fs.Path(s"$path/codes_delta/_SUCCESS"))
-    val folded = VectorIndex.hasMarker(spark, s"$path/cells")
+    // identity at ENTRY — the snapshot-before-read rule (see compactIncr)
+    val id = index.identity(spark, dir)
+    val hasDelta = IndexStore.complete(spark, s"$path/codes_delta")
+    val folded = IndexStore.folded(spark, s"$path/cells")
     if (!hasDelta && !folded) return
     val lists = storedLists(spark, path)
     if (hasDelta && !folded) {
       val cols = Seq(col("vec_id"), col("codes"), col("cell"))
-      VectorIndex.swapDir(spark, path, "cells") { tmp =>
+      IndexStore.swapDir(spark, path, "cells") { tmp =>
         spark.read.parquet(s"$path/cells").select(cols: _*)
           .unionAll(spark.read.parquet(s"$path/codes_delta").select(cols: _*))
           .repartition(col("cell"))
           .write.partitionBy("cell").parquet(tmp)
-        VectorIndex.touchMarker(spark, tmp)
+        IndexStore.markFolded(spark, tmp)
       }
     }
-    fs.delete(new org.apache.hadoop.fs.Path(s"$path/codes_delta"), true)
-    VectorIndex.writeWatermark(spark, path,
-      token + lists.map(l => s"\nlists|$l").getOrElse("") + "\ncompacted|true")
+    dropDelta(spark, path)
+    IndexStore.writeWatermark(spark, path, id, Seq(s"lists|$lists", "compacted|true"))
   }
-
-  private def storedLists(spark: SparkSession, path: String): Option[Int] =
-    VectorIndex.readWatermark(spark, path).flatMap(_.linesIterator.collectFirst {
-      case l if l.startsWith("lists|") => l.stripPrefix("lists|").toInt
-    })
 
   /** q67f driver entry: ensure the base index + nightly delta exist,
     * then probe base ∪ delta — the q67d probe shape with BOTH code
@@ -830,22 +716,19 @@ object PQ {
                     m: Int = 8, kCodes: Int = 16, iters: Int = 1,
                     nLists: Int = 0, nProbe: Int = 3, deltaMod: Int = 16): DataFrame = {
     val path = ivfPqIncrPath(spark, dir, deltaMod)
-    val fs = VectorIndex.fsFor(spark, path)
     // a compacted index is complete WITHOUT a delta dir — only append
     // when the index is stale or genuinely missing its delta (the
     // cells-dir _folded marker covers the crash window where a fold
     // published but the watermark line was never written)
-    if (!ivfPqIncrFresh(spark, dir, path, m, kCodes, iters, nLists, deltaMod) ||
-        (!fs.exists(new org.apache.hadoop.fs.Path(s"$path/codes_delta/_SUCCESS")) &&
-          !hasCompactedMark(spark, path) &&
-          !VectorIndex.hasMarker(spark, s"$path/cells")))
+    if (!ivfPqIncrIndex(m, kCodes, iters, nLists, deltaMod).fresh(spark, dir, path) ||
+        !(IndexStore.complete(spark, s"$path/codes_delta") || compacted(spark, path) ||
+          IndexStore.folded(spark, s"$path/cells")))
       appendDeltaIvfPq(spark, dir, deltaMod, m, kCodes, iters, nLists)
     val books = spark.read.parquet(s"$path/books")
     val cents = spark.read.parquet(s"$path/centroids")
       .select(col("cell").as("c_cell"), col("cvec"))
     val dims = m * books.select(size(col("cvec"))).head.getInt(0)
-    val lists = storedLists(spark, path).getOrElse(
-      spark.read.parquet(s"$path/centroids").count().toInt)
+    val lists = storedLists(spark, path)
     val e = Tables.embeddings(spark, dir).select("vec_id", "embedding")
     val q = e.filter(col("vec_id") < nQueries)
     probeAdcTopK(spark, q, cents, books, lists, nProbe, m, dims, k, kCodes) { cells =>
@@ -855,8 +738,8 @@ object PQ {
       // _folded marker: the base already holds the delta (fold
       // published, cleanup possibly unfinished) — unioning would
       // double-count every delta vec_id in the ADC ranking
-      (if (!VectorIndex.hasMarker(spark, s"$path/cells") &&
-            fs.exists(new org.apache.hadoop.fs.Path(s"$path/codes_delta/_SUCCESS")))
+      (if (!IndexStore.folded(spark, s"$path/cells") &&
+            IndexStore.complete(spark, s"$path/codes_delta"))
           baseCodes.unionAll(spark.read.parquet(s"$path/codes_delta").select(cols: _*))
         else baseCodes) // compacted: the folded base holds everything
         .filter(col("cell").isin(cells: _*))

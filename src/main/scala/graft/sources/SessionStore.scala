@@ -1,5 +1,6 @@
 package graft.sources
 
+import graft.IndexStore
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -29,9 +30,8 @@ import org.apache.spark.sql.functions._
   * Scale shape: a session table is a small dimension (one row per
   * phone). Every mutation is a keyed filter + union — no shuffle at
   * all until a join consumes it, where it broadcasts. Persistence
-  * reuses the index two-rename swap discipline (park live as `__old`,
-  * rename staging in), so a crash mid-persist never loses the live
-  * store.
+  * is the index two-rename swap (`graft.IndexStore.swapDir`), so a
+  * crash mid-persist never loses the live store.
   */
 object SessionStore {
 
@@ -87,45 +87,17 @@ object SessionStore {
 
   def load(spark: SparkSession, path: String): Dataset[Session] = {
     import spark.implicits._
-    restore(spark, path)
-    val live = new org.apache.hadoop.fs.Path(s"$path/sessions")
-    val fs = live.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(live)) spark.read.parquet(live.toString).as[Session]
+    if (IndexStore.restoreDir(spark, path, "sessions"))
+      spark.read.parquet(s"$path/sessions").as[Session]
     else empty(spark)
   }
 
-  /** Persist with the two-rename swap (VectorIndex.swapDir's
-    * discipline): stage next to the live dir, park live as `__old`,
-    * rename staging in, drop the parked copy. A crash mid-write
-    * leaves the live store untouched; a crash between renames leaves
-    * it parked, healed by the next `load`/`persist`.
+  /** Persist through the two-rename swap: a crash mid-write leaves the
+    * live store untouched; a crash between renames leaves it parked,
+    * healed by the next `load`/`persist`.
     */
-  def persist(store: Dataset[Session], path: String): Unit = {
-    val spark = store.sparkSession
-    restore(spark, path)
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tmp = new org.apache.hadoop.fs.Path(s"$path/sessions__stage")
-    val dst = new org.apache.hadoop.fs.Path(s"$path/sessions")
-    val old = new org.apache.hadoop.fs.Path(s"$path/sessions__old")
-    fs.delete(tmp, true)
-    fs.delete(old, true)
-    store.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-    if (fs.exists(dst))
-      require(fs.rename(dst, old), s"session store parking rename $dst failed")
-    require(fs.rename(tmp, dst), s"session store rename $tmp -> $dst failed")
-    fs.delete(old, true)
-  }
-
-  private def restore(spark: SparkSession, path: String): Unit = {
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val dst = new org.apache.hadoop.fs.Path(s"$path/sessions")
-    val old = new org.apache.hadoop.fs.Path(s"$path/sessions__old")
-    if (!fs.exists(new org.apache.hadoop.fs.Path(s"$path/sessions/_SUCCESS")) &&
-        fs.exists(new org.apache.hadoop.fs.Path(s"$path/sessions__old/_SUCCESS"))) {
-      fs.delete(dst, true)
-      require(fs.rename(old, dst), s"session store restore rename failed")
+  def persist(store: Dataset[Session], path: String): Unit =
+    IndexStore.swapDir(store.sparkSession, path, "sessions") { tmp =>
+      store.coalesce(1).write.mode("overwrite").parquet(tmp)
     }
-  }
 }

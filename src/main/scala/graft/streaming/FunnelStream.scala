@@ -76,8 +76,7 @@ object FunnelStream {
            threshold: Double = 0.5, nBuckets: Int = 64,
            withAnn: Boolean = false, annMaxDist: Double = 0.5): Ctx = {
     val path = Curation.FunnelIndex.path(spark, dir)
-    if (!Curation.FunnelIndex.fresh(spark, dir, path, deltaMod, benchMod, nBuckets))
-      Curation.FunnelIndex.build(spark, dir, path, deltaMod, benchMod, nBuckets)
+    Curation.FunnelIndex.index(deltaMod, benchMod, nBuckets).ensure(spark, dir, path)
     val bench = DecontamStream.benchFrame(spark, dir, benchMod)
     // warm the index-side cache: gateBatch fetches the registry's
     // CURRENT copy per batch (FunnelIndex.cached), so micro-batches

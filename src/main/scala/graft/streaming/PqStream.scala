@@ -1,7 +1,6 @@
 package graft.streaming
 
-import graft.Tables
-import graft.operators.{PQ, VectorIndex, Vectors}
+import graft.operators.{PQ, Vectors}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -58,7 +57,7 @@ object PqStream {
     * a DataFrame — it is the (possibly huge) static join side.
     *
     * The probe structure MATCHES the index's assignment rule: once
-    * nLists exceeds the flat threshold, buildIvfPqIndex assigns
+    * nLists exceeds the flat threshold, the IVF-PQ build assigns
     * corpus vectors two-level (autoCoarse groups — a vector lands on
     * the best cell within its probed GROUPS, not the global best
     * cell), so the gate must rank with the SAME group structure —
@@ -72,8 +71,7 @@ object PqStream {
                 m: Int = 8, kCodes: Int = 16, iters: Int = 1,
                 nLists: Int = 0): GateIndex = {
     val path = PQ.ivfPqIndexPath(spark, dir)
-    if (!PQ.ivfPqIndexFresh(spark, dir, path, m, kCodes, iters, nLists))
-      PQ.buildIvfPqIndex(spark, dir, path, m, kCodes, iters, nLists)
+    PQ.ivfPqIndex(m, kCodes, iters, nLists).ensure(spark, dir, path)
     val books = spark.read.parquet(s"$path/books")
       .collect().map(r => ((r.getInt(0), r.getInt(1)), r.getSeq[Float](2)))
       .sortBy(_._1)
@@ -105,17 +103,9 @@ object PqStream {
     // many centroid rows survived (sparse vec_id residues or n <
     // lists leave seed classes empty, so cents.length can undershoot
     // lists and silently diverge the gate's groups from the build's).
-    // Same resolution ladder as PQ.ivfPqTopKIndexed: explicit nLists,
-    // else the watermark's recorded `lists|` line, else the corpus
-    // count fallback the build itself would use (ADVICE r12).
-    val lists =
-      if (nLists > 0) nLists
-      else VectorIndex.readWatermark(spark, path)
-        .flatMap(_.linesIterator.collectFirst {
-          case l if l.startsWith("lists|") => l.stripPrefix("lists|").toInt
-        })
-        .getOrElse(math.max(16,
-          (Tables.embeddings(spark, dir).count() / 125L).toInt))
+    // The build's `lists|` fact, as PQ.ivfPqTopKIndexed reads it
+    // (ADVICE r12).
+    val lists = PQ.storedLists(spark, path)
     val nCoarse = Vectors.autoCoarse(lists)
     val (cellsLit, gcentsLit) =
       if (nCoarse == 1)

@@ -33,7 +33,7 @@ object RecallProbe {
       val k = 10
       args.drop(1).foreach { d =>
         val path = KnnGraph.graphPath(spark, d)
-        if (!KnnGraph.graphFresh(spark, d, path)) KnnGraph.buildGraph(spark, d, path)
+        KnnGraph.graph().ensure(spark, d, path)
         val e = Tables.embeddings(spark, d).select("vec_id", "embedding")
         val queries = e.filter(col("vec_id") < nQ)
           .select((col("vec_id") + off).as("q_id"), col("embedding").as("q_emb"))

@@ -397,7 +397,7 @@ object ScaleProbe {
       def timeBytes(name: String, d: String)(f: String => org.apache.spark.sql.DataFrame): Unit = {
         val ledgerBefore = graft.BuildLedger.snapshot().toMap
         f(d).write.format("noop").mode("overwrite").save() // warm (builds the shared graph)
-        // one-time builds the warm pass paid (ensureGraph at this
+        // one-time builds the warm pass paid (the graph's ensure at this
         // corpus — the "descent build time at 2M nodes" cell)
         graft.BuildLedger.snapshot().foreach { case (k, v) =>
           if (math.abs(ledgerBefore.getOrElse(k, 0.0) - v) > 0.01)

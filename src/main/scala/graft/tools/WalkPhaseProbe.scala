@@ -4,7 +4,7 @@ import graft.Tables
 import graft.operators.{KnnGraph, Vectors}
 import org.apache.spark.sql.functions._
 
-/** Dev probe (r21): where does q93's wall-clock go — ensureGraph
+/** Dev probe (r21): where does q93's wall-clock go — the graph's
   * freshness check, entry scoring, per-hop expansion, final rank.
   * Mirrors graphWalkOn's structure step by step so each phase is
   * timed as its own action.
@@ -20,10 +20,8 @@ object WalkPhaseProbe {
       r
     }
     val path = KnnGraph.graphPath(spark, dir)
-    t("ensureGraph (build if stale)") {
-      if (!KnnGraph.graphFresh(spark, dir, path)) KnnGraph.buildGraph(spark, dir, path)
-    }
-    t("graphFresh re-check")(KnnGraph.graphFresh(spark, dir, path))
+    t("ensure (build if stale)")(KnnGraph.graph().ensure(spark, dir, path))
+    t("freshness re-check")(KnnGraph.graph().fresh(spark, dir, path))
     // one full gate run, warm
     t("q93 full (warm 1)")(KnnGraph.graphWalkGate(spark, dir)
       .write.format("noop").mode("overwrite").save())

@@ -72,7 +72,7 @@ class CompactionSpec extends AnyFunSuite {
       Seq((1L, "s", t1), (2L, "s", t2)).toDF("doc_id", "source", "text"))
     val path = operators.Dedup.GramIndex.path(spark, fdir)
     deleteIndex(path)
-    operators.Dedup.GramIndex.build(spark, fdir, path, k = 8, deltaMod = 16)
+    operators.Dedup.GramIndex.index(k = 8, deltaMod = 16).build(spark, fdir, path)
     def view() = operators.Dedup.GramIndex.grams(spark, path)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val base = view()
@@ -132,7 +132,7 @@ class CompactionSpec extends AnyFunSuite {
       Seq((1L, "s", t1)).toDF("doc_id", "source", "text"))
     val path = operators.Dedup.GramIndex.path(spark, fdir)
     deleteIndex(path)
-    operators.Dedup.GramIndex.build(spark, fdir, path, k = 8, deltaMod = 16)
+    operators.Dedup.GramIndex.index(k = 8, deltaMod = 16).build(spark, fdir, path)
     def view() = operators.Dedup.GramIndex.grams(spark, path)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     operators.Dedup.GramIndex.absorb(spark, path,
@@ -213,7 +213,7 @@ class CompactionSpec extends AnyFunSuite {
     val hashRows = spark.read.parquet(s"$ipath/hashes").count()
     assert(fs.rename(new org.apache.hadoop.fs.Path(s"$ipath/hashes"),
       new org.apache.hadoop.fs.Path(s"$ipath/hashes__old")), "simulated park")
-    assert(operators.Curation.FunnelIndex.fresh(spark, fdir, ipath, 16, 97, 64),
+    assert(operators.Curation.FunnelIndex.index(16, 97, 64).fresh(spark, fdir, ipath),
       "the freshness probe must restore the parked component and read fresh")
     assert(exists(s"$ipath/hashes/_SUCCESS") && !exists(s"$ipath/hashes__old"),
       "restore renames the parked copy back")
@@ -228,7 +228,7 @@ class CompactionSpec extends AnyFunSuite {
     // NOT clobber the live component with the stale parked one.
     fs.mkdirs(new org.apache.hadoop.fs.Path(s"$ipath/hashes__old"))
     Seq("stale").toDF("h").write.mode("overwrite").parquet(s"$ipath/hashes__old")
-    assert(operators.Curation.FunnelIndex.fresh(spark, fdir, ipath, 16, 97, 64))
+    assert(operators.Curation.FunnelIndex.index(16, 97, 64).fresh(spark, fdir, ipath))
     assert(spark.read.parquet(s"$ipath/hashes").count() == hashRows &&
       spark.read.parquet(s"$ipath/hashes").filter(col("h") === "stale").count() == 0,
       "a leftover parked dir must never replace the live component")

@@ -49,10 +49,10 @@ class FunnelIndexSpec extends AnyFunSuite {
   test("changed params or source mark the index stale; same params stay fresh") {
     val path = operators.Curation.FunnelIndex.path(spark, TestSpark.dir)
     operators.Curation.funnelDeltaIndexed(spark, TestSpark.dir).collect()
-    assert(operators.Curation.FunnelIndex.fresh(spark, TestSpark.dir, path, 16, 97, 64))
-    assert(!operators.Curation.FunnelIndex.fresh(spark, TestSpark.dir, path, 16, 97, 32),
+    assert(operators.Curation.FunnelIndex.index(16, 97, 64).fresh(spark, TestSpark.dir, path))
+    assert(!operators.Curation.FunnelIndex.index(16, 97, 32).fresh(spark, TestSpark.dir, path),
       "nBuckets is part of the index identity (it shapes the layout)")
-    assert(!operators.Curation.FunnelIndex.fresh(spark, TestSpark.dir, path, 8, 97, 64),
+    assert(!operators.Curation.FunnelIndex.index(8, 97, 64).fresh(spark, TestSpark.dir, path),
       "deltaMod decides which docs are 'old' — it changes index CONTENT")
   }
 }

@@ -109,8 +109,8 @@ class GateInvariantsSpec extends AnyFunSuite {
     spark.conf.set("spark.graft.index.root", root)
     try {
       val path = operators.Curation.FunnelIndex.path(spark, dir)
-      operators.Curation.FunnelIndex.build(spark, dir, path,
-        deltaMod = 16, benchMod = 97, nBuckets = 8)
+      operators.Curation.FunnelIndex.index(deltaMod = 16, benchMod = 97, nBuckets = 8)
+        .build(spark, dir, path)
       val g = spark.read.parquet(s"$path/benchgrams")
       assert(g.count() == g.distinct().count(),
         "FunnelIndex benchgrams must be gram-distinct")

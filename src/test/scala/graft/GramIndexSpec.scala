@@ -34,10 +34,10 @@ class GramIndexSpec extends AnyFunSuite {
     val path = operators.Dedup.GramIndex.path(spark, dir)
     // built by the previous test or this call
     operators.Dedup.substringDupIncremental(spark, dir).collect()
-    assert(operators.Dedup.GramIndex.fresh(spark, dir, path, k = 8, deltaMod = 16))
-    assert(!operators.Dedup.GramIndex.fresh(spark, dir, path, k = 4, deltaMod = 16),
+    assert(operators.Dedup.GramIndex.index(k = 8, deltaMod = 16).fresh(spark, dir, path))
+    assert(!operators.Dedup.GramIndex.index(k = 4, deltaMod = 16).fresh(spark, dir, path),
       "a different k must read as stale")
-    assert(!operators.Dedup.GramIndex.fresh(spark, dir, path, k = 8, deltaMod = 8),
+    assert(!operators.Dedup.GramIndex.index(k = 8, deltaMod = 8).fresh(spark, dir, path),
       "a different deltaMod changes which docs are old — stale")
     deleteIndex(path)
   }

@@ -143,7 +143,7 @@ class KnnGraphSpec extends AnyFunSuite {
     Tables.registerOverride(spark, fake, "embeddings", base)
     val path = java.nio.file.Files.createTempDirectory("graft_knn_commute_")
       .toAbsolutePath.toString
-    operators.KnnGraph.buildGraph(spark, fake, path, k = k, lists = 1, maxIters = 0)
+    operators.KnnGraph.graph(k = k, lists = 1, maxIters = 0).build(spark, fake, path)
     val inc = operators.KnnGraph.knnGraphIncrementOn(spark, path, base, delta, k)
     val full = operators.KnnGraph.nnDescent(spark, base.union(delta), k = k,
       lists = 1, maxIters = 0)
@@ -161,7 +161,7 @@ class KnnGraphSpec extends AnyFunSuite {
     Tables.registerOverride(spark, fake, "embeddings", base)
     val path = java.nio.file.Files.createTempDirectory("graft_knn_untouched_")
       .toAbsolutePath.toString
-    operators.KnnGraph.buildGraph(spark, fake, path, k = k, lists = 8, maxIters = 1)
+    operators.KnnGraph.graph(k = k, lists = 8, maxIters = 1).build(spark, fake, path)
     val before = spark.read.parquet(s"$path/edges")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).sorted.toSeq
     val updated = operators.KnnGraph.knnGraphIncrementOn(spark, path, base, delta, k)
@@ -184,8 +184,7 @@ class KnnGraphSpec extends AnyFunSuite {
   test("q93: walk recall@10 vs brute top-k clears the floor for real (non-planted) queries") {
     val e = Tables.embeddings(spark, dir).select("vec_id", "embedding")
     val path = operators.KnnGraph.graphPath(spark, dir)
-    if (!operators.KnnGraph.graphFresh(spark, dir, path))
-      operators.KnnGraph.buildGraph(spark, dir, path)
+    operators.KnnGraph.graph().ensure(spark, dir, path)
     val queries = e.filter(col("vec_id") < 5)
       .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
     val walked = operators.KnnGraph.graphWalkOn(spark, path, e, queries)
@@ -226,7 +225,7 @@ class KnnGraphSpec extends AnyFunSuite {
     Tables.registerOverride(spark, fake, "embeddings", base)
     val path = java.nio.file.Files.createTempDirectory("graft_knn_orphan_")
       .toAbsolutePath.toString
-    operators.KnnGraph.buildGraph(spark, fake, path, k = k, lists = 8, maxIters = 1)
+    operators.KnnGraph.graph(k = k, lists = 8, maxIters = 1).build(spark, fake, path)
     import spark.implicits._
     val rows = spark.read.parquet(s"$path/cells").select("vec_id", "cell")
       .as[(Long, Int)].collect()
@@ -248,7 +247,7 @@ class KnnGraphSpec extends AnyFunSuite {
     Tables.registerOverride(spark, fake, "embeddings",
       Tables.embeddings(spark, dir).select("vec_id", "embedding").filter(col("vec_id") < 200))
     val path = operators.KnnGraph.graphPath(spark, fake)
-    operators.KnnGraph.buildGraph(spark, fake, path, k = k)
+    operators.KnnGraph.graph(k = k).build(spark, fake, path)
     val fs = new org.apache.hadoop.fs.Path(path)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     def p(rel: String) = new org.apache.hadoop.fs.Path(s"$path/$rel")
@@ -256,16 +255,17 @@ class KnnGraphSpec extends AnyFunSuite {
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
     val want = walk()
     assert(want.nonEmpty)
-    // a lone marker, then a whole component: the watermark and the
-    // edges stay intact, so only the component checks can see the hole
-    Seq("cells/_SUCCESS", "centroids").foreach { gone =>
+    // a lone marker, then a whole component: the watermark stays
+    // intact, so only the component checks can see the hole
+    Seq("cells/_SUCCESS", "centroids", "edges/_SUCCESS", "edges").foreach { gone =>
       fs.delete(p(gone), true)
-      assert(operators.VectorIndex.readWatermark(spark, path).isDefined &&
-        fs.exists(p("edges/_SUCCESS")), "the fault leaves watermark and edges intact")
-      assert(!operators.KnnGraph.graphFresh(spark, fake, path),
+      assert(IndexStore.readWatermark(spark, path).isDefined &&
+        (gone.startsWith("edges") || fs.exists(p("edges/_SUCCESS"))),
+        "the fault leaves the watermark (and, for centroids/cells, the edges) intact")
+      assert(!operators.KnnGraph.graph().fresh(spark, fake, path),
         s"missing $gone must read stale")
       assert(walk() == want, s"the walk after deleting $gone must rebuild, not fail")
-      assert(operators.KnnGraph.graphFresh(spark, fake, path), s"$gone rebuilt")
+      assert(operators.KnnGraph.graph().fresh(spark, fake, path), s"$gone rebuilt")
     }
   }
 

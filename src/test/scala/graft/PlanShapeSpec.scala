@@ -280,8 +280,7 @@ class PlanShapeSpec extends AnyFunSuite {
     // must carry a PartitionFilter on the pblk layout column — the
     // pruned read opens only the frontier's buckets
     val path = operators.KnnGraph.graphPath(spark, dir)
-    if (!operators.KnnGraph.graphFresh(spark, dir, path))
-      operators.KnnGraph.buildGraph(spark, dir, path)
+    operators.KnnGraph.graph().ensure(spark, dir, path)
     import spark.implicits._
     val nodes = Seq(0L, 1L, 2L).toDF("node")
     val p = operators.KnnGraph.edgesForNodes(spark, path, nodes, "node")

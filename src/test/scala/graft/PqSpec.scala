@@ -116,7 +116,7 @@ class PqSpec extends AnyFunSuite {
     val direct = operators.PQ.ivfPqTopK(spark, dir, k = 10).collect().toSeq
     assert(indexed == direct,
       "the composed persisted index must be value-identical to the per-call IVF-PQ scan")
-    assert(operators.PQ.ivfPqIndexFresh(spark, dir, path, m = 8, kCodes = 16, iters = 1, nLists = 0))
+    assert(operators.PQ.ivfPqIndex(m = 8, kCodes = 16, iters = 1, nLists = 0).fresh(spark, dir, path))
     // a second probe must READ the fresh index, not rebuild it — the
     // regression this pins: a freshness check that never matches
     // turns every "steady-state" probe into a full rebuild (caught by
@@ -137,9 +137,9 @@ class PqSpec extends AnyFunSuite {
       || plan.contains("cell#") && plan.contains(" IN ("),
       s"partition filter must be a static IN over probed cells:\n$plan")
     // every build param is part of the index identity
-    assert(!operators.PQ.ivfPqIndexFresh(spark, dir, path, m = 4, kCodes = 16, iters = 1, nLists = 0))
-    assert(!operators.PQ.ivfPqIndexFresh(spark, dir, path, m = 8, kCodes = 16, iters = 2, nLists = 0))
-    assert(!operators.PQ.ivfPqIndexFresh(spark, dir, path, m = 8, kCodes = 16, iters = 1, nLists = 7))
+    assert(!operators.PQ.ivfPqIndex(m = 4, kCodes = 16, iters = 1, nLists = 0).fresh(spark, dir, path))
+    assert(!operators.PQ.ivfPqIndex(m = 8, kCodes = 16, iters = 2, nLists = 0).fresh(spark, dir, path))
+    assert(!operators.PQ.ivfPqIndex(m = 8, kCodes = 16, iters = 1, nLists = 7).fresh(spark, dir, path))
     fs.delete(new org.apache.hadoop.fs.Path(path), true)
   }
 
@@ -251,10 +251,10 @@ class PqSpec extends AnyFunSuite {
     val direct = operators.PQ.pqTopK(spark, dir, k = 10).collect().toSeq
     assert(indexed == direct,
       "persistence changes where bytes live, never what they are")
-    assert(operators.PQ.indexFresh(spark, dir, path, m = 8, kCodes = 16, iters = 1))
-    assert(!operators.PQ.indexFresh(spark, dir, path, m = 4, kCodes = 16, iters = 1),
+    assert(operators.PQ.index(m = 8, kCodes = 16, iters = 1).fresh(spark, dir, path))
+    assert(!operators.PQ.index(m = 4, kCodes = 16, iters = 1).fresh(spark, dir, path),
       "a different m must read as stale")
-    assert(!operators.PQ.indexFresh(spark, dir, path, m = 8, kCodes = 16, iters = 2),
+    assert(!operators.PQ.index(m = 8, kCodes = 16, iters = 2).fresh(spark, dir, path),
       "a different iters must read as stale")
     fs.delete(new org.apache.hadoop.fs.Path(path), true)
   }

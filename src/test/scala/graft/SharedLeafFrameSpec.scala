@@ -206,7 +206,7 @@ class SharedLeafFrameSpec extends AnyFunSuite {
     Tables.registerOverride(spark, fake, "embeddings", base)
     val path = java.nio.file.Files.createTempDirectory("graft_slf_walk_")
       .toAbsolutePath.toString
-    operators.KnnGraph.buildGraph(spark, fake, path, k = 10, lists = 4, maxIters = 1)
+    operators.KnnGraph.graph(k = 10, lists = 4, maxIters = 1).build(spark, fake, path)
     val queries = base.filter(col("vec_id") < 3)
       .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
     def walk(h: Int) = operators.KnnGraph

@@ -8,9 +8,10 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Pins the rules `Shared` owns for every family: one compute per key
   * under concurrency, the live-stream restart that bounds its memory
-  * sink, release of superseded values, and the guards that keep new
-  * process-global registries, second leaf spellings and session builds
-  * outside `GraftSession` out of the codebase.
+  * sink, release of superseded values, one build per stale index path,
+  * and the guards that keep new process-global registries, second leaf
+  * spellings, session builds outside `GraftSession` and index lifecycle
+  * spellings outside `IndexStore` out of the codebase.
   */
 class SharedSpec extends AnyFunSuite {
   import TestSpark._
@@ -54,6 +55,14 @@ class SharedSpec extends AnyFunSuite {
 
   private def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
     df.collect().map(_.toString).toSeq
+
+  test("8 threads on one stale index path: one build, and every thread reads the same rows") {
+    val d = corpusCopy("embeddings")
+    val path = operators.VectorIndex.defaultPath(spark, d)
+    val got = inParallel(8)(rows(operators.VectorIndex.buildAndProbe(spark, d)))
+    assert(BuildLedger.builds(s"ivf:$path") == 1, "concurrent callers must wait for one build")
+    assert(got.head.nonEmpty && got.distinct.size == 1, "every thread reads the one built index")
+  }
 
   test("8 threads on one live stream: one query per LiveRuns invocations, every thread gets the protocol's rows") {
     val d = corpusCopy("events")
@@ -147,6 +156,12 @@ class SharedSpec extends AnyFunSuite {
     val offenders = mainMatches(pattern)
       .filter { case (rel, n) => rel != "plans/Ordinals.scala" && n > 0 }
     assert(offenders.isEmpty, s"frame-to-leaf cuts outside graft.Shared.leaf: $offenders")
+  }
+
+  test("one index lifecycle: component markers, parked dirs and watermarks are spelled only in IndexStore") {
+    val offenders = mainMatches("_SUCCESS|__old|/watermark".r, withTools = true)
+      .filter { case (rel, n) => n > 0 && rel != "IndexStore.scala" }
+    assert(offenders.isEmpty, s"index lifecycle spelled outside graft.IndexStore: $offenders")
   }
 
   test("one session mechanism: sessions are built, and functions registered, only in GraftSession") {

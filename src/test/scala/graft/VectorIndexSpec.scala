@@ -36,7 +36,7 @@ class VectorIndexSpec extends AnyFunSuite {
 
   test("freshness is a watermark equality, not an mtime race") {
     VectorIndex.build(spark, dir, path)
-    assert(VectorIndex.fresh(spark, dir, path), "a just-built index is fresh")
+    assert(VectorIndex.ivf.fresh(spark, dir, path), "a just-built index is fresh")
     // corrupt the recorded watermark — a mismatched source snapshot
     // must read as stale even though every mtime ordering still holds
     val fs = new org.apache.hadoop.fs.Path(path)
@@ -44,7 +44,7 @@ class VectorIndexSpec extends AnyFunSuite {
     val wm = new org.apache.hadoop.fs.Path(s"$path/watermark")
     val out = fs.create(wm, true)
     try out.write("someone-else's-source".getBytes("UTF-8")) finally out.close()
-    assert(!VectorIndex.fresh(spark, dir, path),
+    assert(!VectorIndex.ivf.fresh(spark, dir, path),
       "a watermark that does not match the current source snapshot is stale")
     assert(VectorIndex.exists(spark, path), "...even though the index files exist")
   }
@@ -77,25 +77,5 @@ class VectorIndexSpec extends AnyFunSuite {
     val dim = Tables.embeddings(spark, dir)
       .selectExpr("size(embedding)").head.getInt(0)
     assert(stats.forall(_.getInt(2) == dim))
-  }
-
-  test("sourceSnapshot format is pinned: rel:len:mtime, sorted, newline-joined (built watermarks stay fresh)") {
-    val d = java.nio.file.Files.createTempDirectory("ivf_snapshot").toString
-    assert(VectorIndex.sourceSnapshot(spark, d) == "", "an absent source snapshots as empty")
-    val single = new java.io.File(s"$d/embeddings.parquet")
-    java.nio.file.Files.copy(java.nio.file.Path.of(s"$dir/embeddings.parquet"), single.toPath)
-    assert(VectorIndex.sourceSnapshot(spark, d) ==
-      s"embeddings.parquet:${single.length}:${single.lastModified}")
-    single.delete()
-    Tables.embeddings(spark, dir).write.partitionBy("label").parquet(single.getPath)
-    import scala.jdk.CollectionConverters._
-    val base = single.toPath
-    val files = java.nio.file.Files.walk(base).iterator.asScala
-      .filter(java.nio.file.Files.isRegularFile(_))
-      .filterNot { p => val n = p.getFileName.toString; n.startsWith(".") && n.endsWith(".crc") }
-      .map(p => s"${base.relativize(p)}:${p.toFile.length}:${p.toFile.lastModified}")
-      .toSeq.sorted
-    assert(files.exists(_.startsWith("label=")), "the listing must recurse into partition dirs")
-    assert(VectorIndex.sourceSnapshot(spark, d) == files.mkString("\n"))
   }
 }
