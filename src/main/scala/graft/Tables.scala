@@ -33,24 +33,33 @@ object Tables {
     */
   def registerOverride(spark: SparkSession, dir: String, name: String, df: DataFrame): Unit = {
     overrideVersions.keySet.removeIf(k => k._1.sparkContext.isStopped)
-    // bump the version FIRST so the installed entry's token matches
+    // set the version FIRST so the installed entry's token matches
     // what read() recomputes (the token embeds the version)
-    overrideVersions.merge((spark, dir, name), 1, (a, b) => a + b)
+    overrideVersions.put((spark, dir, name), overrideCounter.incrementAndGet())
     Shared.put(spark, "tables", (spark, dir, name), df, sourceToken(spark, dir, name))
   }
 
   private val overrideVersions =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, String), java.lang.Integer]()
+    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, String), java.lang.Long]()
+
+  /** Override versions come from ONE process-wide sequence, so no two
+    * registrations share a version: two sessions that override the same
+    * table of one dir with different frames get different tokens, and
+    * an index built under one session's override reads stale in the
+    * other.
+    */
+  private val overrideCounter = new java.util.concurrent.atomic.AtomicLong()
 
   /** Freshness token for a table as this session currently sees it:
-    * changes whenever the table is re-registered (registerOverride)
-    * OR its backing files are regenerated — the two ways derived
-    * values go silently stale (ADVICE r07). Snapshot EQUALITY decides
+    * `v<override version>|<file listing>`, version 0 when the session
+    * has no override. It changes whenever the table is re-registered
+    * (registerOverride) OR its backing files are regenerated — the two
+    * ways derived values go silently stale (ADVICE r07). Snapshot EQUALITY decides
     * freshness, no clock agreement needed. Also the source half of
     * every index identity ([[IndexStore]]).
     */
   def sourceToken(spark: SparkSession, dir: String, name: String): String = {
-    val v = Option(overrideVersions.get((spark, dir, name))).map(_.intValue).getOrElse(0)
+    val v = Option(overrideVersions.get((spark, dir, name))).map(_.longValue).getOrElse(0L)
     s"v$v|${fileListing(spark, s"$dir/$name.parquet")}"
   }
 

@@ -1,7 +1,7 @@
 package graft.mcp
 
 import graft.Tables
-import graft.operators.{TextEncoder, Vectors}
+import graft.operators.{Params, TextEncoder, Vectors}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -26,14 +26,23 @@ import org.apache.spark.sql.functions._
   * The query string is embedded with TextEncoder (q49's deterministic
   * batched encoder contract — the seam a real model plugs into;
   * server.py's _encode_query is the same seam around
-  * SentenceTransformer). Scale shape: the single query vector rides a
-  * broadcast literal onto one corpus scan (q16's plan); cluster
-  * joins broadcast the k-bounded hit set (q18's plan); nothing here
-  * shuffles the corpus. The cluster key itself is not recomputed per
-  * call: `Vectors.semanticGroups` serves one leaf-materialized frame
-  * per corpus (O(documents) narrow rows, rebuilt when the documents
-  * or embeddings source token changes), so every tool reads it as a
-  * scan of a cached leaf.
+  * SentenceTransformer).
+  *
+  * Scale shape: every tool is one scan of the corpus's serving leaf
+  * ([[servingLeaf]]: each embedding with its document, cluster key,
+  * cluster size and cluster lead, materialized once per corpus), with
+  * the request's values joined in from a one-row parameter relation
+  * (`Params.withParams`), so a new request reuses the generated code of
+  * the last. The searches score the leaf against one query row and
+  * keep the top-k as orderBy+limit (TakeOrderedAndProject:
+  * per-partition top-k merged into one partition); the rank, the
+  * cluster aggregation and the final order then run on that k-bounded
+  * partition with no exchange. The member lists filter the leaf by a
+  * cluster key in one task and sort the cluster's rows there
+  * ([[members]]). Nothing here shuffles the corpus, and nothing
+  * per call re-derives joins, cluster sizes or leads: a call runs at
+  * most 2 Spark jobs (the broadcast of a query row or a pick, when the
+  * tool has one, and the result), pinned by McpServingSpec.
   */
 object McpTools {
 
@@ -50,6 +59,34 @@ object McpTools {
       Tables.embeddings(spark, dir).select(size(col("embedding"))).head.getInt(0)
     }.intValue
 
+  /** The corpus as the tools serve it, one leaf per corpus in
+    * [[graft.Shared.leafFrame]] under the documents and embeddings
+    * source tokens: `embeddings(vec_id, embedding)` left-joined to
+    * `documents ⋈ Vectors.semanticGroups`, that is `doc_id, source,
+    * lang, text, preview, group_id`, plus `group_n`, the size of the
+    * (source, group_id) cluster, and `cluster_preview`, the preview of
+    * its min-`doc_id` member (the compact analog of the reference's
+    * include_cluster_messages text). The join is left so a query vector
+    * without a document can still be named by id; such rows carry null
+    * document columns and are never a hit. Documents and groups have
+    * the same support (both are documents ⋈ embeddings), so every hit
+    * has a cluster.
+    */
+  private[graft] def servingLeaf(spark: SparkSession, dir: String): DataFrame = {
+    val docs = Tables.documents(spark, dir).select("doc_id", "source", "lang", "text")
+    val e = Tables.embeddings(spark, dir).select("vec_id", "embedding")
+    val token = Tables.sourceToken(spark, dir, "documents") + "\n" +
+      Tables.sourceToken(spark, dir, "embeddings")
+    graft.Shared.leafFrame(spark, "mcp.serving", Seq(docs, e), token) {
+      val cluster = Window.partitionBy("source", "group_id")
+      val members = docs.withColumn("preview", substring(col("text"), 1, 40))
+        .join(Vectors.semanticGroups(spark, dir).select("doc_id", "group_id"), "doc_id")
+        .withColumn("group_n", count(lit(1)).over(cluster))
+        .withColumn("cluster_preview", min_by(col("preview"), col("doc_id")).over(cluster))
+      e.join(members, col("vec_id") === col("doc_id"), "left")
+    }
+  }
+
   /** vector_search (server.py:119-189): semantic top-k with text +
     * optional source (chat) filter, similarity threshold, and the
     * hit's cluster id. `includeClusterContext` adds the cluster's
@@ -58,9 +95,13 @@ object McpTools {
   def vectorSearch(spark: SparkSession, dir: String, query: String,
                    topK: Int = 10, source: Option[String] = None,
                    similarityThreshold: Double = 0.0,
-                   includeClusterContext: Boolean = true): DataFrame =
-    searchScored(spark, dir, queryScoredImpl(spark, dir, query),
-      topK, source, similarityThreshold, includeClusterContext)
+                   includeClusterContext: Boolean = true): DataFrame = {
+    require(query.trim.nonEmpty, "query must be a non-empty string")
+    val qvec = TextEncoder.encodeBatch(Seq(query), embeddingDim(spark, dir)).head
+    searchScored(Params.withParams(servingLeaf(spark, dir),
+      "qvec ARRAY<FLOAT>, p_thr DOUBLE, p_src STRING", qvec.toSeq, similarityThreshold, source.orNull),
+      topK, similarityThreshold, includeClusterContext)
+  }
 
   /** vector_search for a query that arrives ALREADY EMBEDDED — the
     * tool surface below the encoder seam (the reference's
@@ -75,79 +116,39 @@ object McpTools {
                        topK: Int = 10, source: Option[String] = None,
                        similarityThreshold: Double = 0.0,
                        includeClusterContext: Boolean = true): DataFrame = {
-    val e = Tables.embeddings(spark, dir).select(col("vec_id"), col("embedding"))
-    val q = e.filter(col("vec_id") === vecId).select(col("embedding").as("qvec"))
-    val scored = e.crossJoin(broadcast(q))
-      .withColumn("sim", round(expr("cosine_sim(embedding, qvec)"), 6))
-      .drop("qvec", "embedding")
-    searchScored(spark, dir, scored, topK, source, similarityThreshold, includeClusterContext)
+    val leaf = servingLeaf(spark, dir)
+    // the query row: the named vector's embedding with the request's
+    // other parameters (no such vector, no row, no hits)
+    val q = Params.withParams(leaf, "p_vec BIGINT, p_thr DOUBLE, p_src STRING",
+        vecId, similarityThreshold, source.orNull)
+      .filter(col("vec_id") === col("p_vec"))
+      .select(col("embedding").as("qvec"), col("p_thr"), col("p_src"))
+    searchScored(leaf.crossJoin(broadcast(q)), topK, similarityThreshold, includeClusterContext)
   }
 
-  private def searchScored(spark: SparkSession, dir: String, scored: DataFrame,
-                           topK: Int, source: Option[String],
-                           similarityThreshold: Double,
+  /** The top-k of the serving leaf joined to its query row (`qvec`, the
+    * threshold `p_thr`, the optional source `p_src`).
+    */
+  private def searchScored(scored: DataFrame, topK: Int, similarityThreshold: Double,
                            includeClusterContext: Boolean): DataFrame = {
     require(topK > 0 && topK <= 1000, "top_k must be in the range 1..1000")
     require(similarityThreshold >= 0.0 && similarityThreshold <= 1.0,
       "similarity_threshold must be between 0.0 and 1.0")
-    val docs = Tables.documents(spark, dir)
-      .select(col("doc_id"), col("source"), col("lang"),
-        substring(col("text"), 1, 40).as("preview"))
-    val groups = Vectors.semanticGroups(spark, dir)
-      .select(col("doc_id"), col("source").as("g_source"), col("group_id"))
-    val scoredDocs = scored
-      .join(docs, col("vec_id") === col("doc_id"))
-    val filtered = source.fold(scoredDocs)(s => scoredDocs.filter(col("source") === s))
-      .filter(col("sim") >= similarityThreshold)
-    // top-k as orderBy+limit = TakeOrderedAndProject (distributed
-    // per-partition top-k, merged on the driver) — NEVER a global
-    // row_number window, which would single-task the corpus. The rank
-    // window below runs over the already-k-bounded frame (≤1000 rows).
-    val w = Window.orderBy(col("sim").desc, col("vec_id"))
-    // group join is INNER with the k-bounded side broadcast: a left
-    // join would pin the ≤1000-row hit frame as the preserved side
-    // (un-broadcastable) and sort-merge the corpus-sized group frame
-    // instead (plan-audited r13). Inner is LOSSLESS here by
-    // construction — hits and semanticGroups have identical support
-    // (both are documents ⋈ embeddings), so no hit can lack a group.
-    val hits = broadcast(filtered
-        .orderBy(col("sim").desc, col("vec_id")).limit(topK)
-        .withColumn("rk", row_number().over(w)))
-      .join(groups.drop("g_source"), Seq("doc_id"))
-      .select("vec_id", "sim", "rk", "source", "lang", "preview", "group_id")
-    if (!includeClusterContext) hits.orderBy("rk")
-    else {
-      // cluster snippet = the group's leading member's preview (min
-      // doc_id — deterministic), the compact analog of the
-      // reference's include_cluster_messages text
-      val lead = Vectors.semanticGroups(spark, dir)
-        .groupBy(col("source").as("c_source"), col("group_id").as("c_group"))
-        .agg(min("doc_id").as("lead_id"))
-        .join(Tables.documents(spark, dir).select(col("doc_id").as("lead_id"),
-          substring(col("text"), 1, 40).as("cluster_preview")), "lead_id")
-        .select("c_source", "c_group", "cluster_preview")
-      hits.join(broadcast(lead),
-          col("source") === col("c_source") && col("group_id") === col("c_group"), "left")
-        .select(col("vec_id"), col("sim"), col("rk"), col("source"), col("lang"),
-          col("preview"), col("group_id"), col("cluster_preview"))
-        .orderBy("rk")
-    }
-  }
-
-  /** One corpus scan scored against the encoded query — the shared
-    * kernel of vector_search and cluster_search (they differ only in
-    * aggregation, exactly as in the reference): the query vector is a
-    * broadcast literal on q16's plan shape.
-    */
-  private def queryScoredImpl(spark: SparkSession, dir: String, query: String): DataFrame = {
-    require(query.trim.nonEmpty, "query must be a non-empty string")
-    val qvec = TextEncoder.encodeBatch(Seq(query), embeddingDim(spark, dir)).head
-    val qlit = array(qvec.map(lit(_)): _*).cast("array<float>")
-    Tables.embeddings(spark, dir)
-      .select(col("vec_id"), col("embedding"))
-      .withColumn("qvec", qlit)
+    // the source filter and the threshold apply BEFORE the limit
+    // (per-chat top-k, as in the reference SQL's WHERE)
+    val hits = scored
+      .filter(col("doc_id").isNotNull && (col("p_src").isNull || col("source") === col("p_src")))
       .withColumn("sim", round(expr("cosine_sim(embedding, qvec)"), 6))
-      .drop("qvec")
+      .filter(col("sim") >= col("p_thr"))
+      .select("vec_id", "sim", "source", "lang", "preview", "group_id", "cluster_preview")
+      // top-k as orderBy+limit = TakeOrderedAndProject — NEVER a global
+      // row_number window, which would single-task the corpus; the
+      // rank window runs on the k-bounded partition
+      .orderBy(col("sim").desc, col("vec_id")).limit(topK)
+      .withColumn("rk", row_number().over(Window.orderBy(col("sim").desc, col("vec_id"))))
+    val out = Seq("vec_id", "sim", "rk", "source", "lang", "preview", "group_id") ++
+      (if (includeClusterContext) Seq("cluster_preview") else Nil)
+    hits.select(out.map(col): _*).orderBy("rk")
   }
 
   /** cluster_search (server.py:191-276): aggregate the top-k hits by
@@ -196,13 +197,25 @@ object McpTools {
     // chat analog in this schema) as the guarded key
     require(source.nonEmpty, "source must be a non-empty string")
     require(groupId >= 0, "group_id must be >= 0")
-    Vectors.semanticGroups(spark, dir)
-      .filter(col("source") === source && col("group_id") === groupId)
-      .select("doc_id", "source", "group_id")
-      .join(Tables.documents(spark, dir).select(col("doc_id"), col("lang"), col("text")),
-        "doc_id")
-      .orderBy("doc_id")
+    members(Params.withParams(servingLeaf(spark, dir), "k_source STRING, k_group BIGINT",
+      source, groupId))
   }
+
+  /** The leaf rows of the cluster keyed `(k_source, k_group)` on each
+    * row of `keyed`, as (doc_id, source, group_id, lang, text) in
+    * doc_id order. The filtered scan runs as ONE task, so the sort of
+    * the cluster's rows
+    * is local and the call runs no exchange (a global sort would add a
+    * sampling job and a shuffle stage). One task over the in-memory
+    * leaf is cheaper than that at the corpus sizes this store holds; a
+    * corpus too large for one task's scan would partition the leaf by
+    * cluster key instead.
+    */
+  private def members(keyed: DataFrame): DataFrame =
+    keyed.filter(col("source") === col("k_source") && col("group_id") === col("k_group"))
+      .select("doc_id", "source", "group_id", "lang", "text")
+      .coalesce(1)
+      .orderBy("doc_id")
 
   /** The server's two @mcp.prompt templates (server.py:89-117) —
     * pure string functions an MCP host registers verbatim; replayed
@@ -259,25 +272,21 @@ object McpTools {
   def randomLargeCluster(spark: SparkSession, dir: String,
                          minSize: Int = 10, seed: Long = 42L): DataFrame = {
     require(minSize > 0, "min_size must be > 0")
-    val big = Vectors.semanticGroups(spark, dir)
-      .groupBy("source", "group_id").agg(count(lit(1)).as("n"))
-      .filter(col("n") >= minSize)
-    val pick = big
+    val leaf = servingLeaf(spark, dir)
+    // every member row carries its cluster's key and size, so the
+    // pick is a top-1 over member rows (a cluster's rows tie on the
+    // whole sort key) with no per-call regrouping
+    val pick = Params.withParams(leaf, "p_min INT, p_seed BIGINT", minSize, seed)
+      .filter(col("group_n") >= col("p_min"))
       // group_id pre-masked to 2^31 so the BIGINT product can't
       // overflow on EITHER engine (DuckDB errors rather than wraps;
       // identity for all ids < 2^31) — see Curation.pseudonymize.khash
       .withColumn("hkey",
-        pmod(pmod(col("group_id"), lit(2147483648L)) * lit(2654435761L) + lit(seed),
+        pmod(pmod(col("group_id"), lit(2147483648L)) * lit(2654435761L) + col("p_seed"),
           lit(4294967296L)))
       .orderBy(col("hkey"), col("source"), col("group_id"))
       .limit(1)
-      .select(col("source").as("p_source"), col("group_id").as("p_group"))
-    Vectors.semanticGroups(spark, dir)
-      .join(broadcast(pick),
-        col("source") === col("p_source") && col("group_id") === col("p_group"))
-      .select("doc_id", "source", "group_id")
-      .join(Tables.documents(spark, dir).select(col("doc_id"), col("lang"), col("text")),
-        "doc_id")
-      .orderBy("doc_id")
+      .select(col("source").as("k_source"), col("group_id").as("k_group"))
+    members(leaf.crossJoin(broadcast(pick)))
   }
 }

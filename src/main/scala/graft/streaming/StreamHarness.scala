@@ -713,8 +713,10 @@ object StreamHarness {
     // source token BY DESIGN, which would stale the persisted IVF-PQ
     // index and force a rebuild on every q91 call — registering once
     // per session keeps the entry's steady state a pure index read.
-    // (Across JVMs the override token is deterministic — v1 + no
-    // backing files — so the persisted planted index reads as FRESH.)
+    // (Across JVMs the override token is `v<n>` + no backing files,
+    // n counting the process's registrations: a process that registers
+    // in the same order reads the persisted planted index as FRESH,
+    // any other rebuilds it once.)
     // Keyed by SESSION (ADVICE r17): registerOverride is per-session,
     // so a second session on a shared context must re-register; the
     // planted params are in the key AND the dir name, so non-default

@@ -87,6 +87,25 @@ class IndexStoreSpec extends AnyFunSuite {
     assert(rows(nodes) == rows(y.select("vec_id")), "the walked graph must cover y's nodes")
   }
 
+  test("two sessions overriding one dir: the second reads the first's q48 index stale and serves its own rows") {
+    val all = Tables.embeddings(spark, dir)
+    val x = all.filter(col("vec_id") < 200)
+    val y = all.filter(col("vec_id") < 5 || col("vec_id") >= 200 && col("vec_id") < 400)
+    val d = "/fake/index_two_sessions"
+    val path = VectorIndex.defaultPath(spark, d)
+    IndexStore.fsFor(spark, path).delete(new org.apache.hadoop.fs.Path(path), true)
+    Tables.registerOverride(spark, d, "embeddings", x)
+    val underX = rows(VectorIndex.buildAndProbe(spark, d))
+    val b = spark.newSession()
+    Tables.registerOverride(b, d, "embeddings", y)
+    assert(VectorIndex.defaultPath(b, d) == path, "both sessions address one index")
+    assert(!VectorIndex.ivf.fresh(b, d, path), "session B must read session A's index stale")
+    val underY = rows(VectorIndex.buildAndProbe(b, d))
+    assert(underY == rows(Vectors.annIvfSeeded(b, d)),
+      "q48 in session B must serve the inline q19b answer over B's override")
+    assert(underY != underX)
+  }
+
   test("every family fails closed: a lost component marker under an intact watermark rebuilds to the same rows") {
     val d = tempDir("graft_idx_families")
     Seq("documents", "embeddings").foreach(t =>

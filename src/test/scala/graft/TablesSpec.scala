@@ -71,7 +71,21 @@ class TablesSpec extends AnyFunSuite {
     assert(Tables.sourceToken(spark, d, "s") ==
       s"v0|s.parquet:${single.length}:${single.lastModified}")
     assert(Tables.sourceToken(spark, d, "absent") == "v0|")
+    // override versions come from one process-wide sequence: every
+    // registration, in any session, gets a version no other has
+    def version(s: org.apache.spark.sql.SparkSession): Long = {
+      val tok = Tables.sourceToken(s, d, "t")
+      assert(tok.endsWith("|" + files.mkString(",")), tok)
+      tok.stripPrefix("v").takeWhile(_ != '|').toLong
+    }
     Tables.registerOverride(spark, d, "t", spark.read.parquet(s"$d/t.parquet"))
-    assert(Tables.sourceToken(spark, d, "t") == "v1|" + files.mkString(","))
+    val v1 = version(spark)
+    assert(v1 >= 1)
+    val other = spark.newSession()
+    Tables.registerOverride(other, d, "t", other.read.parquet(s"$d/t.parquet"))
+    assert(version(other) > v1, "a second session's first override must not reuse the first's version")
+    assert(version(spark) == v1, "a registration in another session leaves this session's token alone")
+    Tables.registerOverride(spark, d, "t", spark.read.parquet(s"$d/t.parquet"))
+    assert(version(spark) > version(other))
   }
 }

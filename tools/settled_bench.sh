@@ -1,7 +1,9 @@
 #!/bin/bash
 # Settled-state bench discipline (VERDICT r09 item 5 / r10 item 6 /
 # r15 item 7): run graft.Bench TWICE back-to-back after an idle window
-# and accept only when the two totals agree within 5% — interleave
+# and accept only when the two totals agree within 5% AND the pair
+# agrees query by query (the slower run's sum within 5% of the sum of
+# per-query minimums across both runs) — interleave
 # noise on sub-3s queries (the r07/r08 bisect band) then stops
 # consuming verdict attention. Each run appends its own line to
 # BENCH_detail_history.jsonl, so the settled pair is a durable
@@ -52,9 +54,21 @@ a, b = (json.loads(x) for x in sys.argv[1:3])
 da, db = (json.loads(x) for x in sys.argv[3:5])
 va, vb = a["value"], b["value"]
 drift = abs(va - vb) / max(va, vb)
+# per-query agreement: each query's better min-of-3 across the pair,
+# summed, against the slower run's sum over the same queries. Two runs
+# whose totals agree while single queries swap by seconds read as a
+# large drift here, which the totals alone hide.
+common = sorted(set(da["queries"]) & set(db["queries"]))
+qa, qb = (sum(d["queries"][q] for q in common) for d in (da, db))
+qmin = sum(min(da["queries"][q], db["queries"][q]) for q in common)
+qdrift = (max(qa, qb) - qmin) / max(qa, qb) if common else 1.0
 print(f"run1={va}s run2={vb}s drift={drift:.1%} (gate: 5%)")
-print(f"nerr: run1={a['nerr']} run2={b['nerr']} settled: run1={a['settled']} run2={b['settled']}")
-ok = drift <= 0.05 and a["nerr"] == 0 and b["nerr"] == 0
+print(f"sum of per-query mins over {len(common)} queries={qmin:.2f}s "
+      f"per-query drift={qdrift:.1%} (gate: 5%)")
+print(f"nerr: run1={a['nerr']} run2={b['nerr']} "
+      f"settled: run1={a['settled']} (pass drift {da.get('driftPct')}%) "
+      f"run2={b['settled']} (pass drift {db.get('driftPct')}%)")
+ok = drift <= 0.05 and qdrift <= 0.05 and a["nerr"] == 0 and b["nerr"] == 0
 
 def round_no():
     rounds = [int(m.group(1)) for f in glob.glob("BENCH_r*.json")
@@ -82,12 +96,14 @@ def record(best, confirmed):
                       f"(total={prev['value']}s) with faster pair ({best['value']}s)")
         except Exception:
             pass
-    best = dict(best, pairConfirmed=confirmed, pairDrift=round(drift, 4))
+    best = dict(best, pairConfirmed=confirmed, pairDrift=round(drift, 4),
+                pairQueryDrift=round(qdrift, 4))
     with open(path, "w") as f:
         json.dump(best, f, separators=(",", ":"))
         f.write("\n")
     kind = "pair-confirmed" if confirmed else "SETTLED SINGLE (pair gate failed)"
-    print(f"recorded {path}: total={best['value']}s settled=true ({kind}, drift {drift:.1%})")
+    print(f"recorded {path}: total={best['value']}s settled=true "
+          f"({kind}, drift {drift:.1%}, per-query drift {qdrift:.1%})")
 
 def record_medians():
     # per-query MEDIANS across the session's settled zero-error runs
