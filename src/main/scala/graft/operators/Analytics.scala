@@ -120,37 +120,43 @@ object Analytics {
       .orderBy(col("chat"), col("session_id"), col("user_id").asc_nulls_first)
   }
 
-  /** q51: the CLI entry screen — per-chat message stats ⋈ latest
-    * chat label (SCD latest-name CTE over the chat's own events) ⋈
-    * cluster stats (clusters = chat-sessions with ≥ minSize events,
-    * the reference clusters table's size qualification).
+  /** q51: the CLI entry screen — per-chat message stats, the latest
+    * chat label (the SCD latest-name CTE over the chat's own events)
+    * and cluster stats (clusters = chat-sessions with ≥ minSize
+    * events, the reference clusters table's size qualification).
+    *
+    * One exchange: the chat-partitioned shuffle the session window
+    * already pays for. Events aggregate per (chat, session), then per
+    * chat, both inside that partitioning; the latest label is a
+    * `max_by` over `(ts_ms, event_id)` and participants are the union
+    * of the sessions' user sets. No join, and `events` is scanned once.
     */
   def chatsOverview(spark: SparkSession, dir: String, minSize: Int = 3,
                     windowMs: Long = 30 * 60 * 1000L): DataFrame = {
-    val ev = Tables.events(spark, dir).withColumn("ts_ms", expr("ts DIV 1000000"))
-    val cs = ev.groupBy(col("event_type").as("chat"))
-      .agg(count(lit(1)).as("message_count"),
-        countDistinct(col("user_id")).as("participant_count"),
-        min("ts_ms").as("first_ms"), max("ts_ms").as("last_ms"))
-    val lw = Window.partitionBy("event_type").orderBy(col("ts_ms").desc, col("event_id").desc)
-    val latest = ev.withColumn("rn", row_number().over(lw)).filter(col("rn") === 1)
-      .select(col("event_type").as("chat"),
-        get_json_object(col("props"), "$.k").as("chat_label"))
-    val cl = chatSessions(spark, dir, windowMs)
-      .groupBy("chat", "session_id").agg(count(lit(1)).as("sz"))
-      .filter(col("sz") >= minSize)
+    val latest = struct(col("ts_ms"), col("event_id"))
+    val clustered = col("sz") >= minSize
+    chatSessions(spark, dir, windowMs)
+      .groupBy("chat", "session_id")
+      .agg(count(lit(1)).as("sz"),
+        collect_set(col("user_id")).as("users"),
+        min("ts_ms").as("first_ms"), max("ts_ms").as("last_ms"),
+        max_by(get_json_object(col("props"), "$.k"), latest).as("label"),
+        max(latest).as("latest"))
       .groupBy("chat")
-      .agg(count(lit(1)).as("cluster_count"),
-        sum("sz").as("clustered_messages"),
-        round(sum("sz").cast("double") / count(lit(1)), 6).as("avg_cluster_size"),
-        max("sz").as("max_cluster_size"))
-    cs.join(latest, Seq("chat"), "left")
-      .join(cl, Seq("chat"), "left")
+      .agg(max_by(col("label"), col("latest")).as("chat_label"),
+        sum("sz").as("message_count"),
+        size(array_distinct(flatten(collect_list(col("users"))))).cast("long").as("participant_count"),
+        min("first_ms").as("first_ms"), max("last_ms").as("last_ms"),
+        count(when(clustered, lit(1))).as("cluster_count"),
+        sum(when(clustered, col("sz"))).as("clustered_messages"),
+        max(when(clustered, col("sz"))).as("max_cluster_size"))
       .select(col("chat"), coalesce(col("chat_label"), lit("unknown")).as("chat_label"),
         col("message_count"), col("participant_count"), col("first_ms"), col("last_ms"),
-        coalesce(col("cluster_count"), lit(0L)).as("cluster_count"),
+        col("cluster_count"),
         coalesce(col("clustered_messages"), lit(0L)).as("clustered_messages"),
-        coalesce(col("avg_cluster_size"), lit(0.0)).as("avg_cluster_size"),
+        when(col("cluster_count") > 0,
+          round(col("clustered_messages").cast("double") / col("cluster_count"), 6))
+          .otherwise(lit(0.0)).as("avg_cluster_size"),
         coalesce(col("max_cluster_size"), lit(0L)).as("max_cluster_size"))
       .orderBy(col("message_count").desc, col("chat"))
   }
