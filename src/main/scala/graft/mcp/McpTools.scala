@@ -204,13 +204,13 @@ object McpTools {
   /** The leaf rows of the cluster keyed `(k_source, k_group)` on each
     * row of `keyed`, as (doc_id, source, group_id, lang, text) in
     * doc_id order. The filtered scan runs as ONE task, so the sort of
-    * the cluster's rows
-    * is local and the call runs no exchange. The serving leaf is not an
-    * AQE query stage, so `GraftExtensions.InStageSort` cannot see its
-    * size, and a plain global sort over it would add a sampling job and
-    * a shuffle stage. One task over the in-memory leaf is cheaper than
-    * that at the corpus sizes this store holds; a corpus too large for
-    * one task's scan would partition the leaf by cluster key instead.
+    * the cluster's rows is local and the call runs no exchange. The
+    * serving leaf is not an AQE query stage, so
+    * `GraftExtensions.InStageSort` cannot measure it, and a plain
+    * global sort over it would add a sampling job and a shuffle stage.
+    * One task over the in-memory leaf is cheaper than that at the
+    * corpus sizes this store holds; a corpus too large for one task's
+    * scan would partition the leaf by cluster key instead.
     */
   private def members(keyed: DataFrame): DataFrame =
     keyed.filter(col("source") === col("k_source") && col("group_id") === col("k_group"))
