@@ -212,7 +212,23 @@ object Shared {
     (org.apache.spark.sql.classic.LeafFrame.of(df, rows), rows)
   }
 
-  private final case class Leaf(plans: Seq[LogicalPlan], frame: DataFrame, rdd: RDD[InternalRow])
+  private final case class Planned[V](plans: Seq[LogicalPlan], value: V)
+
+  /** One value per (context, family, key, dependency plans): a hit
+    * needs the token, plan-for-plan `sameResult` with `deps`, and
+    * `live` on the value. The frame form is [[leafFrame]]; a value
+    * computed on the driver from those plans (operators.PQ's codebooks)
+    * uses this one directly.
+    */
+  def planned[V <: AnyRef](spark: SparkSession, family: String, key: String, deps: Seq[DataFrame],
+                           token: String = "", live: V => Boolean = (_: V) => true,
+                           release: V => Unit = noRelease)(compute: => V): V = {
+    val depPlans = deps.map(_.queryExecution.analyzed)
+    get[Planned[V]](spark, family, key + ":" + depPlans.map(_.semanticHash()).mkString(","), token,
+      live = p => p.plans.length == depPlans.length &&
+        p.plans.zip(depPlans).forall { case (a, b) => a.sameResult(b) } && live(p.value),
+      release = p => release(p.value))(Planned(depPlans, compute)).value
+  }
 
   /** One live LEAF-MATERIALIZED copy of an expensive shared frame per
     * (context, key, dependency plans): the eager computations (descent
@@ -223,8 +239,8 @@ object Shared {
     * driver-gap pathology on q93/q92g); a [[leaf]] plus an eager count
     * is materialized before any hand-off can invalidate its backing.
     *
-    * A hit needs the token, plan-for-plan `sameResult` with `deps`,
-    * and the leaf RDD still persisted. The leaf keeps its RDD lineage,
+    * A hit needs what [[planned]] checks and the leaf RDD still
+    * persisted. The leaf keeps its RDD lineage,
     * but recompute-on-loss is not guaranteed: producers whose lineage
     * reads hand-off-owned scratch (the leaf-mode descent's round
     * parquet) cannot replay once the next descent deletes it, so a
@@ -235,18 +251,14 @@ object Shared {
     * fail-and-recompute-at-caller semantics.
     */
   def leafFrame(spark: SparkSession, key: String, deps: Seq[DataFrame], token: String = "")
-               (compute: => DataFrame): DataFrame = {
-    val depPlans = deps.map(_.queryExecution.analyzed)
-    get[Leaf](spark, "leafFrame", key + ":" + depPlans.map(_.semanticHash()).mkString(","), token,
-      live = l => l.plans.length == depPlans.length &&
-        l.plans.zip(depPlans).forall { case (a, b) => a.sameResult(b) } &&
-        l.rdd.getStorageLevel != StorageLevel.NONE,
-      release = l => unpersistRdd(l.rdd)) {
+               (compute: => DataFrame): DataFrame =
+    planned[(DataFrame, RDD[InternalRow])](spark, "leafFrame", key, deps, token,
+      live = _._2.getStorageLevel != StorageLevel.NONE,
+      release = l => unpersistRdd(l._2)) {
       BuildLedger.timed(s"sharedLeaf:$key") {
         val (f, rdd) = leaf(compute)
         rdd.count()
-        Leaf(depPlans, f, rdd)
+        (f, rdd)
       }
-    }.frame
-  }
+    }._1
 }

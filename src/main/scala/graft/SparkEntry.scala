@@ -487,7 +487,9 @@ object SparkEntry {
   // ── q67-family replay oracles (r15 graduation — the q19/q41 replay
   // argument extended to the full IVF-PQ pipeline: codebooks → codes →
   // LUT → ADC ranking). Every arithmetic step is engine-portable:
-  //   · l2_sq (PqExpressions.L2Squared) is a SEQUENTIAL double fold
+  //   · l2_sq (PqExpressions.L2Squared), and the per-codeword distance
+  //     inside pq_encode (PqExpressions.PqEncode, whose argmin breaks
+  //     ties to the lower code), is a SEQUENTIAL double fold
   //     over dsub=8 elements — replayed as a left-associated SQL sum of
   //     exact float→double element differences (SQL `+` parses
   //     left-associative, which IS the kernel's loop order, and IEEE

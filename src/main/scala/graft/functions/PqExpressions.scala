@@ -1,14 +1,15 @@
 package graft.functions
 
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.catalyst.util.{ArrayData, SQLOrderingUtil}
 import org.apache.spark.sql.types._
 
 /** Native kernels for product quantization (operators.PQ): squared
-  * L2 distance (build/encode/LUT) and the ADC lookup-sum (the scan).
-  * Both codegen so a PQ scan over billions of code rows stays inside
+  * L2 distance (the LUT), the encode kernel [[PqEncode]] (codebook
+  * training and encode) and the ADC lookup-sum (the scan). All three
+  * codegen so a PQ scan over billions of code rows stays inside
   * WholeStageCodegen — the entire point of PQ is that the hot loop
   * touches m bytes + m table lookups per vector instead of the full
   * float vector.
@@ -132,4 +133,73 @@ case class PqAdcScore(left: Expression, right: Expression, kCodes: Int)
 
   override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): Expression =
     copy(left = newLeft, right = newRight)
+}
+
+/** Dense PQ codebooks as one driver-side value: m subspaces × kCodes
+  * codewords of dsub floats, codeword (s, code) at
+  * `words((s * kCodes + code) * dsub ...)`. The operand of
+  * [[PqEncode]]: it enters a plan as a reference object, so the
+  * generated code never sees its values and a new corpus compiles no
+  * new class.
+  */
+final class PqBooks(val m: Int, val kCodes: Int, val dsub: Int, val words: Array[Float])
+    extends Serializable {
+  require(m >= 1 && kCodes >= 1 && dsub >= 1 && words.length == m * kCodes * dsub,
+    s"PqBooks: ${words.length} floats for m=$m, kCodes=$kCodes, dsub=$dsub")
+  def dims: Int = m * dsub
+  /** Offset of codeword (s, code) in `words`. */
+  def at(s: Int, code: Int): Int = (s * kCodes + code) * dsub
+  override def toString: String = s"PqBooks(m=$m, kCodes=$kCodes, dsub=$dsub)"
+}
+
+/** PQ encode: the m codes of one ARRAY<FLOAT> embedding, ordered by
+  * subspace — per subspace s, the code whose codeword is nearest to
+  * the embedding's s-th dsub-slice. The distance is `l2_sq`'s exact
+  * arithmetic (float→double per component, summed in component
+  * order); the argmin compares (distance, code) under Spark's double
+  * ordering, so ties go to the lower code — what `min_by(code,
+  * struct(d, code))` over the l2_sq rows picks. A length other than
+  * m·dsub throws, like l2_sq's mismatch.
+  */
+case class PqEncode(child: Expression, books: PqBooks) extends UnaryExpression {
+
+  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
+    case ArrayType(FloatType, _) => TypeCheckResult.TypeCheckSuccess
+    case t => TypeCheckResult.TypeCheckFailure(s"pq_encode expects ARRAY<FLOAT>, got $t")
+  }
+  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
+  override def prettyName: String = "pq_encode"
+
+  override protected def nullSafeEval(a: Any): Any = PqEncode.encode(a.asInstanceOf[ArrayData], books)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val b = ctx.addReferenceObj("books", books, classOf[PqBooks].getName)
+    defineCodeGen(ctx, ev, x => s"${classOf[PqEncode].getName}.encode($x, $b)")
+  }
+
+  override protected def withNewChildInternal(newChild: Expression): Expression = copy(child = newChild)
+}
+
+object PqEncode {
+  def encode(x: ArrayData, b: PqBooks): ArrayData = {
+    if (x.numElements() != b.dims)
+      throw new IllegalArgumentException(
+        s"pq_encode: embedding length ${x.numElements()} vs m*dsub = ${b.m} * ${b.dsub}")
+    val codes = new Array[Int](b.m)
+    var s = 0
+    while (s < b.m) {
+      var best = 0; var bestD = 0.0; var code = 0
+      while (code < b.kCodes) {
+        val w = b.at(s, code); val v = s * b.dsub
+        var d = 0.0; var i = 0
+        while (i < b.dsub) {
+          val t = x.getFloat(v + i).toDouble - b.words(w + i).toDouble; d += t * t; i += 1
+        }
+        if (code == 0 || SQLOrderingUtil.compareDoubles(d, bestD) < 0) { best = code; bestD = d }
+        code += 1
+      }
+      codes(s) = best; s += 1
+    }
+    UnsafeArrayData.fromPrimitiveArray(codes)
+  }
 }

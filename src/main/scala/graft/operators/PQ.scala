@@ -1,9 +1,12 @@
 package graft.operators
 
-import graft.{IndexStore, Tables}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import graft.{IndexStore, Shared, Tables}
+import graft.functions.{PqBooks, PqEncode}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.classic.ExpressionColumn
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.DecimalType
 
 /** Product quantization (Jégou et al., TPAMI'11) — the MEMORY scale
   * path for vector search, complementing the IVF family's compute
@@ -18,115 +21,160 @@ import org.apache.spark.sql.functions._
   * same problem by graph traversal; PQ is the layout a columnar
   * engine can scan declaratively.
   *
+  * The codebooks are a driver value ([[graft.functions.PqBooks]]):
+  * m·kCodes codewords are a few KB, so a build collects each step's
+  * result and assembles the next books on the driver, and every
+  * per-vector step is the one native kernel [[graft.functions.PqEncode]]
+  * (`pq_encode`) with the books as its constant operand. A build is
+  * one seed aggregation, one aggregation per Lloyd round and one
+  * projection per encode — no subvector explode, no broadcast join of
+  * the books, no per-round checkpoint.
+  *
   * Determinism (the IVF kernels' rules): codebook seeds are REAL
-  * member subvectors (min vec_id per residue class — q19b's seed
-  * rule), Lloyd refinement uses DECIMAL(20,10) means (order-
-  * insensitive under any partitioning), assignment ties break on
-  * code id via min_by over a (distance, code) struct, and every
-  * array is assembled with array_sort over an explicit position
-  * struct. The whole q67 family is hash-EXACT in the driver gate
-  * (r15/r16): the DECIMAL/float chain replays in DuckDB via
-  * double-compute-then-REAL-cast, and the planted entries pin the
-  * ADC floor. PqSpec additionally pins the laws (identical vectors
-  * ⇒ identical codes, ADC ≡ JVM-replayed lookup sum, recall floor).
+  * member subvectors (the min-vec_id member of each residue class
+  * pmod(vec_id, kCodes) — q19b's seed rule), Lloyd refinement uses
+  * DECIMAL(20,10) sums cast to double and divided by the member count
+  * (order-insensitive under any partitioning), and assignment is
+  * `pq_encode`'s argmin on (l2_sq distance, code) — ties to the lower
+  * code. The whole q67 family is hash-EXACT in the driver gate: the
+  * DECIMAL/float chain replays in DuckDB via
+  * double-compute-then-REAL-cast, and the planted entries pin the ADC
+  * floor. PqSpec pins the laws (identical vectors ⇒ identical codes,
+  * ADC ≡ JVM-replayed lookup sum, recall floor); PqBuildSpec pins the
+  * books and codes bit for bit against the frame-at-a-time build they
+  * replaced.
+  *
+  * DENSITY INVARIANT: the ADC LUT is indexed lut[s*kCodes + code], so
+  * books must carry EVERY (s, code) pair — one missing row shifts
+  * every later LUT slot into silently wrong distances. The driver
+  * assembles the full m×kCodes grid, so two cases are filled there: a
+  * residue class with no members (distinct vec_id residues < kCodes)
+  * has no seed, and its codeword is a FAR-POINT sentinel
+  * (Float.MaxValue components: never the nearest codeword, so never
+  * assigned, and its LUT slot is a huge-but-unread value); a codeword
+  * that loses all members in a Lloyd round (the lower-code tie-break
+  * starves a seed whose subvector duplicates a lower-coded one) gets
+  * no mean row, and keeps its previous-round codeword. pq_adc
+  * additionally validates the layout at read time.
   */
 object PQ {
 
-  /** (vec_id, s, sv): vector split into m contiguous subvectors. */
-  private def subvectors(e: DataFrame, m: Int, dims: Int): DataFrame = {
-    val dsub = dims / m
-    e.select(col("vec_id"), col("embedding"),
-        explode(sequence(lit(0), lit(m - 1))).as("s"))
-      .select(col("vec_id"), col("s"),
-        slice(col("embedding"), col("s") * dsub + 1, lit(dsub)).as("sv"))
-  }
+  private def encoded(books: PqBooks): Column =
+    ExpressionColumn.of(col("embedding"))(PqEncode(_, books))
 
-  /** Codebooks (s, code, cvec): per subspace, kCodes codewords —
-    * member-subvector seeds + `iters` Lloyd rounds of decimal means.
-    * m·kCodes rows of dsub floats: always broadcastable.
-    *
-    * DENSITY INVARIANT (ADVICE r08): the ADC LUT is indexed
-    * lut[s*kCodes + code], so books must carry EVERY (s, code) pair —
-    * one missing row shifts every later LUT slot into silently wrong
-    * distances. Two ways a row could go missing: a residue class with
-    * no members when distinct vec_id residues < kCodes (no seed), and
-    * a codeword losing all members during Lloyd refinement (min_by
-    * tie-breaks can starve a seed whose subvector duplicates a
-    * lower-coded one). Both are closed structurally: books is always
-    * the full m×kCodes grid — never-seeded codes carry a FAR-POINT
-    * sentinel (Float.MaxValue components: never the nearest codeword,
-    * so never assigned, and its LUT slot is a huge-but-unread value),
-    * and a starved codeword carries its previous-round centroid
-    * forward. pq_adc additionally validates the layout at read time.
+  /** Codebooks and the size `n` of the corpus they were trained on. */
+  private final case class Trained(books: PqBooks, n: Long)
+
+  /** The seed aggregation over (vec_id, embedding): per residue class
+    * pmod(vec_id, kCodes), its min-vec_id member, its size and its
+    * embedding lengths — the seed books (sentinels where a class is
+    * empty), the corpus size, and the one embedding length every row
+    * must share.
     */
-  private[graft] def codebooks(spark: SparkSession, e: DataFrame, m: Int, kCodes: Int,
-                               dims: Int, iters: Int): DataFrame = {
+  private def seeds(e: DataFrame, m: Int, kCodes: Int): Trained = {
+    val rows = e.groupBy(pmod(col("vec_id"), lit(kCodes)).cast("int").as("code"))
+      .agg(min_by(col("embedding"), col("vec_id")), count(lit(1)),
+        min(size(col("embedding"))), max(size(col("embedding"))))
+      .collect()
+    val lens = rows.flatMap(r => Seq(r.get(3), r.get(4))).filter(_ != null).distinct
+    require(lens.length == 1, s"PQ needs embeddings of one length, got ${lens.mkString("[", ", ", "]")}")
+    val dims = lens.head.asInstanceOf[Int]
+    require(dims % m == 0, s"dims ($dims) must be divisible by m ($m)")
     val dsub = dims / m
-    val subs = subvectors(e, m, dims)
-    val grid = spark.range(m).select(col("id").cast("int").as("s"))
-      .crossJoin(spark.range(kCodes).select(col("id").cast("int").as("code")))
-    val sentinel = array_repeat(lit(Float.MaxValue), lit(dsub)).cast("array<float>")
-    val seedW = Window.partitionBy(col("s"), pmod(col("vec_id"), lit(kCodes))).orderBy("vec_id")
-    val seeds = subs.withColumn("rn", row_number().over(seedW)).filter(col("rn") === 1)
-      .select(col("s"), pmod(col("vec_id"), lit(kCodes)).cast("int").as("code"),
-        col("sv").as("cvec"))
-    var books = grid.join(seeds, Seq("s", "code"), "left")
-      .select(col("s"), col("code"), coalesce(col("cvec"), sentinel).as("cvec"))
-    for (_ <- 1 to iters) {
-      val a = assign(subs, books)
-      val refined = subs.join(a, Seq("vec_id", "s"))
-        .select(col("s"), col("code"), posexplode(col("sv")).as(Seq("pos", "v")))
-        // sum-then-cast-then-divide: the engine-portable mean
-        // (see Vectors.centroidsOf — decimal÷bigint rounding rules
-        // are engine-specific, IEEE double division is not)
-        .groupBy("s", "code", "pos")
-        .agg((sum(col("v").cast(org.apache.spark.sql.types.DecimalType(20, 10))).cast("double")
-          / count(lit(1))).as("c"))
-        .groupBy("s", "code")
-        .agg(transform(array_sort(collect_list(struct(col("pos"), col("c")))),
-          x => x.getField("c")).cast("array<float>").as("cvec"))
-      books = grid.join(refined, Seq("s", "code"), "left")
-        .join(books.withColumnRenamed("cvec", "prev"), Seq("s", "code"), "left")
-        .select(col("s"), col("code"), coalesce(col("cvec"), col("prev")).as("cvec"))
-        // MATERIALIZE per round: the new plan embeds the previous
-        // books subtree twice (assign + the prev fallback), so
-        // without a lineage cut the plan doubles per iteration —
-        // ~2^iters replication for a PUBLIC iters parameter. The
-        // frame is m·kCodes rows (~128 at defaults): an eager
-        // localCheckpoint is a few KB and keeps rounds linear.
-        .localCheckpoint(true)
+    val books = new PqBooks(m, kCodes, dsub, Array.fill(m * kCodes * dsub)(Float.MaxValue))
+    rows.filter(r => !r.isNullAt(0) && !r.isNullAt(1)).foreach { r =>
+      val v = r.getSeq[Float](1)
+      for (s <- 0 until m; i <- 0 until dsub) books.words(books.at(s, r.getInt(0)) + i) = v(s * dsub + i)
     }
-    books
+    Trained(books, rows.map(_.getLong(2)).sum)
   }
 
-  /** (vec_id, s, code): nearest codeword per subspace. min_by over a
-    * partial-aggregatable struct — no window, the N·m·kCodes distance
-    * rows collapse map-side to one row per (vec_id, s).
+  /** One Lloyd round: `pq_encode` assigns each row its codes, the
+    * exploded components group by (subspace, code, offset), and each
+    * mean is the decimal sum cast to double, over the count, cast to
+    * float. A codeword with no members keeps its previous value.
     */
-  private def assign(subs: DataFrame, books: DataFrame): DataFrame =
-    subs.join(broadcast(books), "s")
-      .withColumn("d", expr("l2_sq(sv, cvec)"))
-      .groupBy("vec_id", "s")
-      .agg(expr("min_by(code, struct(d, code))").as("code"))
+  private def refine(e: DataFrame, books: PqBooks): PqBooks = {
+    val dsub = books.dsub
+    val means = e.select(col("embedding"), encoded(books).as("codes"))
+      .select(col("codes"), posexplode(col("embedding")).as(Seq("pos", "v")))
+      .groupBy(expr(s"cast(pos div $dsub as int)").as("s"), expr(s"codes[pos div $dsub]").as("code"),
+        expr(s"pos % $dsub").as("i"))
+      // sum-then-cast-then-divide: the engine-portable mean
+      // (see Vectors.centroidsOf — decimal÷bigint rounding rules
+      // are engine-specific, IEEE double division is not)
+      .agg((sum(col("v").cast(DecimalType(20, 10))).cast("double") / count(lit(1)))
+        .cast("float"))
+      .collect()
+    val words = books.words.clone()
+    means.foreach(r => words(books.at(r.getInt(0), r.getInt(1)) + r.getInt(2)) = r.getFloat(3))
+    new PqBooks(books.m, books.kCodes, dsub, words)
+  }
 
-  /** (vec_id, codes ARRAY<INT> of length m): the compressed corpus. */
-  private[graft] def encode(spark: SparkSession, e: DataFrame, books: DataFrame,
-                            m: Int, dims: Int): DataFrame =
-    assign(subvectors(e, m, dims), books)
-      .groupBy("vec_id")
-      .agg(transform(array_sort(collect_list(struct(col("s"), col("code")))),
-        x => x.getField("code")).as("codes"))
+  /** Codebooks trained on (vec_id, embedding): member seeds + `iters`
+    * Lloyd rounds, the full m×kCodes grid (see DENSITY INVARIANT).
+    */
+  private def train(e: DataFrame, m: Int, kCodes: Int, iters: Int): Trained = {
+    val seeded = seeds(e, m, kCodes)
+    seeded.copy(books = (1 to iters).foldLeft(seeded.books)((books, _) => refine(e, books)))
+  }
+
+  private[graft] def codebooks(e: DataFrame, m: Int, kCodes: Int, iters: Int): PqBooks =
+    train(e, m, kCodes, iters).books
+
+  /** (vec_id, codes ARRAY<INT> of length m): the compressed corpus, one
+    * projection of `e`.
+    */
+  private[graft] def encode(e: DataFrame, books: PqBooks): DataFrame =
+    e.select(col("vec_id"), encoded(books).as("codes"))
+
+  /** The stored form of `books`: (s, code, cvec) rows in (s, code)
+    * order.
+    */
+  private[graft] def booksFrame(spark: SparkSession, books: PqBooks): DataFrame = {
+    val rows = for (s <- 0 until books.m; code <- 0 until books.kCodes) yield {
+      val w = books.at(s, code)
+      Row(s, code, books.words.slice(w, w + books.dsub).toSeq)
+    }
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*),
+      org.apache.spark.sql.types.StructType.fromDDL("s INT, code INT, cvec ARRAY<FLOAT>"))
+  }
+
+  private def writeBooks(spark: SparkSession, books: PqBooks, path: String): Unit =
+    booksFrame(spark, books).coalesce(1).write.mode("overwrite").parquet(path)
+
+  /** Stored books back on the driver, checked dense. */
+  private[graft] def readBooks(spark: SparkSession, path: String, m: Int, kCodes: Int): PqBooks = {
+    val rows = spark.read.parquet(path).collect()
+      .map(r => (r.getInt(0), r.getInt(1)) -> r.getSeq[Float](2)).toMap
+    val dsub = rows.headOption.map(_._2.length).getOrElse(0)
+    val grid = for (s <- 0 until m; code <- 0 until kCodes) yield rows.get((s, code))
+    require(rows.size == m * kCodes && grid.forall(_.exists(_.length == dsub)),
+      s"books at $path are not a dense $m×$kCodes grid of equal-length codewords")
+    new PqBooks(m, kCodes, dsub, grid.flatMap(_.get).toArray)
+  }
+
+  /** [[train]] shared per corpus plan: q67 and q67b train the same
+    * books on the same corpus, so one copy serves both.
+    */
+  private def sharedBooks(spark: SparkSession, e: DataFrame, m: Int, kCodes: Int, iters: Int): Trained =
+    Shared.planned[Trained](spark, "pqBooks", s"m=$m,k=$kCodes,it=$iters", Seq(e))(
+      graft.BuildLedger.timed(s"pqBooks:m=$m,k=$kCodes,it=$iters")(train(e, m, kCodes, iters)))
 
   /** Per-query ADC lookup table: distance of each (subspace, codeword)
     * to the query's EXACT subvector, flattened to lut[s*kCodes + code]
     * (the dense layout pq_adc validates). One definition for all PQ
     * entries — ADVICE r08: the pasted copies had already drifted once.
-    * `q` carries (vec_id, embedding); output is (query_id, lut).
+    * `q` carries (vec_id, embedding); `books` is the (s, code, cvec)
+    * frame, stored or [[booksFrame]]; dsub is each codeword's length,
+    * read in the plan, and a query whose length is not m·dsub fails
+    * the plan. Output is (query_id, lut).
     */
-  private def lutsFor(q: DataFrame, books: DataFrame, m: Int, dims: Int): DataFrame =
-    subvectors(q.select(col("vec_id"), col("embedding")), m, dims)
-      .join(broadcast(books), "s")
-      .withColumn("d", expr("l2_sq(sv, cvec)"))
+  private def lutsFor(q: DataFrame, books: DataFrame, m: Int): DataFrame =
+    q.select(col("vec_id"), col("embedding")).crossJoin(broadcast(books))
+      .withColumn("d", when(size(col("embedding")) === size(col("cvec")) * m,
+          expr("l2_sq(slice(embedding, s * size(cvec) + 1, size(cvec)), cvec)"))
+        .otherwise(raise_error(lit(s"PQ query length is not m·dsub (m = $m)"))))
       .groupBy(col("vec_id").as("query_id"))
       .agg(transform(array_sort(collect_list(struct(col("s"), col("code"), col("d")))),
         x => x.getField("d")).as("lut"))
@@ -154,8 +202,8 @@ object PQ {
     * index must equal.
     */
   private[graft] def frozenStructureScan(scored: DataFrame, q: DataFrame, books: DataFrame,
-                                         k: Int, kCodes: Int, m: Int, dims: Int): DataFrame =
-    adcTopK(scored.join(broadcast(lutsFor(q, books, m, dims)), "query_id"), k, kCodes)
+                                         k: Int, kCodes: Int, m: Int): DataFrame =
+    adcTopK(scored.join(broadcast(lutsFor(q, books, m)), "query_id"), k, kCodes)
 
   /** q67: PQ-compressed approximate top-k — build codebooks, encode
     * the corpus, scan CODES with the pq_adc lookup sum (asymmetric
@@ -164,18 +212,10 @@ object PQ {
   def pqTopK(spark: SparkSession, dir: String, k: Int = 10, nQueries: Int = 5,
              m: Int = 8, kCodes: Int = 16, iters: Int = 1): DataFrame = {
     val e = Tables.embeddings(spark, dir).select("vec_id", "embedding")
-    val dims = e.select(size(col("embedding"))).head.getInt(0)
-    require(dims % m == 0, s"dims ($dims) must be divisible by m ($m)")
-    // books/codes are pure functions of (corpus, params) and identical
-    // across q67 and q67b's builds — one live leaf copy per corpus
-    // (r21, Shared.leafFrame; the q92b/q92e discipline)
-    val books = graft.Shared.leafFrame(spark, s"pq_books:m=$m,k=$kCodes,it=$iters", Seq(e))(
-      codebooks(spark, e, m, kCodes, dims, iters))
-    val codes = graft.Shared.leafFrame(spark, s"pq_codes:m=$m,k=$kCodes,it=$iters", Seq(e))(
-      encode(spark, e, books, m, dims))
+    val books = sharedBooks(spark, e, m, kCodes, iters).books
     val q = e.filter(col("vec_id") < nQueries)
-    val luts = lutsFor(q, books, m, dims)
-    adcTopK(codes.crossJoin(broadcast(luts)), k, kCodes)
+    val luts = lutsFor(q, booksFrame(spark, books), m)
+    adcTopK(encode(e, books).crossJoin(broadcast(luts)), k, kCodes)
   }
 
   /** Persisted PQ index — the build/read split (the q48/q29c/q64b
@@ -202,12 +242,9 @@ object PQ {
   private def flatBody(m: Int, kCodes: Int, iters: Int, keep: Column)
                       (spark: SparkSession, dir: String, path: String): Seq[String] = {
     val e = Tables.embeddings(spark, dir).select("vec_id", "embedding").filter(keep)
-    val dims = e.select(size(col("embedding"))).head.getInt(0)
-    require(dims % m == 0, s"dims ($dims) must be divisible by m ($m)")
-    codebooks(spark, e, m, kCodes, dims, iters)
-      .write.mode("overwrite").parquet(s"$path/books")
-    encode(spark, e, spark.read.parquet(s"$path/books"), m, dims)
-      .write.mode("overwrite").parquet(s"$path/codes")
+    val books = codebooks(e, m, kCodes, iters)
+    writeBooks(spark, books, s"$path/books")
+    encode(e, books).write.mode("overwrite").parquet(s"$path/codes")
     dropDelta(spark, path)
     Nil
   }
@@ -218,7 +255,8 @@ object PQ {
     * admits, codes written cell-partitioned so each inverted list is
     * its own directory. Records the RESOLVED list count as `lists|N`:
     * the probe needs it for autoCoarse parity with q67b, and reading
-    * it beats re-counting the corpus per probe.
+    * it beats re-counting the corpus per probe. The corpus size comes
+    * from the books' seed aggregation.
     *
     * The repartition(cell) before the write is load-bearing, not
     * style: partitionBy splits each TASK's rows per cell, so without
@@ -232,18 +270,15 @@ object PQ {
   private def ivfPqBody(m: Int, kCodes: Int, iters: Int, nLists: Int, keep: Column)
                        (spark: SparkSession, dir: String, path: String): Seq[String] = {
     val e = Tables.embeddings(spark, dir).select("vec_id", "embedding").filter(keep)
-    val dims = e.select(size(col("embedding"))).head.getInt(0)
-    require(dims % m == 0, s"dims ($dims) must be divisible by m ($m)")
-    val n = e.count()
-    val lists = if (nLists > 0) nLists else math.max(16, (n / 125L).toInt)
+    val Trained(books, n) = train(e, m, kCodes, iters)
+    val lists = listsFor(nLists, n)
     val cents = Vectors.refinedCentroids(e, lists, iters = 0)
     cents.select(col("c_cell").as("cell"), col("cvec"))
       .write.mode("overwrite").parquet(s"$path/centroids")
-    codebooks(spark, e, m, kCodes, dims, iters)
-      .write.mode("overwrite").parquet(s"$path/books")
+    writeBooks(spark, books, s"$path/books")
     val cells = Vectors.assignCells(e, cents, nProbe = 1, nCoarse = Vectors.autoCoarse(lists))
       .select("vec_id", "cell")
-    encode(spark, e, spark.read.parquet(s"$path/books"), m, dims)
+    encode(e, books)
       .join(cells, "vec_id")
       .repartition(col("cell"))
       .write.mode("overwrite").partitionBy("cell").parquet(s"$path/cells")
@@ -259,6 +294,12 @@ object PQ {
     */
   private def dropDelta(spark: SparkSession, path: String): Unit =
     IndexStore.fsFor(spark, path).delete(new org.apache.hadoop.fs.Path(s"$path/codes_delta"), true)
+
+  /** The IVF list count: `nLists` as passed, or one per 125 vectors
+    * (at least 16).
+    */
+  private def listsFor(nLists: Int, n: Long): Int =
+    if (nLists > 0) nLists else math.max(16, (n / 125L).toInt)
 
   /** The resolved list count the IVF-PQ build recorded. */
   private[graft] def storedLists(spark: SparkSession, path: String): Int =
@@ -281,10 +322,8 @@ object PQ {
     index(m, kCodes, iters).ensure(spark, dir, path)
     val books = spark.read.parquet(s"$path/books")
     val codes = spark.read.parquet(s"$path/codes")
-    val e = Tables.embeddings(spark, dir).select("vec_id", "embedding")
-    val dims = e.select(size(col("embedding"))).head.getInt(0)
-    val q = e.filter(col("vec_id") < nQueries)
-    val luts = lutsFor(q, books, m, dims)
+    val q = Tables.embeddings(spark, dir).filter(col("vec_id") < nQueries)
+    val luts = lutsFor(q, books, m)
     adcTopK(codes.crossJoin(broadcast(luts)), k, kCodes)
   }
 
@@ -320,26 +359,23 @@ object PQ {
   private[graft] def ivfPqTopKOn(spark: SparkSession, e: DataFrame, k: Int, nQueries: Int,
                                  m: Int, kCodes: Int, iters: Int,
                                  nLists: Int, nProbe: Int): DataFrame = {
-    val dims = e.select(size(col("embedding"))).head.getInt(0)
-    require(dims % m == 0, s"dims ($dims) must be divisible by m ($m)")
-    val n = e.count()
-    val lists = if (nLists > 0) nLists else math.max(16, (n / 125L).toInt)
+    // books and cells are pure functions of (corpus, params): one copy
+    // per corpus — q67 shares the books (same key), q67g's planted
+    // corpus hashes to its own entries; the corpus size is the books'
+    // seed count
+    val trained = sharedBooks(spark, e, m, kCodes, iters)
+    val books = trained.books
+    val lists = listsFor(nLists, trained.n)
     val cents = Vectors.refinedCentroids(e, lists, iters = 0)
-    // cells/books/codes are pure functions of (corpus, params): one
-    // live leaf copy per corpus — q67 shares books/codes (same keys),
-    // q67g's planted corpus hashes to its own entries (r21)
-    val cells = graft.Shared.leafFrame(spark, s"ivfpq_cells:l=$lists", Seq(e))(
+    val cells = Shared.leafFrame(spark, s"ivfpq_cells:l=$lists", Seq(e))(
       Vectors.assignCells(e, cents, nProbe = 1, nCoarse = Vectors.autoCoarse(lists))
         .select("vec_id", "cell"))
-    val books = graft.Shared.leafFrame(spark, s"pq_books:m=$m,k=$kCodes,it=$iters", Seq(e))(
-      codebooks(spark, e, m, kCodes, dims, iters))
-    val coded = graft.Shared.leafFrame(spark, s"pq_codes:m=$m,k=$kCodes,it=$iters", Seq(e))(
-      encode(spark, e, books, m, dims)).join(cells, "vec_id")
+    val coded = encode(e, books).join(cells, "vec_id")
     val q = e.filter(col("vec_id") < nQueries)
     val probes = Vectors.assignCells(q, cents, nProbe = nProbe,
         nCoarse = Vectors.autoCoarse(lists))
       .select(col("vec_id").as("query_id"), col("cell"))
-    val luts = lutsFor(q, books, m, dims)
+    val luts = lutsFor(q, booksFrame(spark, books), m)
     adcTopK(coded.join(probes, Seq("cell")).join(broadcast(luts), "query_id"), k, kCodes)
   }
 
@@ -428,7 +464,7 @@ object PQ {
     */
   private def probeAdcTopK(spark: SparkSession, q: DataFrame, cents: DataFrame,
                            books: DataFrame, lists: Int, nProbe: Int,
-                           m: Int, dims: Int, k: Int, kCodes: Int)
+                           m: Int, k: Int, kCodes: Int)
                           (codesFor: Seq[Any] => DataFrame): DataFrame = {
     val probeRows = Vectors.assignCells(q, cents, nProbe = nProbe,
         nCoarse = Vectors.autoCoarse(lists))
@@ -438,7 +474,7 @@ object PQ {
     val probes = spark.createDataFrame(
       java.util.Arrays.asList(collected: _*), probeRows.schema)
     val coded = codesFor(probedCells)
-    val luts = lutsFor(q, books, m, dims)
+    val luts = lutsFor(q, books, m)
     adcTopK(coded.join(broadcast(probes), Seq("cell")).join(broadcast(luts), "query_id"), k, kCodes)
   }
 
@@ -461,14 +497,11 @@ object PQ {
     val cents = spark.read.parquet(s"$path/centroids")
       .select(col("cell").as("c_cell"), col("cvec"))
     val e = Tables.embeddings(spark, dir).select("vec_id", "embedding")
-    // dims from the STORED codebooks (m·dsub), not a corpus scan —
-    // the steady state must touch only the index + the query rows
-    val dims = m * books.select(size(col("cvec"))).head.getInt(0)
     // lists must match the build's resolution exactly (autoCoarse is
     // part of the probe RANKING and q67b-parity depends on it)
     val lists = storedLists(spark, path)
     val q = e.filter(col("vec_id") < nQueries)
-    probeAdcTopK(spark, q, cents, books, lists, nProbe, m, dims, k, kCodes) { cells =>
+    probeAdcTopK(spark, q, cents, books, lists, nProbe, m, k, kCodes) { cells =>
       spark.read.parquet(s"$path/cells").filter(col("cell").isin(cells: _*))
     }
   }
@@ -516,11 +549,10 @@ object PQ {
                           m: Int = 8, kCodes: Int = 16, iters: Int = 1): DataFrame = {
     val path = incrIndexPath(spark, dir, deltaMod)
     incrIndex(m, kCodes, iters, deltaMod).ensure(spark, dir, path)
-    val books = spark.read.parquet(s"$path/books")
-    val dims = m * books.select(size(col("cvec"))).head.getInt(0)
+    val books = readBooks(spark, s"$path/books", m, kCodes)
     val delta = Tables.embeddings(spark, dir).select("vec_id", "embedding")
       .filter(col("vec_id") % deltaMod === 0)
-    encode(spark, delta, books, m, dims).orderBy("vec_id")
+    encode(delta, books).orderBy("vec_id")
   }
 
   /** The idempotent nightly write: delta codes land in their own
@@ -652,17 +684,16 @@ object PQ {
     // re-appending would duplicate every delta vec_id (same rule as
     // the flat index's appendDelta)
     if (compacted(spark, path) || IndexStore.folded(spark, s"$path/cells")) return
-    val books = spark.read.parquet(s"$path/books")
+    val books = readBooks(spark, s"$path/books", m, kCodes)
     val cents = spark.read.parquet(s"$path/centroids")
       .select(col("cell").as("c_cell"), col("cvec"))
-    val dims = m * books.select(size(col("cvec"))).head.getInt(0)
     val lists = storedLists(spark, path)
     val delta = Tables.embeddings(spark, dir).select("vec_id", "embedding")
       .filter(col("vec_id") % deltaMod === 0)
     val cells = Vectors.assignCells(delta, cents, nProbe = 1,
         nCoarse = Vectors.autoCoarse(lists))
       .select("vec_id", "cell")
-    encode(spark, delta, books, m, dims)
+    encode(delta, books)
       .join(cells, "vec_id")
       .repartition(col("cell"))
       .write.mode("overwrite").partitionBy("cell").parquet(s"$path/codes_delta")
@@ -727,11 +758,10 @@ object PQ {
     val books = spark.read.parquet(s"$path/books")
     val cents = spark.read.parquet(s"$path/centroids")
       .select(col("cell").as("c_cell"), col("cvec"))
-    val dims = m * books.select(size(col("cvec"))).head.getInt(0)
     val lists = storedLists(spark, path)
     val e = Tables.embeddings(spark, dir).select("vec_id", "embedding")
     val q = e.filter(col("vec_id") < nQueries)
-    probeAdcTopK(spark, q, cents, books, lists, nProbe, m, dims, k, kCodes) { cells =>
+    probeAdcTopK(spark, q, cents, books, lists, nProbe, m, k, kCodes) { cells =>
       // unionAll is positional — pin the column order on both stores
       val cols = Seq(col("vec_id"), col("codes"), col("cell"))
       val baseCodes = spark.read.parquet(s"$path/cells").select(cols: _*)

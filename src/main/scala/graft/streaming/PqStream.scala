@@ -72,11 +72,7 @@ object PqStream {
                 nLists: Int = 0): GateIndex = {
     val path = PQ.ivfPqIndexPath(spark, dir)
     PQ.ivfPqIndex(m, kCodes, iters, nLists).ensure(spark, dir, path)
-    val books = spark.read.parquet(s"$path/books")
-      .collect().map(r => ((r.getInt(0), r.getInt(1)), r.getSeq[Float](2)))
-      .sortBy(_._1)
-    val dsub = books.head._2.length
-    val flat = books.flatMap(_._2)
+    val books = PQ.readBooks(spark, s"$path/books", m, kCodes)
     // ONE Literal node per structure, not one per element (r22, guide
     // §7.3): the element-wise array(lit(x), ...) spelling built an
     // expression tree with a node per float/cell, and STREAMING
@@ -88,7 +84,7 @@ object PqStream {
     // expressions address. At scale this is load-bearing: adaptive
     // lists = N/125 would put ~1M expression nodes in the plan at the
     // 2M-node corpus.
-    val booksLit = typedlit(flat.toSeq)
+    val booksLit = typedlit(books.words.toSeq)
     val cents = spark.read.parquet(s"$path/centroids")
       .collect().map(r => (r.get(0).toString.toInt, r.getSeq[Float](1)))
       .sortBy(_._1)
@@ -124,7 +120,7 @@ object PqStream {
             .cast("array<struct<grp:int,gvec:array<float>>>")))
       }
     GateIndex(cellsLit, gcentsLit, coarseProbe = 4, booksLit,
-      spark.read.parquet(s"$path/cells"), m, kCodes, dsub)
+      spark.read.parquet(s"$path/cells"), m, kCodes, books.dsub)
   }
 
   /** The gate itself: `arrivals` carries (vec_id, embedding) — a

@@ -22,8 +22,8 @@ class PqSpec extends AnyFunSuite {
       .select((col("vec_id") + 1000000L).as("vec_id"), col("embedding"))
     Tables.registerOverride(spark, tdir, "embeddings", base.unionAll(dup))
     val e = Tables.embeddings(spark, tdir).select("vec_id", "embedding")
-    val books = operators.PQ.codebooks(spark, e, m = 8, kCodes = 16, dims = 64, iters = 1)
-    val codes = operators.PQ.encode(spark, e, books, m = 8, dims = 64)
+    val books = operators.PQ.codebooks(e, m = 8, kCodes = 16, iters = 1)
+    val codes = operators.PQ.encode(e, books)
       .collect().map(r => r.getLong(0) -> r.getSeq[Int](1)).toMap
     assert(codes.values.forall(_.length == 8), "m codes per vector")
     assert(codes(0L) == codes(1000000L), "identical vectors must quantize identically")
@@ -153,10 +153,13 @@ class PqSpec extends AnyFunSuite {
       .filter(col("vec_id") < 3)
     Tables.registerOverride(spark, tdir, "embeddings", base)
     val e = Tables.embeddings(spark, tdir).select("vec_id", "embedding")
-    val books = operators.PQ.codebooks(spark, e, m = 8, kCodes = 16, dims = 64, iters = 1)
-    assert(books.count() == 8 * 16, "books must be the full m×kCodes grid")
+    val books = operators.PQ.codebooks(e, m = 8, kCodes = 16, iters = 1)
+    assert(operators.PQ.booksFrame(spark, books).count() == 8 * 16,
+      "books must be the full m×kCodes grid")
+    assert((3 until 16).forall(c => books.words(books.at(0, c)) == Float.MaxValue),
+      "an unseeded code carries the far-point sentinel")
     // sentinel codewords are never the nearest — codes stay in range
-    val codes = operators.PQ.encode(spark, e, books, m = 8, dims = 64)
+    val codes = operators.PQ.encode(e, books)
       .select(explode(col("codes"))).as[Int].collect()
     assert(codes.forall(c => c >= 0 && c < 16))
     assert(codes.toSet.size <= 3, "only seeded codes can win assignment")
@@ -183,9 +186,9 @@ class PqSpec extends AnyFunSuite {
     // frozen-books law: the increment equals the full encode of the
     // whole corpus under the STORED books, restricted to the delta —
     // quantization is a pure per-vector function of (vector, books)
-    val books = spark.read.parquet(s"$path/books")
+    val books = operators.PQ.readBooks(spark, s"$path/books", m = 8, kCodes = 16)
     val e = Tables.embeddings(spark, dir).select("vec_id", "embedding")
-    val fullAll = keyed(operators.PQ.encode(spark, e, books, m = 8, dims = 64).collect())
+    val fullAll = keyed(operators.PQ.encode(e, books).collect())
     assert(out == fullAll.filter(_._1 % 16 == 0), "increments commute with full encodes")
     // append: base ∪ delta == the full frozen-books encode; idempotent
     operators.PQ.appendDelta(spark, dir)
@@ -215,14 +218,14 @@ class PqSpec extends AnyFunSuite {
     val allCells = operators.Vectors.assignCells(e, cents, nProbe = 1,
         nCoarse = operators.Vectors.autoCoarse(lists))
       .select("vec_id", "cell")
-    val allCoded = operators.PQ.encode(spark, e, books, m = 8, dims = 64)
+    val allCoded = operators.PQ.encode(e, operators.PQ.readBooks(spark, s"$path/books", m = 8, kCodes = 16))
       .join(allCells, "vec_id")
     val q = e.filter(col("vec_id") < 5)
     val probes = operators.Vectors.assignCells(q, cents, nProbe = 3,
         nCoarse = operators.Vectors.autoCoarse(lists))
       .select(col("vec_id").as("query_id"), col("cell"))
     val expected = operators.PQ.frozenStructureScan(
-      allCoded.join(probes, Seq("cell")), q, books, k = 10, kCodes = 16, m = 8, dims = 64)
+      allCoded.join(probes, Seq("cell")), q, books, k = 10, kCodes = 16, m = 8)
       .collect().toSeq
     assert(got == expected,
       "increments must commute: base-index + frozen-structure delta == full frozen-structure scan")
