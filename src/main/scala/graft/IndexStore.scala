@@ -1,7 +1,8 @@
 package graft
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** The on-disk index lifecycle, stated once for every persisted index
   * family — the build/read split of the reference's vector store
@@ -27,9 +28,16 @@ import org.apache.spark.sql.SparkSession
   * `Tables.registerOverride` changes it like a rewrite does.
   *
   * Fact lines. A build may record what it resolved (`lists|N`, the
-  * IVF-PQ list count; `rblk|N`, the graph's edge-bucket count), and a
-  * compaction adds `compacted|true`, each as a `name|value` line after
-  * the identity. Facts are not identity; [[fact]] is their one reader.
+  * IVF-PQ list count; `rblk|N`, the graph's edge-bucket count;
+  * `schema.<component>|<json>`, a component's read schema, returned by
+  * [[write]]), and a compaction adds `compacted|true`, each as a
+  * `name|value` line after the identity. Facts are not identity;
+  * [[fact]] is their one reader. [[read]] opens a component with its
+  * recorded schema, so the read runs no parquet schema-inference job;
+  * a component with no recorded schema reads plainly. Families that
+  * record schemas carry `schema=1` in their params, so an index of
+  * theirs built before schemas were recorded reads stale and is
+  * rebuilt once instead of paying the inference job on every read.
   *
   * Freshness. An index is fresh when every component, after
   * restore-if-parked, holds `_SUCCESS`, and the watermark equals the
@@ -135,6 +143,32 @@ object IndexStore {
     readWatermark(spark, path).flatMap(_.linesIterator.collectFirst {
       case l if l.startsWith(name + "|") => l.stripPrefix(name + "|")
     })
+
+  /** The fact lines the watermark at `path` records after `identity`. */
+  def facts(spark: SparkSession, path: String, identity: String): Seq[String] =
+    readWatermark(spark, path).filter(_.startsWith(identity + "\n")).toSeq
+      .flatMap(_.stripPrefix(identity + "\n").linesIterator)
+
+  /** Write `df` as component `name` of the index at `path`
+    * (overwrite, partitioned by `partitionBy`) and return its schema
+    * fact: the schema a read of the component sees, data columns then
+    * partition columns.
+    */
+  def write(df: DataFrame, path: String, name: String, partitionBy: String*): String = {
+    df.write.mode("overwrite").partitionBy(partitionBy: _*).parquet(s"$path/$name")
+    val fields = df.schema.filterNot(f => partitionBy.contains(f.name)) ++ partitionBy.map(df.schema(_))
+    s"schema.$name|" + StructType(fields).json
+  }
+
+  /** Component `name` of the index at `path`, read with the schema
+    * recorded for component `like` (a delta stored in its base's
+    * layout reads with the base's schema), or plainly when none is.
+    */
+  def read(spark: SparkSession, path: String, name: String, like: Option[String] = None): DataFrame = {
+    val schema = fact(spark, path, s"schema.${like.getOrElse(name)}")
+    schema.fold(spark.read)(json => spark.read.schema(DataType.fromJson(json).asInstanceOf[StructType]))
+      .parquet(s"$path/$name")
+  }
 
   def readSmall(spark: SparkSession, file: String): Option[String] = {
     val fs = fsFor(spark, file)

@@ -823,6 +823,33 @@ object SparkEntry {
           |SELECT chat_id, forwarded_from, n, rk FROM r WHERE rk <= 5
           |ORDER BY chat_id, rk""".stripMargin)
 
+  /** q19b's oracle, also q48's: the persisted-index probe is
+    * value-identical to the per-query seeded IVF (VectorIndexSpec).
+    */
+  private val annIvfSeededSql: String =
+    """WITH seeds AS (
+       |  SELECT label, embedding FROM (
+       |    SELECT label, embedding, ROW_NUMBER() OVER (PARTITION BY label ORDER BY vec_id) AS rn
+       |    FROM embeddings) s WHERE rn = 1),
+       |probes AS (
+       |  SELECT query_id, label FROM (
+       |    SELECT q.vec_id AS query_id, s.label,
+       |      ROW_NUMBER() OVER (PARTITION BY q.vec_id
+       |        ORDER BY round(list_cosine_similarity(CAST(q.embedding AS DOUBLE[]), CAST(s.embedding AS DOUBLE[])), 6) DESC, s.label) AS crk
+       |    FROM embeddings q, seeds s WHERE q.vec_id < 5) p
+       |  WHERE crk <= 3),
+       |cand AS (
+       |  SELECT p.query_id, e.vec_id, e.label,
+       |    round(list_cosine_similarity(CAST(e.embedding AS DOUBLE[]), CAST(qq.embedding AS DOUBLE[])), 6) AS sim
+       |  FROM probes p
+       |  JOIN embeddings e ON e.label = p.label
+       |  JOIN embeddings qq ON qq.vec_id = p.query_id
+       |  WHERE e.vec_id <> p.query_id)
+       |SELECT query_id, vec_id, label, sim, CAST(rk AS INT) AS rk FROM (
+       |  SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY sim DESC, vec_id) AS rk
+       |  FROM cand) t
+       |WHERE rk <= 10 ORDER BY query_id, rk""".stripMargin
+
   private val oracleSqlBase: Map[String, String] = Map(
     "q01_temporal_sessions" ->
       s"""SELECT event_id, user_id, session_id
@@ -2391,29 +2418,7 @@ object SparkEntry {
         |  SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY sim DESC, vec_id) AS rk
         |  FROM cand) t
         |WHERE rk <= 10 ORDER BY query_id, rk""".stripMargin,
-    "q19b_ann_ivf_seeded" ->
-      """WITH seeds AS (
-        |  SELECT label, embedding FROM (
-        |    SELECT label, embedding, ROW_NUMBER() OVER (PARTITION BY label ORDER BY vec_id) AS rn
-        |    FROM embeddings) s WHERE rn = 1),
-        |probes AS (
-        |  SELECT query_id, label FROM (
-        |    SELECT q.vec_id AS query_id, s.label,
-        |      ROW_NUMBER() OVER (PARTITION BY q.vec_id
-        |        ORDER BY round(list_cosine_similarity(CAST(q.embedding AS DOUBLE[]), CAST(s.embedding AS DOUBLE[])), 6) DESC, s.label) AS crk
-        |    FROM embeddings q, seeds s WHERE q.vec_id < 5) p
-        |  WHERE crk <= 3),
-        |cand AS (
-        |  SELECT p.query_id, e.vec_id, e.label,
-        |    round(list_cosine_similarity(CAST(e.embedding AS DOUBLE[]), CAST(qq.embedding AS DOUBLE[])), 6) AS sim
-        |  FROM probes p
-        |  JOIN embeddings e ON e.label = p.label
-        |  JOIN embeddings qq ON qq.vec_id = p.query_id
-        |  WHERE e.vec_id <> p.query_id)
-        |SELECT query_id, vec_id, label, sim, CAST(rk AS INT) AS rk FROM (
-        |  SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY sim DESC, vec_id) AS rk
-        |  FROM cand) t
-        |WHERE rk <= 10 ORDER BY query_id, rk""".stripMargin,
+    "q19b_ann_ivf_seeded" -> annIvfSeededSql,
     "q44_dedup_emb_lsh" ->
       """WITH u AS (
         |  SELECT vec_id, embedding FROM embeddings
@@ -2565,29 +2570,7 @@ object SparkEntry {
     "q67d_ivfpq_indexed" -> pqIvfTopKSql(""),
     "q67f_ivfpq_incr" -> pqIvfTopKSql("WHERE vec_id % 16 <> 0"),
     "q67e_pq_encode_incr" -> pqEncodeIncrSql,
-    "q48_ivf_persisted" ->
-      """WITH seeds AS (
-        |  SELECT label, embedding FROM (
-        |    SELECT label, embedding, ROW_NUMBER() OVER (PARTITION BY label ORDER BY vec_id) AS rn
-        |    FROM embeddings) s WHERE rn = 1),
-        |probes AS (
-        |  SELECT query_id, label FROM (
-        |    SELECT q.vec_id AS query_id, s.label,
-        |      ROW_NUMBER() OVER (PARTITION BY q.vec_id
-        |        ORDER BY round(list_cosine_similarity(CAST(q.embedding AS DOUBLE[]), CAST(s.embedding AS DOUBLE[])), 6) DESC, s.label) AS crk
-        |    FROM embeddings q, seeds s WHERE q.vec_id < 5) p
-        |  WHERE crk <= 3),
-        |cand AS (
-        |  SELECT p.query_id, e.vec_id, e.label,
-        |    round(list_cosine_similarity(CAST(e.embedding AS DOUBLE[]), CAST(qq.embedding AS DOUBLE[])), 6) AS sim
-        |  FROM probes p
-        |  JOIN embeddings e ON e.label = p.label
-        |  JOIN embeddings qq ON qq.vec_id = p.query_id
-        |  WHERE e.vec_id <> p.query_id)
-        |SELECT query_id, vec_id, label, sim, CAST(rk AS INT) AS rk FROM (
-        |  SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY sim DESC, vec_id) AS rk
-        |  FROM cand) t
-        |WHERE rk <= 10 ORDER BY query_id, rk""".stripMargin,
+    "q48_ivf_persisted" -> annIvfSeededSql,
     "q48b_index_stats" ->
       """SELECT label AS cell, COUNT(*) AS n_vecs,
         |  CAST(MIN(len(embedding)) AS INT) AS dim,

@@ -78,7 +78,7 @@ object Analytics {
     // the drill-down passes re-derive sessions ONLY over the <= K
     // selected chats: the bounded driver collect (<= topK rows —
     // knowing which chats to open is the drill-down contract, same
-    // shape as VectorIndex's probed-cell collect) makes the filter
+    // shape as CellProbe.read's probed-cell collect) makes the filter
     // static, so the corpus-wide session window runs ONCE — ONE
     // collect materializes top, and the joins below broadcast a
     // driver-rebuilt local frame instead of re-embedding the full

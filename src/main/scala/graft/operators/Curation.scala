@@ -794,21 +794,18 @@ object Curation {
       .withColumn("is_exact_dup", lit(true))
     val deltaSh = Dedup.docShinglesOn(spark, delta)
       .withColumn("blk", element_at(col("sh"), 1))
-    // bounded driver collect: ≤ nBuckets bucket ids decide which
-    // index partitions the probe reads — partition pruning, not a
-    // scan. `pruneBuckets = false` skips the collect entirely: the
-    // filter is an IO-only optimization (pblk is a function of blk,
-    // so pruned rows can never match the blk-keyed join), and against
-    // a CACHED corpus side (the stream's per-batch gate) the pruning
-    // job costs more than the filter saves — a micro-batch delta
-    // touches most buckets anyway.
+    // the delta's shingle buckets decide which index partitions the
+    // probe reads ([[CellProbe.read]]). `pruneBuckets = false` skips
+    // the collect: the filter is an IO-only optimization (pblk is a
+    // function of blk, so pruned rows can never match the blk-keyed
+    // join), and against a CACHED corpus side (the stream's per-batch
+    // gate) the pruning job costs more than the filter saves — a
+    // micro-batch delta touches most buckets anyway.
     val corpusSh =
-      if (pruneBuckets) {
-        val pblks = deltaSh
-          .select(pmod(xxhash64(col("blk")), lit(nBuckets)).cast("int").as("pblk"))
-          .distinct().collect().map(_.getInt(0)).toSeq
-        corpusShingles.filter(col("pblk").isin(pblks: _*)).select("doc_id", "sh", "blk")
-      } else corpusShingles.select("doc_id", "sh", "blk")
+      (if (pruneBuckets)
+        CellProbe.read(deltaSh.select(pmod(xxhash64(col("blk")), lit(nBuckets)).cast("int").as("pblk"))
+          .distinct(), "pblk", corpusShingles, "pblk")._2
+      else corpusShingles).select("doc_id", "sh", "blk")
     val dprobe = deltaSh
       .select(col("blk"), col("doc_id").as("d"), col("sh").as("dsh"))
     val oldNear = corpusSh.join(dprobe, "blk")

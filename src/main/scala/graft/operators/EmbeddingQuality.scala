@@ -2,7 +2,6 @@ package graft.operators
 
 import graft.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Embedding-space data-quality operators for training-data curation:
@@ -49,12 +48,10 @@ object EmbeddingQuality {
     */
   def embeddingOutliers(spark: SparkSession, dir: String, bottomK: Int = 5): DataFrame = {
     val e = Tables.embeddings(spark, dir)
-    val w = Window.partitionBy("label").orderBy(col("csim").asc, col("vec_id"))
-    e.join(broadcast(labelCentroids(spark, dir)), "label")
-      .withColumn("csim", round(expr("cosine_sim(embedding, cvec)"), 6))
-      .withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= bottomK)
-      .select(col("vec_id"), col("label"), col("csim"), col("rk").cast("int").as("rk"))
+    CellProbe.topK(e.join(broadcast(labelCentroids(spark, dir)), "label")
+        .withColumn("csim", round(expr("cosine_sim(embedding, cvec)"), 6)),
+        "label", "csim", "vec_id", bottomK, ascending = true)
+      .select("vec_id", "label", "csim", "rk")
       .orderBy("label", "rk")
   }
 
@@ -73,14 +70,7 @@ object EmbeddingQuality {
     val anchors = e.filter(col("vec_id") % anchorMod === 0)
       .select(col("vec_id").as("anchor_id"), col("label").as("anchor_label"),
         col("embedding").as("avec"))
-    val w = Window.partitionBy("anchor_id").orderBy(col("sim").desc, col("vec_id"))
-    e.join(broadcast(anchors), col("label") =!= col("anchor_label"))
-      .withColumn("sim", round(expr("cosine_sim(embedding, avec)"), 6))
-      .withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= k)
-      .select(col("anchor_id"), col("anchor_label"), col("vec_id"), col("label"),
-        col("sim"), col("rk").cast("int").as("rk"))
-      .orderBy("anchor_id", "rk")
+    negativesTopK(e.join(broadcast(anchors), col("label") =!= col("anchor_label")), k)
   }
 
   /** q62b: IVF-pruned hard-negative mining — the 100 TB spelling of
@@ -146,18 +136,17 @@ object EmbeddingQuality {
     * inverted lists × anchors on cell EQUALITY, cross-label filter,
     * exact cosine, per-anchor top-k.
     */
-  private def mineFromCells(cellLists: DataFrame, probes: DataFrame, k: Int): DataFrame = {
-    val w = Window.partitionBy("anchor_id").orderBy(col("sim").desc, col("vec_id"))
-    cellLists
-      .join(probes, Seq("cell"))
-      .filter(col("label") =!= col("anchor_label"))
-      .withColumn("sim", round(expr("cosine_sim(embedding, avec)"), 6))
-      .withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= k)
-      .select(col("anchor_id"), col("anchor_label"), col("vec_id"), col("label"),
-        col("sim"), col("rk").cast("int").as("rk"))
+  private def mineFromCells(cellLists: DataFrame, probes: DataFrame, k: Int): DataFrame =
+    negativesTopK(cellLists.join(probes, Seq("cell")).filter(col("label") =!= col("anchor_label")), k)
+
+  /** Anchor × candidate pairs → the per-anchor top-k by 6dp cosine, in
+    * output order: q62's and q62b's shared tail.
+    */
+  private def negativesTopK(pairs: DataFrame, k: Int): DataFrame =
+    CellProbe.topK(pairs.withColumn("sim", round(expr("cosine_sim(embedding, avec)"), 6)),
+        "anchor_id", "sim", "vec_id", k)
+      .select("anchor_id", "anchor_label", "vec_id", "label", "sim", "rk")
       .orderBy("anchor_id", "rk")
-  }
 
   /** The IVF mining pipeline over an arbitrary (vec_id, label,
     * embedding) frame with the index built in-memory — the mining build's

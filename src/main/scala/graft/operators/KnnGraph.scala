@@ -99,11 +99,9 @@ object KnnGraph {
     */
   private[graft] def knnOn(e: DataFrame, k: Int): DataFrame = {
     val right = e.select(col("vec_id").as("nb_id"), col("embedding").as("nvec"))
-    val w = Window.partitionBy("vec_id").orderBy(col("sim").desc, col("nb_id"))
-    e.join(broadcast(right), col("vec_id") =!= col("nb_id"))
-      .withColumn("sim", round(expr("cosine_sim(embedding, nvec)"), 6))
-      .withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= k)
+    CellProbe.topK(e.join(broadcast(right), col("vec_id") =!= col("nb_id"))
+        .withColumn("sim", round(expr("cosine_sim(embedding, nvec)"), 6)),
+        "vec_id", "sim", "nb_id", k)
       .select(col("vec_id"), col("nb_id"), col("sim"), col("rk"))
   }
 
@@ -179,13 +177,11 @@ object KnnGraph {
     * on the production path.
     */
   private[graft] def scorePruneJoin(e: DataFrame, cand: DataFrame, k: Int): DataFrame = {
-    val w = Window.partitionBy("src").orderBy(col("sim").desc, col("dst"))
-    cand
-      .join(e.select(col("vec_id").as("src"), col("embedding").as("va")), "src")
-      .join(e.select(col("vec_id").as("dst"), col("embedding").as("vb")), "dst")
-      .withColumn("sim", round(expr("cosine_sim(va, vb)"), 6))
-      .withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= k)
+    CellProbe.topK(cand
+        .join(e.select(col("vec_id").as("src"), col("embedding").as("va")), "src")
+        .join(e.select(col("vec_id").as("dst"), col("embedding").as("vb")), "dst")
+        .withColumn("sim", round(expr("cosine_sim(va, vb)"), 6)),
+        "src", "sim", "dst", k)
       .select("src", "dst", "sim")
   }
 
@@ -657,18 +653,20 @@ object KnnGraph {
     val corpus = base.union(
       base.filter(col("vec_id") < nPlanted)
         .select((col("vec_id") + idOffset).as("vec_id"), col("embedding")))
-    val w = Window.partitionBy("src").orderBy(col("sim").desc, col("dst"))
     // one live descent per (corpus, params) — q92e runs the IDENTICAL
     // call on the identical corpus (VERDICT r20 item 3); the shared
     // frame is bit-identical, so both entries' results are unchanged
-    graft.Shared.leafFrame(spark, s"knn_descent:k=$k,it=$maxIters,sr=$sampleR", Seq(corpus))(
-        nnDescent(spark, corpus, k = k, maxIters = maxIters, sampleR = sampleR))
-      .filter(col("src") >= idOffset)
-      .withColumn("rk", row_number().over(w))
-      .filter(col("rk") === 1)
+    plantedHits(graft.Shared.leafFrame(spark, s"knn_descent:k=$k,it=$maxIters,sr=$sampleR", Seq(corpus))(
+      nnDescent(spark, corpus, k = k, maxIters = maxIters, sampleR = sampleR)), idOffset)
+  }
+
+  /** Each planted copy's (src ≥ idOffset) rank-1 edge as (query_id,
+    * hit_id): the planted gates' output.
+    */
+  private def plantedHits(edges: DataFrame, idOffset: Long): DataFrame =
+    CellProbe.topK(edges.filter(col("src") >= idOffset), "src", "sim", "dst", 1)
       .select((col("src") - idOffset).as("query_id"), col("dst").as("hit_id"))
       .orderBy("query_id")
-  }
 
   /** q92e: semantic clustering over the DESCENT graph — the
     * composition a 100 TB deployment actually runs (q92c certifies
@@ -798,7 +796,7 @@ object KnnGraph {
             modularRing: Boolean = false, nBuckets: Int = 0): IndexStore.Index =
     IndexStore.Index("knngraph", "embeddings",
         s"knngraph:k=$k,lists=$lists,iters=$maxIters," +
-          s"ring=${if (modularRing) "m" else "h"}$ringJ,blk=$nBuckets,arith=d2",
+          s"ring=${if (modularRing) "m" else "h"}$ringJ,blk=$nBuckets,arith=d2,schema=1",
         Seq("centroids", "cells", "edges")) { (spark, dir, path) =>
       val e = Tables.embeddings(spark, dir).select("vec_id", "embedding")
       // the SAME derivations nnDescent's init runs — both are pure
@@ -812,21 +810,21 @@ object KnnGraph {
       val cents = Vectors.refinedCentroids(e, nl, iters = 0)
       val cells = Vectors.assignCells(e, cents, nProbe = 1,
         nCoarse = Vectors.autoCoarse(nl)).select("vec_id", "cell")
-      cents.write.mode("overwrite").parquet(s"$path/centroids")
-      cells.write.mode("overwrite").parquet(s"$path/cells")
-      nnDescent(spark, e, k = k, lists = lists, maxIters = maxIters,
-          ringJ = ringJ, modularRing = modularRing)
-        .withColumn("pblk", pmod(xxhash64(col("src")), lit(nb)).cast("int"))
-        // one task per bucket's file set, not nTasks files per dir
-        // (the dedup index's repartition rule)
-        .repartition(col("pblk"))
-        .write.mode("overwrite").partitionBy("pblk").parquet(s"$path/edges")
+      val schemas = Seq(
+        IndexStore.write(cents, path, "centroids"),
+        IndexStore.write(cells, path, "cells"),
+        IndexStore.write(nnDescent(spark, e, k = k, lists = lists, maxIters = maxIters,
+            ringJ = ringJ, modularRing = modularRing)
+          .withColumn("pblk", pmod(xxhash64(col("src")), lit(nb)).cast("int"))
+          // one task per bucket's file set, not nTasks files per dir
+          // (the dedup index's repartition rule)
+          .repartition(col("pblk")), path, "edges", "pblk"))
       // the RESOLVED bucket count is a fact, not identity (the raw
       // param is the LAW's identity — lists=0's precedent); bucketsOf
       // must read the resolved value, and a dir listing can undercount
       // when a tiny test corpus leaves buckets empty, which would
       // silently mis-map pblk on the read side
-      Seq(s"rblk|$nb")
+      s"rblk|$nb" +: schemas
     }
 
   /** The bucket count the graph at `path` was written with. */
@@ -834,19 +832,14 @@ object KnnGraph {
     IndexStore.fact(spark, path, "rblk").map(_.toInt).getOrElse(
       throw new IllegalStateException(s"k-NN graph at $path records no rblk| fact"))
 
-  /** Prune-read the stored edge lists of a bounded node set: collect
-    * the nodes' pblk values (≤ nBuckets ints — knowing which buckets
-    * to open IS the index-read contract, VectorIndex.probe's rule)
-    * and filter the scan on the partition column, so only the touched
-    * buckets' files are ever opened.
+  /** The stored edge lists of a bounded node set, read pruned to the
+    * nodes' pblk buckets by [[CellProbe.read]].
     */
   private[graft] def edgesForNodes(spark: SparkSession, path: String,
                                    nodes: DataFrame, nodeCol: String): DataFrame = {
     val nb = bucketsOf(spark, path)
-    val blks = nodes.select(pmod(xxhash64(col(nodeCol)), lit(nb)).cast("int").as("pblk"))
-      .distinct().collect().map(_.getInt(0)).toSeq
-    spark.read.parquet(s"$path/edges")
-      .filter(col("pblk").isin(blks: _*))
+    val blks = nodes.select(pmod(xxhash64(col(nodeCol)), lit(nb)).cast("int").as("pblk")).distinct()
+    CellProbe.read(blks, "pblk", IndexStore.read(spark, path, "edges"), "pblk")._2
       .select("src", "dst", "sim")
   }
 
@@ -875,9 +868,9 @@ object KnnGraph {
                                  queries: DataFrame, k: Int = 10, beam: Int = 8,
                                  maxHops: Int = 3): DataFrame = {
     val lvl = StorageLevel.MEMORY_AND_DISK
-    val cents = spark.read.parquet(s"$path/centroids")
+    val cents = IndexStore.read(spark, path, "centroids")
     val lists = cents.count().toInt
-    val cellsDf = spark.read.parquet(s"$path/cells")
+    val cellsDf = IndexStore.read(spark, path, "cells")
     // size-routed edge source (r20, DupGraph's smallGraphThreshold
     // discipline): below the bound the whole store persists once —
     // the per-hop bucket-collect job's scheduling floor dominates a
@@ -886,7 +879,7 @@ object KnnGraph {
     // the 100× probe rows measure)
     val wholeEdges =
       if (cellsDf.count() <= wholeEdgeThreshold)
-        Some(spark.read.parquet(s"$path/edges")
+        Some(IndexStore.read(spark, path, "edges")
           .select(col("src"), col("dst")).persist(lvl))
       else None
     val q = queries.select(col("q_id"), col("q_emb")).persist(lvl)
@@ -976,8 +969,7 @@ object KnnGraph {
         prev._1.foreach(_.unpersist(false))
         prev._2.foreach(graft.Shared.unpersistRdd)
       })
-    val w = Window.partitionBy("q_id").orderBy(col("sim").desc, col("node"))
-    visited.withColumn("rk", row_number().over(w)).filter(col("rk") <= k)
+    CellProbe.topK(visited, "q_id", "sim", "node", k)
   }
 
   /** Below this stored-corpus size the walk persists the whole edge
@@ -1041,10 +1033,10 @@ object KnnGraph {
   private[graft] def knnGraphIncrementOn(spark: SparkSession, path: String,
                                          e: DataFrame, delta: DataFrame,
                                          k: Int = 10): DataFrame = {
-    val cents = spark.read.parquet(s"$path/centroids")
+    val cents = IndexStore.read(spark, path, "centroids")
     val lists = cents.count().toInt
-    val cellsDf = spark.read.parquet(s"$path/cells")
-    val edges = spark.read.parquet(s"$path/edges").select("src", "dst", "sim")
+    val cellsDf = IndexStore.read(spark, path, "cells")
+    val edges = IndexStore.read(spark, path, "edges").select("src", "dst", "sim")
     val d = delta.select(col("vec_id"), col("embedding"))
     val dCells = Vectors.assignCells(d, cents, nProbe = 1,
       nCoarse = Vectors.autoCoarse(lists)).select("vec_id", "cell")
@@ -1122,13 +1114,7 @@ object KnnGraph {
     val e = Tables.embeddings(spark, dir).select("vec_id", "embedding")
     val delta = e.filter(col("vec_id") < nPlanted)
       .select((col("vec_id") + idOffset).as("vec_id"), col("embedding"))
-    val w = Window.partitionBy("src").orderBy(col("sim").desc, col("dst"))
-    incrementShared(spark, path, e, delta, k)
-      .filter(col("src") >= idOffset)
-      .withColumn("rk", row_number().over(w))
-      .filter(col("rk") === 1)
-      .select((col("src") - idOffset).as("query_id"), col("dst").as("hit_id"))
-      .orderBy("query_id")
+    plantedHits(incrementShared(spark, path, e, delta, k), idOffset)
   }
 
   /** q92g: semantic clustering over the PERSISTED graph — the nightly
@@ -1220,12 +1206,9 @@ object KnnGraph {
     val e = Tables.embeddings(spark, dir).select("vec_id", "embedding")
     val queries = e.filter(col("vec_id") < nQueries)
       .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-    val wq = Window.partitionBy("q_id").orderBy(col("sim").desc, col("node"))
-    val walked = graphWalkOn(spark, path, e, queries,
+    val walked = CellProbe.topK(graphWalkOn(spark, path, e, queries,
         k = k + 1, beam = beam, maxHops = maxHops)
-      .filter(col("node") =!= col("q_id"))
-      .withColumn("rk2", row_number().over(wq))
-      .filter(col("rk2") <= k)
+      .filter(col("node") =!= col("q_id")), "q_id", "sim", "node", k)
       .select("q_id", "node")
     val brute = knnOn(e, k).filter(col("vec_id") < nQueries)
       .select(col("vec_id").as("q_id"), col("nb_id").as("node"))

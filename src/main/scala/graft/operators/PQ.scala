@@ -4,7 +4,6 @@ import graft.{IndexStore, Shared, Tables}
 import graft.functions.{PqBooks, PqEncode}
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.classic.ExpressionColumn
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
@@ -140,8 +139,9 @@ object PQ {
       org.apache.spark.sql.types.StructType.fromDDL("s INT, code INT, cvec ARRAY<FLOAT>"))
   }
 
-  private def writeBooks(spark: SparkSession, books: PqBooks, path: String): Unit =
-    booksFrame(spark, books).coalesce(1).write.mode("overwrite").parquet(path)
+  /** Write `books` as the `books` component of the index at `path`. */
+  private def writeBooks(spark: SparkSession, books: PqBooks, path: String): String =
+    IndexStore.write(booksFrame(spark, books).coalesce(1), path, "books")
 
   /** Stored books back on the driver, checked dense. */
   private[graft] def readBooks(spark: SparkSession, path: String, m: Int, kCodes: Int): PqBooks = {
@@ -185,16 +185,12 @@ object PQ {
     * join). Ranking ascends squared-L2 ADC distance, vec_id
     * tie-breaks; self-pairs drop.
     */
-  private def adcTopK(scored: DataFrame, k: Int, kCodes: Int): DataFrame = {
-    val w = Window.partitionBy("query_id").orderBy(col("adc"), col("vec_id"))
-    scored
-      .filter(col("vec_id") =!= col("query_id"))
-      .withColumn("adc", round(expr(s"pq_adc(codes, lut, $kCodes)"), 6))
-      .withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= k)
-      .select(col("query_id"), col("vec_id"), col("adc"), col("rk").cast("int").as("rk"))
+  private def adcTopK(scored: DataFrame, k: Int, kCodes: Int): DataFrame =
+    CellProbe.topK(scored.filter(col("vec_id") =!= col("query_id"))
+        .withColumn("adc", round(expr(s"pq_adc(codes, lut, $kCodes)"), 6)),
+        "query_id", "adc", "vec_id", k, ascending = true)
+      .select("query_id", "vec_id", "adc", "rk")
       .orderBy("query_id", "rk")
-  }
 
   /** Test seam: run the (LUT ⋈ ADC top-k) tail over an arbitrary
     * pre-joined (query_id, vec_id, codes) frame — PqSpec uses it to
@@ -228,7 +224,7 @@ object PQ {
     VectorIndex.defaultPath(spark, dir) + "_pq"
 
   def index(m: Int = 8, kCodes: Int = 16, iters: Int = 1): IndexStore.Index =
-    IndexStore.Index("pq", "embeddings", s"pq:m=$m,k=$kCodes,iters=$iters,arith=d2",
+    IndexStore.Index("pq", "embeddings", s"pq:m=$m,k=$kCodes,iters=$iters,arith=d2,schema=1",
       Seq("books", "codes"))(flatBody(m, kCodes, iters, lit(true)))
 
   def buildIndex(spark: SparkSession, dir: String, path: String,
@@ -243,10 +239,9 @@ object PQ {
                       (spark: SparkSession, dir: String, path: String): Seq[String] = {
     val e = Tables.embeddings(spark, dir).select("vec_id", "embedding").filter(keep)
     val books = codebooks(e, m, kCodes, iters)
-    writeBooks(spark, books, s"$path/books")
-    encode(e, books).write.mode("overwrite").parquet(s"$path/codes")
+    val facts = Seq(writeBooks(spark, books, path), IndexStore.write(encode(e, books), path, "codes"))
     dropDelta(spark, path)
-    Nil
+    facts
   }
 
   /** The IVF-PQ layout's build body (full index and incremental base):
@@ -273,17 +268,15 @@ object PQ {
     val Trained(books, n) = train(e, m, kCodes, iters)
     val lists = listsFor(nLists, n)
     val cents = Vectors.refinedCentroids(e, lists, iters = 0)
-    cents.select(col("c_cell").as("cell"), col("cvec"))
-      .write.mode("overwrite").parquet(s"$path/centroids")
-    writeBooks(spark, books, s"$path/books")
     val cells = Vectors.assignCells(e, cents, nProbe = 1, nCoarse = Vectors.autoCoarse(lists))
       .select("vec_id", "cell")
-    encode(e, books)
-      .join(cells, "vec_id")
-      .repartition(col("cell"))
-      .write.mode("overwrite").partitionBy("cell").parquet(s"$path/cells")
+    val facts = Seq(
+      IndexStore.write(cents.select(col("c_cell").as("cell"), col("cvec")), path, "centroids"),
+      writeBooks(spark, books, path),
+      IndexStore.write(encode(e, books).join(cells, "vec_id").repartition(col("cell")),
+        path, "cells", "cell"))
     dropDelta(spark, path)
-    Seq(s"lists|$lists")
+    s"lists|$lists" +: facts
   }
 
   /** A rebuild obsoletes any incremental delta: its codes were encoded
@@ -320,11 +313,9 @@ object PQ {
                     m: Int = 8, kCodes: Int = 16, iters: Int = 1): DataFrame = {
     val path = indexPath(spark, dir)
     index(m, kCodes, iters).ensure(spark, dir, path)
-    val books = spark.read.parquet(s"$path/books")
-    val codes = spark.read.parquet(s"$path/codes")
     val q = Tables.embeddings(spark, dir).filter(col("vec_id") < nQueries)
-    val luts = lutsFor(q, books, m)
-    adcTopK(codes.crossJoin(broadcast(luts)), k, kCodes)
+    val luts = lutsFor(q, IndexStore.read(spark, path, "books"), m)
+    adcTopK(IndexStore.read(spark, path, "codes").crossJoin(broadcast(luts)), k, kCodes)
   }
 
   /** q67b: IVF-PQ — the faiss-style composition and the standard
@@ -431,11 +422,8 @@ object PQ {
     *                          raw vectors, so a probed cell's read is
     *                          ~m ints per vector, not d floats.
     *
-    * A probe ranks nProbe cells against the stored centroids (tiny
-    * broadcast), collects the probed cell ids (bounded by
-    * nQueries·nProbe — knowing which inverted lists to open IS the
-    * index-probe contract, the q48 pattern), and partition-pruning
-    * skips every other cell's files: scan cost is
+    * A probe ([[CellProbe]]) ranks nProbe cells against the stored
+    * centroids and opens only those cells' files: scan cost is
     * (nProbe/nLists)·m bytes per corpus vector with ZERO build work.
     * Lifecycle: [[graft.IndexStore]]; m, kCodes, iters and nLists (as
     * passed) are identity.
@@ -445,36 +433,26 @@ object PQ {
 
   def ivfPqIndex(m: Int = 8, kCodes: Int = 16, iters: Int = 1, nLists: Int = 0): IndexStore.Index =
     IndexStore.Index("ivfpq", "embeddings",
-      s"ivfpq:m=$m,k=$kCodes,iters=$iters,nLists=$nLists,arith=d2",
+      s"ivfpq:m=$m,k=$kCodes,iters=$iters,nLists=$nLists,arith=d2,schema=1",
       Seq("books", "centroids", "cells"))(ivfPqBody(m, kCodes, iters, nLists, lit(true)))
 
-  /** The audited IVF-PQ probe tail, shared by ivfPqTopKIndexed (q67d)
-    * and ivfPqIncrTopK (q67f) so the next probe variant cannot drift
-    * from this shape (VERDICT r13 item 6): stored centroids rank
-    * nProbe cells per query; the probe set is collected ONCE — it is
-    * bounded by nQueries·nProbe rows, and BOTH its consumers want it
-    * static (the partition-pruning filter needs concrete cell values
-    * at plan time, and the scan-side join is cheapest as a broadcast
-    * local relation; the alternative re-runs the whole assignCells
-    * subtree — centroid ranking, windows — inside the probe query's
-    * DAG); `codesFor` maps the probed cell values to the caller's
-    * code store pruned to exactly those cells (one parquet store for
-    * q67d, base ∪ delta for q67f); stored codebooks feed the LUT and
-    * the ADC scan touches codes alone.
+  /** The IVF-PQ probe over a stored index, shared by
+    * ivfPqTopKIndexed (q67d) and ivfPqIncrTopK (q67f): the stored
+    * centroids rank nProbe cells per query through the two-level
+    * `assignCells` kernel (the build's own, so `lists` must be the
+    * build's resolved count), [[CellProbe]] prunes `codes` (the
+    * cell-partitioned code store) to the probed cells, the stored books
+    * feed the LUT and the ADC scan touches codes alone.
     */
-  private def probeAdcTopK(spark: SparkSession, q: DataFrame, cents: DataFrame,
-                           books: DataFrame, lists: Int, nProbe: Int,
-                           m: Int, k: Int, kCodes: Int)
-                          (codesFor: Seq[Any] => DataFrame): DataFrame = {
-    val probeRows = Vectors.assignCells(q, cents, nProbe = nProbe,
-        nCoarse = Vectors.autoCoarse(lists))
+  private def probeAdcTopK(spark: SparkSession, dir: String, path: String, codes: DataFrame,
+                           nQueries: Int, nProbe: Int, m: Int, k: Int, kCodes: Int): DataFrame = {
+    val q = Tables.embeddings(spark, dir).select("vec_id", "embedding").filter(col("vec_id") < nQueries)
+    val cents = IndexStore.read(spark, path, "centroids").select(col("cell").as("c_cell"), col("cvec"))
+    val ranked = Vectors.assignCells(q, cents, nProbe = nProbe,
+        nCoarse = Vectors.autoCoarse(storedLists(spark, path)))
       .select(col("vec_id").as("query_id"), col("cell"))
-    val collected = probeRows.collect()
-    val probedCells = collected.map(_.get(1)).distinct.toSeq
-    val probes = spark.createDataFrame(
-      java.util.Arrays.asList(collected: _*), probeRows.schema)
-    val coded = codesFor(probedCells)
-    val luts = lutsFor(q, books, m)
+    val (probes, coded) = CellProbe.read(ranked, "cell", codes, "cell")
+    val luts = lutsFor(q, IndexStore.read(spark, path, "books"), m)
     adcTopK(coded.join(broadcast(probes), Seq("cell")).join(broadcast(luts), "query_id"), k, kCodes)
   }
 
@@ -493,17 +471,7 @@ object PQ {
                        nLists: Int = 0, nProbe: Int = 3): DataFrame = {
     val path = ivfPqIndexPath(spark, dir)
     ivfPqIndex(m, kCodes, iters, nLists).ensure(spark, dir, path)
-    val books = spark.read.parquet(s"$path/books")
-    val cents = spark.read.parquet(s"$path/centroids")
-      .select(col("cell").as("c_cell"), col("cvec"))
-    val e = Tables.embeddings(spark, dir).select("vec_id", "embedding")
-    // lists must match the build's resolution exactly (autoCoarse is
-    // part of the probe RANKING and q67b-parity depends on it)
-    val lists = storedLists(spark, path)
-    val q = e.filter(col("vec_id") < nQueries)
-    probeAdcTopK(spark, q, cents, books, lists, nProbe, m, k, kCodes) { cells =>
-      spark.read.parquet(s"$path/cells").filter(col("cell").isin(cells: _*))
-    }
+    probeAdcTopK(spark, dir, path, IndexStore.read(spark, path, "cells"), nQueries, nProbe, m, k, kCodes)
   }
 
   /** q67e: INCREMENTAL PQ encode — the nightly WRITE path of the PQ
@@ -535,7 +503,7 @@ object PQ {
     */
   def incrIndex(m: Int = 8, kCodes: Int = 16, iters: Int = 1, deltaMod: Int = 16): IndexStore.Index =
     IndexStore.Index("pq_incr_base", "embeddings",
-      s"pqincr:m=$m,k=$kCodes,iters=$iters,deltaMod=$deltaMod,arith=d2",
+      s"pqincr:m=$m,k=$kCodes,iters=$iters,deltaMod=$deltaMod,arith=d2,schema=1",
       Seq("books", "codes"))(flatBody(m, kCodes, iters, col("vec_id") % deltaMod =!= 0))
 
   /** q67e driver entry: the delta's codes under the FROZEN base
@@ -608,14 +576,15 @@ object PQ {
     // a state this re-run converges from instead of double-counting
     if (hasDelta && !folded) {
       IndexStore.swapDir(spark, path, "codes") { tmp =>
-        spark.read.parquet(s"$path/codes")
-          .unionAll(spark.read.parquet(s"$path/codes_delta"))
+        IndexStore.read(spark, path, "codes")
+          .unionAll(IndexStore.read(spark, path, "codes_delta", Some("codes")))
           .write.parquet(tmp)
         IndexStore.markFolded(spark, tmp)
       }
     }
     dropDelta(spark, path)
-    IndexStore.writeWatermark(spark, path, id, Seq("compacted|true"))
+    IndexStore.writeWatermark(spark, path, id,
+      (IndexStore.facts(spark, path, id) :+ "compacted|true").distinct)
   }
 
   /** All codes the incremental index currently holds (base ∪ any
@@ -623,13 +592,13 @@ object PQ {
     */
   def incrCodes(spark: SparkSession, dir: String, deltaMod: Int = 16): DataFrame = {
     val path = incrIndexPath(spark, dir, deltaMod)
-    val base = spark.read.parquet(s"$path/codes")
+    val base = IndexStore.read(spark, path, "codes")
     // the _folded marker means the base already CONTAINS the delta
     // (a fold published but its delta-dir cleanup may not have run) —
     // unioning it again would double every delta vec_id
     if (!IndexStore.folded(spark, s"$path/codes") &&
         IndexStore.complete(spark, s"$path/codes_delta"))
-      base.unionAll(spark.read.parquet(s"$path/codes_delta"))
+      base.unionAll(IndexStore.read(spark, path, "codes_delta", Some("codes")))
     else base
   }
 
@@ -662,7 +631,7 @@ object PQ {
   def ivfPqIncrIndex(m: Int = 8, kCodes: Int = 16, iters: Int = 1, nLists: Int = 0,
                      deltaMod: Int = 16): IndexStore.Index =
     IndexStore.Index("ivfpq_incr_base", "embeddings",
-      s"ivfpqincr:m=$m,k=$kCodes,iters=$iters,nLists=$nLists,deltaMod=$deltaMod,arith=d2",
+      s"ivfpqincr:m=$m,k=$kCodes,iters=$iters,nLists=$nLists,deltaMod=$deltaMod,arith=d2,schema=1",
       Seq("books", "centroids", "cells"))(
       ivfPqBody(m, kCodes, iters, nLists, col("vec_id") % deltaMod =!= 0))
 
@@ -685,8 +654,7 @@ object PQ {
     // the flat index's appendDelta)
     if (compacted(spark, path) || IndexStore.folded(spark, s"$path/cells")) return
     val books = readBooks(spark, s"$path/books", m, kCodes)
-    val cents = spark.read.parquet(s"$path/centroids")
-      .select(col("cell").as("c_cell"), col("cvec"))
+    val cents = IndexStore.read(spark, path, "centroids").select(col("cell").as("c_cell"), col("cvec"))
     val lists = storedLists(spark, path)
     val delta = Tables.embeddings(spark, dir).select("vec_id", "embedding")
       .filter(col("vec_id") % deltaMod === 0)
@@ -704,8 +672,9 @@ object PQ {
     * (repartition on cell — each folded inverted list is rewritten as
     * one partition directory, so file counts stay bounded at
     * O(nLists) no matter how many nightly cycles ran) and rotate the
-    * watermark with the `compacted|true` fact, preserving the stored
-    * `lists|N` fact. Probes before/after are
+    * watermark with the `compacted|true` fact, keeping the build's
+    * facts (`lists|N`; the folded store keeps the cells' schema).
+    * Probes before/after are
     * value-identical (CompactionSpec): base ∪ delta and folded-base
     * hold the same (vec_id, codes, cell) rows, and partition pruning
     * applies to the folded store exactly as it did to both halves.
@@ -722,19 +691,17 @@ object PQ {
     val hasDelta = IndexStore.complete(spark, s"$path/codes_delta")
     val folded = IndexStore.folded(spark, s"$path/cells")
     if (!hasDelta && !folded) return
-    val lists = storedLists(spark, path)
     if (hasDelta && !folded) {
-      val cols = Seq(col("vec_id"), col("codes"), col("cell"))
       IndexStore.swapDir(spark, path, "cells") { tmp =>
-        spark.read.parquet(s"$path/cells").select(cols: _*)
-          .unionAll(spark.read.parquet(s"$path/codes_delta").select(cols: _*))
+        storedCodes(spark, path, withDelta = true)
           .repartition(col("cell"))
           .write.partitionBy("cell").parquet(tmp)
         IndexStore.markFolded(spark, tmp)
       }
     }
     dropDelta(spark, path)
-    IndexStore.writeWatermark(spark, path, id, Seq(s"lists|$lists", "compacted|true"))
+    IndexStore.writeWatermark(spark, path, id,
+      (IndexStore.facts(spark, path, id) :+ "compacted|true").distinct)
   }
 
   /** q67f driver entry: ensure the base index + nightly delta exist,
@@ -755,24 +722,24 @@ object PQ {
         !(IndexStore.complete(spark, s"$path/codes_delta") || compacted(spark, path) ||
           IndexStore.folded(spark, s"$path/cells")))
       appendDeltaIvfPq(spark, dir, deltaMod, m, kCodes, iters, nLists)
-    val books = spark.read.parquet(s"$path/books")
-    val cents = spark.read.parquet(s"$path/centroids")
-      .select(col("cell").as("c_cell"), col("cvec"))
-    val lists = storedLists(spark, path)
-    val e = Tables.embeddings(spark, dir).select("vec_id", "embedding")
-    val q = e.filter(col("vec_id") < nQueries)
-    probeAdcTopK(spark, q, cents, books, lists, nProbe, m, k, kCodes) { cells =>
-      // unionAll is positional — pin the column order on both stores
-      val cols = Seq(col("vec_id"), col("codes"), col("cell"))
-      val baseCodes = spark.read.parquet(s"$path/cells").select(cols: _*)
-      // _folded marker: the base already holds the delta (fold
-      // published, cleanup possibly unfinished) — unioning would
-      // double-count every delta vec_id in the ADC ranking
-      (if (!IndexStore.folded(spark, s"$path/cells") &&
-            IndexStore.complete(spark, s"$path/codes_delta"))
-          baseCodes.unionAll(spark.read.parquet(s"$path/codes_delta").select(cols: _*))
-        else baseCodes) // compacted: the folded base holds everything
-        .filter(col("cell").isin(cells: _*))
-    }
+    // _folded marker: the base already holds the delta (fold
+    // published, cleanup possibly unfinished) — unioning would
+    // double-count every delta vec_id in the ADC ranking; compacted:
+    // the folded base holds everything
+    val codes = storedCodes(spark, path, withDelta = !IndexStore.folded(spark, s"$path/cells") &&
+      IndexStore.complete(spark, s"$path/codes_delta"))
+    probeAdcTopK(spark, dir, path, codes, nQueries, nProbe, m, k, kCodes)
+  }
+
+  /** The composed incremental index's (vec_id, codes, cell) lists:
+    * the base cells, or base ∪ the nightly delta, which is stored in
+    * the cells' layout.
+    */
+  private def storedCodes(spark: SparkSession, path: String, withDelta: Boolean): DataFrame = {
+    // unionAll is positional — pin the column order on both stores
+    val cols = Seq(col("vec_id"), col("codes"), col("cell"))
+    val base = IndexStore.read(spark, path, "cells").select(cols: _*)
+    if (withDelta) base.unionAll(IndexStore.read(spark, path, "codes_delta", Some("cells")).select(cols: _*))
+    else base
   }
 }

@@ -2,9 +2,7 @@ package graft.operators
 
 import graft.{IndexStore, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
 
 /** Persisted IVF index lifecycle — the build/read split of the
   * reference's vector index surface (vector_store.py:105-214
@@ -50,17 +48,14 @@ object VectorIndex {
     * [[graft.IndexStore]].
     */
   val ivf: IndexStore.Index =
-    IndexStore.Index("ivf", "embeddings", "ivf:seeds=label", Seq("centroids", "cells")) {
+    IndexStore.Index("ivf", "embeddings", "ivf:seeds=label,schema=1", Seq("centroids", "cells")) {
       (spark, dir, path) =>
         val e = Tables.embeddings(spark, dir)
-        val seedW = Window.partitionBy("label").orderBy("vec_id")
-        e.withColumn("rn", row_number().over(seedW)).filter(col("rn") === 1)
-          .select(col("label"), col("embedding").as("svec"))
-          .write.mode("overwrite").parquet(s"$path/centroids")
-        e.select(col("vec_id"), col("label"), col("embedding"), col("label").as("cell"))
-          .repartition(col("cell")) // one task per cell's list, not nTasks files per dir
-          .write.mode("overwrite").partitionBy("cell").parquet(s"$path/cells")
-        Nil
+        Seq(
+          IndexStore.write(Vectors.labelSeeds(e), path, "centroids"),
+          IndexStore.write(e.select(col("vec_id"), col("label"), col("embedding"), col("label").as("cell"))
+            .repartition(col("cell")), // one task per cell's list, not nTasks files per dir
+            path, "cells", "cell"))
     }
 
   def build(spark: SparkSession, dir: String, path: String): Unit = ivf.build(spark, dir, path)
@@ -113,7 +108,7 @@ object VectorIndex {
     */
   def mining(nLists: Int = 0, refineIters: Int = 0): IndexStore.Index =
     IndexStore.Index("ivf_mining", "embeddings",
-        s"mining:nLists=$nLists,refine=$refineIters,arith=d2", Seq("centroids", "cells")) {
+        s"mining:nLists=$nLists,refine=$refineIters,arith=d2,schema=1", Seq("centroids", "cells")) {
       (spark, dir, path) =>
         val e = Tables.embeddings(spark, dir).select("vec_id", "label", "embedding")
         val n = e.count()
@@ -156,20 +151,19 @@ object VectorIndex {
               spark.read.parquet(s"$path/coarse_groups"),
               spark.read.parquet(s"$path/coarse_fine"), nProbe = 1)
           }
-        cents.select(col("c_cell").as("cell"), col("cvec"))
-          .write.mode("overwrite").parquet(s"$path/centroids")
-        e.join(assign.select("vec_id", "cell"), "vec_id")
-          .select(col("vec_id"), col("label"), col("embedding"), col("cell"))
-          .repartition(col("cell")) // one task per cell's list, not nTasks files per dir
-          .write.mode("overwrite").partitionBy("cell").parquet(s"$path/cells")
-        Nil
+        Seq(
+          IndexStore.write(cents.select(col("c_cell").as("cell"), col("cvec")), path, "centroids"),
+          IndexStore.write(e.join(assign.select("vec_id", "cell"), "vec_id")
+            .select(col("vec_id"), col("label"), col("embedding"), col("cell"))
+            .repartition(col("cell")), // one task per cell's list, not nTasks files per dir
+            path, "cells", "cell"))
     }
 
   def miningPath(spark: SparkSession, dir: String): String =
     defaultPath(spark, dir) + "_mine"
 
   def centroids(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(s"$path/centroids")
+    IndexStore.read(spark, path, "centroids")
 
   /** The index's PERSISTED coarse structure — (gcents, fine) as
     * written by the `mining` build. None for flat builds (nCoarse == 1,
@@ -185,7 +179,7 @@ object VectorIndex {
   }
 
   def cells(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(s"$path/cells")
+    IndexStore.read(spark, path, "cells")
 
   /** `get_index_stats` twin: per-cell inverted-list sizes + dims,
     * answered from the INDEX (not the base table).
@@ -200,45 +194,19 @@ object VectorIndex {
       .orderBy("cell")
 
   /** Probe the persisted index — value-identical to q19b (same seeds,
-    * same ranking), but candidates come from a partition-pruned read
-    * of the probed cells only. The probe rows (≤ nQueries·nProbe,
-    * each a query vector and a cell id) are collected ONCE and join
-    * back as a local relation — knowing which inverted lists to open
-    * IS the index-probe contract, so the pruning filter is static and
-    * visible to the scan, and the probe ranking never re-runs inside
-    * the candidate query (PQ.probeAdcTopK's tail). Both components are
-    * read with the schema `build` wrote, derived from the embeddings
-    * fields, so no call pays a schema-inference job.
+    * same ranking), with candidates from the probed cells' lists only:
+    * [[CellProbe]] ranks the stored seeds, collects the probes and
+    * prunes the cell-partitioned store to them.
     */
   def probe(spark: SparkSession, dir: String, path: String, k: Int = 10,
             nProbe: Int = 3, nQueries: Int = 5): DataFrame = {
-    val e = Tables.embeddings(spark, dir)
-    val label = e.schema("label")
-    val emb = e.schema("embedding")
-    val seeds = spark.read.schema(StructType(Seq(label, emb.copy(name = "svec"))))
-      .parquet(s"$path/centroids")
-    val q = e.filter(col("vec_id") < nQueries)
+    val q = Tables.embeddings(spark, dir).filter(col("vec_id") < nQueries)
       .select(col("vec_id").as("query_id"), col("embedding").as("qvec"))
-    val probeW = Window.partitionBy("query_id").orderBy(col("csim").desc, col("label"))
-    val probeRows = q.crossJoin(broadcast(seeds))
-      .withColumn("csim", round(expr("cosine_sim(qvec, svec)"), 6))
-      .withColumn("crk", row_number().over(probeW))
-      .filter(col("crk") <= nProbe)
+    val ranked = CellProbe.rank(q.crossJoin(broadcast(centroids(spark, path))),
+        "query_id", "label", Vectors.seededScore, nProbe)
       .select("query_id", "qvec", "label")
-    val collected = probeRows.collect()
-    val probes = spark.createDataFrame(java.util.Arrays.asList(collected: _*), probeRows.schema)
-    val probedCells = collected.map(_.get(2)).distinct.toSeq
-    val w = Window.partitionBy("query_id").orderBy(col("sim").desc, col("vec_id"))
-    spark.read.schema(StructType(Seq(e.schema("vec_id"), label, emb, label.copy(name = "cell"))))
-      .parquet(s"$path/cells")
-      .filter(col("cell").isin(probedCells: _*))
-      .join(broadcast(probes), Seq("label"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .withColumn("sim", round(expr("cosine_sim(embedding, qvec)"), 6))
-      .withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= k)
-      .select("query_id", "vec_id", "label", "sim", "rk")
-      .orderBy("query_id", "rk")
+    val (probes, lists) = CellProbe.read(ranked, "label", cells(spark, path), "cell")
+    Vectors.candidateTopK(lists.join(broadcast(probes), Seq("label")), k)
   }
 
   /** q48: the full lifecycle as one driver entry — build if absent

@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.Tables
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -39,10 +39,7 @@ object Vectors {
 
   /** q16: brute-force cosine top-k per query (similarity_search). */
   def vectorTopK(spark: SparkSession, dir: String, k: Int = 10, nQueries: Int = 5): DataFrame = {
-    val w = Window.partitionBy("query_id").orderBy(col("sim").desc, col("vec_id"))
-    scored(spark, dir, nQueries)
-      .withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= k)
+    CellProbe.topK(scored(spark, dir, nQueries), "query_id", "sim", "vec_id", k)
       .select("query_id", "vec_id", "sim", "rk")
       .orderBy("query_id", "rk")
   }
@@ -96,23 +93,35 @@ object Vectors {
       .groupBy("label")
       .agg(transform(array_sort(collect_list(struct(col("pos"), col("c")))),
         s => s.getField("c")).cast("array<float>").as("cvec"))
+    // the probe ranks on the UNROUNDED cosine, as q19's oracle does
+    cellSearch(e, centroids.select(col("label"), col("cvec").as("svec")),
+      expr("cosine_sim(qvec, svec)"), k, nProbe, nQueries)
+  }
+
+  /** The q19/q19b search over `e`'s label cells, represented by
+    * (label, svec): [[CellProbe]] ranks the cells by `cellScore` over
+    * (qvec, svec), then the probed cells' members join on label and
+    * rank by 6dp cosine — the unpruned twin of `VectorIndex.probe`.
+    */
+  private def cellSearch(e: DataFrame, cells: DataFrame, cellScore: Column, k: Int,
+                         nProbe: Int, nQueries: Int): DataFrame = {
     val q = e.filter(col("vec_id") < nQueries)
       .select(col("vec_id").as("query_id"), col("embedding").as("qvec"))
-    val probeW = Window.partitionBy("query_id").orderBy(col("csim").desc, col("label"))
-    val probes = q.crossJoin(broadcast(centroids))
-      .withColumn("csim", expr("cosine_sim(qvec, cvec)"))
-      .withColumn("crk", row_number().over(probeW))
-      .filter(col("crk") <= nProbe)
+    val probes = CellProbe.rank(q.crossJoin(broadcast(cells)), "query_id", "label", cellScore, nProbe)
       .select("query_id", "qvec", "label")
-    val w = Window.partitionBy("query_id").orderBy(col("sim").desc, col("vec_id"))
-    e.join(broadcast(probes), Seq("label"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .withColumn("sim", round(expr("cosine_sim(embedding, qvec)"), 6))
-      .withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= k)
+    candidateTopK(e.join(broadcast(probes), Seq("label")), k)
+  }
+
+  /** Candidates (query_id, qvec, vec_id, label, embedding) → the
+    * per-query top-k by 6dp cosine, self-pairs dropped, in output
+    * order: q19, q19b and q48's shared tail.
+    */
+  private[operators] def candidateTopK(cand: DataFrame, k: Int): DataFrame =
+    CellProbe.topK(cand.filter(col("vec_id") =!= col("query_id"))
+        .withColumn("sim", round(expr("cosine_sim(embedding, qvec)"), 6)),
+        "query_id", "sim", "vec_id", k)
       .select("query_id", "vec_id", "label", "sim", "rk")
       .orderBy("query_id", "rk")
-  }
 
   /** q19b: seed-vector IVF — same probe/prune shape as annIvf but
     * cells are represented by their min-vec_id member instead of a
@@ -124,26 +133,17 @@ object Vectors {
   def annIvfSeeded(spark: SparkSession, dir: String, k: Int = 10, nProbe: Int = 3,
                    nQueries: Int = 5): DataFrame = {
     val e = Tables.embeddings(spark, dir)
-    val seedW = Window.partitionBy("label").orderBy("vec_id")
-    val seeds = e.withColumn("rn", row_number().over(seedW)).filter(col("rn") === 1)
-      .select(col("label"), col("embedding").as("svec"))
-    val q = e.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("query_id"), col("embedding").as("qvec"))
-    val probeW = Window.partitionBy("query_id").orderBy(col("csim").desc, col("label"))
-    val probes = q.crossJoin(broadcast(seeds))
-      .withColumn("csim", round(expr("cosine_sim(qvec, svec)"), 6))
-      .withColumn("crk", row_number().over(probeW))
-      .filter(col("crk") <= nProbe)
-      .select("query_id", "qvec", "label")
-    val w = Window.partitionBy("query_id").orderBy(col("sim").desc, col("vec_id"))
-    e.join(broadcast(probes), Seq("label"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .withColumn("sim", round(expr("cosine_sim(embedding, qvec)"), 6))
-      .withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= k)
-      .select("query_id", "vec_id", "label", "sim", "rk")
-      .orderBy("query_id", "rk")
+    cellSearch(e, labelSeeds(e), seededScore, k, nProbe, nQueries)
   }
+
+  /** The seeded cells (label, svec): each label's min-vec_id member. */
+  private[operators] def labelSeeds(e: DataFrame): DataFrame =
+    e.withColumn("rn", row_number().over(Window.partitionBy("label").orderBy("vec_id")))
+      .filter(col("rn") === 1)
+      .select(col("label"), col("embedding").as("svec"))
+
+  /** The seeded-cell probe score: 6dp cosine of query and seed. */
+  private[operators] def seededScore: Column = round(expr("cosine_sim(qvec, svec)"), 6)
 
   /** q78: ANN RECALL@k — the index-quality metric every deployed ANN
     * system monitors (and the acceptance test for any nProbe/nLists
@@ -365,11 +365,8 @@ object Vectors {
     for (_ <- 1 to coarseIters) {
       val gc = centroidsOf(g.select(col("grp").as("cell"), col("cvec").as("embedding")))
         .select(col("c_cell").as("g_grp"), col("cvec").as("gvec"))
-      val wg = Window.partitionBy("c_cell").orderBy(col("gs").desc, col("g_grp"))
-      g = g.select("c_cell", "cvec").crossJoin(broadcast(gc))
-        .withColumn("gs", round(expr("cosine_sim(cvec, gvec)"), 6))
-        .withColumn("grk", row_number().over(wg))
-        .filter(col("grk") === 1)
+      g = CellProbe.rank(g.select("c_cell", "cvec").crossJoin(broadcast(gc)), "c_cell", "g_grp",
+          round(expr("cosine_sim(cvec, gvec)"), 6), 1)
         .select(col("c_cell"), col("cvec"), col("g_grp").as("grp"))
     }
     val gcents = centroidsOf(g.select(col("grp").as("cell"), col("cvec").as("embedding")))
@@ -383,12 +380,9 @@ object Vectors {
     require(nProbe >= 1, s"nProbe must be >= 1: $nProbe")
     require(nCoarse >= 1, s"nCoarse must be >= 1: $nCoarse")
     if (nCoarse == 1) {
-      val w = Window.partitionBy("vec_id").orderBy(col("s").desc, col("c_cell"))
-      vectors.crossJoin(broadcast(cents))
-        .withColumn("s", round(expr("cosine_sim(embedding, cvec)"), 6))
-        .withColumn("rk", row_number().over(w))
-        .filter(col("rk") <= nProbe)
-        .select(col("vec_id"), col("c_cell").as("cell"), col("s"))
+      CellProbe.rank(vectors.crossJoin(broadcast(cents)), "vec_id", "c_cell",
+          round(expr("cosine_sim(embedding, cvec)"), 6), nProbe)
+        .select(col("vec_id"), col("c_cell").as("cell"), col("csim").as("s"))
     } else {
       val (gcents, fine) = coarseStructure(cents, nCoarse, coarseIters)
       assignCellsStructured(vectors, gcents, fine, nProbe, coarseProbe)
@@ -405,19 +399,13 @@ object Vectors {
                                            gcents: DataFrame, fine: DataFrame,
                                            nProbe: Int, coarseProbe: Int = 4): DataFrame = {
     // vectors → top-coarseProbe coarse groups (N·nCoarse cosines)
-    val wc = Window.partitionBy("vec_id").orderBy(col("gs").desc, col("g_grp"))
-    val vg = vectors.crossJoin(broadcast(gcents))
-      .withColumn("gs", round(expr("cosine_sim(embedding, gvec)"), 6))
-      .withColumn("grk", row_number().over(wc))
-      .filter(col("grk") <= coarseProbe)
+    val vg = CellProbe.rank(vectors.crossJoin(broadcast(gcents)), "vec_id", "g_grp",
+        round(expr("cosine_sim(embedding, gvec)"), 6), coarseProbe)
       .select(col("vec_id"), col("embedding"), col("g_grp").as("grp"))
     // fine ranking within probed groups only — equality join on grp
-    val wf = Window.partitionBy("vec_id").orderBy(col("s").desc, col("c_cell"))
-    vg.join(fine, Seq("grp"))
-      .withColumn("s", round(expr("cosine_sim(embedding, cvec)"), 6))
-      .withColumn("rk", row_number().over(wf))
-      .filter(col("rk") <= nProbe)
-      .select(col("vec_id"), col("c_cell").as("cell"), col("s"))
+    CellProbe.rank(vg.join(fine, Seq("grp")), "vec_id", "c_cell",
+        round(expr("cosine_sim(embedding, cvec)"), 6), nProbe)
+      .select(col("vec_id"), col("c_cell").as("cell"), col("csim").as("s"))
   }
 
   /** q42: embedding corpus statistics — per-label vector counts and

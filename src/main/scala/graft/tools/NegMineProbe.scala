@@ -1,9 +1,8 @@
 package graft.tools
 
 import graft.Tables
-import graft.operators.{EmbeddingQuality, VectorIndex, Vectors}
+import graft.operators.{CellProbe, EmbeddingQuality, VectorIndex, Vectors}
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Dev tool: measures hard-negative mining cost — the r06-flagged
@@ -70,12 +69,7 @@ object NegMineProbe {
     val anchors = e.filter(col("vec_id") % 101 === 0)
       .select(col("vec_id").as("anchor_id"), col("label").as("anchor_label"),
         col("embedding").as("avec"))
-    val wb = Window.partitionBy("anchor_id").orderBy(col("sim").desc, col("vec_id"))
-    val bruteUncached = e.join(broadcast(anchors), col("label") =!= col("anchor_label"))
-      .withColumn("sim", round(expr("cosine_sim(embedding, avec)"), 6))
-      .withColumn("rk", row_number().over(wb))
-      .filter(col("rk") <= k)
-      .select("anchor_id", "vec_id", "sim")
+    val bruteUncached = topNegatives(e.join(broadcast(anchors), col("label") =!= col("anchor_label")), k)
     bruteUncached.write.format("noop").mode("overwrite").save() // warm
     val tBrute = time(bruteUncached.write.format("noop").mode("overwrite").save())
     val brute = bruteUncached.cache()
@@ -98,12 +92,7 @@ object NegMineProbe {
             cents, nProbe = nProbe, nCoarse = Vectors.autoCoarse(lists))
           .join(anchors, col("vec_id") === col("anchor_id"))
           .select(col("anchor_id"), col("anchor_label"), col("avec"), col("cell"))
-        cells.join(probes, Seq("cell"))
-          .filter(col("label") =!= col("anchor_label"))
-          .withColumn("sim", round(expr("cosine_sim(embedding, avec)"), 6))
-          .withColumn("rk", row_number().over(wb))
-          .filter(col("rk") <= k)
-          .select("anchor_id", "vec_id", "sim")
+        topNegatives(cells.join(probes, Seq("cell")).filter(col("label") =!= col("anchor_label")), k)
       }
       ivf.write.format("noop").mode("overwrite").save() // warm
       val tIvf = time(ivf.write.format("noop").mode("overwrite").save())
@@ -116,6 +105,14 @@ object NegMineProbe {
     spark.stop()
   }
 
+  /** Anchor × candidate pairs → (anchor_id, vec_id, sim), the
+    * per-anchor top-k by 6dp cosine (q62's ranking).
+    */
+  private def topNegatives(pairs: DataFrame, k: Int): DataFrame =
+    CellProbe.topK(pairs.withColumn("sim", round(expr("cosine_sim(embedding, avec)"), 6)),
+        "anchor_id", "sim", "vec_id", k)
+      .select("anchor_id", "vec_id", "sim")
+
   private def sweep(spark: SparkSession, raw: DataFrame, k: Int): Unit = {
     Seq(0, 1, 2).foreach { iters =>
       val e = raw.cache()
@@ -123,12 +120,7 @@ object NegMineProbe {
       val anchors = e.filter(col("vec_id") % 101 === 0)
         .select(col("vec_id").as("anchor_id"), col("label").as("anchor_label"),
           col("embedding").as("avec"))
-      val wb = Window.partitionBy("anchor_id").orderBy(col("sim").desc, col("vec_id"))
-      def brute = e.join(broadcast(anchors), col("label") =!= col("anchor_label"))
-        .withColumn("sim", round(expr("cosine_sim(embedding, avec)"), 6))
-        .withColumn("rk", row_number().over(wb))
-        .filter(col("rk") <= k)
-        .select("anchor_id", "vec_id", "sim")
+      def brute = topNegatives(e.join(broadcast(anchors), col("label") =!= col("anchor_label")), k)
 
       // mining-index probe over the replicated corpus (same kernel as
       // q62b, built inline because the corpus is synthetic here)
@@ -146,12 +138,7 @@ object NegMineProbe {
             cents, nProbe = 3, nCoarse = Vectors.autoCoarse(lists))
           .join(anchors, col("vec_id") === col("anchor_id"))
           .select(col("anchor_id"), col("anchor_label"), col("avec"), col("cell"))
-        cells.join(probes, Seq("cell"))
-          .filter(col("label") =!= col("anchor_label"))
-          .withColumn("sim", round(expr("cosine_sim(embedding, avec)"), 6))
-          .withColumn("rk", row_number().over(wb))
-          .filter(col("rk") <= k)
-          .select("anchor_id", "vec_id", "sim")
+        topNegatives(cells.join(probes, Seq("cell")).filter(col("label") =!= col("anchor_label")), k)
       }
       brute.write.format("noop").mode("overwrite").save()
       ivf.write.format("noop").mode("overwrite").save()

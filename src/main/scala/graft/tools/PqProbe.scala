@@ -1,8 +1,7 @@
 package graft.tools
 
 import graft.Tables
-import graft.operators.PQ
-import org.apache.spark.sql.expressions.Window
+import graft.operators.{CellProbe, PQ}
 import org.apache.spark.sql.functions._
 
 /** Dev tool: PQ quality/cost curve — recall@10 of the ADC scan vs the
@@ -21,11 +20,9 @@ object PqProbe {
     val dims = e.select(size(col("embedding"))).head.getInt(0)
     val q = e.filter(col("vec_id") < 5)
       .select(col("vec_id").as("query_id"), col("embedding").as("qvec"))
-    val w = Window.partitionBy("query_id").orderBy(col("d"), col("vec_id"))
-    val exact = e.crossJoin(broadcast(q))
-      .filter(col("vec_id") =!= col("query_id"))
-      .withColumn("d", expr("l2_sq(embedding, qvec)"))
-      .withColumn("rk", row_number().over(w)).filter(col("rk") <= 10)
+    val exact = CellProbe.topK(e.crossJoin(broadcast(q))
+        .filter(col("vec_id") =!= col("query_id"))
+        .withColumn("d", expr("l2_sq(embedding, qvec)")), "query_id", "d", "vec_id", 10, ascending = true)
       .select("query_id", "vec_id").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     println(s"PQ-PROBE n=$n dims=$dims float_bytes=${n * dims * 4}")

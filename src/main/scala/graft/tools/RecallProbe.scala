@@ -1,7 +1,7 @@
 package graft.tools
 
 import graft.Tables
-import graft.operators.KnnGraph
+import graft.operators.{CellProbe, KnnGraph}
 
 /** NN-descent quality probe: recall@k vs the exact graph at sf0.001
   * across (sampleR, ringJ, lists) settings. The r18 sweep that set
@@ -39,12 +39,10 @@ object RecallProbe {
           .select((col("vec_id") + off).as("q_id"), col("embedding").as("q_emb"))
         // brute-force reference: top-10 by (6dp sim desc, node asc) —
         // the walk's own ranking rule — EXCLUDING the query itself
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy("q_id").orderBy(col("sim").desc, col("node"))
-        val brute = e.select(col("vec_id").as("node"), col("embedding"))
-          .join(broadcast(queries), col("node") =!= col("q_id") - off)
-          .withColumn("sim", round(expr("cosine_sim(embedding, q_emb)"), 6))
-          .withColumn("rk", row_number().over(w)).filter(col("rk") <= k)
+        val brute = CellProbe.topK(e.select(col("vec_id").as("node"), col("embedding"))
+            .join(broadcast(queries), col("node") =!= col("q_id") - off)
+            .withColumn("sim", round(expr("cosine_sim(embedding, q_emb)"), 6)),
+            "q_id", "sim", "node", k)
           .select("q_id", "node").collect()
           .groupBy(_.getLong(0)).view.mapValues(_.map(_.getLong(1)).toSet).toMap
         for (beam <- Seq(4, 8, 16); hops <- Seq(2, 3, 5)) {

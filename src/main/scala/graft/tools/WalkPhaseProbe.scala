@@ -1,7 +1,7 @@
 package graft.tools
 
 import graft.Tables
-import graft.operators.{KnnGraph, Vectors}
+import graft.operators.{CellProbe, KnnGraph, Vectors}
 import org.apache.spark.sql.functions._
 
 /** Dev probe (r21): where does q93's wall-clock go — the graph's
@@ -91,9 +91,7 @@ object WalkPhaseProbe {
       latest = fresh
     }
     t("final rank + noop") {
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy("q_id").orderBy(col("sim").desc, col("node"))
-      visited.withColumn("rk", row_number().over(w)).filter(col("rk") <= 10)
+      CellProbe.topK(visited, "q_id", "sim", "node", 10)
         .write.format("noop").mode("overwrite").save()
     }
     spark.stop()

@@ -37,13 +37,8 @@ class FunnelIndexSpec extends AnyFunSuite {
     // read; its scan must carry a pblk partition filter so non-probed
     // buckets' files never open
     operators.Curation.funnelDeltaIndexed(spark, TestSpark.dir).collect() // ensure built
-    val plan = operators.Curation.funnelDeltaIndexed(spark, TestSpark.dir)
-      .queryExecution.executedPlan.toString
-    assert(plan.contains("PartitionFilters: [pblk"),
-      s"shingle index scan must push a partition filter on pblk:\n$plan")
-    assert("pblk#\\d+ IN".r.findFirstIn(plan).isDefined
-      || (plan.contains("pblk#") && plan.contains(" IN (")),
-      s"partition filter must be a static IN over probed buckets:\n$plan")
+    assertStaticPrune(operators.Curation.funnelDeltaIndexed(spark, TestSpark.dir)
+      .queryExecution.executedPlan.toString, "pblk")
   }
 
   test("changed params or source mark the index stale; same params stay fresh") {

@@ -16,6 +16,20 @@ object TestSpark {
     s
   }
   val dir = "/root/testdata/sf0.001"
+
+  /** Assert that `plan` (an executed plan's text) holds at least
+    * `scans` file scans pruned statically on partition column
+    * `column`: the scan line's `PartitionFilters` open with `column IN (`
+    * or, past `spark.sql.optimizer.inSetConversionThreshold` values,
+    * `column INSET` over literal values — a dynamic-pruning subquery
+    * or a filter above the scan does not count.
+    */
+  def assertStaticPrune(plan: String, column: String, scans: Int = 1): Unit = {
+    val filter = s"PartitionFilters: \\[$column#\\d+L? (IN \\(|INSET )".r
+    val pruned = plan.linesIterator.count(l => filter.findFirstIn(l).isDefined)
+    org.scalatest.Assertions.assert(pruned >= scans,
+      s"expected $scans scan(s) with a static IN partition filter on $column, found $pruned:\n$plan")
+  }
 }
 
 /** Per-operator invariants at sf0.001. Value-level correctness is

@@ -57,6 +57,22 @@ class IndexStoreSpec extends AnyFunSuite {
     assert(IndexStore.fact(spark, path, "compacted").contains("true"))
   }
 
+  test("a component reads with its recorded schema: no inference job, the plain read's schema") {
+    val path = tempDir("graft_idx_schema")
+    VectorIndex.ivf.build(spark, dir, path) // one flat and one cell-partitioned component
+    VectorIndex.ivf.components.foreach { c =>
+      assert(IndexStore.fact(spark, path, s"schema.$c").isDefined, s"$c records its schema")
+      val (df, jobs) = org.apache.spark.JobCounter.jobsDuring(spark.sparkContext)(
+        IndexStore.read(spark, path, c))
+      assert(jobs == 0, s"reading $c ran $jobs jobs")
+      assert(df.schema == spark.read.parquet(s"$path/$c").schema)
+    }
+    // an index whose build recorded no schema reads plainly
+    val plain = tempDir("graft_idx_noschema")
+    twoPart("p").build(spark, dir, plain)
+    assert(IndexStore.read(spark, plain, "a").count() == 3)
+  }
+
   test("re-registering an override makes q48's index and the k-NN graph stale; both serve the new rows") {
     val all = Tables.embeddings(spark, dir)
     val x = all.filter(col("vec_id") < 200)

@@ -16,7 +16,9 @@ class JobBudgetSpec extends AnyFunSuite {
 
   private val warm = Seq(
     "q02_session_stats" -> 2, "q43_chat_stats" -> 3, "q51_chats_overview" -> 2,
-    "q22_region_volume" -> 7, "q48_ivf_persisted" -> 6, "q14_groups" -> 1)
+    "q22_region_volume" -> 7, "q48_ivf_persisted" -> 6, "q14_groups" -> 1,
+    "q19_ann_ivf" -> 7, "q19b_ann_ivf_seeded" -> 6, "q67d_ivfpq_indexed" -> 9,
+    "q67f_ivfpq_incr" -> 9, "q93_graph_walk" -> 42)
 
   warm.foreach { case (name, jobs) =>
     test(s"$name: at most $jobs Spark jobs per warm call") {

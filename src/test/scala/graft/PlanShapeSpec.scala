@@ -283,11 +283,8 @@ class PlanShapeSpec extends AnyFunSuite {
     operators.KnnGraph.graph().ensure(spark, dir, path)
     import spark.implicits._
     val nodes = Seq(0L, 1L, 2L).toDF("node")
-    val p = operators.KnnGraph.edgesForNodes(spark, path, nodes, "node")
-      .queryExecution.executedPlan.toString
-    val scanLine = p.linesIterator.find(_.contains("PartitionFilters"))
-    assert(scanLine.exists(l => l.contains("pblk") && l.contains(" IN ")),
-      s"edge scan must prune on the pblk partition column:\n$p")
+    assertStaticPrune(operators.KnnGraph.edgesForNodes(spark, path, nodes, "node")
+      .queryExecution.executedPlan.toString, "pblk")
   }
 
   test("q92 exact graph: broadcast corpus side, one per-node window shuffle + output sort") {

@@ -129,13 +129,8 @@ class PqSpec extends AnyFunSuite {
       "a fresh index must be read, not rebuilt")
     // the steady-state read: codes scan must partition-prune to the
     // probed cells (the layout's whole point — the q48 plan contract)
-    val plan = operators.PQ.ivfPqTopKIndexed(spark, dir, k = 10)
-      .queryExecution.executedPlan.toString
-    assert(plan.contains("PartitionFilters: [cell"),
-      s"q67d probe must push a partition filter on cell:\n$plan")
-    assert("cell#\\d+L? IN".r.findFirstIn(plan).isDefined
-      || plan.contains("cell#") && plan.contains(" IN ("),
-      s"partition filter must be a static IN over probed cells:\n$plan")
+    assertStaticPrune(operators.PQ.ivfPqTopKIndexed(spark, dir, k = 10)
+      .queryExecution.executedPlan.toString, "cell")
     // every build param is part of the index identity
     assert(!operators.PQ.ivfPqIndex(m = 4, kCodes = 16, iters = 1, nLists = 0).fresh(spark, dir, path))
     assert(!operators.PQ.ivfPqIndex(m = 8, kCodes = 16, iters = 2, nLists = 0).fresh(spark, dir, path))
@@ -243,6 +238,17 @@ class PqSpec extends AnyFunSuite {
     val deltaHits = got.count(_.getLong(1) % 16 == 0)
     assert(deltaHits > 0, s"appended delta vectors must be reachable through the probe: $got")
     fs.delete(new Path(path), true)
+  }
+
+  test("q67f probe prunes both the base lists and the unfolded delta to the probed cells") {
+    val path = operators.PQ.ivfPqIncrPath(spark, dir, 16)
+    val fs = new org.apache.hadoop.fs.Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    fs.delete(new org.apache.hadoop.fs.Path(path), true)
+    operators.PQ.ivfPqIncrTopK(spark, dir, k = 10).collect() // builds the base, appends the delta
+    assert(IndexStore.complete(spark, s"$path/codes_delta") && !IndexStore.folded(spark, s"$path/cells"))
+    assertStaticPrune(operators.PQ.ivfPqIncrTopK(spark, dir, k = 10)
+      .queryExecution.executedPlan.toString, "cell", scans = 2)
+    fs.delete(new org.apache.hadoop.fs.Path(path), true)
   }
 
   test("indexed PQ scan == per-call PQ scan; param change busts the index") {
