@@ -1,14 +1,18 @@
 package graft
 
 import org.apache.spark.sql.SparkSessionExtensions
-import org.apache.spark.sql.catalyst.plans.logical.{Generate, LogicalPlan, Sort}
+import org.apache.spark.sql.catalyst.expressions.{AttributeReference, InterpretedOrdering, SortOrder, Unevaluable}
+import org.apache.spark.sql.catalyst.plans.logical.{Generate, LocalRelation, LogicalPlan, Sort}
 import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
+import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.catalyst.trees.TreePattern.{LOCAL_RELATION, SORT}
 import org.apache.spark.sql.execution.{CoalesceExec, SortExec, SparkPlan, SparkStrategy}
 import org.apache.spark.sql.execution.adaptive.{LogicalQueryStage, QueryStageExec, ShuffleQueryStageExec}
 import org.apache.spark.sql.internal.SQLConf
 
 /** Session-extension entry point: injects every entry of
-  * `functions.GraftFunctions.table` and the planner strategy
+  * `functions.GraftFunctions.table`, the optimizer rule
+  * [[GraftExtensions.LocalSort]] and the planner strategy
   * [[GraftExtensions.InStageSort]] at session build time, so a cluster
   * enables the whole library surface with
   * `--conf spark.sql.extensions=graft.GraftExtensions`
@@ -18,11 +22,40 @@ import org.apache.spark.sql.internal.SQLConf
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     functions.GraftFunctions.table.foreach(f => ext.injectFunction((f.id, f.info, f.build)))
+    ext.injectOptimizerRule(_ => GraftExtensions.LocalSort)
     ext.injectPlannerStrategy(_ => GraftExtensions.InStageSort)
   }
 }
 
 object GraftExtensions {
+
+  /** A global sort over rows already on the driver runs on the driver.
+    *
+    * The Sort counterpart of Spark's `ConvertToLocalRelation`: a global
+    * `Sort` whose child is a non-streaming `LocalRelation` becomes a
+    * `LocalRelation` of the sorted rows, so collecting it runs no Spark
+    * job (planned, the sort ran a range exchange, its sampling job and
+    * a sort stage over a few hundred rows). The sort is stable and
+    * compares with Spark's interpreted ordering over the sort keys, so
+    * nulls first/last, NaN, -0.0 and collations order as in `SortExec`.
+    * There is no size bound: the rows are already in driver memory.
+    * A streaming relation, a sort within partitions and a sort key
+    * that is nondeterministic or cannot be evaluated stay as they are.
+    */
+  object LocalSort extends Rule[LogicalPlan] {
+    override def apply(plan: LogicalPlan): LogicalPlan =
+      plan.transformWithPruning(_.containsAllPatterns(SORT, LOCAL_RELATION)) {
+        case Sort(order, true, l: LocalRelation, _) if !l.isStreaming && order.forall(evaluable) =>
+          l.copy(data = l.data.sorted(new InterpretedOrdering(order, l.output)))
+      }
+
+    // attributes bind to the relation's output; any other unevaluable
+    // expression (a subquery, say) is left to the planner
+    private def evaluable(o: SortOrder): Boolean = o.deterministic && !o.child.exists {
+      case _: AttributeReference => false
+      case e => e.isInstanceOf[Unevaluable]
+    }
+  }
 
   /** A small global sort runs inside the stage that computes its input.
     *

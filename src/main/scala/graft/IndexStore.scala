@@ -28,7 +28,8 @@ import org.apache.spark.sql.types.{DataType, StructType}
   * `Tables.registerOverride` changes it like a rewrite does.
   *
   * Fact lines. A build may record what it resolved (`lists|N`, the
-  * IVF-PQ list count; `rblk|N`, the graph's edge-bucket count;
+  * IVF-PQ list count; `rblk|N`, `lists|N` and `nodes|N`, the graph's
+  * edge-bucket, centroid and node counts;
   * `schema.<component>|<json>`, a component's read schema, returned by
   * [[write]]), and a compaction adds `compacted|true`, each as a
   * `name|value` line after the identity. Facts are not identity;

@@ -1,6 +1,12 @@
 package graft
 
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.Footer
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
+import org.apache.spark.sql.types.StructType
 
 /** Loaders for the driver-generated testdata tables.
   *
@@ -20,11 +26,36 @@ object Tables {
     * and still resolve against deleted part files. A source
     * regeneration also invalidates a registered override (it was
     * built from the old bytes).
+    *
+    * A table stored as one file opens with its footer's schema (see
+    * [[footerSchema]]), so a path not read before runs no
+    * schema-inference job; a directory keeps Spark's inference.
     */
   private def read(spark: SparkSession, dir: String, name: String): DataFrame =
     Shared.get[DataFrame](spark, "tables", (spark, dir, name), sourceToken(spark, dir, name)) {
-      spark.read.parquet(s"$dir/$name.parquet")
+      val path = s"$dir/$name.parquet"
+      footerSchema(spark, path).fold(spark.read)(spark.read.schema(_)).parquet(path)
     }
+
+  /** The schema Spark infers for the single parquet file at `path`,
+    * read on the driver: the file's footer, converted by Spark's own
+    * footer reader and converter under the session conf (a Spark-written
+    * schema in the footer wins, as in inference). Inference reads the
+    * same footer inside a Spark job. None when `path` is absent or a
+    * directory. A type the conf rejects (TIMESTAMP(NANOS) without
+    * `nanosAsLong`) throws the same error inference does.
+    */
+  private def footerSchema(spark: SparkSession, path: String): Option[StructType] = {
+    val p = new Path(path)
+    val conf = spark.sessionState.newHadoopConf()
+    val fs = p.getFileSystem(conf)
+    Some(p).filter(fs.exists).map(fs.getFileStatus).filterNot(_.isDirectory).map { st =>
+      val footer = ParquetFooterReader.readFooter(
+        HadoopInputFile.fromStatus(st, conf), ParquetMetadataConverter.NO_FILTER)
+      ParquetFileFormat.readSchemaFromFooter(new Footer(p, footer),
+        new ParquetToSparkSchemaConverter(spark.sessionState.conf))
+    }
+  }
 
   /** Substitute a pre-materialized twin (e.g. a bucketed copy) for a
     * table — the bench's shared-table mechanism, the single-JVM

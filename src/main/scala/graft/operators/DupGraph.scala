@@ -38,7 +38,8 @@ import org.apache.spark.storage.StorageLevel
 object DupGraph {
 
   /** Connected components over an undirected edge list with columns
-    * (a, b). Returns (id, rep) where rep = min node id reachable.
+    * (a, b). Returns (id, rep, cluster_size) where rep = min node id
+    * reachable and cluster_size = the number of nodes with that rep.
     *
     * Size-based routing (the autoCoarse precedent): the min-label
     * fixpoint is unique, so HOW it is computed is free to vary with
@@ -48,9 +49,12 @@ object DupGraph {
     * driver agg per round) dominates actual work — a near-dup pair
     * graph at gate scale is ~25 edges paying ~1s of round latency.
     * An in-JVM union-find returns the identical (id, rep) set in
-    * microseconds (spec-pinned equal on planted graphs); anything
-    * larger takes the pointer-jumping loop, whose round count and
-    * state stay bounded at any corpus size.
+    * microseconds (spec-pinned equal on planted graphs) and counts
+    * the sizes there, as a local relation: a caller's projection and
+    * sort over it run on the driver (GraftExtensions.LocalSort).
+    * Anything larger takes the pointer-jumping loop, whose round count
+    * and state stay bounded at any corpus size, and sizes its
+    * components with one groupBy + join.
     */
   def connectedComponents(edges: DataFrame, maxRounds: Int = 30,
                           smallGraphThreshold: Long = 100000L): DataFrame = {
@@ -85,8 +89,10 @@ object DupGraph {
         val (ra, rb) = (find(a), find(b))
         if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
       }
-      val out = parent.keys.toSeq.map(id => (id, find(id)))
-      return edges.sparkSession.createDataset(out).toDF("id", "rep")
+      val reps = parent.keys.toSeq.map(id => id -> find(id))
+      val sizes = reps.groupMapReduce(_._2)(_ => 1L)(_ + _)
+      return edges.sparkSession.createDataset(reps.map { case (id, rep) => (id, rep, sizes(rep)) })
+        .toDF("id", "rep", "cluster_size")
     }
     var (state, stateRdd) = graft.Shared.leaf(
       sym.select(col("a").as("id")).distinct()
@@ -118,7 +124,8 @@ object DupGraph {
     // the session releases it
     graft.Shared.put(edges.sparkSession, "dupGraph.state", edges.sparkSession, stateRdd,
       release = graft.Shared.unpersistRdd)
-    state
+    state.join(state.groupBy(col("rep")).agg(count(lit(1)).as("cluster_size")), "rep")
+      .select("id", "rep", "cluster_size")
   }
 
   /** q53: duplicate clusters over the q26 near-dup pair set —
@@ -143,9 +150,7 @@ object DupGraph {
     val pairs = Dedup.dedupNgramPairs(spark, Dedup.docShingles(spark, dir),
         maxBlock = maxBlock)
       .select(col("doc_a").as("a"), col("doc_b").as("b"))
-    val comp = connectedComponents(pairs)
-    val sizes = comp.groupBy(col("rep")).agg(count(lit(1)).as("cluster_size"))
-    comp.join(sizes, "rep")
+    connectedComponents(pairs)
       .select(col("id").as("doc_id"), col("rep").as("cluster_rep"),
         col("cluster_size"), (col("id") === col("rep")).as("is_keep"))
       .orderBy("cluster_rep", "doc_id")

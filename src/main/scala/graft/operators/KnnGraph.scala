@@ -731,9 +731,7 @@ object KnnGraph {
         col("x.vec_id") === col("y.nb_id") && col("x.nb_id") === col("y.vec_id"))
       .where(col("x.vec_id") < col("x.nb_id") && col("x.sim") >= minSim)
       .select(col("x.vec_id").as("a"), col("x.nb_id").as("b"))
-    val comp = DupGraph.connectedComponents(mutual)
-    val sizes = comp.groupBy(col("rep")).agg(count(lit(1)).as("cluster_size"))
-    comp.join(sizes, "rep")
+    DupGraph.connectedComponents(mutual)
       .select(col("id").as("vec_id"), col("rep").as("cluster_rep"),
         col("cluster_size"), (col("id") === col("rep")).as("is_rep"))
       .orderBy("cluster_rep", "vec_id")
@@ -764,7 +762,8 @@ object KnnGraph {
     *   <path>/centroids/ — (c_cell, cvec) so that replay never touches
     *                       the corpus
     * Lifecycle: [[graft.IndexStore]]; the build records the RESOLVED
-    * bucket count as its `rblk|N` fact.
+    * bucket count as its `rblk|N` fact, and the centroid and cell
+    * counts the walk reads as `lists|N` and `nodes|N`.
     */
   def graphPath(spark: SparkSession, dir: String): String =
     VectorIndex.defaultPath(spark, dir) + "_knn"
@@ -790,13 +789,15 @@ object KnnGraph {
     * r19): stored sims must have been produced by the same fold
     * order/rounding the increment path scores with — a kernel change
     * bumps the token and invalidates old indexes instead of merging
-    * disagreeing sims.
+    * disagreeing sims. `counts=1` marks a graph that records its
+    * `lists|`/`nodes|` facts; one built before reads stale and is
+    * rebuilt once.
     */
   def graph(k: Int = 10, lists: Int = 0, maxIters: Int = 2, ringJ: Int = 10,
             modularRing: Boolean = false, nBuckets: Int = 0): IndexStore.Index =
     IndexStore.Index("knngraph", "embeddings",
         s"knngraph:k=$k,lists=$lists,iters=$maxIters," +
-          s"ring=${if (modularRing) "m" else "h"}$ringJ,blk=$nBuckets,arith=d2,schema=1",
+          s"ring=${if (modularRing) "m" else "h"}$ringJ,blk=$nBuckets,arith=d2,schema=1,counts=1",
         Seq("centroids", "cells", "edges")) { (spark, dir, path) =>
       val e = Tables.embeddings(spark, dir).select("vec_id", "embedding")
       // the SAME derivations nnDescent's init runs — both are pure
@@ -823,14 +824,20 @@ object KnnGraph {
       // param is the LAW's identity — lists=0's precedent); bucketsOf
       // must read the resolved value, and a dir listing can undercount
       // when a tiny test corpus leaves buckets empty, which would
-      // silently mis-map pblk on the read side
-      s"rblk|$nb" +: schemas
+      // silently mis-map pblk on the read side. The walk's centroid
+      // and node counts are facts too, counted once here: every vector
+      // lands in exactly one cell (nProbe = 1), so the cell store
+      // holds n rows
+      Seq(s"rblk|$nb", s"lists|${cents.count()}", s"nodes|$n") ++ schemas
     }
 
+  /** A value the graph at `path` recorded as a fact at build time. */
+  private def factOf(spark: SparkSession, path: String, name: String): Long =
+    IndexStore.fact(spark, path, name).map(_.toLong).getOrElse(
+      throw new IllegalStateException(s"k-NN graph at $path records no $name| fact"))
+
   /** The bucket count the graph at `path` was written with. */
-  private def bucketsOf(spark: SparkSession, path: String): Int =
-    IndexStore.fact(spark, path, "rblk").map(_.toInt).getOrElse(
-      throw new IllegalStateException(s"k-NN graph at $path records no rblk| fact"))
+  private def bucketsOf(spark: SparkSession, path: String): Int = factOf(spark, path, "rblk").toInt
 
   /** The stored edge lists of a bounded node set, read pruned to the
     * nodes' pblk buckets by [[CellProbe.read]].
@@ -869,7 +876,7 @@ object KnnGraph {
                                  maxHops: Int = 3): DataFrame = {
     val lvl = StorageLevel.MEMORY_AND_DISK
     val cents = IndexStore.read(spark, path, "centroids")
-    val lists = cents.count().toInt
+    val lists = factOf(spark, path, "lists").toInt
     val cellsDf = IndexStore.read(spark, path, "cells")
     // size-routed edge source (r20, DupGraph's smallGraphThreshold
     // discipline): below the bound the whole store persists once —
@@ -878,7 +885,7 @@ object KnnGraph {
     // frontier's pblk buckets (the cluster-scale shape, and the one
     // the 100× probe rows measure)
     val wholeEdges =
-      if (cellsDf.count() <= wholeEdgeThreshold)
+      if (factOf(spark, path, "nodes") <= wholeEdgeThreshold)
         Some(IndexStore.read(spark, path, "edges")
           .select(col("src"), col("dst")).persist(lvl))
       else None
@@ -1034,7 +1041,7 @@ object KnnGraph {
                                          e: DataFrame, delta: DataFrame,
                                          k: Int = 10): DataFrame = {
     val cents = IndexStore.read(spark, path, "centroids")
-    val lists = cents.count().toInt
+    val lists = factOf(spark, path, "lists").toInt
     val cellsDf = IndexStore.read(spark, path, "cells")
     val edges = IndexStore.read(spark, path, "edges").select("src", "dst", "sim")
     val d = delta.select(col("vec_id"), col("embedding"))

@@ -13,7 +13,9 @@ import org.apache.spark.sql.SparkSession
   * state. RocksDB (bundled with Spark, rocksdbjni on the classpath)
   * keeps state off-heap on local SSD with incremental (changelog)
   * checkpointing — the standard production choice once state no
-  * longer fits comfortably in memory.
+  * longer fits comfortably in memory. Changelog checkpointing is off
+  * in Spark by default (every batch then uploads a full snapshot), so
+  * [[confs]] turns it on with the provider.
   *
   * The provider is a per-query conf read at stream START; call this
   * before `.start()` (it cannot change on a running query — Spark
@@ -26,9 +28,19 @@ object StateBackend {
   val RocksDBProvider =
     "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 
+  private val ProviderKey = "spark.sql.streaming.stateStore.providerClass"
+  private val ChangelogKey = "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
+
+  /** The session confs that select `provider`: the provider class, and
+    * for RocksDB its changelog checkpointing.
+    */
+  def confs(provider: String): Seq[(String, String)] =
+    (ProviderKey -> provider) +:
+      (if (provider == RocksDBProvider) Seq(ChangelogKey -> "true") else Nil)
+
   def useRocksDB(spark: SparkSession): Unit =
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass", RocksDBProvider)
+    confs(RocksDBProvider).foreach { case (k, v) => spark.conf.set(k, v) }
 
   def useDefault(spark: SparkSession): Unit =
-    spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
+    confs(RocksDBProvider).foreach { case (k, _) => spark.conf.unset(k) }
 }

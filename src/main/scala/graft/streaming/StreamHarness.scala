@@ -2,9 +2,13 @@ package graft.streaming
 
 import graft.Tables
 import graft.operators.Sessions
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.execution.streaming.runtime.{MemoryStream, StreamingQueryWrapper}
+import org.apache.spark.sql.execution.streaming.sources.MemorySink
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.types.StructType
+import scala.jdk.CollectionConverters._
 
 /** Driver-verifiable STREAMING queries — the bridge that puts the
   * Structured Streaming operators under the same DuckDB oracle as the
@@ -66,15 +70,24 @@ object StreamHarness {
     *   - repeat runs re-feed the full input through the SAME running
     *     query (micro-batch slicing preserved), and each entry's
     *     read-back is spelled so the result is provably the first
-    *     run's rows: first-writer-wins operators (q84 dedup gates)
-    *     re-emit nothing by their own re-delivery guards;
-    *     deterministic stateful resolution (q85) re-emits identical
-    *     rows, collapsed by a single-run-no-op distinct; watermarked
-    *     operators (q80c/q80d/q89) re-feed with event time shifted a
-    *     run-sized offset (session gaps / epoch-aligned windows are
-    *     shift-invariant — the offset is a window multiple where
-    *     alignment matters) and shift back on read. StreamingSpec
-    *     pins invocation-2 ≡ invocation-1 for every converted entry;
+    *     run's rows:
+    *       - first-writer-wins operators (q83b/q83c dedup, q84 gate)
+    *         re-emit nothing by their own re-delivery guards, so they
+    *         read the whole sink, which holds run 0's rows;
+    *       - deterministic stateful resolution (q85/q85b) re-emits
+    *         identical rows, so it reads only its own run's batches
+    *         (the sink's batches after the id it held before the
+    *         feed);
+    *       - watermarked operators (q80c/q80d/q89) re-feed with event
+    *         time shifted a run-sized offset (session gaps /
+    *         epoch-aligned windows are shift-invariant — the offset is
+    *         a window multiple where alignment matters), read the
+    *         whole sink, keep this run's time range and shift it back;
+    *       - q91's zero-state gate re-emits identical rows into a
+    *         duplicate-invariant `min_by`, so it reads the whole sink.
+    *     Every read-back is a local relation (see `localFrame`).
+    *     LiveStreamReuseSpec pins invocation-k ≡ invocation-1 for
+    *     every converted entry;
     *   - each invocation (get-or-start, feed, read-back) runs under
     *     the entry's key lock, so concurrent callers on one session
     *     start one query and never interleave their runs;
@@ -82,7 +95,8 @@ object StreamHarness {
     *     invocation starts a fresh one (run 0 again) and the old query
     *     stops and drops its sink. The memory sink therefore holds at
     *     most LiveRuns runs' rows: LiveRuns × the entry's result rows
-    *     for re-emitting entries (q85), one run's rows for the others;
+    *     for re-emitting entries (q85, q91), one run's rows for the
+    *     others;
     *   - a dead query (exception, external stop) or a changed source
     *     token starts a fresh query and stops the old one.
     */
@@ -95,6 +109,20 @@ object StreamHarness {
   private[graft] val LiveRuns = 8
 
   private val LiveFamily = "stream.live"
+
+  /** A stream's read-back: sink rows the driver already holds, handed
+    * back as a local relation. The entry's projection and global sort
+    * then fold on the driver (Spark's `ConvertToLocalRelation` and
+    * [[graft.GraftExtensions.LocalSort]]), so collecting the entry's
+    * frame runs no Spark job; parallelizing the rows again cost 2–4
+    * jobs per call.
+    */
+  private def localFrame(spark: SparkSession, rows: Seq[Row], schema: StructType): DataFrame =
+    spark.createDataFrame(rows.asJava, schema)
+
+  /** The memory sink a `format("memory")` query writes. */
+  private def memorySink(q: StreamingQuery): MemorySink =
+    q.asInstanceOf[StreamingQueryWrapper].streamingQuery.sink.asInstanceOf[MemorySink]
 
   /** Run one invocation of the live query under `key` holding its
     * lock: `use` gets the (possibly fresh) query and this run's index.
@@ -172,21 +200,23 @@ object StreamHarness {
   }
 
   /** Pin a state-store PROVIDER for a stream started inside `body`
-    * (q80c runs the sessionizer on RocksDB): like the partition count,
-    * the provider is read once at query START and pinned in the
-    * checkpoint, so the session conf is restored as soon as `body`
-    * returns — no leak into later batch work or other streams.
+    * (q80c runs the sessionizer on RocksDB), with the provider's confs
+    * from [[StateBackend.confs]] (RocksDB's changelog checkpointing):
+    * like the partition count, they are read once at query START and
+    * pinned in the checkpoint, so the session conf is restored as soon
+    * as `body` returns — no leak into later batch work or other
+    * streams.
     */
   private def withStateProvider[A](spark: SparkSession, provider: Option[String])(body: => A): A =
     provider match {
       case None => body
       case Some(p) =>
-        val key = "spark.sql.streaming.stateStore.providerClass"
-        val prev = spark.conf.getOption(key)
-        spark.conf.set(key, p)
-        try body finally prev match {
-          case Some(v) => spark.conf.set(key, v)
-          case None    => spark.conf.unset(key)
+        val confs = StateBackend.confs(p)
+        val prev = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
+        confs.foreach { case (k, v) => spark.conf.set(k, v) }
+        try body finally prev.foreach {
+          case (k, Some(v)) => spark.conf.set(k, v)
+          case (k, None)    => spark.conf.unset(k)
         }
     }
 
@@ -382,13 +412,12 @@ object StreamHarness {
     Seq(ctx.statePath, out, ckpt).foreach { p =>
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(p))
     }
-    spark.createDataFrame(spark.sparkContext.parallelize(rows.toSeq, 4), schema)
-      .orderBy("doc_id")
+    localFrame(spark, rows.toSeq, schema).orderBy("doc_id")
   }
 
   /** Shared feed: a memory-sink stream over chunked ascending input;
-    * returns the sink table after the stream drains, then tears the
-    * stream and its temp view down.
+    * returns the sink's rows as a local frame after the stream drains,
+    * then tears the stream and its temp view down.
     */
   private def runToSink[T](spark: SparkSession, rows: Seq[T], nBatches: Int,
                            prefix: String,
@@ -410,9 +439,7 @@ object StreamHarness {
         // the no-data micro-batch the watermark advance schedules at
         // batch end — see streamSessions)
         tailBatches.foreach { b => stream.addData(b: _*); q.processAllAvailable() }
-        val collected = spark.table(name).collect()
-        spark.createDataFrame(spark.sparkContext.parallelize(collected.toSeq, 4),
-          spark.table(name).schema)
+        localFrame(spark, memorySink(q).allData, spark.table(name).schema)
       } finally {
         q.stop()
         spark.catalog.dropTempView(name)
@@ -422,22 +449,24 @@ object StreamHarness {
 
   /** runToSink's long-lived twin: one invocation of the entry's live
     * query under `key` (see `Live`), feeding the run built by
-    * `mk(runIdx)` (rows + tail batches) and returning the sink as a
-    * local frame. The caller's read-back must make repeat runs
-    * collapse to run 0's rows.
+    * `mk(runIdx)` (rows + tail batches) and returning a local frame of
+    * the whole sink, or with `ownRun` of only the batches this run
+    * added. The caller's read-back must make repeat runs collapse to
+    * run 0's rows.
     */
   private def runReused[T](spark: SparkSession, key: String, token: String, prefix: String,
                            nBatches: Int, provider: Option[String],
-                           start: (MemoryStream[T], String) =>
-                             org.apache.spark.sql.streaming.StreamingQuery)
+                           start: (MemoryStream[T], String) => StreamingQuery,
+                           ownRun: Boolean = false)
                           (mk: Int => (Seq[T], Seq[Seq[T]]))
                           (implicit enc: org.apache.spark.sql.Encoder[T]): DataFrame =
     withLive[T, DataFrame](spark, key, token, prefix, provider)(start) { (live, run) =>
       val (rows, tails) = mk(run)
       require(rows.nonEmpty, s"$prefix: empty input")
+      val sink = memorySink(live.query)
+      val before = sink.latestBatchId.getOrElse(-1L)
       feedLive(spark, live, rows, nBatches, tails)
-      val collected = spark.table(live.name).collect()
-      spark.createDataFrame(spark.sparkContext.parallelize(collected.toSeq, 4),
+      localFrame(spark, if (ownRun) sink.dataSinceBatch(before) else sink.allData,
         spark.table(live.name).schema)
     }
 
@@ -789,16 +818,15 @@ object StreamHarness {
       // chat's root map, and a re-fed message's parent entry already
       // holds exactly the values run 0 wrote (same ids, same roots —
       // state keys are message ids, overwritten with equal values),
-      // so repeat runs emit rows IDENTICAL to run 0's; the distinct
-      // collapses them and is a no-op on a single run (message_id is
-      // unique within a run)
+      // so repeat runs emit rows IDENTICAL to run 0's; the read-back
+      // takes only this run's batches
       val token = graft.Tables.sourceToken(spark, dir, "events")
       runReused[Msg](spark, s"threads:$dir:p=${provider.getOrElse("")}", token,
         "q85_stream_threads", nBatches, provider,
         (stream, name) => ReplyChainStream.resolve(spark, stream.toDS())
-          .writeStream.format("memory").queryName(name).outputMode("append").start())(
+          .writeStream.format("memory").queryName(name).outputMode("append").start(),
+        ownRun = true)(
         _ => (msgs, Nil))
-        .dropDuplicates("message_id")
     } else withStateProvider(spark, provider) {
       runToSink[Msg](spark, msgs, nBatches, "q85_stream_threads", (stream, name) =>
         ReplyChainStream.resolve(spark, stream.toDS())

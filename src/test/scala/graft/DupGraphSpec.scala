@@ -39,6 +39,18 @@ class DupGraphSpec extends AnyFunSuite {
     assert(triD == tri)
   }
 
+  test("both routes return identical (id, rep, cluster_size) rows") {
+    // two paths, a star and a lone edge: sizes 3, 5 and 2
+    val edges = Seq((1L, 2L), (2L, 3L), (20L, 21L), (20L, 22L), (20L, 23L), (24L, 20L), (7L, 9L))
+    def rows(threshold: Long) =
+      operators.DupGraph.connectedComponents(edges.toDF("a", "b"), smallGraphThreshold = threshold)
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).sorted.toSeq
+    val small = rows(100000L)
+    assert(small == Seq((1L, 1L, 3L), (2L, 1L, 3L), (3L, 1L, 3L), (7L, 7L, 2L), (9L, 7L, 2L),
+      (20L, 20L, 5L), (21L, 20L, 5L), (22L, 20L, 5L), (23L, 20L, 5L), (24L, 20L, 5L)))
+    assert(rows(0L) == small, "the distributed route must size components the same way")
+  }
+
   test("a 64-node path converges within the pointer-jump round bound") {
     // worst-case diameter: plain per-edge propagation would need 63
     // rounds; min-label + path halving must finish inside 30 (the

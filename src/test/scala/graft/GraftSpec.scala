@@ -5,12 +5,16 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local session for specs (small core count: specs run at
   * sf0.001 and fork once per suite run), built like every graft main:
-  * graft's functions come with the session.
+  * graft's functions come with the session. Its warehouse, where the
+  * specs' indexes land, is a fresh temp dir deleted when the JVM
+  * exits, so no spec reads an index an earlier run wrote.
   */
 object TestSpark {
   lazy val spark: SparkSession = {
+    val warehouse = java.nio.file.Files.createTempDirectory("graft_test_warehouse").toFile
+    sys.addShutdownHook(org.apache.commons.io.FileUtils.deleteQuietly(warehouse))
     val s = GraftSession.builder("local[4]", 4)
-      .config("spark.sql.warehouse.dir", "/tmp/graft_test_warehouse")
+      .config("spark.sql.warehouse.dir", warehouse.getAbsolutePath)
       .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
     s

@@ -18,7 +18,7 @@ class JobBudgetSpec extends AnyFunSuite {
     "q02_session_stats" -> 2, "q43_chat_stats" -> 3, "q51_chats_overview" -> 2,
     "q22_region_volume" -> 7, "q48_ivf_persisted" -> 6, "q14_groups" -> 1,
     "q19_ann_ivf" -> 7, "q19b_ann_ivf_seeded" -> 6, "q67d_ivfpq_indexed" -> 9,
-    "q67f_ivfpq_incr" -> 9, "q93_graph_walk" -> 42)
+    "q67f_ivfpq_incr" -> 9, "q93_graph_walk" -> 40, "q93b_walk_recall" -> 44)
 
   warm.foreach { case (name, jobs) =>
     test(s"$name: at most $jobs Spark jobs per warm call") {
@@ -40,9 +40,11 @@ class JobBudgetSpec extends AnyFunSuite {
 
   private def jobs(f: => Unit): Int = JobCounter.jobsDuring(spark.sparkContext)(f)._2
 
+  // a fresh path's tables open with their footer schemas: no
+  // schema-inference job
   private val fresh = Seq(
-    "q27_dedup_minhash" -> 11, "q53_dup_clusters" -> 11, "q54_decontam" -> 5,
-    "q31_quality_score" -> 4)
+    "q27_dedup_minhash" -> 10, "q53_dup_clusters" -> 6, "q54_decontam" -> 4,
+    "q31_quality_score" -> 3)
 
   fresh.foreach { case (name, budget) =>
     test(s"$name: at most $budget Spark jobs on a fresh corpus") {
@@ -54,11 +56,21 @@ class JobBudgetSpec extends AnyFunSuite {
 
   test("PQ.buildIndex: at most 6 Spark jobs on a fresh path") {
     // the seed aggregation and one Lloyd round (a map stage and a
-    // collect each), then the books and codes writes; the corpus's
-    // schema is read first, as curation's IVF build before it does
+    // collect each), then the books and codes writes
     val d = freshCorpus()
-    Tables.embeddings(spark, d)
     val n = jobs(operators.PQ.buildIndex(spark, d, operators.PQ.indexPath(spark, d)))
     assert(n <= 6, s"PQ.buildIndex ran $n jobs; budget 6")
+  }
+
+  // the sink's rows are on the driver: the entry's projection and sort
+  // fold into a local relation
+  Seq("q83d_stream_gate", "q85b_threads_rocks").foreach { name =>
+    test(s"$name: collecting the returned frame runs no Spark job") {
+      (1 to 2).foreach { _ =>
+        val df = SparkEntry.queries(name)(spark, dir)
+        val n = jobs(df.collect())
+        assert(n == 0, s"$name read-back ran $n jobs")
+      }
+    }
   }
 }

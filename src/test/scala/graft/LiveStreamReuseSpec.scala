@@ -64,6 +64,17 @@ class LiveStreamReuseSpec extends AnyFunSuite {
       StreamHarness.streamThreads(spark, dir, nBatches = 3, reuse = true))
   }
 
+  test("q85b: every invocation up to LiveRuns + 1, across the restart, ≡ invocation 1") {
+    val rocks = Some(streaming.StateBackend.RocksDBProvider)
+    def call() = rows(StreamHarness.streamThreads(spark, dir, provider = rocks, reuse = true))
+    val first = call()
+    assert(first == rows(StreamHarness.streamThreads(spark, dir, provider = rocks)),
+      "q85b invocation 1 != start/stop protocol result")
+    (2 to StreamHarness.LiveRuns + 1).foreach { k =>
+      assert(call() == first, s"q85b invocation $k != invocation 1")
+    }
+  }
+
   test("q89: windowed counts reuse ≡ start/stop, repeat-invariant (multi-slice)") {
     pinReuse("windowed")(
       StreamHarness.streamWindowed(spark, dir, nBatches = 3),

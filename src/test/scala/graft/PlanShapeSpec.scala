@@ -170,7 +170,10 @@ class PlanShapeSpec extends AnyFunSuite {
     //            name                 maxSmj maxBnlj maxHashEx minBcast
     val pins = Seq(
       ("q12_recipients",       1, 0,  9, 2), // 1 SMJ: the FullOuter pair-merge (no broadcast variant exists)
-      ("q53_dup_clusters",     0, 0,  2, 1), // lineage-cut CC: rounds materialize, final plan near-flat
+      // the union-find's rows, sized on the driver, fold with their
+      // projection and sort into one local relation: no exchange and
+      // no join (the size join and its broadcast are gone)
+      ("q53_dup_clusters",     0, 0,  0, 0),
       ("q75_cluster_reps",     1, 0,  3, 2),
       ("q77_curation_funnel",  0, 0,  6, 5), // every gate leg broadcasts; a corpus-sized SMJ is a regression
       ("q73_boilerplate_spans",0, 0,  3, 2),

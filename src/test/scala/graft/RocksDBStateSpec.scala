@@ -1,6 +1,7 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
+import scala.jdk.CollectionConverters._
 
 /** The streaming operators must be state-BACKEND-agnostic: the same
   * cross-batch resolution on the production RocksDB state store
@@ -31,6 +32,13 @@ class RocksDBStateSpec extends AnyFunSuite {
       assert(provider.contains("RocksDB"), s"RocksDB must be the active provider: $provider")
       val got = spark.table("chains_rocksdb").as[ThreadOut].collect()
         .map(t => (t.chat_id, t.message_id) -> (t.root_id, t.depth)).toMap
+      // changelog checkpointing: batches commit `.changelog` files
+      // instead of uploading a full snapshot each
+      val root = q.asInstanceOf[org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper]
+        .streamingQuery.resolvedCheckpointRoot
+      val files = org.apache.commons.io.FileUtils.listFiles(
+        new java.io.File(new java.net.URI(root).getPath, "state"), null, true).asScala.map(_.getName)
+      assert(files.exists(_.endsWith(".changelog")), s"no changelog files under $root/state: $files")
       q.stop()
       val union = Seq(
         (1L, 10L, Option.empty[Long]), (1L, 11L, Some(10L)), (2L, 11L, Option.empty[Long]),

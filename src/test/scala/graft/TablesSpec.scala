@@ -47,6 +47,41 @@ class TablesSpec extends AnyFunSuite {
       s"the guard must name the drift: ${e.getMessage}")
   }
 
+  test("a single-file table opens with its footer schema: Spark's inferred schema, no job") {
+    val d = java.nio.file.Files.createTempDirectory("tables_footer")
+    val names = Seq("documents", "embeddings", "lineitem", "orders", "region")
+    names.foreach(n => java.nio.file.Files.copy(java.nio.file.Paths.get(dir, s"$n.parquet"),
+      d.resolve(s"$n.parquet")))
+    names.foreach { n =>
+      val path = s"$d/$n.parquet"
+      val (df, jobs) = org.apache.spark.JobCounter.jobsDuring(spark.sparkContext)(Tables.byName(spark, d.toString, n))
+      assert(jobs == 0, s"$n: opening a fresh path ran $jobs jobs")
+      assert(df.schema == spark.read.parquet(path).schema, s"$n: footer schema != inferred schema")
+    }
+  }
+
+  test("a TIMESTAMP(NANOS) events file still loads as the ns long") {
+    import org.apache.parquet.example.data.simple.SimpleGroupFactory
+    import org.apache.parquet.hadoop.example.ExampleParquetWriter
+    import org.apache.parquet.schema.MessageTypeParser
+    val schema = MessageTypeParser.parseMessageType(
+      "message events { required int64 event_id; required int64 ts (TIMESTAMP(NANOS,true)); }")
+    val d = java.nio.file.Files.createTempDirectory("tables_nanos").toString
+    val ns = 1786731480123456789L
+    val w = ExampleParquetWriter.builder(new org.apache.hadoop.fs.Path(s"$d/events.parquet"))
+      .withType(schema).build()
+    try w.write(new SimpleGroupFactory(schema).newGroup().append("event_id", 1L).append("ts", ns))
+    finally w.close()
+    val key = "spark.sql.legacy.parquet.nanosAsLong"
+    val old = spark.conf.getOption(key)
+    try {
+      spark.conf.unset(key)
+      // the footer read fails on the NANOS type; events sets the conf and retries
+      assert(Tables.events(spark, d).select("ts").head.getLong(0) == ns)
+      assert(spark.conf.get(key) == "true")
+    } finally old.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
   /** `rel:len:mtime` per file under `root` as a recursive Hadoop
     * listing reports it (checksum sidecars hidden), sorted.
     */
