@@ -1,13 +1,12 @@
 package graft.operators
 
 import graft.Tables
+import graft.plans.Runs
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-/** The reference CLI's entry/drill-down analytics surface — the last
-  * uncovered reference queries VERDICT r04 ranked top of "What's
-  * missing":
+/** The reference CLI's entry/drill-down analytics surface:
   *
   *  - q50 `clusterDetails` ≈ `analyze_cluster_details`
   *    (examples/cluster_analysis_cli.py:240-338): for the top-K
@@ -41,7 +40,7 @@ import org.apache.spark.sql.functions._
 object Analytics {
 
   /** Chat-axis sessionization: gap > windowMs within one chat ⇒ new
-    * cluster (create_clusters semantics on the chat_id axis the
+    * cluster ([[graft.plans.Runs.byGap]] on the chat_id axis the
     * reference clusters on).
     */
   private[graft] def chatSessions(spark: SparkSession, dir: String,
@@ -52,13 +51,8 @@ object Analytics {
     // session ids are per-chat running counts, so restricting to a
     // chat subset BEFORE the window yields identical ids for those
     // chats — a static isin filter the parquet scan can push/prune
-    onlyChats.fold(ev)(cs => ev.filter(col("event_type").isin(cs: _*)))
-      .withColumn("ts_ms", expr("ts DIV 1000000"))
-      .withColumn("prev_ms", lag("ts_ms", 1).over(w))
-      .withColumn("brk",
-        when(col("prev_ms").isNull || col("ts_ms") - col("prev_ms") > windowMs, 1).otherwise(0))
-      .withColumn("session_id",
-        sum("brk").over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+    val chats = onlyChats.fold(ev)(cs => ev.filter(col("event_type").isin(cs: _*)))
+    Runs.byGap(Sessions.withTsMs(chats), w, "ts_ms", windowMs, "session_id")
       .select(col("event_id"), col("user_id"), col("event_type").as("chat"),
         col("props"), col("ts_ms"), col("session_id"))
   }
@@ -128,8 +122,10 @@ object Analytics {
     * One exchange: the chat-partitioned shuffle the session window
     * already pays for. Events aggregate per (chat, session), then per
     * chat, both inside that partitioning; the latest label is a
-    * `max_by` over `(ts_ms, event_id)` and participants are the union
-    * of the sessions' user sets. No join, and `events` is scanned once.
+    * `max_by` over `(ts_ms, event_id)` (a unique key) whose JSON is
+    * parsed once per chat, not once per event, and participants are the
+    * union of the sessions' user sets. No join, and `events` is
+    * scanned once.
     */
   def chatsOverview(spark: SparkSession, dir: String, minSize: Int = 3,
                     windowMs: Long = 30 * 60 * 1000L): DataFrame = {
@@ -140,10 +136,10 @@ object Analytics {
       .agg(count(lit(1)).as("sz"),
         collect_set(col("user_id")).as("users"),
         min("ts_ms").as("first_ms"), max("ts_ms").as("last_ms"),
-        max_by(get_json_object(col("props"), "$.k"), latest).as("label"),
+        max_by(col("props"), latest).as("label_props"),
         max(latest).as("latest"))
       .groupBy("chat")
-      .agg(max_by(col("label"), col("latest")).as("chat_label"),
+      .agg(get_json_object(max_by(col("label_props"), col("latest")), "$.k").as("chat_label"),
         sum("sz").as("message_count"),
         size(array_distinct(flatten(collect_list(col("users"))))).cast("long").as("participant_count"),
         min("first_ms").as("first_ms"), max("last_ms").as("last_ms"),

@@ -1,6 +1,5 @@
 package graft.operators
 
-import graft.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -11,9 +10,6 @@ import org.apache.spark.sql.types.DecimalType
   */
 object Messages {
 
-  private def withTsMs(spark: SparkSession, dir: String): DataFrame =
-    Tables.events(spark, dir).withColumn("ts_ms", expr("ts DIV 1000000"))
-
   /** q09: JSON payload extraction + aggregation — the reference
     * flattens nested Telegram JSON into columns
     * (TelegramPreprocessor.py:444-522 `load_json`, :524-555
@@ -21,7 +17,7 @@ object Messages {
     * extraction is a codegen'd JSON path, aggregated by payload key.
     */
   def jsonExtract(spark: SparkSession, dir: String): DataFrame =
-    withTsMs(spark, dir)
+    Sessions.withTsMs(spark, dir)
       .withColumn("k", get_json_object(col("props"), "$.k").cast("int"))
       .groupBy("k")
       .agg(
@@ -38,7 +34,7 @@ object Messages {
     */
   def mediaMarkers(spark: SparkSession, dir: String): DataFrame = {
     val vs = col("value").cast(DecimalType(12, 2)).cast("string")
-    withTsMs(spark, dir)
+    Sessions.withTsMs(spark, dir)
       .withColumn("marker",
         when(col("event_type") === "purchase", concat(lit("[purchase]("), vs, lit(")")))
           .when(col("event_type") === "error", concat(lit("[error]("), col("props"), lit(")")))
@@ -53,7 +49,7 @@ object Messages {
     * Plain pushdown-able predicates; values pass through untouched.
     */
   def messageFilter(spark: SparkSession, dir: String): DataFrame =
-    withTsMs(spark, dir)
+    Sessions.withTsMs(spark, dir)
       .filter(col("event_type") =!= "error" && col("props").isNotNull && col("value") > 0.0)
       .select("event_id", "user_id", "event_type", "ts_ms", "value")
       .orderBy("event_id")
@@ -107,7 +103,7 @@ object Messages {
     // CacheManager-revalidated, a registerOverride source swap
     // recomputes. The frame is slim — distinct (user, day, k) rows
     // plus a long — bounded by active users × days × keys.
-    val participants = withTsMs(spark, dir)
+    val participants = Sessions.withTsMs(spark, dir)
       .select(col("user_id"),
         expr("ts_ms DIV 86400000").as("day"),
         // rows with null props / missing 'k' can never co-occur, and
@@ -153,7 +149,7 @@ object Messages {
     * `event_type` is the chat analog in the testdata mapping.
     */
   def chatStats(spark: SparkSession, dir: String): DataFrame =
-    withTsMs(spark, dir)
+    Sessions.withTsMs(spark, dir)
       .groupBy(col("event_type").as("chat"))
       .agg(
         count(lit(1)).as("n_events"),
@@ -179,7 +175,7 @@ object Messages {
     * Oracle: DuckDB's native ASOF LEFT JOIN.
     */
   def asofJoin(spark: SparkSession, dir: String): DataFrame = {
-    val base = withTsMs(spark, dir)
+    val base = Sessions.withTsMs(spark, dir)
     val events = base.select(col("event_id"), col("user_id"), col("ts_ms"))
     val updates = base.filter(col("event_type") === "signup")
       .groupBy("user_id", "ts_ms")
@@ -225,7 +221,7 @@ object Messages {
   def rangeJoinCounts(spark: SparkSession, dir: String, windowMs: Long = 300000L): DataFrame = {
     val w = Window.partitionBy("user_id").orderBy("ts_ms")
       .rangeBetween(-windowMs, windowMs)
-    val base = withTsMs(spark, dir).select("event_id", "user_id", "ts_ms")
+    val base = Sessions.withTsMs(spark, dir).select("event_id", "user_id", "ts_ms")
     // the join form (a.user_id = b.user_id) is null-rejecting, but a
     // window PARTITION BY groups ALL null users into ONE partition —
     // wrong answer (mutual neighbors) and one serialized straggler
@@ -250,7 +246,7 @@ object Messages {
     * |Δt| ≤ window filter cleans up. Same result, same oracle.
     */
   def rangeJoinCountsBinned(spark: SparkSession, dir: String, windowMs: Long = 300000L): DataFrame = {
-    val base = withTsMs(spark, dir).select("event_id", "user_id", "ts_ms")
+    val base = Sessions.withTsMs(spark, dir).select("event_id", "user_id", "ts_ms")
     val probe = base.withColumn("bin", expr(s"ts_ms DIV $windowMs"))
     val build = base
       .select(col("user_id"), col("ts_ms").as("r_ts_ms"), col("event_id").as("r_event_id"))
@@ -273,7 +269,7 @@ object Messages {
     */
   def nameMapping(spark: SparkSession, dir: String): DataFrame = {
     val w = Window.partitionBy("user_id").orderBy(col("ts_ms").desc, col("event_id").desc)
-    withTsMs(spark, dir)
+    Sessions.withTsMs(spark, dir)
       .withColumn("rn", row_number().over(w))
       .filter(col("rn") === 1)
       .select(col("user_id"), col("event_type").as("last_kind"), col("ts_ms").as("last_seen_ms"))

@@ -167,8 +167,7 @@ object ReplyChains {
     */
   def eventThreadStats(spark: org.apache.spark.sql.SparkSession, dir: String): DataFrame = {
     val t = resolvedEventThreads(spark, dir)
-    val ev = graft.Tables.events(spark, dir)
-      .select(col("event_id"), col("user_id"), expr("ts DIV 1000000").as("ts_ms"))
+    val ev = Sessions.withTsMs(spark, dir).select("event_id", "user_id", "ts_ms")
     t.join(ev, t("message_id") === ev("event_id"))
       .groupBy(col("root_id"))
       .agg(count(lit(1)).as("thread_size"),

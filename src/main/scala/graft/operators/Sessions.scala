@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.Tables
+import graft.plans.Runs
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -29,13 +30,16 @@ object Sessions {
 
   /** events + ts_ms (ts arrives as raw ns long; see Tables.events). */
   private[graft] def withTsMs(spark: SparkSession, dir: String): DataFrame =
-    Tables.events(spark, dir)
-      .withColumn("ts_ms", expr("ts DIV 1000000"))
+    withTsMs(Tables.events(spark, dir))
+
+  /** Any events-shaped frame + ts_ms: the one ns → ms rule. */
+  private[graft] def withTsMs(events: DataFrame): DataFrame =
+    events.withColumn("ts_ms", expr("ts DIV 1000000"))
 
   private val userW = Window.partitionBy("user_id").orderBy("ts_ms", "event_id")
 
-  /** Gap > windowMs ⇒ new session; running count of breaks = session id.
-    * Mirrors TextPreprocessor.create_clusters (diff → breaks → cum_sum).
+  /** Gap > windowMs ⇒ new session; session id = the running count of
+    * breaks per user ([[graft.plans.Runs.byGap]]).
     */
   def sessionized(spark: SparkSession, dir: String, windowMs: Long = 30 * 60 * 1000L): DataFrame =
     sessionizedOn(withTsMs(spark, dir), windowMs)
@@ -45,14 +49,8 @@ object Sessions {
     * sessionize slices rather than the stored table).
     */
   def sessionizedOn(events: DataFrame, windowMs: Long = 30 * 60 * 1000L): DataFrame = {
-    val withMs = if (events.columns.contains("ts_ms")) events
-      else events.withColumn("ts_ms", expr("ts DIV 1000000"))
-    withMs
-      .withColumn("prev_ms", lag("ts_ms", 1).over(userW))
-      .withColumn("brk",
-        when(col("prev_ms").isNull || col("ts_ms") - col("prev_ms") > windowMs, 1).otherwise(0))
-      .withColumn("session_id", sum("brk").over(userW.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-      .drop("prev_ms", "brk")
+    val withMs = if (events.columns.contains("ts_ms")) events else withTsMs(events)
+    Runs.byGap(withMs, userW, "ts_ms", windowMs, "session_id")
   }
 
   /** q01: the session assignment itself. */
@@ -103,14 +101,7 @@ object Sessions {
   def resessionizeDirty(events: DataFrame, stored: DataFrame, dirtyUsers: DataFrame,
                         windowMs: Long = 30 * 60 * 1000L): DataFrame = {
     val dirty = dirtyUsers.select("user_id").distinct()
-    val fresh = events
-      .join(dirty, Seq("user_id"), "left_semi")
-      .withColumn("ts_ms", expr("ts DIV 1000000"))
-      .withColumn("prev_ms", lag("ts_ms", 1).over(userW))
-      .withColumn("brk",
-        when(col("prev_ms").isNull || col("ts_ms") - col("prev_ms") > windowMs, 1).otherwise(0))
-      .withColumn("session_id",
-        sum("brk").over(userW.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+    val fresh = sessionizedOn(events.join(dirty, Seq("user_id"), "left_semi"), windowMs)
       .select("event_id", "user_id", "session_id")
     stored.select("event_id", "user_id", "session_id")
       .join(dirty, Seq("user_id"), "left_anti")
@@ -136,13 +127,8 @@ object Sessions {
   def sessionizedChunked(spark: SparkSession, dir: String, windowMs: Long = 30 * 60 * 1000L,
                          chunkMs: Long = 24 * 60 * 60 * 1000L): DataFrame = {
     val wLocal = Window.partitionBy("user_id", "chunk").orderBy("ts_ms", "event_id")
-    val local = withTsMs(spark, dir)
-      .withColumn("chunk", expr(s"ts_ms DIV $chunkMs"))
-      .withColumn("prev_ms", lag("ts_ms", 1).over(wLocal))
-      .withColumn("brk",
-        when(col("prev_ms").isNull || col("ts_ms") - col("prev_ms") > windowMs, 1).otherwise(0))
-      .withColumn("local_id", sum("brk").over(wLocal.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-      .drop("prev_ms", "brk")
+    val local = Runs.byGap(withTsMs(spark, dir).withColumn("chunk", expr(s"ts_ms DIV $chunkMs")),
+      wLocal, "ts_ms", windowMs, "local_id")
     val wChunk = Window.partitionBy("user_id").orderBy("chunk")
     val offsets = local.groupBy("user_id", "chunk")
       .agg(max("local_id").as("n_local"), min("ts_ms").as("first_ms"), max("ts_ms").as("last_ms"))
@@ -191,21 +177,13 @@ object Sessions {
     */
   def concatRuns(spark: SparkSession, dir: String): DataFrame = {
     val gapMs = 5 * 60 * 1000L
-    // the gap break is fully re-derived in run_brk below (prev_ms2),
-    // so the base is just the ts frame — routing through sessionized
-    // computed a session window nothing here read
-    withTsMs(spark, dir)
-      .withColumn("prev_kind", lag("event_type", 1).over(userW))
-      .withColumn("prev_ms2", lag("ts_ms", 1).over(userW))
-      .withColumn("run_brk",
-        // kind break is NULL-SAFE (<=>): with `=!=`, a null event_type
-        // next to a non-null one yields NULL, the whole OR-chain falls
-        // to `otherwise(0)`, and the row silently concatenates into a
-        // run of a DIFFERENT kind (the <=> bug class r12 fixed in
-        // TelegramPipeline; oracle uses IS DISTINCT FROM to match)
-        when(col("prev_ms2").isNull || col("ts_ms") - col("prev_ms2") > gapMs
-          || !(col("prev_kind") <=> col("event_type")), 1).otherwise(0))
-      .withColumn("run_id", sum("run_brk").over(userW.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+    // a run breaks on the 5m gap or on a change of kind; the kind
+    // compare is null-safe (<=>): with `=!=`, a null event_type next
+    // to a non-null one yields NULL, which counts as no break, and the
+    // row would join a run of a different kind (the oracle uses
+    // IS DISTINCT FROM to match)
+    Runs.byGap(withTsMs(spark, dir).withColumn("prev_kind", lag("event_type", 1).over(userW)),
+        userW, "ts_ms", gapMs, "run_id", orBreak = !(col("prev_kind") <=> col("event_type")))
       .groupBy("user_id", "run_id")
       .agg(
         min("event_type").as("event_type"), // constant within a run; min is engine-agnostic
@@ -255,8 +233,7 @@ object Sessions {
     * frame, never the corpus — one map-side-combined groupBy, a 1-row
     * quartile aggregate over ≤168 values broadcast back as literals,
     * and the static grid is a 168-row local relation. percentile()
-    * here bit-matches DuckDB's quantile_cont (the q07 equivalence,
-    * hash-EXACT at three scales since r01).
+    * here bit-matches DuckDB's quantile_cont (the q07 equivalence).
     */
   def heatmapIntensity(spark: SparkSession, dir: String): DataFrame = {
     val tsCol = timestamp_micros(expr("ts DIV 1000"))
@@ -317,17 +294,13 @@ object Sessions {
     * grouped stats, HAVING n ≥ 3, global ordinal group id
     * (analyze_dialogues.find_long_message_groups's CTE chain).
     * The ordinal uses the two-pass range-partitioned numbering
-    * (plans.Ordinals) — the post-HAVING group count still funnelled
-    * through one task under the old Window.orderBy at 100 TB.
+    * (plans.Ordinals): a global Window.orderBy would funnel every
+    * post-HAVING group through one task.
     */
   def longGroups(spark: SparkSession, dir: String): DataFrame = {
     val filtered = withTsMs(spark, dir).filter(col("value") >= 50.0)
     val gapMs = 60 * 60 * 1000L
-    val grouped = filtered
-      .withColumn("prev_ms", lag("ts_ms", 1).over(userW))
-      .withColumn("brk",
-        when(col("prev_ms").isNull || col("ts_ms") - col("prev_ms") > gapMs, 1).otherwise(0))
-      .withColumn("tmp_group", sum("brk").over(userW.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+    val grouped = Runs.byGap(filtered, userW, "ts_ms", gapMs, "tmp_group")
       .groupBy("user_id", "tmp_group")
       .agg(
         count(lit(1)).as("n_events"),

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.Tables
+import graft.plans.Runs
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -80,7 +81,7 @@ object Vectors {
       // DECIMAL sum, not avg(double): float accumulation order depends
       // on partitioning, so a plain avg makes the centroids — and any
       // borderline probe ranking — differ run to run. The sum is cast
-      // to double BEFORE the divide (r14): decimal÷bigint semantics
+      // to double BEFORE the divide: decimal÷bigint semantics
       // (result scale, HALF_UP point) are engine-specific, while
       // "correctly-rounded decimal→double, then one IEEE division" is
       // bit-identical on any engine — the sum's unscaled value stays
@@ -321,8 +322,7 @@ object Vectors {
     * broadcast centroid set — N·nLists cosines. Correct and optimal
     * for bounded nLists, but IVF sizing grows nLists with the corpus
     * (nLists ≈ N/targetCellSize), so flat assignment is O(N²) compute
-    * and an O(N) broadcast at 100 TB — the scale-killer VERDICT r04
-    * flagged.
+    * and an O(N) broadcast at 100 TB.
     *
     * nCoarse > 1 is the TWO-LEVEL path (the IMI/hierarchical-IVF
     * shape): the fine centroids are themselves clustered into nCoarse
@@ -338,8 +338,8 @@ object Vectors {
     *      on grp at scale —
     *   4. rank fine cells within the probed groups.
     * Per-vector cosines: nCoarse + coarseProbe·(nLists/nCoarse) ≈
-    * (1+coarseProbe)·√nLists at the default nCoarse — the N·√nLists
-    * growth VERDICT r04 asked for (measured in tools.AssignProbe).
+    * (1+coarseProbe)·√nLists at the default nCoarse: N·√nLists growth
+    * (measured in tools.AssignProbe).
     * Approximation: a vector whose true top cell hides in a
     * non-probed coarse group misses it — identical vectors still
     * co-assign ALWAYS (identical cosines ⇒ identical ranking), so
@@ -458,21 +458,21 @@ object Vectors {
   }
 
   /** q13: semantic segmentation — sliding cosine distance to the
-    * previous message, break when distance > threshold, running sum =
-    * segment id (calculate_segments with window_size=1, as used by
-    * the reference pipeline at TextPreprocessor.py:489).
+    * previous message, break when distance > threshold, segment id =
+    * running count of breaks ([[graft.plans.Runs.number]];
+    * calculate_segments with window_size=1, as used by the reference
+    * pipeline at TextPreprocessor.py:489).
     */
   def semanticSegments(spark: SparkSession, dir: String, threshold: Double = 1.0): DataFrame = {
     val docs = Tables.documents(spark, dir).select("doc_id", "source", "n_chars")
     val e = Tables.embeddings(spark, dir).select(col("vec_id"), col("embedding"))
     val w = Window.partitionBy("source").orderBy("doc_id")
-    docs.join(e, col("doc_id") === col("vec_id"))
+    val withDist = docs.join(e, col("doc_id") === col("vec_id"))
       .withColumn("prev_emb", lag("embedding", 1).over(w))
       .withColumn("dist",
         when(col("prev_emb").isNull, 0.0)
           .otherwise(round(lit(1.0) - round(expr("cosine_sim(embedding, prev_emb)"), 6), 6)))
-      .withColumn("brk", when(col("dist") > threshold, 1).otherwise(0))
-      .withColumn("segment_id", sum("brk").over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+    Runs.number(withDist, w, "segment_id", col("dist") > threshold)
       .select("doc_id", "source", "dist", "segment_id")
       .orderBy("source", "doc_id")
   }
@@ -519,7 +519,8 @@ object Vectors {
     * semantics). The mean is a global two-pass stat: an exact
     * DECIMAL(18,6) sum of the 6dp-rounded distances over the count —
     * order-insensitive, so deterministic under any partitioning —
-    * broadcast back as a 1-row literal join.
+    * broadcast back as a 1-row literal join. A distance above the mean
+    * breaks the segment ([[graft.plans.Runs.number]]).
     */
   def slidingSegments(spark: SparkSession, dir: String, windowSize: Int = 5,
                       threshold: Option[Double] = None): DataFrame = {
@@ -534,32 +535,25 @@ object Vectors {
         // executor loss (or dynamic-allocation reclaim) on a real
         // cluster RECOMPUTES the lost blocks instead of failing the
         // job the way checkpoint's truncated lineage does — and it's
-        // lazy, so construction stays action-free. Registry-managed
-        // (one live copy, same-plan reuse): the former local
-        // put-then-unpersist-previous cache had the plan-keyed
-        // self-eviction bug the persist registry fixed in r13 — a repeat
-        // call "re-persisted" the identical canonicalized plan (a
-        // no-op) then unpersisted the previous handle, evicting the
-        // entry it had just reused, so every call after the first ran
-        // the multi-lag pass twice again.
+        // lazy, so construction stays action-free. Registry-managed:
+        // one live copy, reused by every call with the same plan.
         val dc = graft.Shared.persist(spark,
           "vectors.slidingDistances", d)
         val m = dc.agg((sum(col("dist").cast(org.apache.spark.sql.types.DecimalType(18, 6)))
           .cast("double") / count(lit(1))).as("mean_dist"))
         dc.crossJoin(broadcast(m))
     }
-    val w = Window.partitionBy("source").orderBy("doc_id")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    withThr
-      .withColumn("brk", when(col("dist") > col("mean_dist"), 1).otherwise(0))
-      .withColumn("segment_id", sum("brk").over(w))
+    Runs.number(withThr, Window.partitionBy("source").orderBy("doc_id"), "segment_id",
+        col("dist") > col("mean_dist"))
       .select("doc_id", "source", "n_win", "dist", "mean_dist", "segment_id")
       .orderBy("source", "doc_id")
   }
 
   /** q14: group merge — a new group starts when EITHER the semantic
     * segment breaks OR the coarse length-bucket changes
-    * (calculate_groups' OR-of-boundaries at TextPreprocessor.py:452).
+    * (calculate_groups' OR-of-boundaries at TextPreprocessor.py:452),
+    * numbered by [[graft.plans.Runs.number]]. The bucket compare is
+    * plain `=!=`: the bucket of a null `n_chars` breaks no group.
     *
     * This (source, group_id) pair is the MCP cluster key, read by
     * q14, q81c and every McpTools cluster/search call (some twice per
@@ -580,19 +574,17 @@ object Vectors {
       Tables.sourceToken(spark, dir, "embeddings")
     graft.Shared.leafFrame(spark, s"semantic_groups:t=$threshold", Seq(docs, e), token) {
       val w = Window.partitionBy("source").orderBy("doc_id")
-      docs.join(e, col("doc_id") === col("vec_id"))
+      val lagged = docs.join(e, col("doc_id") === col("vec_id"))
         .withColumn("bucket", expr("n_chars DIV 100"))
         .withColumn("prev_emb", lag("embedding", 1).over(w))
         .withColumn("prev_bucket", lag("bucket", 1).over(w))
         .withColumn("dist",
           when(col("prev_emb").isNull, 0.0)
             .otherwise(round(lit(1.0) - round(expr("cosine_sim(embedding, prev_emb)"), 6), 6)))
-        .withColumn("brk",
-          when(col("prev_emb").isNull, 1)
-            .when(col("dist") > threshold || col("bucket") =!= col("prev_bucket"), 1)
-            .otherwise(0))
-        .withColumn("group_id",
-          sum("brk").over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow)) - 1)
+      // the first row breaks, so ids start at 0 with offset −1
+      Runs.number(lagged, w, "group_id",
+          col("prev_emb").isNull || col("dist") > threshold || col("bucket") =!= col("prev_bucket"),
+          offset = -1L)
         .select("doc_id", "source", "bucket", "group_id")
         .orderBy("source", "doc_id")
     }

@@ -1,5 +1,6 @@
 package graft.sources
 
+import graft.plans.Runs
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -17,40 +18,31 @@ import org.apache.spark.sql.functions._
   */
 object TelegramPipeline {
 
+  private val chatW = Window.partitionBy("chat_id").orderBy("ts_ms", "message_id")
+
   /** Messages with session ids: gap > windowMs within a chat opens a
-    * new session (TextPreprocessor.create_clusters, time_window).
+    * new session ([[graft.plans.Runs.byGap]], create_clusters' time_window).
     */
-  def sessionized(messages: DataFrame, windowMs: Long = 30 * 60 * 1000L): DataFrame = {
-    val w = Window.partitionBy("chat_id").orderBy("ts_ms", "message_id")
-    messages
-      .withColumn("ts_ms", unix_millis(col("date").cast("timestamp")))
-      .withColumn("prev_ms", lag("ts_ms", 1).over(w))
-      .withColumn("brk",
-        when(col("prev_ms").isNull || col("ts_ms") - col("prev_ms") > windowMs, 1).otherwise(0))
-      .withColumn("session_id",
-        sum("brk").over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-      .drop("prev_ms", "brk")
-  }
+  def sessionized(messages: DataFrame, windowMs: Long = 30 * 60 * 1000L): DataFrame =
+    Runs.byGap(messages.withColumn("ts_ms", unix_millis(col("date").cast("timestamp"))),
+      chatW, "ts_ms", windowMs, "session_id")
 
   /** Consecutive same-author messages inside a session joined into
     * one row (concat_author_messages' run-length grouping).
     */
   def concatAuthorRuns(sessionized: DataFrame, joinWith: String = ". "): DataFrame = {
-    val w = Window.partitionBy("chat_id").orderBy("ts_ms", "message_id")
-    val runs = sessionized
-      .withColumn("prev_author", lag("from_id", 1).over(w))
-      .withColumn("prev_session", lag("session_id", 1).over(w))
-      // null-SAFE author compare: =!= on a null-author row (a from_id
-      // that didn't parse) evaluates NULL, the when() falls through,
-      // and the row is silently CONCATENATED into the previous
-      // author's run — misattributed text. <=> makes a null author
-      // its own run boundary.
-      .withColumn("run_brk",
-        when(col("prev_author").isNull
-          || !(col("prev_author") <=> col("from_id"))
-          || !(col("prev_session") <=> col("session_id")), 1).otherwise(0))
-      .withColumn("run_id",
-        sum("run_brk").over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+    val lagged = sessionized
+      .withColumn("prev_author", lag("from_id", 1).over(chatW))
+      .withColumn("prev_session", lag("session_id", 1).over(chatW))
+    // a run breaks on a change of author or of session (Runs.number).
+    // The author compare is null-safe: =!= on a null-author row (a
+    // from_id that didn't parse) evaluates NULL, which counts as no
+    // break, and the row would be concatenated into the previous
+    // author's run. <=> makes a null author its own run boundary.
+    val runs = Runs.number(lagged, chatW, "run_id",
+      col("prev_author").isNull
+        || !(col("prev_author") <=> col("from_id"))
+        || !(col("prev_session") <=> col("session_id")))
     runs.groupBy("chat_id", "run_id")
       .agg(
         min("session_id").as("session_id"),

@@ -300,4 +300,38 @@ class PlanShapeSpec extends AnyFunSuite {
     val n = count(p, "Exchange hashpartitioning") + count(p, "Exchange rangepartitioning")
     assert(n == 2, s"per-node top-k window + orderBy — got $n in:\n$p")
   }
+
+  test("break-and-number entries keep their Window and lag counts") {
+    // every caller of plans.Runs lags each input of its break rule once;
+    // a lag written inline twice in a break condition plans a second,
+    // identical lag column in the same Window node. Counted on the
+    // optimized plan with the cache cleared, so q47's uncached plan
+    // holds its 5-lag distance pass twice (the mean and the segment
+    // pass read it); q08's windows sit under its ordinal's RDD, so
+    // none are visible there.
+    import org.apache.spark.sql.catalyst.expressions.Lag
+    import org.apache.spark.sql.catalyst.plans.logical.{Window => LWindow}
+    //          name                   windows lags
+    val pins = Seq(
+      ("q01_temporal_sessions", 2, 1),
+      ("q01b_sessions_chunked", 6, 3),
+      ("q02_session_stats",     2, 1),
+      ("q03_concat_runs",       2, 2),
+      ("q04_largest_sessions",  2, 1),
+      ("q08_long_groups",       0, 0),
+      ("q13_semantic_segments", 2, 1),
+      ("q47_sliding_segments",  3, 10),
+      ("q50_cluster_details",   5, 2),
+      ("q51_chats_overview",    2, 1),
+      ("q86c_source_pipeline",  4, 3),
+      ("q87_resessionize",      4, 2))
+    val got = pins.map { case (name, _, _) =>
+      val df = SparkEntry.queries(name)(spark, dir)
+      spark.sharedState.cacheManager.clearCache()
+      val opt = df.queryExecution.optimizedPlan
+      (name, opt.collect { case w: LWindow => w }.size,
+        opt.collect { case n => n.expressions.flatMap(_.collect { case l: Lag => l }) }.flatten.size)
+    }
+    assert(got == pins, got.zip(pins).filter { case (g, p) => g != p }.mkString("\n"))
+  }
 }

@@ -1,7 +1,7 @@
 #!/usr/bin/env python3
 """Mimic the driver's correctness gate locally.
 
-Usage: python3 tools/selfcheck.py [sfdir] [outdir]
+Usage: python3 tools/selfcheck.py [sfdir] [outdir] [names]
 
 Reads outdir/<name>/ parquet (written by `sbt "runMain graft.Verify
 <sfdir> <outdir>"`) plus outdir/oracle_sql.json, runs each oracle in
@@ -9,6 +9,11 @@ DuckDB with views named after the testdata tables, and compares:
 schema (column names sorted), row count, and values (rows sorted by
 all columns, floats compared to 1e-9 relative — the driver hashes
 exactly, so we also report max float deltas to catch near-misses).
+
+`names` (comma-separated entry names, the same list given to Verify's
+third argument) compares only those entries: each must have an oracle,
+a dump and an "ok" manifest status, or it fails. Without it every
+oracle is compared and the manifest must cover every oracle key.
 """
 import glob
 import json
@@ -31,11 +36,17 @@ def norm(v):
 def main():
     sfdir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     outdir = sys.argv[2] if len(sys.argv) > 2 else "/tmp/graft_verify"
+    only = set(sys.argv[3].split(",")) if len(sys.argv) > 3 else None
     con = duckdb.connect()
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sfdir}/{t}.parquet'")
     oracles = json.load(open(f"{outdir}/oracle_sql.json"))
     failed = []
+    if only is not None:
+        for name in sorted(only - set(oracles)):
+            print(f"FAIL {name}: no oracle")
+            failed.append(name)
+        oracles = {k: v for k, v in oracles.items() if k in only}
     # Key-set completeness (r10 postmortem): Verify writes queries.json
     # with EVERY SparkEntry.queries key -> "ok" | "err: ...". A query
     # that errors must appear here as a FAIL row — it may never vanish
@@ -45,7 +56,13 @@ def main():
     except FileNotFoundError:
         manifest = None
         print("WARN: no queries.json manifest — key-set completeness unchecked")
-    if manifest is not None:
+    if manifest is not None and only is not None:
+        for name in sorted(only & set(oracles)):
+            st = manifest.get(name, "not run")
+            if st != "ok":
+                print(f"FAIL {name}: verify-time {st}")
+                failed.append(name)
+    elif manifest is not None:
         for name, st in sorted(manifest.items()):
             if st != "ok":
                 print(f"FAIL {name}: verify-time {st}")
@@ -158,16 +175,17 @@ def main():
             failed.append("gate_invariants")
     except FileNotFoundError:
         pass
+    n_named = len(oracles) if only is None else len(only)
     correctness = {
         "sf": sfdir,
-        "n_queries": len(oracles),
-        "n_pass": len(oracles) - len(set(failed) - {"gate_invariants", "manifest"}),
+        "n_queries": n_named,
+        "n_pass": n_named - len(set(failed) - {"gate_invariants", "manifest"}),
         "failed": sorted(set(failed)),
         "gate_invariants": gate,
     }
     with open(f"{outdir}/CORRECTNESS_local.json", "w") as f:
         json.dump(correctness, f, indent=1, sort_keys=True)
-    if sfdir.rstrip("/").endswith("sf0.1"):
+    if sfdir.rstrip("/").endswith("sf0.1") and only is None:
         with open("CORRECTNESS_local.json", "w") as f:
             json.dump(correctness, f, indent=1, sort_keys=True)
     # The repo-root ORACLE_TIMING.json is the HEADLINE artifact — the
@@ -177,7 +195,7 @@ def main():
     dest = f"{outdir}/ORACLE_TIMING.json"
     with open(dest, "w") as f:
         json.dump(out, f, indent=1, sort_keys=True)
-    if sfdir.rstrip("/").endswith("sf0.1"):
+    if sfdir.rstrip("/").endswith("sf0.1") and only is None:
         dest = "ORACLE_TIMING.json"
         with open(dest, "w") as f:
             json.dump(out, f, indent=1, sort_keys=True)
@@ -185,7 +203,7 @@ def main():
     # per-query ratio must match n_pass: the raw failed list holds
     # non-query sentinels (gate_invariants, manifest) and can hold
     # duplicate appends for one query (ADVICE r17)
-    print(f"{correctness['n_pass']}/{len(oracles)} passed")
+    print(f"{correctness['n_pass']}/{n_named} passed")
     sys.exit(1 if failed else 0)
 
 
